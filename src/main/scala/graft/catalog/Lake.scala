@@ -1,31 +1,19 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.MergeOps
+import org.apache.spark.sql.DataFrame
 
-/** Parquet-lake catalog sink — the reference's main sink (K3: exam and
-  * serie tables in MySQL, Cenir_DB.py:62-135) persisted as a parquet
-  * table with MERGE maintenance instead of row-at-a-time SQL.
-  *
-  * Write protocol: read current table → MergeOps.merge with the
-  * incoming batch → write the merged snapshot to `<table>.tmp` → atomic
-  * swap (rename current → `.bak`, tmp → current, drop `.bak`). A
-  * reader sees either the old or the new snapshot, never a partial
-  * write; a crashed writer leaves the current snapshot intact. On a
-  * real deployment the same semantics come from a table format's
-  * transactional commit — the merge plan is identical.
-  *
-  * Idempotent by construction (MergeSpec property): re-merging the same
-  * batch is a no-op, which is what the reference's `--twice` rerun
-  * approximated.
+/** Parquet-lake layout writers: date-partitioned, bucketed, Z-ordered
+  * and bloom-filtered writes — the physical layouts the catalog and
+  * fact tables are scanned through. The catalog MERGE sink (the
+  * reference's exam/serie upsert, Cenir_DB.py:62-135) is
+  * [[PartitionedSnapshotLake.commitMerge]].
   */
 object Lake {
 
   /** Date-partitioned lake layout: the reference's mtime-based `--days`
     * pruning (common.py:267-306) becomes partition pruning — a reader
     * filtering on `part_date` touches only the matching directories
-    * (PartitionFilters in the scan, asserted in LakeSpec). */
+    * (PartitionFilters in the scan, asserted in TypedPipelineSpec). */
   def writePartitionedByDay(df: DataFrame, tsCol: String,
       path: String): Unit =
     df.withColumn("part_date",
@@ -112,282 +100,5 @@ object Lake {
           expectedNdv.toString)
     }
     w.parquet(path)
-  }
-
-  private def fsFor(spark: SparkSession, path: String): FileSystem =
-    FileSystem.get(new java.net.URI(
-      if (path.contains("://")) path else s"file://$path"),
-      spark.sparkContext.hadoopConfiguration)
-
-  /** Reads the current snapshot as-is. Pure read: crash recovery is
-    * strictly writer-side ([[recover]], run at [[mergeWrite]] entry) —
-    * a reader that restored `.bak` itself could fire in the window
-    * between a live writer's two renames and corrupt the swap.
-    *
-    * After a writer crashed between its two renames, NO live snapshot
-    * exists (`.bak` holds the only copy) and this returns None — the
-    * table reads as absent, not "minus the in-flight batch" — until the
-    * next merge (or an explicit [[recover]]) heals it. That state is
-    * detectable, so it is warned about rather than silently returned. */
-  def readTable(spark: SparkSession, path: String): Option[DataFrame] = {
-    val fs = fsFor(spark, path)
-    if (fs.exists(new Path(path))) Some(spark.read.parquet(path))
-    else {
-      if (fs.exists(new Path(path + ".bak")))
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"$path is absent but $path.bak exists: a writer crashed " +
-            "mid-swap; run Lake.recover (or the next mergeWrite) to heal")
-      None
-    }
-  }
-
-  /** Writer-side crash recovery: a previous writer that died between
-    * its two renames left `.bak` as the only copy — restore it before
-    * merging, or the batch would be mistaken for the whole table.
-    * Single-writer contract: only the (one) merge writer calls this. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val fs = fsFor(spark, path)
-    val cur = new Path(path); val bak = new Path(path + ".bak")
-    if (!fs.exists(cur) && fs.exists(bak)) {
-      require(fs.rename(bak, cur), s"crash recovery failed: $bak -> $cur")
-    }
-  }
-
-  /** The explicit backfill [[evolveForMerge]]'s refusals point to:
-    * rewrite the table with `exprs` computed over the CURRENT rows
-    * (add a derived column, default an added column for history,
-    * repair a column from others). One read, one write, same
-    * bak/rename crash protocol as the merge path — and it is the only
-    * sanctioned way to change existing columns, so the destructive
-    * step is always a visible, named call, never a merge side effect. */
-  def backfill(spark: SparkSession, path: String,
-      exprs: Map[String, org.apache.spark.sql.Column]): Unit = {
-    recover(spark, path)
-    val db = readTable(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no table at $path"))
-    val out = exprs.foldLeft(db) { case (df, (name, e)) =>
-      df.withColumn(name, e) }.persist()
-    try {
-      out.count() // materialize BEFORE touching the live copy
-      val fs = fsFor(spark, path)
-      val cur = new Path(path); val tmp = new Path(path + ".tmp")
-      val bak = new Path(path + ".bak")
-      out.write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(bak) && fs.exists(cur)) fs.delete(bak, true)
-      require(fs.rename(cur, bak), s"swap failed: $cur")
-      require(fs.rename(tmp, cur), s"swap failed: $tmp -> $cur")
-      fs.delete(bak, true)
-    } finally out.unpersist()
-  }
-
-  /** Additive schema evolution for the merge path: project `db` to the
-    * union schema (db columns first, then batch-only columns as typed
-    * nulls on the db side). The batch must carry EVERY live column — a
-    * merge-upsert with a missing batch column would null it out on
-    * every updated row, which is silent data loss, so that case is
-    * refused loudly (backfill-then-merge is the explicit route). Type
-    * changes are refused for the same reason: a silent cast rewrites
-    * history. Evolution therefore only ever ADDS columns; old rows
-    * read the new column as null, exactly parquet's own semantics. */
-  private[graft] def evolveForMerge(db: DataFrame, batch: DataFrame)
-      : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val dbT = db.schema.map(f => f.name -> f.dataType).toMap
-    val bT = batch.schema.map(f => f.name -> f.dataType).toMap
-    val clash = dbT.keySet.intersect(bT.keySet)
-      .filter(c => dbT(c) != bT(c))
-    require(clash.isEmpty,
-      s"schema evolution cannot change column types: ${clash.mkString(",")}")
-    val missing = dbT.keySet.diff(bT.keySet)
-    require(missing.isEmpty,
-      s"batch is missing live columns ${missing.mkString(",")}: a merge " +
-        "would null them on every updated row; backfill explicitly instead")
-    val order = db.columns ++ batch.columns.filterNot(dbT.contains)
-    val dbAligned = db.select(order.map(c =>
-      if (dbT.contains(c)) col(c) else lit(null).cast(bT(c)).as(c)): _*)
-    (dbAligned, batch.select(order.map(col): _*))
-  }
-
-  /** MERGE `batch` into the table at `path` (created if absent).
-    * Returns per-status counts (inserted/updated/kept).
-    *
-    * The merge plan executes ONCE (persisted before the counts collect
-    * and the snapshot write — it would otherwise re-read the table and
-    * re-run the join for each). Crash recovery: if the process dies
-    * between the two renames, the previous snapshot is intact at
-    * `.bak` — rename it back. `evolve = true` admits batches that ADD
-    * columns (see [[evolveForMerge]]). */
-  def mergeWrite(spark: SparkSession, path: String, batch: DataFrame,
-      key: String, exclude: Seq[String] = Nil,
-      evolve: Boolean = false): Map[String, Long] = {
-    recover(spark, path)
-    val merged = (readTable(spark, path) match {
-      case Some(db) =>
-        val (d, b) = if (evolve) evolveForMerge(db, batch) else (db, batch)
-        MergeOps.merge(d, b, key, exclude)
-      case None => batch.withColumn("merge_status",
-        org.apache.spark.sql.functions.lit("inserted"))
-    }).persist()
-    try {
-      val counts = merged.groupBy("merge_status").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val fs = fsFor(spark, path)
-      val cur = new Path(path); val tmp = new Path(path + ".tmp")
-      val bak = new Path(path + ".bak")
-      merged.drop("merge_status").write.mode("overwrite")
-        .parquet(tmp.toString)
-      // a leftover .bak alongside a live table is stale (previous swap
-      // completed); with NO live table it is the only copy and
-      // readTable above already restored it
-      if (fs.exists(bak) && fs.exists(cur)) fs.delete(bak, true)
-      if (fs.exists(cur)) require(fs.rename(cur, bak), s"swap failed: $cur")
-      require(fs.rename(tmp, cur), s"swap failed: $tmp -> $cur")
-      fs.delete(bak, true)
-      counts
-    } finally merged.unpersist()
-  }
-
-  /** MERGE into a date-partitioned table, touching ONLY the `part_date`
-    * partitions present in the batch. [[mergeWrite]] rewrites the full
-    * snapshot per batch — at catalog scale that is a 100 TB rewrite for
-    * a 1 GB day; here the read is partition-pruned to the batch's dates
-    * and the write swaps just those partition directories, each under
-    * the same bak/rename protocol as the whole-table path (so a crash
-    * mid-swap is healed by the next writer via [[recoverPartitions]]).
-    *
-    * Contract: `to_date(tsCol)` must be stable for a given key (the
-    * reference's AcqDate never changes for an exam) — a batch that
-    * moves a key to a different date would insert a second copy,
-    * because rows outside the batch's dates are never read. Single
-    * writer, as for mergeWrite.
-    *
-    * Null dates (unparseable tsCol) land in the default partition and
-    * merge like any other date: when the batch contains null
-    * `part_date` rows, the pruning filter explicitly includes
-    * `part_date IS NULL` — `isInCollection` alone never matches null,
-    * which would drop the live default-partition rows from the merge
-    * and then overwrite their directory with batch-only rows.
-    */
-  def mergeWritePartitioned(spark: SparkSession, path: String,
-      batch: DataFrame, key: String, tsCol: String,
-      exclude: Seq[String] = Nil): Map[String, Long] = {
-    import org.apache.spark.sql.functions.{col, lit, to_date}
-    val fs = fsFor(spark, path)
-    recoverPartitions(spark, path)
-    val b = batch.withColumn("part_date", to_date(col(tsCol)))
-    val cur = new Path(path)
-    if (!fs.exists(cur)) {
-      b.write.partitionBy("part_date").parquet(path)
-      return Map("inserted" -> spark.read.parquet(path).count())
-    }
-    // one value per day in the batch — bounded by the batch's date
-    // span, not its row count
-    val dateRows = b.select("part_date").distinct().collect()
-    val batchHasNullDate = dateRows.exists(_.isNullAt(0))
-    val dates = dateRows.filterNot(_.isNullAt(0)).map(_.getDate(0)).toSeq
-    val inDates =
-      if (dates.nonEmpty) col("part_date").isInCollection(dates)
-      else lit(false)
-    val prune =
-      if (batchHasNullDate) inDates || col("part_date").isNull else inDates
-    val db = spark.read.parquet(path).filter(prune)
-    val merged = MergeOps.merge(db, b, key, exclude).persist()
-    try {
-      val counts = merged.groupBy("merge_status").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val tmp = new Path(path + ".tmp")
-      merged.drop("merge_status").write.mode("overwrite")
-        .partitionBy("part_date").parquet(tmp.toString)
-      val bakRoot = new Path(path + ".bak_parts")
-      fs.mkdirs(bakRoot)
-      // per-partition snapshot swap; untouched partitions' files are
-      // never opened, copied, or rewritten (byte-identity asserted in
-      // LakeSpec)
-      fs.listStatus(tmp).map(_.getPath)
-        .filter(_.getName.startsWith("part_date=")).foreach { tp =>
-          val curP = new Path(cur, tp.getName)
-          val bakP = new Path(bakRoot, tp.getName)
-          if (fs.exists(bakP)) fs.delete(bakP, true) // stale: swap done
-          if (fs.exists(curP))
-            require(fs.rename(curP, bakP), s"swap failed: $curP")
-          require(fs.rename(tp, curP), s"swap failed: $tp -> $curP")
-          fs.delete(bakP, true)
-        }
-      fs.delete(tmp, true)
-      counts
-    } finally merged.unpersist()
-  }
-
-  /** Small-file compaction, one date partition at a time — the
-    * OPTIMIZE-style maintenance a merge-maintained lake needs: every
-    * [[mergeWritePartitioned]] batch rewrites its partitions at the
-    * session's parallelism, so a hot partition accumulates far more
-    * files than its bytes warrant and scans pay per-file open cost.
-    *
-    * Each partition holding more files than `ceil(bytes/targetBytes)`
-    * is rewritten to exactly that many (optionally sorted within
-    * partitions on `sortCol`, clustering the merge key so row-group
-    * min/max stats prune point probes) and swapped in under the same
-    * `.bak_parts` crash protocol as MERGE — readers see the old or the
-    * new file set, never a mix, and [[recoverPartitions]] heals a
-    * crash mid-swap. Already-compact partitions are never opened.
-    *
-    * Driver work is one listing per partition (bounded by the date
-    * span, like every table-maintenance job); row data moves only for
-    * the partitions actually rewritten.
-    *
-    * @return partition name → (files before, files after) for the
-    *         rewritten partitions
-    */
-  def compactPartitions(spark: SparkSession, path: String,
-      targetBytes: Long = 128L * 1024 * 1024,
-      sortCol: Option[String] = None): Map[String, (Int, Int)] = {
-    val fs = fsFor(spark, path)
-    recoverPartitions(spark, path)
-    val cur = new Path(path)
-    if (!fs.exists(cur)) return Map.empty
-    val bakRoot = new Path(path + ".bak_parts")
-    val tmpRoot = new Path(path + ".tmp_compact")
-    val done = scala.collection.mutable.Map[String, (Int, Int)]()
-    fs.listStatus(cur).map(_.getPath)
-      .filter(_.getName.startsWith("part_date=")).foreach { p =>
-        val files = fs.listStatus(p)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        val bytes = files.map(_.getLen).sum
-        val want = math.max(1L,
-          (bytes + targetBytes - 1) / targetBytes).toInt
-        if (files.length > want) {
-          val df = spark.read.parquet(p.toString).repartition(want)
-          val clustered = sortCol
-            .map(c => df.sortWithinPartitions(c)).getOrElse(df)
-          val tmp = new Path(tmpRoot, p.getName)
-          clustered.write.mode("overwrite").parquet(tmp.toString)
-          fs.mkdirs(bakRoot)
-          val bakP = new Path(bakRoot, p.getName)
-          if (fs.exists(bakP)) fs.delete(bakP, true)
-          require(fs.rename(p, bakP), s"compact swap failed: $p")
-          require(fs.rename(tmp, p), s"compact swap failed: $tmp -> $p")
-          fs.delete(bakP, true)
-          done(p.getName) = (files.length, want)
-        }
-      }
-    fs.delete(tmpRoot, true)
-    done.toMap
-  }
-
-  /** Writer-side recovery for [[mergeWritePartitioned]]: restore any
-    * partition whose swap died between the two renames (bak'd copy
-    * exists, live partition missing). */
-  def recoverPartitions(spark: SparkSession, path: String): Unit = {
-    val fs = fsFor(spark, path)
-    val bakRoot = new Path(path + ".bak_parts")
-    if (fs.exists(bakRoot)) {
-      fs.listStatus(bakRoot).map(_.getPath)
-        .filter(_.getName.startsWith("part_date=")).foreach { bp =>
-          val curP = new Path(new Path(path), bp.getName)
-          if (!fs.exists(curP))
-            require(fs.rename(bp, curP), s"recovery failed: $bp -> $curP")
-        }
-    }
   }
 }

@@ -2,7 +2,8 @@ package graft.catalog
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, date_format, lit, sum, to_date, when}
+import org.apache.spark.sql.functions.{col, date_format, lit, to_date}
+import org.apache.spark.sql.types.{DataType, DateType, StructType}
 import graft.operators.MergeOps
 
 /** Fact-scale snapshot lake: [[SnapshotLake]]'s marker protocol applied
@@ -62,12 +63,12 @@ import graft.operators.MergeOps
   * Contract: `to_date(tsCol)` must be stable per key (the reference's
   * AcqDate-never-changes invariant, common.py:267-306) — rows outside
   * the batch's dates are never read, so a key that moved dates would
-  * insert a second copy. Schema evolution is NOT supported on this
-  * path: [[graft.operators.MergeOps.merge]] canonicalizes on the live
-  * columns — a batch MISSING one fails analysis loudly, and a batch
-  * ADDING one has the new column silently dropped — so evolve via
-  * [[Lake.mergeWrite]]'s explicit `evolve` route (or a backfill)
-  * before switching a table to versioned commits.
+  * insert a second copy. The schema is fixed at the lake's first
+  * commit: [[commitMerge]] refuses a batch that adds, lacks or
+  * retypes a column against the live schema
+  * ([[graft.operators.MergeOps.requireSameSchema]]) instead of
+  * dropping or casting it, so a schema change is a new lake written
+  * explicitly, never a merge side effect.
   */
 object PartitionedSnapshotLake {
 
@@ -351,6 +352,29 @@ object PartitionedSnapshotLake {
     else df.withColumn("part_date", lit(value).cast("date"))
   }
 
+  /** The live schema without a Spark job: the row schema Spark stores
+    * in the footer of one file of one pinned partition of the newest
+    * manifest, plus the `part_date` the readers restore. None before
+    * the first manifest. */
+  private def pinnedSchema(spark: SparkSession,
+      root: String): Option[StructType] =
+    latestSnapshot(spark, root)
+      .flatMap(s => manifest(spark, root, s).headOption)
+      .map { case (p, v) =>
+        val file = fsFor(spark, root)
+          .listStatus(new Path(partRoot(root, p), s"v=$v")).map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")).head
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+            spark.sparkContext.hadoopConfiguration))
+        val json =
+          try reader.getFooter.getFileMetaData.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata")
+          finally reader.close()
+        DataType.fromJson(json).asInstanceOf[StructType]
+          .add("part_date", DateType)
+      }
+
   /** ONE multi-path parquet scan over all pinned v-dirs — a snapshot
     * read over 10 000 partitions plans a single `FileSourceScan`
     * relation instead of a 10 000-way union. Hive-style discovery
@@ -569,38 +593,27 @@ object PartitionedSnapshotLake {
     val existing = affected.flatMap { p =>
       SnapshotLake.latestVersion(spark, partRoot(root, p))
         .map(v => readPartitionVersion(spark, root, p, v))
-    }
-    val merged = existing.reduceOption(_.unionByName(_)) match {
+    }.reduceOption(_.unionByName(_))
+    // schema drift guard: the touched partitions' schema is already
+    // resolved; a batch of only new dates checks one pinned footer
+    existing.map(_.schema).orElse(pinnedSchema(spark, root))
+      .foreach(MergeOps.requireSameSchema(_, b.schema))
+    val merged = existing match {
       case Some(db) => MergeOps.merge(db, b, key, exclude)
       case None => b.withColumn("merge_status", lit("inserted"))
     }
     {
       // merge-status counts ride the staging write as observed metrics
-      // (CollectMetrics) instead of a separate groupBy pass: the merge
-      // join used to run twice (once for counts, once for the write)
-      // behind a persist whose cache held the full merged partition
-      // set. ONE pass now computes, counts, and stages — at lake scale
-      // that is a full read+join of the touched partitions saved per
-      // commit, and no cache memory held across the commit (guide
-      // §1.2: don't compute things twice). The status set is closed
-      // (merge() emits inserted/kept/updated; the fresh-lake branch
-      // inserted only); zero counts are dropped so the returned map is
-      // exactly what groupBy produced.
-      val obs = new org.apache.spark.sql.Observation()
-      // one partitioned write to a private tmp dir; each part_date=
-      // subdir then RENAMES (no second copy) into its partition's next
-      // claimed version
+      // (MergeOps.writeCounted): ONE pass computes, counts, and stages —
+      // no second run of the merge join and no cache held across the
+      // commit. One partitioned write to a private tmp dir; each
+      // part_date= subdir then RENAMES (no second copy) into its
+      // partition's next claimed version
       val tmp = new Path(root,
         s".tmp_commit_${java.util.UUID.randomUUID().toString.take(8)}")
-      val statusAggs = Seq("inserted", "kept", "updated").map(st =>
-        coalesce(sum(when(col("merge_status") === st, 1L)
-          .otherwise(0L)), lit(0L)).as(st))
-      merged.observe(obs, statusAggs.head, statusAggs.tail: _*)
-        .drop("merge_status").write.mode("overwrite")
-        .partitionBy("part_date").parquet(tmp.toString)
-      val counts = obs.get.collect {
-        case (st, n: Long) if n > 0 => st -> n
-      }.toMap
+      val (_, counts) = MergeOps.writeCounted(merged)(
+        _.write.mode("overwrite").partitionBy("part_date")
+          .parquet(tmp.toString))
       // claim locks release on EVERY exit and the tmp dir never
       // outlives the call: a failure mid-loop leaves already-renamed
       // partitions committed (marker'd — the next manifest picks them

@@ -4,11 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.MergeOps
 
-/** Versioned snapshot lake — MVCC history over [[Lake]]'s single-copy
-  * swap protocol: every commit is a NEW immutable version directory, so
-  * "what did the exam table look like before yesterday's merge" (the
-  * reference's rerun/recovery theme, do_common.py `--twice`) becomes a
-  * time-travel read instead of a restore-from-backup.
+/** Versioned snapshot lake — MVCC history for a parquet table: every
+  * commit is a NEW immutable version directory, so "what did the exam
+  * table look like before yesterday's merge" (the reference's
+  * rerun/recovery theme, do_common.py `--twice`) becomes a time-travel
+  * read instead of a restore-from-backup.
   *
   * Layout under `root`:
   * {{{
@@ -204,22 +204,19 @@ object SnapshotLake {
   }
 
   /** MERGE `batch` into the latest snapshot and commit the result as a
-    * new version (the [[Lake.mergeWrite]] semantics, with history).
-    * Returns (newVersion, per-merge-status counts). */
+    * new version. Returns (newVersion, per-merge-status counts); the
+    * counts are observed on the commit's own write pass. */
   def commitMerge(spark: SparkSession, root: String, batch: DataFrame,
       key: String, exclude: Seq[String] = Nil): (Long, Map[String, Long]) = {
-    val merged = (latestVersion(spark, root) match {
+    val merged = latestVersion(spark, root) match {
       case Some(v) =>
-        MergeOps.merge(readVersion(spark, root, v), batch, key, exclude)
+        val db = readVersion(spark, root, v)
+        MergeOps.requireSameSchema(db.schema, batch.schema)
+        MergeOps.merge(db, batch, key, exclude)
       case None => batch.withColumn("merge_status",
         org.apache.spark.sql.functions.lit("inserted"))
-    }).persist()
-    try {
-      val counts = merged.groupBy("merge_status").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val v = commit(spark, root, merged.drop("merge_status"))
-      (v, counts)
-    } finally merged.unpersist()
+    }
+    MergeOps.writeCounted(merged)(commit(spark, root, _))
   }
 
   /** Roll back to version `v`: every later commit marker is deleted, so

@@ -53,13 +53,13 @@ case class TextQualityGate(child: Expression) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
 
   override protected def nullSafeEval(input: Any): Any =
-    TextQualityGate.eval(input.asInstanceOf[UTF8String])
+    TextQualityGate.compute(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
       s"""${ev.value} =
-         |  graft.functions.expressions.TextQualityGate.eval($c);
+         |  graft.functions.expressions.TextQualityGate.compute($c);
        """.stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression)
@@ -74,11 +74,13 @@ object TextQualityGate {
 
   private val Sep = UTF8String.fromString(" ")
 
-  /** One pass: split with limit -1 — Spark's `split(text, ' ')`
-    * contract (trailing empty tokens KEPT; `''` yields one empty
-    * token) — then a single scan counting stopwords and distinct
-    * adjacent bigrams. */
-  def eval(text: UTF8String): InternalRow = {
+  /** Static so generated code can call it directly (named `compute`:
+    * the case class inherits `Expression.eval`, and a clashing name
+    * gets no static forwarder). One pass: split with limit -1 —
+    * Spark's `split(text, ' ')` contract (trailing empty tokens KEPT;
+    * `''` yields one empty token) — then a single scan counting
+    * stopwords and distinct adjacent bigrams. */
+  def compute(text: UTF8String): InternalRow = {
     val parts = text.split(Sep, -1)
     val n = parts.length
     var nStop = 0

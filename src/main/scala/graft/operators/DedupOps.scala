@@ -475,13 +475,14 @@ object DedupOps {
   }
 
   /** The streaming-ingest CAPSTONE step: [[probeAndExtend]] dedup +
-    * [[graft.catalog.Lake.mergeWritePartitioned]] in ONE foreachBatch
-    * body — each micro-batch's docs get dup verdicts (vs the signature
-    * store and within-batch), and the verdict-tagged rows MERGE into
-    * the date-partitioned lake. State is exactly two on-disk artifacts
-    * (signature store + lake), both keyed replay-tolerantly:
-    *  - the lake merge is idempotent per doc_id (a replayed row
-    *    updates in place);
+    * [[graft.catalog.PartitionedSnapshotLake.commitMerge]] in ONE
+    * foreachBatch body — each micro-batch's docs get dup verdicts (vs
+    * the signature store and within-batch), and the verdict-tagged rows
+    * MERGE into the date-partitioned snapshot lake. State is exactly
+    * two on-disk artifacts (signature store + lake), both keyed
+    * replay-tolerantly:
+    *  - the lake merge is keyed on doc_id (a replayed row updates its
+    *    key in a new partition version, never a second copy);
     *  - a replayed doc whose bands already reached the store reads as
     *    a dup OF ITSELF, so verdicts are monotone (novel → dup) under
     *    at-least-once delivery — keeper uniqueness, the property
@@ -495,7 +496,7 @@ object DedupOps {
     if (batch.isEmpty) return
     val verdict = probeAndExtend(store, batch)
     val tagged = batch.join(verdict, "doc_id")
-    graft.catalog.Lake.mergeWritePartitioned(
+    graft.catalog.PartitionedSnapshotLake.commitMerge(
       batch.sparkSession, lake, tagged, "doc_id", tsCol): Unit
   }
 

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, StructType}
 import graft.Tables.load
 
 /** MERGE upsert — the reference's main sink (K3/K5/J4):
@@ -54,6 +54,45 @@ object MergeOps {
       when(takeBatch, col(s"b_$c")).otherwise(col(s"d_$c")).as(c)
     } :+ status.as("merge_status")
     joined.select(out: _*)
+  }
+
+  /** Refuses a batch whose columns differ from the live table's:
+    * [[merge]] canonicalizes on the live columns, so a column the batch
+    * ADDS would be silently dropped, one it LACKS would fail deep in the
+    * plan, and a retyped one would be cast into history. Compares
+    * name → type, ignoring nullability (`catalogString` omits it at
+    * every nesting level), and names every offending column. */
+  def requireSameSchema(live: StructType, batch: StructType): Unit = {
+    def types(s: StructType) =
+      s.fields.map(f => f.name -> f.dataType.catalogString).toMap
+    val (l, b) = (types(live), types(batch))
+    val drift = Seq(
+      "adds" -> b.keySet.diff(l.keySet).toSeq.sorted,
+      "lacks" -> l.keySet.diff(b.keySet).toSeq.sorted,
+      "retypes" -> l.keySet.intersect(b.keySet).filter(c => l(c) != b(c))
+        .toSeq.sorted.map(c => s"$c ${l(c)} -> ${b(c)}"))
+      .collect { case (what, cs) if cs.nonEmpty =>
+        s"$what ${cs.mkString(", ")}" }
+    require(drift.isEmpty,
+      s"batch schema differs from the live table: ${drift.mkString("; ")}")
+  }
+
+  /** Runs `write` over `merged` minus its `merge_status` column and
+    * returns the write's result together with the per-status counts,
+    * observed on that same pass (one CollectMetrics: no cache and no
+    * separate count job re-running the merge join). The status set is
+    * closed (inserted/kept/updated) and zero counts are dropped, so the
+    * map is exactly what `groupBy("merge_status").count()` would give.
+    * `write` must execute the plan, or the counts never arrive. */
+  def writeCounted[T](merged: DataFrame)(write: DataFrame => T)
+      : (T, Map[String, Long]) = {
+    val obs = new Observation()
+    val aggs = Seq("inserted", "kept", "updated").map(st =>
+      coalesce(sum(when(col("merge_status") === st, 1L).otherwise(0L)),
+        lit(0L)).as(st))
+    val out = write(
+      merged.observe(obs, aggs.head, aggs.tail: _*).drop("merge_status"))
+    (out, obs.get.collect { case (st, n: Long) if n > 0 => st -> n }.toMap)
   }
 
   /** SCD Type-2 history apply (beyond ref — the dimension-history form

@@ -110,6 +110,7 @@ class FileStreamSpec extends AnyFunSuite {
 
   test("streaming dedup drains into the partitioned lake and resumes: " +
       "stream state == batch state") {
+    import graft.catalog.PartitionedSnapshotLake
     import graft.operators.DedupOps
     val root = Files.createTempDirectory("graft_dedup_lake")
     val in = root.resolve("in"); val ckpt = root.resolve("ckpt")
@@ -154,7 +155,8 @@ class FileStreamSpec extends AnyFunSuite {
     runOnce() // NEW query, same checkpoint — resume path
 
     def lakeState(path: String): Seq[(Long, Boolean)] =
-      spark.read.parquet(path).select("doc_id", "is_dup")
+      PartitionedSnapshotLake.readLatest(spark, path)
+        .select("doc_id", "is_dup")
         .orderBy("doc_id").as[(Long, Boolean)].collect().toSeq
 
     val streamed = lakeState(lake)
@@ -170,8 +172,8 @@ class FileStreamSpec extends AnyFunSuite {
     DedupOps.dedupToLake(store2, lake2, docs(b2), "ts")
     assert(lakeState(lake2) == streamed)
 
-    // the lake is date-partitioned — the maintenance surface
-    // (compaction, partition-scoped merge) applies to the stream sink
+    // the lake is date-partitioned — each micro-batch's merge reads
+    // and re-versions only its own dates
     val days = new java.io.File(lake).listFiles()
       .filter(_.getName.startsWith("part_date=")).map(_.getName).sorted
     assert(days.toSeq == Seq("part_date=2024-03-01",

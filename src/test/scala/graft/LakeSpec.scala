@@ -3,150 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.catalog.Lake
+import graft.catalog.PartitionedSnapshotLake
 import graft.functions.BvecMath
 import graft.ingest.DicomLike
 
-/** Lake MERGE sink (K3 persisted), bvec geometry, and map fallback. */
+/** Date-partitioned lake layout and MERGE (K3 persisted), bvec
+  * geometry, and map fallback. */
 class LakeSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
-
-  test("lake mergeWrite: create, update, keep, insert, idempotence") {
-    val path = Files.createTempDirectory("graft_lake")
-      .resolve("exam").toString
-
-    val c0 = Lake.mergeWrite(spark, path,
-      Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "name", "price"),
-      "id")
-    assert(c0 == Map("inserted" -> 2L))
-
-    val batch = Seq((2L, "b", 99.0), (3L, "c", 30.0))
-      .toDF("id", "name", "price")
-    val c1 = Lake.mergeWrite(spark, path, batch, "id")
-    assert(c1 == Map("kept" -> 1L, "updated" -> 1L, "inserted" -> 1L))
-
-    val state = spark.read.parquet(path).orderBy("id")
-      .as[(Long, String, Double)].collect().toSeq
-    assert(state == Seq((1L, "a", 10.0), (2L, "b", 99.0), (3L, "c", 30.0)))
-
-    // re-merging the same batch is a no-op on disk (the --twice story)
-    val c2 = Lake.mergeWrite(spark, path, batch, "id")
-    assert(c2 == Map("kept" -> 3L))
-    val state2 = spark.read.parquet(path).orderBy("id")
-      .as[(Long, String, Double)].collect().toSeq
-    assert(state2 == state)
-  }
-
-  test("mergeWrite evolve=true adds batch columns; old rows read null; " +
-      "type changes and missing live columns are refused") {
-    val path = Files.createTempDirectory("graft_lake")
-      .resolve("exam").toString
-    Lake.mergeWrite(spark, path,
-      Seq((1L, "a"), (2L, "b")).toDF("id", "name"), "id")
-
-    // batch carries a NEW column: schema widens, untouched row 1
-    // reads the new column as null (parquet's own add-column rule)
-    val c1 = Lake.mergeWrite(spark, path,
-      Seq((2L, "b", "fr"), (3L, "c", "en")).toDF("id", "name", "lang"),
-      "id", evolve = true)
-    assert(c1 == Map("kept" -> 1L, "updated" -> 1L, "inserted" -> 1L))
-    val state = spark.read.parquet(path).orderBy("id")
-      .as[(Long, String, Option[String])].collect().toSeq
-    assert(state == Seq((1L, "a", None), (2L, "b", Some("fr")),
-      (3L, "c", Some("en"))))
-
-    // a batch MISSING a live column is refused (a merge would null it
-    // on every updated row — silent data loss)
-    val missing = intercept[IllegalArgumentException] {
-      Lake.mergeWrite(spark, path, Seq((3L, "x")).toDF("id", "name"),
-        "id", evolve = true)
-    }
-    assert(missing.getMessage.contains("backfill"))
-
-    // a type change is refused loudly
-    val clash = intercept[IllegalArgumentException] {
-      Lake.mergeWrite(spark, path,
-        Seq((3L, "c", 7)).toDF("id", "name", "lang"), "id", evolve = true)
-    }
-    assert(clash.getMessage.contains("column types"))
-
-    // the sanctioned route for history: backfill the evolved column,
-    // then plain merges carry it without further evolution
-    Lake.backfill(spark, path,
-      Map("lang" -> coalesce(col("lang"), lit("unknown"))))
-    val filled = spark.read.parquet(path).orderBy("id")
-      .as[(Long, String, String)].collect().toSeq
-    assert(filled == Seq((1L, "a", "unknown"), (2L, "b", "fr"),
-      (3L, "c", "en")))
-    val c2 = Lake.mergeWrite(spark, path,
-      Seq((1L, "a", "de")).toDF("id", "name", "lang"), "id")
-    assert(c2 == Map("updated" -> 1L, "kept" -> 2L))
-  }
-
-  test("lake recovers a table lost mid-swap from .bak") {
-    val path = Files.createTempDirectory("graft_lake_crash")
-      .resolve("t").toString
-    Lake.mergeWrite(spark, path,
-      Seq((1L, "a", 1.0)).toDF("id", "name", "price"), "id")
-    // simulate a writer that died between the two renames:
-    // current table renamed away, .bak is the only copy
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(s"file://$path"),
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + ".bak")))
-    // next merge must restore the backup, not treat the batch as the
-    // whole table
-    val counts = Lake.mergeWrite(spark, path,
-      Seq((2L, "b", 2.0)).toDF("id", "name", "price"), "id")
-    assert(counts == Map("kept" -> 1L, "inserted" -> 1L))
-    assert(spark.read.parquet(path).count() == 2)
-  }
-
-  private def partFiles(dir: String): Map[String, Long] = {
-    val d = new java.io.File(dir)
-    if (!d.exists()) Map.empty
-    else d.listFiles().filter(_.getName.startsWith("part-"))
-      .map(f => f.getName -> f.lastModified()).toMap
-  }
-
-  test("partitioned merge touches only the batch's date partitions") {
-    val path = Files.createTempDirectory("graft_lake_part")
-      .resolve("exam").toString
-    def ts(d: String) = java.sql.Timestamp.valueOf(d + " 10:00:00")
-    val seed = Seq(
-      (1L, "a", 10.0, ts("2024-01-01")),
-      (2L, "b", 20.0, ts("2024-01-02")),
-      (3L, "c", 30.0, ts("2024-01-03")))
-      .toDF("id", "name", "price", "acq")
-    val c0 = Lake.mergeWritePartitioned(spark, path, seed, "id", "acq")
-    assert(c0 == Map("inserted" -> 3L))
-
-    val untouched = partFiles(s"$path/part_date=2024-01-03")
-    assert(untouched.nonEmpty)
-
-    // batch: update day 1, insert into a brand-new day 4
-    val batch = Seq(
-      (1L, "a", 99.0, ts("2024-01-01")),
-      (4L, "d", 40.0, ts("2024-01-04")))
-      .toDF("id", "name", "price", "acq")
-    val c1 = Lake.mergeWritePartitioned(spark, path, batch, "id", "acq")
-    assert(c1 == Map("updated" -> 1L, "inserted" -> 1L))
-
-    // day-3 partition: same file names, same mtimes — never rewritten
-    assert(partFiles(s"$path/part_date=2024-01-03") == untouched)
-    // day-2 partition untouched too (not in the batch's date set)
-    val state = spark.read.parquet(path).orderBy("id")
-      .select("id", "name", "price")
-      .as[(Long, String, Double)].collect().toSeq
-    assert(state == Seq((1L, "a", 99.0), (2L, "b", 20.0),
-      (3L, "c", 30.0), (4L, "d", 40.0)))
-
-    // idempotence across the partitioned path
-    val c2 = Lake.mergeWritePartitioned(spark, path, batch, "id", "acq")
-    assert(c2 == Map("kept" -> 2L))
-  }
 
   test("partitioned merge read is pruned to the batch's dates") {
     val path = Files.createTempDirectory("graft_lake_prune")
@@ -155,39 +20,14 @@ class LakeSpec extends AnyFunSuite {
     val seed = (1 to 10).map(i =>
       (i.toLong, s"n$i", i * 1.0, ts(f"2024-02-${i}%02d")))
       .toDF("id", "name", "price", "acq")
-    Lake.mergeWritePartitioned(spark, path, seed, "id", "acq")
+    PartitionedSnapshotLake.commitMerge(spark, path, seed, "id", "acq")
     // the pruned read plan must list only the matching partition
-    val df = spark.read.parquet(path).filter(
+    val df = PartitionedSnapshotLake.readLatest(spark, path).filter(
       col("part_date").isInCollection(
         Seq(java.sql.Date.valueOf("2024-02-03"))))
     val scan = df.queryExecution.executedPlan.collectLeaves().head
     assert(scan.toString.contains("2024-02-03"))
     assert(df.count() == 1)
-  }
-
-  test("partitioned merge recovers a partition lost mid-swap") {
-    val path = Files.createTempDirectory("graft_lake_pcrash")
-      .resolve("t").toString
-    def ts(d: String) = java.sql.Timestamp.valueOf(d + " 08:00:00")
-    Lake.mergeWritePartitioned(spark, path,
-      Seq((1L, "a", 1.0, ts("2024-03-01")),
-        (2L, "b", 2.0, ts("2024-03-02")))
-        .toDF("id", "name", "price", "acq"), "id", "acq")
-    // simulate a writer crash between the two renames of day 1's swap
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(s"file://$path"),
-      spark.sparkContext.hadoopConfiguration)
-    val bakRoot = new org.apache.hadoop.fs.Path(path + ".bak_parts")
-    fs.mkdirs(bakRoot)
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(s"$path/part_date=2024-03-01"),
-      new org.apache.hadoop.fs.Path(bakRoot, "part_date=2024-03-01")))
-    // next merge (touching another day) must first restore day 1
-    val counts = Lake.mergeWritePartitioned(spark, path,
-      Seq((3L, "c", 3.0, ts("2024-03-03")))
-        .toDF("id", "name", "price", "acq"), "id", "acq")
-    assert(counts == Map("inserted" -> 1L))
-    assert(spark.read.parquet(path).count() == 3)
   }
 
   test("partitioned merge keeps live null-date rows when the batch " +
@@ -196,58 +36,28 @@ class LakeSpec extends AnyFunSuite {
       .resolve("t").toString
     def ts(d: String) = java.sql.Timestamp.valueOf(d + " 08:00:00")
     val nullTs = null.asInstanceOf[java.sql.Timestamp]
+    def merge(rows: (Long, String, Double, java.sql.Timestamp)*) =
+      PartitionedSnapshotLake.commitMerge(spark, path,
+        rows.toSeq.toDF("id", "name", "price", "acq"), "id", "acq")._2
+    def latest = PartitionedSnapshotLake.readLatest(spark, path)
     // live table: one dated row, one null-date row (unparseable AcqTime
     // → default partition)
-    Lake.mergeWritePartitioned(spark, path,
-      Seq((1L, "a", 1.0, ts("2024-04-01")), (9L, "z", 9.0, nullTs))
-        .toDF("id", "name", "price", "acq"), "id", "acq")
+    merge((1L, "a", 1.0, ts("2024-04-01")), (9L, "z", 9.0, nullTs))
+    assert(new java.io.File(
+      s"$path/part_date=__HIVE_DEFAULT_PARTITION__").isDirectory)
     // batch inserts ANOTHER null-date row: the merge must read the live
-    // default partition (isInCollection alone never matches null) or
-    // row 9 would be silently replaced by batch-only rows
-    val counts = Lake.mergeWritePartitioned(spark, path,
-      Seq((10L, "y", 10.0, nullTs)).toDF("id", "name", "price", "acq"),
-      "id", "acq")
-    assert(counts == Map("inserted" -> 1L, "kept" -> 1L))
-    val state = spark.read.parquet(path).orderBy("id")
+    // default partition or row 9 would be silently replaced by
+    // batch-only rows
+    assert(merge((10L, "y", 10.0, nullTs)) ==
+      Map("inserted" -> 1L, "kept" -> 1L))
+    val state = latest.orderBy("id")
       .select("id", "name").as[(Long, String)].collect().toSeq
     assert(state == Seq((1L, "a"), (9L, "z"), (10L, "y")))
     // and a null-date UPDATE round-trips too
-    val c2 = Lake.mergeWritePartitioned(spark, path,
-      Seq((9L, "z2", 9.5, nullTs)).toDF("id", "name", "price", "acq"),
-      "id", "acq")
-    assert(c2 == Map("updated" -> 1L, "kept" -> 1L))
-    assert(spark.read.parquet(path).filter(col("id") === 9L)
+    assert(merge((9L, "z2", 9.5, nullTs)) ==
+      Map("updated" -> 1L, "kept" -> 1L))
+    assert(latest.filter(col("id") === 9L)
       .select("name").as[String].head() == "z2")
-  }
-
-  test("compaction shrinks fragmented partitions, preserves data, " +
-      "skips compact ones") {
-    val path = Files.createTempDirectory("graft_lake_compact")
-      .resolve("t").toString
-    def ts(d: String) = java.sql.Timestamp.valueOf(d + " 10:00:00")
-    // day 1: 8 tiny files; day 2: already a single file
-    val day1 = (1L to 80L).map(i => (i, s"n$i", ts("2024-01-01")))
-      .toDF("id", "name", "acq").repartition(8)
-    val day2 = Seq((100L, "x", ts("2024-01-02")))
-      .toDF("id", "name", "acq").coalesce(1)
-    Lake.writePartitionedByDay(day1.union(day2), "acq", path)
-    val before1 = partFiles(s"$path/part_date=2024-01-01")
-    val before2 = partFiles(s"$path/part_date=2024-01-02")
-    assert(before1.size >= 8)
-
-    val stats = Lake.compactPartitions(spark, path,
-      targetBytes = 1L << 30, sortCol = Some("id"))
-    assert(stats.keySet == Set("part_date=2024-01-01"))
-    assert(stats("part_date=2024-01-01") == (before1.size, 1))
-    assert(partFiles(s"$path/part_date=2024-01-01").size == 1)
-    // the already-compact partition was never touched
-    assert(partFiles(s"$path/part_date=2024-01-02") == before2)
-    // data identical after the rewrite
-    val state = spark.read.parquet(path).orderBy("id")
-      .select("id", "name").as[(Long, String)].collect().toSeq
-    assert(state == (1L to 80L).map(i => (i, s"n$i")) :+ ((100L, "x")))
-    // idempotence: a second pass finds nothing to do
-    assert(Lake.compactPartitions(spark, path, 1L << 30).isEmpty)
   }
 
   test("bvec rotation: identity and axis swap goldens") {

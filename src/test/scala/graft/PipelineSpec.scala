@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
-import graft.catalog.Lake
+import graft.catalog.SnapshotLake
 import graft.ingest.DicomLike
 import graft.sinks.ActionSink
 
@@ -43,11 +43,11 @@ class PipelineSpec extends AnyFunSuite {
     }
 
     // 2. first MERGE into the lake (K3)
-    val c1 = Lake.mergeWrite(spark, lake, ingest(), "series_uid")
+    val (_, c1) = SnapshotLake.commitMerge(spark, lake, ingest(), "series_uid")
     assert(c1 == Map("inserted" -> 3L))
 
     // 3. maintenance over the lake table: corrupt findings → K8 script
-    val findings = spark.read.parquet(lake)
+    val findings = SnapshotLake.read(spark, lake)
       .filter(length(col("corrupt")) > 0)
       .select(col("series_uid"), lit("delete").as("action"),
         concat(lit("/lake/"), col("series_uid")).as("target"),
@@ -59,14 +59,14 @@ class PipelineSpec extends AnyFunSuite {
 
     // 4. re-ingest the same tree: the MERGE is a no-op (the property
     //    the reference approximated with --twice)
-    val c2 = Lake.mergeWrite(spark, lake, ingest(), "series_uid")
+    val (_, c2) = SnapshotLake.commitMerge(spark, lake, ingest(), "series_uid")
     assert(c2 == Map("kept" -> 3L))
 
     // 5. a changed series (file added) surfaces as exactly one update
     writeDicom(dir, "c2.dcm", "EXAM02SERC", 2, 2)
-    val c3 = Lake.mergeWrite(spark, lake, ingest(), "series_uid")
+    val (_, c3) = SnapshotLake.commitMerge(spark, lake, ingest(), "series_uid")
     assert(c3 == Map("kept" -> 2L, "updated" -> 1L))
-    val healed = spark.read.parquet(lake)
+    val healed = SnapshotLake.read(spark, lake)
       .filter(col("series_uid") === "EXAM02SERC").head
     assert(healed.getAs[String]("corrupt") == "")
   }

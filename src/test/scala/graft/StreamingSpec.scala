@@ -167,7 +167,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = mem.toDS().writeStream
       .outputMode("update")
       .foreachBatch { (b: org.apache.spark.sql.Dataset[TestEvent], _: Long) =>
-        graft.catalog.Lake.mergeWritePartitioned(
+        graft.catalog.PartitionedSnapshotLake.commitMerge(
           b.sparkSession, path, b.toDF(), "event_id", "ts"): Unit
       }.start()
     mem.addData(TestEvent(1, ts("2024-01-01 10:05:00"), "click", 1.0),
@@ -179,7 +179,7 @@ class StreamingSpec extends AnyFunSuite {
       TestEvent(1, ts("2024-01-01 10:05:00"), "click", 1.0))
     q.processAllAvailable()
     q.stop()
-    val state = spark.read.parquet(path)
+    val state = graft.catalog.PartitionedSnapshotLake.readLatest(spark, path)
       .select("event_id", "value").orderBy("event_id")
       .as[(Long, Double)].collect().toSeq
     assert(state == Seq((1L, 1.0), (2L, 9.0), (3L, 3.0)))

@@ -34,9 +34,24 @@ class TextQualitySpec extends AnyFunSuite {
     14L -> ("the 'a' appears a lot a a a a a a a a a a a a a a a a"))
 
   test("native expression == SQL let-binding form on edge cases") {
-    val native = TextOps.qualityGate(edge).orderBy("doc_id").collect()
-    val sql = TextOps.qualityGateSql(edge).orderBy("doc_id").collect()
-    assert(native.toSeq == sql.toSeq)
+    // the session default, then compiled only: a doGenCode that does not
+    // compile must fail here, not fall back. The repartition keeps the
+    // optimizer from evaluating the gate over the local rows itself
+    val codegenOnly = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    Seq(Nil -> edge, codegenOnly -> edge.repartition(2)).foreach {
+      case (confs, in) =>
+        val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        try {
+          val native = TextOps.qualityGate(in).orderBy("doc_id").collect()
+          val sql = TextOps.qualityGateSql(in).orderBy("doc_id").collect()
+          assert(native.toSeq == sql.toSeq, s"under $confs")
+        } finally prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+    }
   }
 
   test("native expression == SQL form over the corpus, filtered too") {
