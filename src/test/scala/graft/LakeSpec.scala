@@ -13,6 +13,78 @@ class LakeSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
 
+  test("lake mergeWrite: create, update, keep, insert, idempotence") {
+    val path = Files.createTempDirectory("graft_lake")
+      .resolve("exam").toString
+    def merge(exclude: Seq[String], rows: (Long, String, Double, String)*) =
+      PartitionedSnapshotLake.commitMerge(spark, path,
+        rows.toSeq.toDF("id", "name", "price", "ts"), "id", "ts", exclude)._2
+    def state = PartitionedSnapshotLake.readLatest(spark, path)
+      .orderBy("id").select("id", "name", "price")
+      .as[(Long, String, Double)].collect().toSeq
+
+    assert(merge(Nil, (1L, "a", 10.0, "2024-01-01"),
+      (2L, "b", 20.0, "2024-01-01")) == Map("inserted" -> 2L))
+    val batch =
+      Seq((2L, "b", 99.0, "2024-01-01"), (3L, "c", 30.0, "2024-01-02"))
+    assert(merge(Nil, batch: _*) ==
+      Map("kept" -> 1L, "updated" -> 1L, "inserted" -> 1L))
+    val merged = state
+    assert(merged == Seq((1L, "a", 10.0), (2L, "b", 99.0), (3L, "c", 30.0)))
+
+    // re-merging the same batch is a no-op (the --twice story), and an
+    // exclude-listed column never counts as a change
+    assert(merge(Nil, batch: _*) == Map("kept" -> 3L))
+    assert(merge(Seq("price"), (1L, "a", 11.0, "2024-01-01")) ==
+      Map("kept" -> 2L))
+    assert(state == merged)
+  }
+
+  /** Every file under a partition's version dirs, with its mtime. */
+  private def partFiles(dir: String): Map[String, Long] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val d = new java.io.File(dir)
+    walk(d).map(f => d.toPath.relativize(f.toPath).toString ->
+      f.lastModified()).toMap
+  }
+
+  test("partitioned merge touches only the batch's date partitions") {
+    val path = Files.createTempDirectory("graft_lake_part")
+      .resolve("exam").toString
+    def ts(d: String) = java.sql.Timestamp.valueOf(d + " 10:00:00")
+    def merge(rows: (Long, String, Double, java.sql.Timestamp)*) =
+      PartitionedSnapshotLake.commitMerge(spark, path,
+        rows.toSeq.toDF("id", "name", "price", "acq"), "id", "acq")._2
+    assert(merge((1L, "a", 10.0, ts("2024-01-01")),
+      (2L, "b", 20.0, ts("2024-01-02")),
+      (3L, "c", 30.0, ts("2024-01-03"))) == Map("inserted" -> 3L))
+
+    val untouched = partFiles(s"$path/part_date=2024-01-03")
+    assert(untouched.keys.exists(_.contains("part-")))
+
+    // batch: update day 1, insert into a brand-new day 4
+    val batch = Seq((1L, "a", 99.0, ts("2024-01-01")),
+      (4L, "d", 40.0, ts("2024-01-04")))
+    assert(merge(batch: _*) == Map("updated" -> 1L, "inserted" -> 1L))
+
+    // day-3 partition: same file names, same mtimes — never rewritten
+    assert(partFiles(s"$path/part_date=2024-01-03") == untouched)
+    // days 2 and 3 gained no version (not in the batch's date set)
+    Seq("2024-01-02", "2024-01-03").foreach { d =>
+      assert(PartitionedSnapshotLake.partitionVersions(spark, path,
+        s"part_date=$d") == Seq(1L))
+    }
+    val state = PartitionedSnapshotLake.readLatest(spark, path)
+      .orderBy("id").select("id", "name", "price")
+      .as[(Long, String, Double)].collect().toSeq
+    assert(state == Seq((1L, "a", 99.0), (2L, "b", 20.0),
+      (3L, "c", 30.0), (4L, "d", 40.0)))
+
+    // idempotence across the partitioned path
+    assert(merge(batch: _*) == Map("kept" -> 2L))
+  }
+
   test("partitioned merge read is pruned to the batch's dates") {
     val path = Files.createTempDirectory("graft_lake_prune")
       .resolve("t").toString
