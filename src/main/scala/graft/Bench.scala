@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Phase-attribution side channel for bench queries whose wall time is
@@ -55,13 +54,8 @@ object Bench {
     * skip-on-tag-mismatch keeps that class of false alarm out of future
     * rounds. v2 = full-row toRdd materialization, min of 3 timed runs
     * after one warmup.
-    *
-    * `BENCH_TIMING=count-v1` re-selects the round-6 ruler — ONLY for
-    * cross-round A/B checks ("is this diff the method or the code?"),
-    * never for grading: count-v1 under-bills projection-heavy queries.
     */
-  val Timing: String =
-    sys.env.getOrElse("BENCH_TIMING", "toRdd-min3-v2")
+  val Timing: String = "toRdd-min3-v2"
 
   /** Force FULL materialization of every output column. `.count()` lets
     * Catalyst prune unconsumed projections — round-6's t13 benched at
@@ -70,211 +64,7 @@ object Bench {
     * (UnsafeRows materialize each column), so projection-only queries
     * are billed what a consumer would actually pay. */
   def consume(df: org.apache.spark.sql.DataFrame): Long =
-    if (Timing == "count-v1") df.count()
-    else df.queryExecution.toRdd.count()
-
-  /** Fixed-work calibration microbench (r13 verdict ask #5): the
-    * 77.9→93.4→94.4 s cross-instance saga cost a worktree A/B to
-    * attribute; this stamps every bench artifact with the BOX's speed
-    * on two pinned workloads so the next cross-VM drift is
-    * attributable from the artifacts alone:
-    *  - `cal_cpu`: one single-stage, shuffle-free Spark job — a fixed
-    *    row count through xxhash64 into one sum (deterministic,
-    *    codegen'd, no I/O) — the compute-bound query class;
-    *  - `cal_fs`: a driver-side write+fsync loop of small files — the
-    *    staging/lake-protocol class (i1/k15/k14), whose r13 drift was
-    *    kernel-writeback-bound, invisible to a CPU calibration.
-    * ~4-5 s total, run ONCE before the query loop (never inside any
-    * query's timed window); the cpu half is re-read AFTER the last
-    * timed run as `cal_cpu_post` (r15 ask #1 — see [[calCpuSeconds]]).
-    * The regression gate stays RAW — scaling
-    * gate DECISIONS by a 2-point calibration would let one noisy
-    * calibration sample suppress a real regression — but the gate's
-    * stderr report shows the cpu-scaled delta next to the raw one. */
-  private[graft] def calibrate(
-      spark: SparkSession): Map[String, Double] = {
-    import org.apache.spark.sql.functions._
-    // degrade, never abort: the calibration ANNOTATES the bench run —
-    // a full /tmp, a read-only tmpdir, or one flaky fsync must not
-    // kill the round it was meant to make attributable. Whatever rows
-    // were measured before the failure stay in the artifact (the JSON
-    // writer handles a partial/empty map).
-    val out = scala.collection.mutable.Map[String, Double]()
-    try {
-      out("cal_cpu") = calCpuSeconds(spark)
-      val dir = java.nio.file.Files.createTempDirectory("graft_cal")
-      try {
-        val bytes = Array.fill[Byte](65536)(0x5A)
-        val t1 = System.nanoTime()
-        (0 until CalFsFiles).foreach { i =>
-          val ch = java.nio.channels.FileChannel.open(dir.resolve(s"f$i"),
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.WRITE)
-          try {
-            ch.write(java.nio.ByteBuffer.wrap(bytes))
-            ch.force(true)
-          } finally ch.close()
-        }
-        out("cal_fs") = (System.nanoTime() - t1) / 1e9
-      } finally {
-        (0 until CalFsFiles).foreach(i =>
-          java.nio.file.Files.deleteIfExists(dir.resolve(s"f$i")))
-        java.nio.file.Files.deleteIfExists(dir): Unit
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println("BENCH calibration failed (" +
-          s"${e.getClass.getSimpleName}: ${e.getMessage}); the " +
-          "artifact will carry a partial or absent calibration row")
-    }
-    out.toMap
-  }
-
-  /** The `cal_cpu` workload alone (throws on failure — [[calibrate]]
-    * degrades it, the post-run caller in [[main]] degrades it
-    * separately): one single-stage, shuffle-free, codegen'd Spark job
-    * over a pinned row count. Shared by the PRE-run calibration and
-    * the r15-ask-#1 POST-run reading — the recorded pass-8 d15
-    * counterexample proved a host burst arriving AFTER the pre-run
-    * window makes a uniformly-contended run read formally clean, so
-    * the artifact now brackets the timed runs with a calibration on
-    * EACH side (`cal_cpu` / `cal_cpu_post`) and [[isContended]] fires
-    * on either. */
-  private[graft] def calCpuSeconds(spark: SparkSession): Double = {
-    import org.apache.spark.sql.functions._
-    val t0 = System.nanoTime()
-    spark.range(0L, CalCpuRows, 1L,
-        spark.sparkContext.defaultParallelism)
-      // bit_xor, not sum: ANSI mode overflows a long sum of 3e9
-      // full-range hashes
-      .select(bit_xor(xxhash64(col("id"), col("id") + 1L, col("id") + 2L)))
-      .collect()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Pinned calibration workload sizes — changing either re-rulers
-    * `calibration` across rounds, so bump [[Timing]] if they change. */
-  private[graft] val CalCpuRows: Long = 2000000000L
-  private[graft] val CalFsFiles: Int = 512
-
-  /** Quiet-band ceiling for [[calibrate]]'s `cal_cpu`, seconds: every
-    * quiet-box reading in BENCH_NOTES history sits in 3.7–5.0 s and
-    * every reading taken under known contention (test-suite residue,
-    * host bursts) read 6.0+, so 5.5 splits the observed clusters with
-    * margin both ways. A run whose cal_cpu exceeds it is stamped
-    * `"contended":true` in the artifacts (r14 verdict ask #4) — the
-    * A/B protocol showed gate DECISIONS must stay raw, but a line
-    * recorded under sustained contention must not read identical to a
-    * quiet line in bench_history, or every cross-round comparison
-    * starts with forensics. Env-overridable because the band is a
-    * property of the box class, not the code. */
-  private[graft] val CalCpuQuietCeiling: Double =
-    sys.env.getOrElse("BENCH_CAL_QUIET_CEIL", "5.5").toDouble
-
-  /** Floor of the cold ruler's observed CONTENDED cluster, seconds:
-    * every cold reading taken under a known live burst in BENCH_NOTES
-    * history read 6.0+ (r16 anchor: 7.1–16.6). Readings between the
-    * quiet ceiling and this floor fall in a band no quiet OR
-    * contended sample has ever occupied — classified
-    * `cal_indeterminate`, not clean (r16 verdict ask #1). */
-  private[graft] val CalCpuContendedFloor: Double =
-    sys.env.getOrElse("BENCH_CAL_CONTENDED_FLOOR", "6.0").toDouble
-
-  /** Quiet-band ceiling for WARM readings (`cal_cpu_post` and the
-    * mid-run `cal_cpu_mid_*` interleave), seconds. A warm reading
-    * reruns the pinned workload in a hot JVM (codegen compiled, C2
-    * hot, scheduler spun up) and therefore sits on its own,
-    * ~3.5×-lower ruler than the cold first-job `cal_cpu` — the r16
-    * measurements: warm quiet readings cluster 1.23–1.35 s (whether
-    * taken 10 s or 151 queries into the JVM, so the warm ruler is
-    * stable across JVM life), warm readings under a live burst (cold
-    * twin 7.9–9.8 s) read 2.02–2.22 s. The r16 ceiling of 1.8
-    * BISECTED the unobserved 1.35–2.02 gap into "clean" — and the
-    * r16 anchor promptly produced two cross-attempt-contradicted
-    * clean rows with post readings 1.63/1.65, squarely inside that
-    * gap (BENCH_NOTES round-16). So the clean ceiling is now quiet
-    * max × 1.11 margin = 1.5, and everything between it and
-    * [[CalCpuPostContendedFloor]] is `cal_indeterminate`: steady
-    * moderate contention no longer cal-certifies slowed rows.
-    * Env-overridable; banded on r16 samples (BENCH_NOTES "post-run
-    * calibration"), so re-derive if the box class changes — and the
-    * artifact warns loudly when a much faster box makes this band
-    * vacuous (see [[needsBandRederive]]). */
-  private[graft] val CalCpuPostQuietCeiling: Double =
-    sys.env.getOrElse("BENCH_CAL_QUIET_CEIL_POST", "1.5").toDouble
-
-  /** Floor of the warm ruler's observed CONTENDED cluster, seconds
-    * (r16 live-burst samples: 2.02–2.22, and the r16 anchor's flagged
-    * post readings 2.0–3.35). At or above it a warm reading is
-    * positive evidence of contention; between the quiet ceiling and
-    * here is the unobserved gap → `cal_indeterminate`. */
-  private[graft] val CalCpuPostContendedFloor: Double =
-    sys.env.getOrElse("BENCH_CAL_CONTENDED_FLOOR_POST", "2.0").toDouble
-
-  /** Three-state verdict of a calibration row (r16 verdict ask #1).
-    * Ordered by severity so a row with several readings takes the
-    * worst one. */
-  private[graft] sealed abstract class CalState(
-      private[graft] val rank: Int) extends Ordered[CalState] {
-    def compare(that: CalState): Int = rank.compare(that.rank)
-  }
-  private[graft] case object CalQuiet extends CalState(0)
-  private[graft] case object CalIndeterminate extends CalState(1)
-  private[graft] case object CalContended extends CalState(2)
-
-  /** One reading against its own ruler's bands: at or below the quiet
-    * ceiling = quiet, at or above the contended floor = contended,
-    * the never-observed gap between = indeterminate. */
-  private[graft] def classifyReading(v: Double, quietCeiling: Double,
-      contendedFloor: Double): CalState =
-    if (v >= contendedFloor) CalContended
-    else if (v > quietCeiling) CalIndeterminate
-    else CalQuiet
-
-  /** The row's verdict: worst state over every cpu reading it carries
-    * — the cold pre-run `cal_cpu` on the cold ruler; the warm
-    * post-run `cal_cpu_post` AND any mid-run `cal_cpu_mid_*`
-    * interleave readings on the warm ruler (a burst visible ONLY to a
-    * mid reading still stamps the row — r16 verdict ask #3). No cpu
-    * reading at all (calibration failed/absent) means UNKNOWN, which
-    * renders as quiet: the flags assert positive evidence only. */
-  private[graft] def calState(cal: Map[String, Double],
-      ceiling: Double = CalCpuQuietCeiling,
-      postCeiling: Double = CalCpuPostQuietCeiling,
-      contendedFloor: Double = CalCpuContendedFloor,
-      postContendedFloor: Double = CalCpuPostContendedFloor): CalState =
-    cal.iterator.collect {
-      case ("cal_cpu", v) => classifyReading(v, ceiling, contendedFloor)
-      case (k, v) if k == "cal_cpu_post" || k.startsWith("cal_cpu_mid") =>
-        classifyReading(v, postCeiling, postContendedFloor)
-    }.foldLeft(CalQuiet: CalState)((a, b) => if (b > a) b else a)
-
-  /** Whether a calibration row marks the run as taken under host
-    * contention: ANY reading at or above its own ruler's contended
-    * floor fires it (pre-run cold, post-run warm, or a mid-run
-    * interleave reading — bracketing catches bursts on either side
-    * of the timed runs, the interleave catches bursts strictly
-    * between the brackets when enabled). Readings in the unobserved
-    * gap between the bands stamp `cal_indeterminate` instead (see
-    * [[calState]]). */
-  private[graft] def isContended(cal: Map[String, Double],
-      ceiling: Double = CalCpuQuietCeiling,
-      postCeiling: Double = CalCpuPostQuietCeiling): Boolean =
-    calState(cal, ceiling, postCeiling) == CalContended
-
-  /** Warm-band portability hedge (r16 verdict ask #7): the warm bands
-    * are derived from six samples of ONE box class; on a much faster
-    * box every warm reading would sit far below the quiet ceiling and
-    * the band would be vacuously permissive (a 2× burst could still
-    * read "quiet"). A post reading below 0.6× the observed quiet-band
-    * max (1.35 × 0.6 = 0.81 s at defaults) is that evidence — the
-    * artifact carries a loud re-derive flag instead of silently
-    * keeping a ceiling sized for a slower machine. */
-  private[graft] val CalCpuPostQuietMax: Double =
-    sys.env.getOrElse("BENCH_CAL_QUIET_MAX_POST", "1.35").toDouble
-  private[graft] def needsBandRederive(cal: Map[String, Double],
-      quietMax: Double = CalCpuPostQuietMax): Boolean =
-    cal.get("cal_cpu_post").exists(_ < 0.6 * quietMax)
+    df.queryExecution.toRdd.count()
 
   /** Max/min spread across one query's timed runs above which the
     * host is presumed to have stalled a run mid-measurement and up to
@@ -299,10 +89,17 @@ object Bench {
   private[graft] def num3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  /** JSON string literal: escapes the quote, the backslash and EVERY
+    * control char (< 0x20) — shared by the bench artifacts and
+    * Verify's oracle_sql.json, where a raw tab or CR would make a
+    * strict parser reject the whole file. */
   private[graft] def jsonQ(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
-    case c if c < ' ' => " "
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
 
@@ -323,39 +120,6 @@ object Bench {
     }.mkString(""""phases":{""", ",", "},")
   }
 
-  /** The driver-scraped stdout line: full JSON if it fits, else drop
-    * the FASTEST queries until ≤ `budget` chars (the slow ones are the
-    * ones worth grading). Pure so BenchRenderSpec can gate it. */
-  /** `"calibration":{...},` (trailing comma) or empty. */
-  private def calibrationJson(cal: Map[String, Double]): String =
-    if (cal.isEmpty) ""
-    else cal.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jsonQ(k)}:${num3(v)}" }
-      .mkString(""""calibration":{""", ",", "},")
-
-  /** Calibration-verdict flags, all trailing-comma'd or empty:
-    *  - `"contended":true,` when any reading sits at/above its
-    *    ruler's contended floor — downstream comparisons can filter
-    *    contaminated lines without forensics (r14 verdict ask #4);
-    *  - `"cal_indeterminate":true,` when the worst reading falls in
-    *    the unobserved gap between the quiet and contended bands —
-    *    neither clean nor provably contended (r16 verdict ask #1);
-    *  - `"cal_band_rederive":true,` when the post reading says the
-    *    warm band was derived on a slower box class and is vacuous
-    *    here (r16 verdict ask #7).
-    * Old lines carry none of these; their absence still means a
-    * quiet (or unknown) row. */
-  private def contendedJson(cal: Map[String, Double]): String = {
-    val verdict = calState(cal) match {
-      case CalContended => s""""contended":true,"""
-      case CalIndeterminate => s""""cal_indeterminate":true,"""
-      case CalQuiet => ""
-    }
-    val rederive =
-      if (needsBandRederive(cal)) s""""cal_band_rederive":true,""" else ""
-    verdict + rederive
-  }
-
   /** `"noise_retries":{...},` (per-query extra-run counts beyond the
     * base three) or empty — makes each row self-describing about its
     * sample count (min-of-3 vs min-of-5) instead of burying that in
@@ -366,13 +130,15 @@ object Bench {
       .map { case (k, v) => s"${jsonQ(k)}:$v" }
       .mkString(""""noise_retries":{""", ",", "},")
 
+  /** The scraped stdout line: full JSON if it fits, else drop
+    * the FASTEST queries until ≤ `budget` chars (the slow ones are the
+    * ones worth grading). Pure so BenchRenderSpec can gate it. */
   private[graft] def stdoutLine(
       times: Seq[(String, Double)], errors: Seq[(String, String)],
       sfDir: String, budget: Int = 1700,
       bucketOverflows: Int = 0, regressed: Int = 0,
       filtered: Boolean = false,
       phases: Map[String, Map[String, Double]] = Map.empty,
-      calibration: Map[String, Double] = Map.empty,
       noiseRetries: Map[String, Int] = Map.empty): String = {
     val es = errors.take(3)
       .map { case (k, v) => s"${jsonQ(k)}:${jsonQ(v.take(60))}" }
@@ -384,14 +150,12 @@ object Bench {
     // just bench_history) — ~100 chars for one query, and the budget
     // dropper accounts for it like everything else
     val ph = phasesJson(times, phases)
-    val cal = calibrationJson(calibration)
-    val cont = contendedJson(calibration)
     val nr = noiseRetriesJson(noiseRetries)
     def render(qmap: Seq[(String, Double)], omitted: Int): String = {
       val qs = qmap.map { case (k, v) => s"${jsonQ(k)}:${num3(v)}" }
         .mkString("{", ",", "}")
       val omit = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-      s"""{"metric":"total","value":${num3(total)},"unit":"sec","timing":${jsonQ(Timing)},$cal$cont$nr""" +
+      s"""{"metric":"total","value":${num3(total)},"unit":"sec","timing":${jsonQ(Timing)},$nr""" +
         s"""$filt"queries":$qs,$ph"errors":$es,"n_ok":${times.size},""" +
         s""""n_err":${errors.size},"bucket_overflows":$bucketOverflows,""" +
         s""""regressed":$regressed$omit,"sf":${jsonQ(sfDir)}}"""
@@ -411,7 +175,6 @@ object Bench {
       sfDir: String, bucketOverflows: Int, regressed: Int,
       filtered: Boolean = false,
       phases: Map[String, Map[String, Double]] = Map.empty,
-      calibration: Map[String, Double] = Map.empty,
       noiseRetries: Map[String, Int] = Map.empty): String = {
     val full = times.map { case (k, v) => s"${jsonQ(k)}:$v" }
       .mkString("{", ",", "}")
@@ -423,10 +186,8 @@ object Bench {
     // phase seconds plus the pure-Spark residual vs its total — the
     // split future gates diff instead of the conflated wall time
     val ph = phasesJson(times, phases)
-    val cal = calibrationJson(calibration)
-    val cont = contendedJson(calibration)
     val nr = noiseRetriesJson(noiseRetries)
-    s"""{"metric":"total","value":$total,"unit":"sec","timing":${jsonQ(Timing)},$cal$cont$nr""" +
+    s"""{"metric":"total","value":$total,"unit":"sec","timing":${jsonQ(Timing)},$nr""" +
       s"""$filt"queries":$full,$ph"errors":$esFull,"n_ok":${times.size},""" +
       s""""n_err":${errors.size},"bucket_overflows":$bucketOverflows,""" +
       s""""regressed":$regressed,"sf":${jsonQ(sfDir)}}"""
@@ -480,34 +241,15 @@ object Bench {
     }.toMap
   }
 
-  /** Pull the calibration row back out of a history line — flat
-    * nested object, same writer shape as a phase split. */
-  private[graft] def parseHistoryCalibration(
-      line: String): Map[String, Double] = {
-    val body = """"calibration":\{([^}]*)\}""".r
-      .findFirstMatchIn(line).map(_.group(1)).getOrElse(return Map.empty)
-    """"([^"]+)":([-0-9.eE]+)""".r.findAllMatchIn(body)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
-
-  /** Pull the per-query noise-retry counts back out of a history
-    * line — flat nested object of ints, same writer shape. */
-  private[graft] def parseHistoryNoiseRetries(
-      line: String): Map[String, Int] = {
-    val body = """"noise_retries":\{([^}]*)\}""".r
-      .findFirstMatchIn(line).map(_.group(1)).getOrElse(return Map.empty)
-    """"([^"]+)":(\d+)""".r.findAllMatchIn(body)
-      .map(m => m.group(1) -> m.group(2).toInt).toMap
-  }
-
   /** Choose the regression-gate baseline from history lines: the LAST
     * line with the same timing tag and sf dir that is not filtered
     * (query-subset runs cover almost nothing) and not flagged
-    * contended/cal_indeterminate — a contaminated baseline inflates
-    * every per-query budget by its own slowdown and masks real
-    * regressions in the next run (this round appended two flagged
-    * full-suite lines back-to-back, which would otherwise become the
-    * driver's baseline). When EVERY candidate is flagged, fall back
+    * `"contended":true`/`"cal_indeterminate":true`. The bench no
+    * longer writes those flags (its box calibration is retired, see
+    * BENCH_NOTES), but bench_history.jsonl still holds lines stamped
+    * by it, and a contaminated baseline inflates every per-query
+    * budget by its own slowdown and masks real regressions in the
+    * next run. When EVERY candidate is flagged, fall back
     * to the last one so the gate still runs: an inflated baseline
     * under-flags, but no baseline means no gate at all. Returns
     * (timing, sf, queries, rawLine). */
@@ -612,22 +354,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // box calibration FIRST — before any query work can contaminate
-    // it with cache/writeback residue (it doubles as a JIT/codegen
-    // warmup for the range/hash path)
-    val calibration = calibrate(spark)
-    System.err.println("BENCH calibration " + calibration.toSeq.sortBy(_._1)
-      .map { case (k, v) => f"$k=$v%.3f s" }.mkString(", "))
+    val spark = Session.local()
 
     // optional args = query-name filter, for iterating on one operator
     // without paying for the whole suite
@@ -708,9 +435,8 @@ object Bench {
           // sub-second spreads are JIT/GC texture, and the floor
           // keeps the retry budget off the 100+ cheap queries.
           while (needsNoiseRetry(runs, best, worst)) {
-            // visible in the driver log next to the calibration row, so
-            // a retry-heavy round reads as "host was bursty" from the
-            // artifacts alone
+            // visible in the stderr log, so a retry-heavy round reads
+            // as "host was bursty" from the artifacts alone
             System.err.println(f"BENCH noise retry $name (run ${runs + 1}):" +
               f" spread ${worst}%.2f s / ${best}%.2f s")
             noiseRetries(name) = noiseRetries.getOrElse(name, 0) + 1
@@ -720,21 +446,13 @@ object Bench {
         times(name) = best
         // read the observe() metrics off the executed plan directly —
         // synchronous, unlike the async listener-bus path BucketAudit
-        // uses for production logging. Only meaningful under the v2
-        // ruler: count-v1's df.count() executes a DIFFERENT
-        // QueryExecution, so lastDf's accumulators stay empty — the
-        // audit is explicitly absent in A/B mode, not silently zero.
-        // the eager side channel sits INSIDE the same ruler guard: the
-        // count-v1 contract is "audit explicitly absent in A/B mode",
-        // and letting eager queries (d2's internal materialization)
-        // populate the column while lazy ones stay silently zero would
-        // make it neither absent nor complete under that ruler
-        val overflowed = Timing != "count-v1" &&
-          (lastDf.queryExecution.observedMetrics.exists {
+        // uses for production logging
+        val overflowed =
+          lastDf.queryExecution.observedMetrics.exists {
             case (metric, row) => metric.startsWith("bucket_overflow_") &&
               !row.isNullAt(0) && row.getLong(0) > 0
           } ||
-          graft.operators.BucketAudit.eagerOverflowed > eagerBefore)
+          graft.operators.BucketAudit.eagerOverflowed > eagerBefore
         if (overflowed) bucketOverflows += 1
         // dedup pipelines cache small feature tables; clear between
         // queries so storage memory never accumulates across the
@@ -749,46 +467,12 @@ object Bench {
           phases.remove(name): Unit // no time row -> no split row
       }
     }
-    // mid-run calibration interleave (r16 verdict ask #3): a burst
-    // contained STRICTLY between the pre/post bracket readings reads
-    // clean on both (BENCH_NOTES round-16 residual). Opt-in because
-    // it costs ~1.3 s per query family (≈15 readings over an 86 s
-    // full run): default OFF so the driver line's cost and stdout
-    // shape are unchanged; the anchor script turns it on — anchors
-    // are exactly where the between-readings blind spot bit (three
-    // contradicted clean rows in r16). One warm reading lands after
-    // each query family (names are sorted, so the leading letter
-    // partitions the suite) as `cal_cpu_mid_<family>`, and calState
-    // fires contended/indeterminate on ANY reading.
-    val calInterleave = sys.env.get("BENCH_CAL_INTERLEAVE")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    val midReadings =
-      scala.collection.mutable.LinkedHashMap[String, Double]()
-    def midReading(family: String): Unit =
-      try {
-        val v = calCpuSeconds(spark)
-        midReadings(s"cal_cpu_mid_$family") = v
-        System.err.println(f"BENCH mid-run calibration " +
-          f"cal_cpu_mid_$family%s=$v%.3f s")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println("BENCH mid-run calibration failed (" +
-            s"${e.getClass.getSimpleName}: ${e.getMessage})")
-      }
-    var prevFamily: String = null
-    names.foreach { n =>
-      val family = n.take(1)
-      if (calInterleave && prevFamily != null && family != prevFamily)
-        midReading(prevFamily)
-      prevFamily = family
-      measure(n)
-    }
-    if (calInterleave && prevFamily != null) midReading(prevFamily)
+    names.foreach(measure)
 
     // regression gate vs the last CLEAN history entry with the same
     // timing tag AND the same sf dir — see [[selectBaseline]] for the
-    // exclusions (filtered subset runs, other tags/sf, and flagged
-    // contended/indeterminate lines, which fall back to last-any);
+    // exclusions (filtered subset runs, other tags/sf, and lines
+    // flagged contended/indeterminate, which fall back to last-any);
     // detail to stderr, count into the JSON artifacts
     val histPath = Paths.get(
       sys.env.getOrElse("BENCH_HISTORY", "bench_history.jsonl"))
@@ -856,49 +540,9 @@ object Bench {
         }
       }
     }
-    // POST-run calibration (r15 verdict ask #1): the pass-8 d15
-    // counterexample proved a clean pre-run cal_cpu does not certify
-    // the timed runs — the burst arrived AFTER the calibration window
-    // and every run was uniformly slow with zero retries. Re-read the
-    // same pinned workload AFTER the last timed run (retests
-    // included) so the artifact brackets the measurement interval;
-    // isContended fires on either side. Degrade like the pre-run
-    // calibration: a post-cal fault annotates, never aborts.
-    val calibrationFull = calibration ++ midReadings ++
-      (try Map("cal_cpu_post" -> calCpuSeconds(spark))
-       catch {
-         case scala.util.control.NonFatal(e) =>
-           System.err.println("BENCH post-run calibration failed (" +
-             s"${e.getClass.getSimpleName}: ${e.getMessage}); the " +
-             "artifact will carry only the pre-run reading")
-           Map.empty[String, Double]
-       })
-    System.err.println("BENCH post-run calibration " +
-      calibrationFull.get("cal_cpu_post")
-        .map(v => f"cal_cpu_post=$v%.3f s").getOrElse("(absent)"))
-
     val confirmed = gate()
-    // report raw AND calibration-scaled deltas (r13 verdict ask #5):
-    // the scaled figure divides out the box-speed ratio between the
-    // two runs' cpu calibrations — a regression that disappears under
-    // scaling is box drift, one that survives is code. The gate's
-    // DECISION stays raw (a noisy 2-point calibration must not be
-    // able to suppress a real regression); the scaled number is for
-    // the human reading the artifact.
-    val prevCal = prevSame
-      .map { case (_, _, _, line) => parseHistoryCalibration(line) }
-      .getOrElse(Map.empty)
-    val cpuRatio = for {
-      p <- prevCal.get("cal_cpu"); c <- calibration.get("cal_cpu")
-      if c > 0.0
-    } yield p / c
     confirmed.foreach { case (n, was, now) =>
-      val scaled = cpuRatio
-        .map(r => f" (calibration-scaled: ${now * r}%.2f s, " +
-          f"box cpu ratio prev/cur=${r}%.3f)")
-        .getOrElse("")
-      System.err.println(
-        f"BENCH REGRESSION $n: $was%.2f s -> $now%.2f s$scaled")
+      System.err.println(f"BENCH REGRESSION $n: $was%.2f s -> $now%.2f s")
     }
     val regressed = confirmed.size
 
@@ -909,42 +553,13 @@ object Bench {
     // the stdout line under 1700 chars by dropping the FASTEST queries
     // first (the slow ones are the ones worth grading); the full-precision
     // map always lands in $BENCH_OUT and appends to $BENCH_HISTORY.
-    calState(calibrationFull) match {
-      case CalContended =>
-        System.err.println(f"BENCH CONTENDED: cal_cpu " +
-          f"${calibrationFull.getOrElse("cal_cpu", Double.NaN)}%.2f s " +
-          f"(cold floor ${CalCpuContendedFloor}%.1f) / cal_cpu_post " +
-          f"${calibrationFull.getOrElse("cal_cpu_post", Double.NaN)}%.2f " +
-          f"s (warm floor ${CalCpuPostContendedFloor}%.1f) — this " +
-          "line's numbers were taken under host contention")
-      case CalIndeterminate =>
-        System.err.println(f"BENCH INDETERMINATE: a calibration " +
-          f"reading sits in the unobserved gap between the quiet and " +
-          f"contended bands (cold ${CalCpuQuietCeiling}%.1f–" +
-          f"${CalCpuContendedFloor}%.1f / warm " +
-          f"${CalCpuPostQuietCeiling}%.1f–" +
-          f"${CalCpuPostContendedFloor}%.1f) — steady moderate " +
-          "contention cannot be ruled out; treat this line's numbers " +
-          "as upper bounds, not quiet anchors")
-      case CalQuiet => ()
-    }
-    if (needsBandRederive(calibrationFull))
-      System.err.println(f"BENCH WARM-BAND RE-DERIVE: cal_cpu_post " +
-        f"${calibrationFull.getOrElse("cal_cpu_post", Double.NaN)}%.2f " +
-        f"s is below 0.6× the observed warm-quiet max " +
-        f"${CalCpuPostQuietMax}%.2f s — this box class is much faster " +
-        "than the one the warm bands were derived on, making the " +
-        "ceilings vacuously permissive; re-derive BENCH_CAL_QUIET_" +
-        "CEIL_POST / BENCH_CAL_CONTENDED_FLOOR_POST from fresh " +
-        "quiet/contended samples (BENCH_NOTES round-16 protocol)")
     println(stdoutLine(times.toSeq, errors.toSeq, sfDir,
       bucketOverflows = bucketOverflows, regressed = regressed,
       filtered = args.nonEmpty, phases = phases.toMap,
-      calibration = calibrationFull, noiseRetries = noiseRetries.toMap))
+      noiseRetries = noiseRetries.toMap))
     val json = fullJson(times.toSeq, errors.toSeq, sfDir,
       bucketOverflows, regressed, filtered = args.nonEmpty,
-      phases = phases.toMap, calibration = calibrationFull,
-      noiseRetries = noiseRetries.toMap)
+      phases = phases.toMap, noiseRetries = noiseRetries.toMap)
     val out = sys.env.getOrElse("BENCH_OUT", "bench_out.json")
     Files.writeString(Paths.get(out), json + "\n")
     // append-only archive: bench_out.json is overwritten every round,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round loupe: write `.explain("formatted")` for named
@@ -10,10 +9,11 @@ import java.nio.file.{Files, Paths}
   * sbt "runMain graft.PlanDump <outDir> [suffix] [names...]"
   *
   * Writes `<outDir>/<name>_<suffix>.txt` (suffix defaults to "plan").
-  * Same session confs as Bench so the captured plan is the one the
-  * bench executes. Queries that do real work at plan-construction time
-  * (iterative loops, staging writes) run that work here too — the dump
-  * is the FINAL returned frame's plan, exactly what consume() executes.
+  * Runs on [[Session.local]], like Bench, so the captured plan is the
+  * one the bench executes. Queries that do real work at
+  * plan-construction time (iterative loops, staging writes) run that
+  * work here too — the dump is the FINAL returned frame's plan,
+  * exactly what consume() executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -23,15 +23,7 @@ object PlanDump {
       if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

@@ -237,8 +237,9 @@ object JdbcCatalog {
       val colTypes = Map("o_orderpriority" -> "VARCHAR(32)")
       // PhaseLog: the embedded single-JVM database is the scale-bound
       // share of this query (13× at 10× data is Derby, not the plan —
-      // K1Attribution r9); tag it so the bench artifact carries the
-      // split and regression gates can diff the Spark residual alone
+      // BENCH_NOTES "Round-9 k1 cost attribution"); tag it so the
+      // bench artifact carries the split and regression gates can
+      // diff the Spark residual alone
       graft.PhaseLog.timed("derby_load") {
         write(base, url, "GRAFT_ORDERS", SaveMode.Overwrite, colTypes)
       }

@@ -193,7 +193,8 @@ object DedupOps {
     // (the projections canonicalize identically, so ReuseExchange
     // collapses them) instead of three AQE runtime SMJ→BHJ rewrites
     // with their own stage boundaries — at sf0.1 the per-round cost
-    // IS that fixed stage latency (CCDiag). Above the bound nothing
+    // IS that fixed stage latency (OPTIMIZATION_r17.md "Pass 2").
+    // Above the bound nothing
     // is hinted: labels past ~1M nodes should sort-merge, and AQE
     // keeps the per-round choice.
     val asBuild: DataFrame => DataFrame =
@@ -849,7 +850,8 @@ object DedupOps {
   /** The d9/d5 verify shape applied to the shingle family (VERDICT r11
     * ask #1): [[bucketPairs]]+[[verifyJaccard]] materialize candidate
     * PAIRS and re-join the shingle table per pair — at 100× the
-    * per-pair payload bytes are ~38% of d2's wall time (D2Diag,
+    * per-pair payload bytes are ~38% of d2's wall time (BENCH_NOTES
+    * "Would the self-join verify also pay for the minhash family?",
     * 9.96 M candidates at sf10). Here the sorted shingle arrays ride
     * the BANDED rows instead, and the per-bucket pair cross-product
     * streams through `sorted_intersect_count` INSIDE the self-join

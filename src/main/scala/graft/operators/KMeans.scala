@@ -182,8 +182,9 @@ object KMeans {
     * the union of their children — n×(√k + nprobe1·√k) folds. The
     * standard IVF miss mode is a row sitting near a super BOUNDARY
     * whose true centroid lives in the runner-up group; nprobe1=2
-    * recovers most of those (D9Diag measures agreement% vs wall-time
-    * per setting). Ties with multiple probed groups break to the
+    * recovers most of those (BENCH_NOTES "Round-12: the two-level
+    * agreement knob, measured" tables agreement% vs wall-time per
+    * setting). Ties with multiple probed groups break to the
     * LOWEST cid among equal distances — the flat rule, globally. */
   def assignHierarchical(df: DataFrame, vecCol: String,
       cents: Array[Array[Double]], nprobe1: Int = 1): DataFrame = {

@@ -1182,7 +1182,8 @@ object SimilarityOps {
           // and argmax over the union of their children with the
           // global (r desc, cid asc) tiebreak — the flat rule. The
           // boundary rows whose true centroid lives in the runner-up
-          // group are the standard IVF miss mode; D9Diag tables
+          // group are the standard IVF miss mode; BENCH_NOTES
+          // "Round-12: the two-level agreement knob, measured" tables
           // agreement% vs wall-time per setting.
           val superRank = array_sort(zip_with(col("rs1"),
             sequence(lit(1), lit(nonEmpty.length)),

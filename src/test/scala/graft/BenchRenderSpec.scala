@@ -43,14 +43,36 @@ class BenchRenderSpec extends AnyFunSuite {
     }
   }
 
-  private def parseString(s: String, i0: Int): Int = {
+  private def parseString(s: String, i0: Int): Int = decodeString(s, i0)._2
+
+  /** The decoded value of the string literal at `i0` and the index
+    * after it; a raw control char or an unknown escape throws. */
+  private def decodeString(s: String, i0: Int): (String, Int) = {
     require(s(i0) == '"', s"expected '\"' at $i0")
+    val out = new StringBuilder
     var i = i0 + 1
     while (s(i) != '"') {
       require(s(i) >= ' ', s"raw control char at $i")
-      if (s(i) == '\\') i += 2 else i += 1
+      if (s(i) != '\\') { out += s(i); i += 1 }
+      else if (s(i + 1) == 'u') {
+        out += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
+        i += 6
+      } else {
+        out += (s(i + 1) match {
+          case '"' => '"'
+          case '\\' => '\\'
+          case '/' => '/'
+          case 'b' => '\b'
+          case 'f' => '\f'
+          case 'n' => '\n'
+          case 'r' => '\r'
+          case 't' => '\t'
+          case c => fail(s"bad escape '\\$c' at $i")
+        })
+        i += 2
+      }
     }
-    i + 1
+    (out.result(), i + 1)
   }
 
   private def assertStrictJsonObject(line: String): Unit = {
@@ -84,12 +106,18 @@ class BenchRenderSpec extends AnyFunSuite {
   }
 
   test("pathological error messages cannot break the JSON") {
-    val errs = (1 to 5).map(i =>
+    val tabbed = "col\tsep\rCR \u0001 \"q\" \\ end"
+    val errs = ("e0" -> tabbed) +: (1 to 5).map(i =>
       (s"e$i", "x" * 500 + "\"\\\n tail"))
     val line = Bench.stdoutLine(manyTimes.take(3), errs, "/sf")
     assertStrictJsonObject(line)
     // only 3 error entries on stdout, each hard-truncated
     assert(!line.contains("e4"))
+    // control chars are escaped, not flattened: the strictly parsed
+    // message keeps its tab and CR
+    val (msg, _) = decodeString(line, line.indexOf("\"e0\":") + 5)
+    assert(msg.contains("\t"), s"tab lost: $msg")
+    assert(msg == tabbed)
   }
 
   test("every artifact carries the timing-method tag and audit fields") {
@@ -177,32 +205,6 @@ class BenchRenderSpec extends AnyFunSuite {
     assert(tight.length <= 900)
     assert(tight.contains(""""phases":"""),
       "budget trimming must drop queries, not the phases field")
-  }
-
-  test("calibration row renders in both artifacts, round-trips " +
-      "through its parser, and absence leaves old lines identical") {
-    val cal = Map("cal_cpu" -> 3.217, "cal_fs" -> 1.408)
-    val full = Bench.fullJson(Seq("q1_a" -> 0.5), Nil, "/sf", 0, 0,
-      calibration = cal)
-    assertStrictJsonObject(full)
-    assert(full.contains(""""calibration":{"cal_cpu":3.217,"cal_fs":1.408}"""))
-    assert(Bench.parseHistoryCalibration(full) ==
-      Map("cal_cpu" -> 3.217, "cal_fs" -> 1.408))
-    // the queries map parser is undisturbed by the extra nested object
-    assert(Bench.parseHistoryLine(full).get._3.toMap == Map("q1_a" -> 0.5))
-    val line = Bench.stdoutLine(Seq("q1_a" -> 0.5), Nil, "/sf",
-      calibration = cal)
-    assertStrictJsonObject(line)
-    assert(line.contains(""""calibration":"""))
-    // budget trimming drops queries, never the calibration field
-    val tight = Bench.stdoutLine(manyTimes, Nil, "/sf", budget = 900,
-      calibration = cal)
-    assertStrictJsonObject(tight)
-    assert(tight.length <= 900 && tight.contains(""""calibration":"""))
-    // no calibration -> no field (old lines parse to empty)
-    val bare = Bench.fullJson(Seq("q1_a" -> 0.5), Nil, "/sf", 0, 0)
-    assert(!bare.contains("calibration"))
-    assert(Bench.parseHistoryCalibration(bare).isEmpty)
   }
 
   test("i1 and k15 record their staging/protocol phase splits when " +
@@ -355,89 +357,6 @@ class BenchRenderSpec extends AnyFunSuite {
     assert(!Bench.needsNoiseRetry(runs = 3, best = 10.0, worst = 20.0))
   }
 
-  test("contended flag: a cal_cpu above the quiet-band ceiling stamps " +
-      "both artifacts, a quiet or absent calibration leaves no trace " +
-      "(r14 ask #4)") {
-    // positive evidence only: quiet band (≤ ceiling) and UNKNOWN
-    // (calibration failed → no cal_cpu) both render no flag
-    assert(Bench.isContended(Map("cal_cpu" -> 8.1), ceiling = 5.5))
-    assert(!Bench.isContended(Map("cal_cpu" -> 4.3), ceiling = 5.5))
-    assert(!Bench.isContended(Map("cal_cpu" -> 5.5), ceiling = 5.5))
-    assert(!Bench.isContended(Map("cal_fs" -> 9.9), ceiling = 5.5))
-    assert(!Bench.isContended(Map.empty, ceiling = 5.5))
-    val hot = Map("cal_cpu" -> (Bench.CalCpuQuietCeiling + 1.0),
-      "cal_fs" -> 0.4)
-    val full = Bench.fullJson(Seq("q1_a" -> 0.5), Nil, "/sf", 0, 0,
-      calibration = hot)
-    assertStrictJsonObject(full)
-    assert(full.contains(""""contended":true"""))
-    val line = Bench.stdoutLine(Seq("q1_a" -> 0.5), Nil, "/sf",
-      calibration = hot)
-    assertStrictJsonObject(line)
-    assert(line.contains(""""contended":true"""))
-    // the flag survives budget trimming alongside the calibration row
-    val tight = Bench.stdoutLine(manyTimes, Nil, "/sf", budget = 900,
-      calibration = hot)
-    assertStrictJsonObject(tight)
-    assert(tight.length <= 900 && tight.contains(""""contended":true"""))
-    // quiet box: no flag, and the queries parser is undisturbed
-    val quiet = Bench.fullJson(Seq("q1_a" -> 0.5), Nil, "/sf", 0, 0,
-      calibration = Map("cal_cpu" -> 4.2))
-    assertStrictJsonObject(quiet)
-    assert(!quiet.contains("contended"))
-    assert(Bench.parseHistoryLine(quiet).get._3.toMap == Map("q1_a" -> 0.5))
-  }
-
-  test("post-run calibration (r15 ask #1): a quiet PRE-run reading with " +
-      "a contended POST-run reading stamps the flag — the pass-8 " +
-      "burst-after-calibration shape — each reading judged against its " +
-      "own ruler's band; pre-r15 single-reading rows keep their meaning") {
-    // the recorded d15 counterexample: cal_cpu in-band BEFORE the timed
-    // runs, the burst arriving during/after them — only the post-run
-    // reading carries the evidence. The post reading is WARM (codegen
-    // cached, C2 hot — measured quiet 1.23–1.35 s vs 3.7–5.0 cold, and
-    // 2.0–2.2 s under a burst whose cold twin read 7.9–9.8), so it has
-    // its own ceiling: judging warm readings against the cold 5.5
-    // would need a 4× slowdown to fire and the pass-8 class (1.6×)
-    // would slip straight through.
-    assert(Bench.isContended(
-      Map("cal_cpu" -> 4.2, "cal_cpu_post" -> 2.2),
-      ceiling = 5.5, postCeiling = 1.8))
-    // and the mirror (burst during warm-up, quiet by the end)
-    assert(Bench.isContended(
-      Map("cal_cpu" -> 8.1, "cal_cpu_post" -> 1.3),
-      ceiling = 5.5, postCeiling = 1.8))
-    // both readings in their own bands → quiet; a warm reading that
-    // would alarm a cold ruler stays quiet on its own
-    assert(!Bench.isContended(
-      Map("cal_cpu" -> 4.2, "cal_cpu_post" -> 1.35),
-      ceiling = 5.5, postCeiling = 1.8))
-    // post-only rows (pre-cal faulted) still classify
-    assert(Bench.isContended(Map("cal_cpu_post" -> 2.0),
-      ceiling = 5.5, postCeiling = 1.8))
-    assert(!Bench.isContended(Map("cal_cpu_post" -> 1.25),
-      ceiling = 5.5, postCeiling = 1.8))
-    // both readings land in the artifact's calibration row, the flag
-    // rides with them, and the flat queries parser is undisturbed
-    val bracketed = Map("cal_cpu" -> 4.2, "cal_cpu_post" -> 2.2,
-      "cal_fs" -> 0.4)
-    val full = Bench.fullJson(Seq("d15_lsh_recall" -> 42.7), Nil,
-      "/sf10", 0, 0, calibration = bracketed)
-    assertStrictJsonObject(full)
-    assert(full.contains(""""cal_cpu_post":2.200"""))
-    assert(full.contains(""""contended":true"""))
-    assert(Bench.parseHistoryLine(full).get._3.toMap ==
-      Map("d15_lsh_recall" -> 42.7))
-    assert(Bench.parseHistoryCalibration(full) == bracketed)
-    // a pre-r15 history line (no cal_cpu_post) parses and classifies
-    // exactly as before
-    val old = Bench.fullJson(Seq("q1_a" -> 0.5), Nil, "/sf", 0, 0,
-      calibration = Map("cal_cpu" -> 4.25, "cal_fs" -> 1.1))
-    assert(!old.contains("cal_cpu_post") && !old.contains("contended"))
-    assert(Bench.parseHistoryCalibration(old) ==
-      Map("cal_cpu" -> 4.25, "cal_fs" -> 1.1))
-  }
-
   test("noise-retry counts land in both artifacts so a min-of-5 row is " +
       "self-describing (r14 advice); zero retries leaves no field") {
     val nr = Map("d2_minhash_lsh" -> 2, "q8_scan" -> 1)
@@ -459,114 +378,29 @@ class BenchRenderSpec extends AnyFunSuite {
       Map("d2_minhash_lsh" -> 17.4))
   }
 
-  test("indeterminate band (r16 ask #1): readings in the unobserved gap " +
-      "between the quiet and contended bands stamp cal_indeterminate, " +
-      "not clean — the r16 anchor's 1.63/1.65 contradicted-clean shape") {
-    // the warm ruler's three states, at the verdict's pinned probes:
-    // 1.30 sits in the observed quiet cluster (1.23–1.35), 1.65 is one
-    // of the two recorded contradicted-clean post readings (inside the
-    // 1.35–2.02 gap the old 1.8 ceiling bisected into "clean"), 2.05
-    // is in the observed contended cluster (2.02–2.22)
-    assert(Bench.calState(Map("cal_cpu_post" -> 1.30)) == Bench.CalQuiet)
-    assert(Bench.calState(Map("cal_cpu_post" -> 1.65)) ==
-      Bench.CalIndeterminate)
-    assert(Bench.calState(Map("cal_cpu_post" -> 2.05)) ==
-      Bench.CalContended)
-    // the cold ruler has its own gap (quiet ≤5.5, contended ≥6.0)
-    assert(Bench.calState(Map("cal_cpu" -> 4.3)) == Bench.CalQuiet)
-    assert(Bench.calState(Map("cal_cpu" -> 5.7)) == Bench.CalIndeterminate)
-    assert(Bench.calState(Map("cal_cpu" -> 6.1)) == Bench.CalContended)
-    // worst reading wins: an indeterminate post does not mask a
-    // contended pre, and vice versa
-    assert(Bench.calState(Map("cal_cpu" -> 6.1, "cal_cpu_post" -> 1.3)) ==
-      Bench.CalContended)
-    assert(Bench.calState(Map("cal_cpu" -> 4.3, "cal_cpu_post" -> 1.65)) ==
-      Bench.CalIndeterminate)
-    // unknown (no cpu reading) renders quiet — positive evidence only
-    assert(Bench.calState(Map("cal_fs" -> 9.9)) == Bench.CalQuiet)
-    assert(Bench.calState(Map.empty) == Bench.CalQuiet)
-    // bands are env-overridable like the ceilings: explicit args win
-    assert(Bench.classifyReading(1.65, quietCeiling = 1.7,
-      contendedFloor = 2.0) == Bench.CalQuiet)
-    // artifact rendering: the flag lands in both artifacts, survives
-    // budget trimming, and never co-occurs with "contended"
-    val gap = Map("cal_cpu" -> 4.4, "cal_cpu_post" -> 1.65)
-    val full = Bench.fullJson(Seq("d4_ngram_jaccard" -> 20.57), Nil,
-      "/sf10", 0, 0, calibration = gap)
-    assertStrictJsonObject(full)
-    assert(full.contains(""""cal_indeterminate":true"""))
-    assert(!full.contains(""""contended""""))
-    val tight = Bench.stdoutLine(manyTimes, Nil, "/sf", budget = 900,
-      calibration = gap)
-    assertStrictJsonObject(tight)
-    assert(tight.length <= 900 &&
-      tight.contains(""""cal_indeterminate":true"""))
-    // a contended row carries only "contended"; a quiet row neither;
-    // pre-r16 lines (no flags) keep parsing and their meaning
-    val hot = Bench.fullJson(Seq("q1_a" -> 0.5), Nil, "/sf", 0, 0,
-      calibration = Map("cal_cpu" -> 8.1))
-    assert(hot.contains(""""contended":true""") &&
-      !hot.contains("cal_indeterminate"))
-    val quiet = Bench.fullJson(Seq("q1_a" -> 0.5), Nil, "/sf", 0, 0,
-      calibration = Map("cal_cpu" -> 4.2, "cal_cpu_post" -> 1.3))
-    assert(!quiet.contains("contended") &&
-      !quiet.contains("cal_indeterminate"))
-    assert(Bench.parseHistoryLine(quiet).get._3.toMap ==
-      Map("q1_a" -> 0.5))
-    assert(Bench.parseHistoryCalibration(full) == gap)
-  }
-
-  test("mid-run calibration interleave (r16 ask #3): a burst visible " +
-      "ONLY to a mid reading stamps the row — the between-brackets " +
-      "blind spot closes when the flag is on") {
-    // pre and post both quiet, one mid reading contended: the exact
-    // shape BENCH_NOTES round-16 documented as undetectable
-    val midBurst = Map("cal_cpu" -> 4.4, "cal_cpu_post" -> 1.30,
-      "cal_cpu_mid_d" -> 2.10)
-    assert(Bench.calState(midBurst) == Bench.CalContended)
-    assert(Bench.isContended(midBurst))
-    // a mid reading in the gap stamps indeterminate
-    assert(Bench.calState(Map("cal_cpu" -> 4.4, "cal_cpu_post" -> 1.30,
-      "cal_cpu_mid_t" -> 1.70)) == Bench.CalIndeterminate)
-    // quiet mid readings leave a quiet row quiet
-    assert(Bench.calState(Map("cal_cpu" -> 4.4, "cal_cpu_post" -> 1.30,
-      "cal_cpu_mid_d" -> 1.28, "cal_cpu_mid_t" -> 1.33)) ==
-      Bench.CalQuiet)
-    // mid readings ride the calibration row in both artifacts and the
-    // calibration parser round-trips them
-    val full = Bench.fullJson(Seq("d2_minhash_lsh" -> 17.4), Nil,
-      "/sf10", 0, 0, calibration = midBurst)
-    assertStrictJsonObject(full)
-    assert(full.contains(""""cal_cpu_mid_d":2.100"""))
-    assert(full.contains(""""contended":true"""))
-    assert(Bench.parseHistoryCalibration(full) == midBurst)
-    // flag off → no mid keys → the driver line renders exactly as a
-    // bracket-only row (byte-identical stdout shape)
-    val bracketOnly = Map("cal_cpu" -> 4.4, "cal_cpu_post" -> 1.30)
-    val line = Bench.stdoutLine(Seq("q1_a" -> 0.5), Nil, "/sf",
-      calibration = bracketOnly)
-    assertStrictJsonObject(line)
-    assert(!line.contains("cal_cpu_mid"))
-  }
-
   test("baseline selection skips flagged lines: a contended or " +
       "indeterminate history line must not become the regression-gate " +
       "baseline while a clean one exists; all-flagged falls back to " +
       "the last so the gate still runs") {
-    def line(q: Double, cal: Map[String, Double],
+    // the bench no longer writes these flags, but bench_history.jsonl
+    // still holds lines stamped by the retired calibration: splice the
+    // literal flags where that writer put them
+    def line(q: Double, flag: String = "",
         filtered: Boolean = false): String =
       Bench.fullJson(Seq("d4_q" -> q), Nil, "/sf10", 0, 0,
-        filtered = filtered, calibration = cal)
-    val quiet = line(10.0, Map("cal_cpu" -> 4.4, "cal_cpu_post" -> 1.3))
-    val contended = line(31.0, Map("cal_cpu" -> 7.9))
-    val gap = line(19.0, Map("cal_cpu" -> 4.5, "cal_cpu_post" -> 1.7))
-    val subset = line(2.0, Map.empty, filtered = true)
+        filtered = filtered)
+        .replace(""""queries":""", flag + """"queries":""")
+    val quiet = line(10.0)
+    val contended = line(31.0, """"contended":true,""")
+    val gap = line(19.0, """"cal_indeterminate":true,""")
+    val subset = line(2.0, filtered = true)
+    assert(contended.contains(""""contended":true,"queries":"""))
     // newest lines are flagged/filtered: the clean older line wins
     val picked = Bench.selectBaseline(
       Seq(quiet, contended, gap, subset), Bench.Timing, "/sf10")
     assert(picked.map(_._3.toMap) == Some(Map("d4_q" -> 10.0)))
     // a NEWER clean line supersedes an older one
-    val quiet2 = line(11.0, Map("cal_cpu" -> 4.6, "cal_cpu_post" -> 1.2))
+    val quiet2 = line(11.0)
     assert(Bench.selectBaseline(Seq(quiet, contended, quiet2),
       Bench.Timing, "/sf10").map(_._3.toMap) ==
       Some(Map("d4_q" -> 11.0)))
@@ -577,59 +411,10 @@ class BenchRenderSpec extends AnyFunSuite {
     // wrong sf / wrong tag / only-filtered still yield no baseline
     assert(Bench.selectBaseline(Seq(quiet), Bench.Timing, "/sf0.1").isEmpty)
     assert(Bench.selectBaseline(Seq(subset), Bench.Timing, "/sf10").isEmpty)
-    // pre-r15 lines without any calibration remain eligible baselines
+    // lines without any calibration (pre-r15, and every line written
+    // since its retirement) remain eligible baselines
     val old = Bench.fullJson(Seq("d4_q" -> 9.0), Nil, "/sf10", 0, 0)
     assert(Bench.selectBaseline(Seq(contended, old), Bench.Timing,
       "/sf10").map(_._3.toMap) == Some(Map("d4_q" -> 9.0)))
-  }
-
-  test("warm-band re-derive hedge (r16 ask #7): a post reading far " +
-      "below the band's box class flags the artifact loudly") {
-    // 0.70 < 0.6 × 1.35 = 0.81: a much faster box — the 1.5/2.0 warm
-    // bands would be vacuously permissive (a 2× burst reads "quiet")
-    assert(Bench.needsBandRederive(Map("cal_cpu_post" -> 0.70)))
-    // in-band readings (and absent ones) do not fire it
-    assert(!Bench.needsBandRederive(Map("cal_cpu_post" -> 1.30)))
-    assert(!Bench.needsBandRederive(Map("cal_cpu" -> 0.70)))
-    assert(!Bench.needsBandRederive(Map.empty))
-    val fast = Map("cal_cpu" -> 2.1, "cal_cpu_post" -> 0.70)
-    val full = Bench.fullJson(Seq("q1_a" -> 0.5), Nil, "/sf", 0, 0,
-      calibration = fast)
-    assertStrictJsonObject(full)
-    assert(full.contains(""""cal_band_rederive":true"""))
-    val line = Bench.stdoutLine(Seq("q1_a" -> 0.5), Nil, "/sf",
-      calibration = fast)
-    assertStrictJsonObject(line)
-    assert(line.contains(""""cal_band_rederive":true"""))
-    // a normal row carries no such flag
-    assert(!Bench.fullJson(Seq("q1_a" -> 0.5), Nil, "/sf", 0, 0,
-      calibration = Map("cal_cpu" -> 4.2, "cal_cpu_post" -> 1.3))
-      .contains("cal_band_rederive"))
-  }
-
-  test("CalVerdict classifies standalone CalProbe readings on the " +
-      "COLD ruler only (each probe is a fresh JVM) and skips " +
-      "unparseable captures") {
-    import graft.bench.CalVerdict
-    // both bracket readings quiet on the cold bands (≤5.5)
-    assert(CalVerdict.line(Seq(Some(4.38), Some(1.24))) ==
-      """{"cal_verdict":"quiet"}""")
-    // a reading in the cold 5.5–6.0 gap: indeterminate, worst wins
-    assert(CalVerdict.line(Seq(Some(4.58), Some(5.73))) ==
-      """{"cal_verdict":"indeterminate","cal_indeterminate":true}""")
-    // at/above the cold contended floor
-    assert(CalVerdict.line(Seq(Some(7.86), Some(1.27))) ==
-      """{"cal_verdict":"contended","contended":true}""")
-    // tier.sh passes its possibly-"null" captures verbatim: skipped,
-    // and no readings at all renders quiet (positive evidence only)
-    assert(CalVerdict.line(Seq(None, Some(4.4))) ==
-      """{"cal_verdict":"quiet"}""")
-    assert(CalVerdict.line(Seq(None, None)) ==
-      """{"cal_verdict":"quiet"}""")
-    // a warm 1.6 s reading that the WARM bands would call
-    // indeterminate stays quiet here: fresh-JVM probes never sit on
-    // the warm ruler, so warm bands must not apply
-    assert(CalVerdict.line(Seq(Some(1.6))) ==
-      """{"cal_verdict":"quiet"}""")
   }
 }

@@ -1,45 +1,17 @@
 #!/bin/bash
-# SlowTest tier runner (r15 verdict ask #6): run the tagged tier and
-# record TIER_r<N>.json WITH a cpu calibration reading on each side of
-# the run (graft.CalProbe = Bench's pinned cal_cpu workload, same
-# quiet band), so a slow tier/suite sample is attributable in-band the
-# way bench lines are. Requires `sbt Test/compile` to have run.
+# SlowTest tier runner: run the tagged tier and record TIER_r<N>.json
+# (test/suite/failure counts, wall time, HEAD). Requires
+# `sbt Test/compile` to have run.
 # Usage: tools/tier.sh <round> [outfile]
 set -eu
 ROUND=${1:?usage: tier.sh <round> [outfile]}
 OUT=${2:-TIER_r$ROUND.json}
 cd /root/repo
 LOG=/tmp/tier_r$ROUND.log
-OPENS=$(for p in java.lang java.lang.invoke java.lang.reflect java.io \
-  java.net java.nio java.util java.util.concurrent \
-  java.util.concurrent.atomic sun.nio.ch sun.nio.cs \
-  sun.security.action sun.util.calendar; do
-  echo --add-opens java.base/$p=ALL-UNNAMED; done)
-# calprobe must yield VALID JSON even when the probe dies (classes not
-# compiled, JVM OOM): an empty capture would render "cal_cpu": — an
-# invalid artifact — so default to null (r16 advice)
-calprobe() {
-  local v
-  v=$(java $OPENS -Dspark.ui.enabled=false -Xmx8g \
-    -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-    graft.CalProbe 2>/dev/null | tail -1 | sed 's/.*"cal_cpu"://;s/}//')
-  echo "${v:-null}"
-}
-CAL_PRE=$(calprobe)
 T0=$(date +%s)
 GRAFT_SLOW_TESTS=1 sbt -batch 'Test/testOnly * -- -n graft.SlowTest' \
   >"$LOG" 2>&1 || true
 WALL=$(( $(date +%s) - T0 ))
-CAL_POST=$(calprobe)
-# three-state verdict over the two bracket readings (both COLD-ruler:
-# each CalProbe is a fresh JVM), same bands and vocabulary as bench
-# lines — so a tier artifact is self-describing about contention
-# instead of leaving raw seconds for the reader to band by hand. A
-# failed classifier leaves the fields absent (= unknown, like pre-r17
-# artifacts): the flags assert positive evidence only.
-VERDICT=$(java $OPENS -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.bench.CalVerdict "$CAL_PRE" "$CAL_POST" 2>/dev/null | tail -1)
-VERDICT_FIELDS=$(printf '%s' "$VERDICT" | sed -n 's/^{\(.*\)}$/\1,/p')
 # no-match greps must not be able to abort the script BEFORE the
 # artifact is written — exactly when sbt died early and the artifact
 # is most needed. The `| tail -1` already masks grep's status (no
@@ -53,7 +25,7 @@ FAILED=$(grep -oP 'failed \K\d+' "$LOG" | tail -1 || true)
 CANCELED=$(grep -oP 'canceled \K\d+' "$LOG" | tail -1 || true)
 HEAD=$(git rev-parse --short HEAD)
 cat > "$OUT" <<JSON
-{"round":$ROUND,"tag":"graft.SlowTest","command":"GRAFT_SLOW_TESTS=1 sbt Test/testOnly * -- -n graft.SlowTest","suites_completed":${SUITES:-0},"tests":${TESTS:-0},"failed":${FAILED:-999},"canceled":${CANCELED:-0},"wall_sec":$WALL,"cal_cpu":$CAL_PRE,"cal_cpu_post":$CAL_POST,${VERDICT_FIELDS:-}"head":"$HEAD","date":"$(date +%F)"}
+{"round":$ROUND,"tag":"graft.SlowTest","command":"GRAFT_SLOW_TESTS=1 sbt Test/testOnly * -- -n graft.SlowTest","suites_completed":${SUITES:-0},"tests":${TESTS:-0},"failed":${FAILED:-999},"canceled":${CANCELED:-0},"wall_sec":$WALL,"head":"$HEAD","date":"$(date +%F)"}
 JSON
 cat "$OUT"
 tail -6 "$LOG" >&2
