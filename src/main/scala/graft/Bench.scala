@@ -167,9 +167,10 @@ object Bench {
       .getOrElse(render(Seq.empty, times.size))
   }
 
-  /** Full-precision JSON (no budget): what lands in $BENCH_OUT and is
-    * appended to $BENCH_HISTORY so per-query numbers survive the round
-    * even when the stdout line had to drop them. */
+  /** Full-precision JSON (no budget): what lands in $BENCH_OUT and,
+    * for full-suite runs, is appended to $BENCH_HISTORY so per-query
+    * numbers survive the round even when the stdout line had to drop
+    * them. */
   private[graft] def fullJson(
       times: Seq[(String, Double)], errors: Seq[(String, String)],
       sfDir: String, bucketOverflows: Int, regressed: Int,
@@ -552,7 +553,8 @@ object Bench {
     // is ~2400 chars and silently fails to parse (BENCH_r03/r04). Keep
     // the stdout line under 1700 chars by dropping the FASTEST queries
     // first (the slow ones are the ones worth grading); the full-precision
-    // map always lands in $BENCH_OUT and appends to $BENCH_HISTORY.
+    // map always lands in $BENCH_OUT (and full-suite runs append it to
+    // $BENCH_HISTORY).
     println(stdoutLine(times.toSeq, errors.toSeq, sfDir,
       bucketOverflows = bucketOverflows, regressed = regressed,
       filtered = args.nonEmpty, phases = phases.toMap,
@@ -562,10 +564,13 @@ object Bench {
       phases = phases.toMap, noiseRetries = noiseRetries.toMap)
     val out = sys.env.getOrElse("BENCH_OUT", "bench_out.json")
     Files.writeString(Paths.get(out), json + "\n")
-    // append-only archive: bench_out.json is overwritten every round,
-    // which already cost us round 6's full per-query data
-    Files.writeString(histPath, json + "\n",
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    // append-only archive of FULL-suite runs: bench_out.json is
+    // overwritten every round, which already cost us round 6's full
+    // per-query data. Filtered (query-subset) runs stay out of it —
+    // selectBaseline skips their lines anyway
+    if (args.isEmpty)
+      Files.writeString(histPath, json + "\n",
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     // per-ROUND full artifact (r16 verdict ask #5): the driver's
     // durable BENCH_r<N>.json is the char-budgeted stdout scrape,
     // which dropped 106 of 151 queries in r16 — cross-round per-query

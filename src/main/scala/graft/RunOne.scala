@@ -13,11 +13,11 @@ object RunOne {
     val spark = Session.local()
     val fn = SparkEntry.queries(name)
     val t0 = System.nanoTime()
-    fn(spark, dir).count()
+    Bench.consume(fn(spark, dir))
     println(f"[runone] $name warmup ${(System.nanoTime() - t0) / 1e9}%.2f s")
     (1 to runs).foreach { i =>
       val t = System.nanoTime()
-      val n = fn(spark, dir).count()
+      val n = Bench.consume(fn(spark, dir))
       println(f"[runone] $name run$i ${(System.nanoTime() - t) / 1e9}%.2f s ($n rows)")
       spark.catalog.clearCache()
     }

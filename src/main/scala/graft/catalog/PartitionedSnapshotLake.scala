@@ -23,6 +23,8 @@ import graft.operators.MergeOps
   *     3.manifest              "partition TAB version" lines
   *     3                       zero-byte marker; its EXISTENCE commits
   *                             global snapshot 3
+  *     _log/part_date=...@2    commit-log entry per partition version
+  *                             not yet covered by a manifest
   * }}}
   *
   * Commit = (a) merge the batch against the LATEST version of each
@@ -35,14 +37,14 @@ import graft.operators.MergeOps
   * multi-partition commit). Each step is crash-safe: death before a
   * partition marker leaves an invisible orphan v-dir; death between
   * partition commits and the manifest leaves the new partition
-  * versions visible to LATEST readers (per-partition `latest` is
-  * marker-based) but absent from global snapshots until
+  * versions visible to LATEST readers (their commit-log entries and
+  * markers are on disk) but absent from global snapshots until
   * [[repairManifest]] (the recovery path — the only full-listing
   * manifest builder) picks them up.
   *
   * Reads:
-  *  - [[readLatest]]: every partition at its newest marker — the
-  *    "current table", independent of manifests;
+  *  - [[readLatest]]: the "current table" — the newest manifest's pins
+  *    plus the commit-log delta of versions committed since;
   *  - [[readVersion]] (global time travel): exactly the per-partition
   *    versions the manifest pinned, whatever has been committed since;
   *  - [[readPartitionVersion]]: one partition's history on its own
@@ -59,6 +61,13 @@ import graft.operators.MergeOps
   * the merge itself is optimistic (no read-conflict detection across
   * writers on the SAME partition; writers on disjoint partitions
   * compose perfectly).
+  *
+  * Freshness has ONE source on every filesystem: the commit log that
+  * [[commitMerge]] writes. A version committed into a partition dir by
+  * hand ([[SnapshotLake.commit]]) writes no entry, so [[readLatest]]
+  * does not serve it until the next commitMerge to that partition or a
+  * [[repairManifest]]; the next commitMerge touching the partition
+  * WARNs about it.
   *
   * Contract: `to_date(tsCol)` must be stable per key (the reference's
   * AcqDate-never-changes invariant, common.py:267-306) — rows outside
@@ -101,27 +110,9 @@ object PartitionedSnapshotLake {
   private def snapsDir(root: String) = new Path(root, "_snapshots")
   private def logDir(root: String) = new Path(snapsDir(root), "_log")
 
-  /** Schemes whose "directory mtime" is synthetic (often 0, never
-    * bumped by child creation): every flat-namespace object store.
-    * [[latestPins]] must never trust the mtime delta there — a pinned
-    * partition that later gains versions would NEVER satisfy
-    * `mtime > pinnedAt` and readLatest would serve stale data forever
-    * (silently — the worst failure mode). HDFS-semantics filesystems
-    * (hdfs, file, viewfs, o3fs with FS semantics) do bump parent dir
-    * mtimes on child create/rename, which the rename-based commit
-    * protocol already requires. */
-  private val NoDirMtimeSchemes = Set(
-    "s3", "s3a", "s3n", "gs", "abfs", "abfss", "wasb", "wasbs",
-    "oss", "cosn", "swift")
-
-  private[catalog] def dirMtimesUsable(fs: FileSystem): Boolean =
-    !NoDirMtimeSchemes.contains(
-      Option(fs.getScheme).map(_.toLowerCase(java.util.Locale.ROOT))
-        .getOrElse(""))
-
-  /** One commit-log entry per committed partition version — the
-    * object-store-native delta source for [[latestPins]] (VERDICT r10
-    * ask #3). `_snapshots/_log/<partition>@<version>`, zero bytes,
+  /** One commit-log entry per committed partition version — the one
+    * delta source for [[latestPins]].
+    * `_snapshots/_log/<partition>@<version>`, zero bytes,
     * written by [[commitMerge]] AFTER the v-dir rename, BEFORE the
     * commit marker, and RE-ASSERTED after the marker: every marker'd
     * version has an entry (a crash between entry and marker leaves a
@@ -141,48 +132,35 @@ object PartitionedSnapshotLake {
     out.close()
   }
 
-  /** The log is only TRUSTED as a complete delta source once this
-    * marker exists. Entries are written by every [[commitMerge]]
-    * unconditionally, but completeness — "every marker'd version not
-    * pinned by the newest manifest has an entry" — holds only from a
-    * known-covered state: versions committed BEFORE the upgrade to
-    * the logging code (or by a mixed-fleet writer running pre-log
-    * code) have no entries, and a manifest's carried-forward pins do
-    * not cover them. [[repairManifest]] establishes that state (its
-    * full-walk manifest pins every marker'd version) and writes this
-    * marker AFTER its manifest commits; until then, readers keep the
-    * pre-log behavior (mtime delta on HDFS-class stores, full walk on
-    * object stores) — never a silently incomplete log delta. Run
-    * repairManifest once per lake to enable the O(1) object-store
-    * path. */
-  private def logEnabledMarker(root: String): Path =
-    new Path(logDir(root), "_enabled")
+  /** `(partition, version)` of every commit-log entry; an absent log
+    * dir (no commit yet) is an empty log. */
+  private def logEntries(fs: FileSystem, root: String): Seq[(String, Long)] =
+    if (!fs.exists(logDir(root))) Seq.empty
+    else fs.listStatus(logDir(root)).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      val at = n.lastIndexOf('@')
+      if (at <= 0) None
+      else n.drop(at + 1).toLongOption.map(v => (n.take(at), v))
+    }
 
   /** The commit-log delta over `base` pins: every logged version newer
     * than its partition's pin whose commit marker EXISTS (max per
-    * partition). `None` until [[logEnabledMarker]] certifies
-    * completeness — callers fall back to the mtime delta or the full
-    * walk. Cost: ONE `listStatus` of the log dir + one `exists` per
-    * fresh entry — O(1) in partition count, O(delta) in stranded
-    * commits, and zero directory-mtime dependence (safe on S3-class
-    * stores). */
+    * partition). Complete for every in-contract write, because
+    * [[commitMerge]] writes the entry before the marker and every lake
+    * is born through it; entries are pruned only once a manifest
+    * covers them, so an empty `base` (no manifest yet) reads every
+    * committed version. Cost: ONE `listStatus` of the log dir + one
+    * `exists` per fresh entry — O(1) in partition count, O(delta) in
+    * stranded commits, and no directory-mtime dependence. */
   private def logDelta(fs: FileSystem, root: String,
-      base: Map[String, (Long, Long)]): Option[Map[String, Long]] = {
-    if (!fs.exists(logEnabledMarker(root))) return None
-    val fresh = fs.listStatus(logDir(root)).toSeq
-      .flatMap { st =>
-        val n = st.getPath.getName
-        val at = n.lastIndexOf('@')
-        if (at <= 0 || n.startsWith("_")) None
-        else n.drop(at + 1).toLongOption.map(v => (n.take(at), v))
-      }
-      .filter { case (p, v) => v > base.get(p).map(_._1).getOrElse(0L) }
+      base: Map[String, Long]): Map[String, Long] =
+    logEntries(fs, root)
+      .filter { case (p, v) => v > base.getOrElse(p, 0L) }
       .filter { case (p, v) =>
         fs.exists(new Path(new Path(partRoot(root, p), "_commits"),
           v.toString))
       }
-    Some(fresh.groupBy(_._1).map { case (p, vs) => p -> vs.map(_._2).max })
-  }
+      .groupBy(_._1).map { case (p, vs) => p -> vs.map(_._2).max }
 
   /** Last [[outOfBandVersions]] result surfaced by a commitMerge or
     * vacuum WARN — a test/ops hook mirroring BucketAudit's counter
@@ -191,14 +169,12 @@ object PartitionedSnapshotLake {
   @volatile private[catalog] var lastOutOfBandWarning
       : Map[String, Seq[Long]] = Map.empty
 
-  /** Out-of-band-commit detector for CERTIFIED lakes (r12 verdict ask
-    * #6): every in-contract [[commitMerge]] writes a log entry BEFORE
-    * (and re-asserts it AFTER) its commit marker, so a marker NEWER
-    * than the latest manifest pin with NO log entry can only be an
-    * out-of-band [[SnapshotLake.commit]] into the partition dir —
-    * exactly the class the certified O(1) object-store read path
-    * cannot see (the documented [[commitMerge]] birth-certificate
-    * trade). Versions at or under the pin are excluded by design:
+  /** Out-of-band-commit detector: every in-contract [[commitMerge]]
+    * writes a log entry BEFORE (and re-asserts it AFTER) its commit
+    * marker, so a marker NEWER than the latest manifest pin with NO
+    * log entry can only be an out-of-band [[SnapshotLake.commit]] into
+    * the partition dir — exactly the class [[readLatest]]'s log delta
+    * cannot see. Versions at or under the pin are excluded by design:
     * log entries are pruned once a manifest covers them, so lifetime
     * marker-vs-entry counts would false-alarm on every mature lake.
     * Cost: one manifest read + one log listing + one `_commits`
@@ -208,7 +184,6 @@ object PartitionedSnapshotLake {
   private[catalog] def outOfBandVersions(spark: SparkSession,
       root: String, parts: Seq[String]): Map[String, Seq[Long]] = {
     val fs = fsFor(spark, root)
-    if (!fs.exists(logEnabledMarker(root))) return Map.empty
     val before = latestSnapshot(spark, root)
     val pins: Map[String, Long] = before
       .map(s => manifest(spark, root, s)).getOrElse(Map.empty)
@@ -227,14 +202,7 @@ object PartitionedSnapshotLake {
       else Some(p -> fs.listStatus(commits).toSeq
         .flatMap(st => st.getPath.getName.toLongOption))
     }.toMap
-    val logged: Map[String, Set[Long]] = fs.listStatus(logDir(root))
-      .toSeq
-      .flatMap { st =>
-        val n = st.getPath.getName
-        val at = n.lastIndexOf('@')
-        if (at <= 0 || n.startsWith("_")) None
-        else n.drop(at + 1).toLongOption.map(v => (n.take(at), v))
-      }
+    val logged: Map[String, Set[Long]] = logEntries(fs, root)
       .groupBy(_._1).map { case (p, vs) => p -> vs.map(_._2).toSet }
     val missing = markers.flatMap { case (p, vers) =>
       val pin = pins.getOrElse(p, 0L)
@@ -265,18 +233,18 @@ object PartitionedSnapshotLake {
       lastOutOfBandWarning = missing
       if (missing.nonEmpty)
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"certified lake at $root carries marker'd versions with NO " +
+          s"lake at $root carries marker'd versions with NO " +
             "commit-log entry (an out-of-band SnapshotLake.commit into " +
             "the partition dir?): " +
             missing.toSeq.sortBy(_._1)
               .map { case (p, vs) => s"$p v${vs.mkString(",v")}" }
               .mkString("; ") +
-            " — invisible to the O(1) object-store read path until " +
-            "repairManifest(spark, root) re-certifies the log")
+            " — invisible to readLatest until the next commitMerge to " +
+            "the partition or repairManifest(spark, root)")
     } catch {
       // NonFatal, not just IOException: a concurrent vacuum can
       // delete the snapshot between our listing and the manifest
-      // read (manifestWithTimes require → IllegalArgumentException),
+      // read (manifest require → IllegalArgumentException),
       // and a best-effort diagnostic must never fail the data path
       case scala.util.control.NonFatal(_) => ()
     }
@@ -307,22 +275,10 @@ object PartitionedSnapshotLake {
   def latestSnapshot(spark: SparkSession, root: String): Option[Long] =
     snapshots(spark, root).lastOption
 
-  /** The partition→version pins of a committed global snapshot. */
+  /** The partition→version pins of a committed global snapshot, one
+    * `partition TAB version` line each. */
   def manifest(spark: SparkSession, root: String,
-      snap: Long): Map[String, Long] =
-    manifestWithTimes(spark, root, snap)
-      .map { case (p, (v, _)) => p -> v }
-
-  /** Pins plus each pin's PINNED-AT time — the millis of the manifest
-    * commit that FIRST pinned that (partition, version), carried
-    * forward verbatim when later manifests overlay other partitions.
-    * Lines are `partition TAB version [TAB pinnedAtMillis]`; two-field
-    * lines (pre-round-10 manifests) read as pinnedAt 0, which makes
-    * [[latestPins]] re-check those partitions — correct, just unpruned
-    * (ordinary commits carry the 0 forward; run [[repairManifest]]
-    * once after upgrading to re-pin everything fresh). */
-  private[catalog] def manifestWithTimes(spark: SparkSession,
-      root: String, snap: Long): Map[String, (Long, Long)] = {
+      snap: Long): Map[String, Long] = {
     val fs = fsFor(spark, root)
     require(fs.exists(new Path(snapsDir(root), snap.toString)),
       s"snapshot $snap is not committed at $root; " +
@@ -331,8 +287,7 @@ object PartitionedSnapshotLake {
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .filter(_.nonEmpty).map { line =>
         line.split('\t') match {
-          case Array(p, v) => p -> (v.toLong, 0L)
-          case Array(p, v, at) => p -> (v.toLong, at.toLong)
+          case Array(p, v) => p -> v.toLong
           case _ => throw new IllegalStateException(
             s"malformed manifest line for snapshot $snap at $root: $line")
         }
@@ -401,52 +356,28 @@ object PartitionedSnapshotLake {
   def readVersion(spark: SparkSession, root: String, snap: Long): DataFrame =
     readPins(spark, root, manifest(spark, root, snap))
 
-  /** The current table: every partition at its newest committed
-    * version (marker-based — a partition committed after the last
-    * manifest is already visible here). Listing cost is O(1) in the
-    * partition count, not O(partitions): the newest manifest supplies
-    * the base pins, and only the DELTA — versions committed since that
-    * manifest — re-resolves. Two delta sources, combined:
-    *
-    *  - the COMMIT LOG (`_snapshots/_log/`, one entry per committed
-    *    partition version, pruned once a manifest covers it): one
-    *    listing of the log dir + a marker-existence check per fresh
-    *    entry. No directory-mtime dependence — the object-store-safe
-    *    path, and the primary one everywhere;
-    *  - the MTIME delta (HDFS-semantics filesystems only, where child
-    *    creation bumps the parent dir's mtime): one listing of the
-    *    lake root; a partition re-resolves its marker listing iff its
-    *    dir mtime is strictly after its own pin's FS-stamped pinnedAt.
-    *    This additionally catches versions committed OUTSIDE
-    *    [[commitMerge]] (direct [[SnapshotLake.commit]] into a
-    *    partition dir), which never wrote a log entry. On
-    *    [[dirMtimesUsable]]=false schemes (s3a/gs/abfs/...) this
-    *    source is skipped — dir mtimes there are synthetic and a
-    *    stale-pin test against them would silently serve old data.
+  /** The current table: every partition at its newest version
+    * committed through [[commitMerge]], manifest or not. Listing cost
+    * is O(1) in the partition count: the newest manifest supplies the
+    * base pins, and only the DELTA — versions committed since that
+    * manifest — comes from the COMMIT LOG (`_snapshots/_log/`, one
+    * entry per committed partition version, pruned once a manifest
+    * covers it): one listing of the log dir + a marker-existence check
+    * per fresh entry. No directory-mtime dependence, so `file://`,
+    * HDFS and s3a/gs/abfs resolve the same way.
     *
     * Every [[commitMerge]] mints a manifest AFTER its partition
     * commits, so the delta is empty except (a) mid-commit concurrent
     * writers and (b) crash-stranded partition versions — the log
     * entry is written BEFORE the commit marker, so both cases have
-    * entries. The log is only trusted once [[repairManifest]] has
-    * certified it complete (the `_enabled` marker — see
-    * [[logEnabledMarker]] for why dir existence alone is not enough);
-    * until then readers keep the pre-log behavior: mtime delta on
-    * HDFS-class stores, full walk on object stores. Run
-    * repairManifest once per lake to enable the O(1) object-store
-    * path. Out-of-band partition commits on an object store are only
-    * picked up by [[repairManifest]] — documented limitation of flat
-    * namespaces. Concurrent manifest commits can prune log entries
-    * out from under a lockless reader; [[latestPins]] detects that
-    * (snapshot re-check) and re-resolves. */
+    * entries. A version committed out of band ([[SnapshotLake.commit]]
+    * straight into a partition dir) has no entry and is served only
+    * after the next commitMerge to that partition or a
+    * [[repairManifest]]. Concurrent manifest commits can prune log
+    * entries out from under a lockless reader; [[latestPins]] detects
+    * that (snapshot re-check) and re-resolves. */
   def readLatest(spark: SparkSession, root: String): DataFrame =
     readPins(spark, root, latestPins(spark, root))
-
-  /** The always-correct O(partitions) pin walk — the shape readLatest
-    * had before the manifest-delta fast path; kept public for object
-    * stores with unreliable directory mtimes. */
-  def readLatestFullWalk(spark: SparkSession, root: String): DataFrame =
-    readPins(spark, root, fullWalkPins(spark, root))
 
   private def fullWalkPins(spark: SparkSession,
       root: String): Map[String, Long] =
@@ -454,86 +385,30 @@ object PartitionedSnapshotLake {
       SnapshotLake.latestVersion(spark, partRoot(root, p)).map(p -> _)
     }.toMap
 
-  /** Pin resolution with a CONSISTENCY RE-CHECK against concurrent
-    * log pruning: a lockless reader that resolved `latestSnapshot = s`
-    * races a writer committing s+1 — the writer's post-commit prune
-    * can delete the very log entries that carried s's delta before
-    * this reader lists them. Pruning only ever happens AFTER a newer
-    * snapshot marker exists, so the race is detectable: if
-    * `latestSnapshot` is unchanged after the resolution, no prune
-    * completed inside the window and the (manifest, log) pair was
-    * consistent; if it moved, re-resolve from the newer manifest
-    * (whose pins cover everything the prune removed). Bounded retries
-    * — a pathological commit storm falls back to the always-correct
-    * full walk rather than spinning. The mtime path needs no re-check
-    * (dir mtimes only grow), but the loop is cheap enough to cover
-    * both. */
+  /** Pin resolution — newest manifest ++ [[logDelta]] — with a
+    * CONSISTENCY RE-CHECK against concurrent log pruning: a lockless
+    * reader that resolved `latestSnapshot = s` races a writer
+    * committing s+1 — the writer's post-commit prune can delete the
+    * very log entries that carried s's delta before this reader lists
+    * them. Pruning only ever happens AFTER a newer snapshot marker
+    * exists, so the race is detectable: if `latestSnapshot` is
+    * unchanged after the resolution, no prune completed inside the
+    * window and the (manifest, log) pair was consistent; if it moved,
+    * re-resolve from the newer manifest (whose pins cover everything
+    * the prune removed). Bounded retries — a pathological commit storm
+    * falls back to the full marker walk rather than spinning. */
   private[catalog] def latestPins(spark: SparkSession,
       root: String): Map[String, Long] = {
+    val fs = fsFor(spark, root)
     var tries = 0
     while (tries < 3) {
       val before = latestSnapshot(spark, root)
-      val pins = latestPinsOnce(spark, root, before)
+      val base = before.map(manifest(spark, root, _)).getOrElse(Map.empty)
+      val pins = base ++ logDelta(fs, root, base)
       if (latestSnapshot(spark, root) == before) return pins
       tries += 1
     }
     fullWalkPins(spark, root)
-  }
-
-  private def latestPinsOnce(spark: SparkSession, root: String,
-      snap: Option[Long]): Map[String, Long] = {
-    val fs = fsFor(spark, root)
-    snap match {
-      case None => fullWalkPins(spark, root)
-      case Some(s) =>
-        val base = manifestWithTimes(spark, root, s)
-        val mtimesOk = dirMtimesUsable(fs)
-        // mtime delta (HDFS-class only): ONE listing of the lake
-        // root. A partition re-resolves its marker listing iff its
-        // dir mtime is strictly after ITS OWN pin's pinnedAt — NOT
-        // the newest manifest's mtime: a manifest only validates its
-        // own overlay, and comparing every partition against the
-        // newest manifest would hide a version stranded by a crashed
-        // writer once any LATER writer committed elsewhere (its
-        // carried-forward pin rides along untested). pinnedAt IS a
-        // dir mtime (statted by the pinning commit inside its
-        // mutex), so both sides are FS-stamped — no cross-machine
-        // clock skew — and STRICT > is what makes an untouched
-        // partition (mtime == its pin's stat) prune; the residual is
-        // a same-mtime-tick strand, bounded by the filesystem's
-        // mtime granularity.
-        def mtimeDelta: Map[String, Long] =
-          fs.listStatus(new Path(root)).toSeq
-            .filter(_.getPath.getName.startsWith("part_date="))
-            .filter { st =>
-              base.get(st.getPath.getName) match {
-                case None => true
-                case Some((_, pinnedAt)) =>
-                  st.getModificationTime > pinnedAt
-              }
-            }
-            .flatMap { st =>
-              val p = st.getPath.getName
-              SnapshotLake.latestVersion(spark, partRoot(root, p))
-                .map(p -> _)
-            }.toMap
-        val pins = base.map { case (p, (v, _)) => p -> v }
-        logDelta(fs, root, base) match {
-          case Some(ld) =>
-            // log delta is the primary source; on HDFS-class stores
-            // the mtime delta ALSO runs to catch out-of-band
-            // partition commits that bypassed the log. Where both
-            // name a partition, the higher version wins (both are
-            // marker-verified).
-            val md = if (mtimesOk) mtimeDelta else Map.empty[String, Long]
-            val merged = (ld.toSeq ++ md.toSeq).groupBy(_._1)
-              .map { case (p, vs) => p -> vs.map(_._2).max }
-            pins ++ merged
-          case None => // pre-log lake
-            if (mtimesOk) pins ++ mtimeDelta
-            else fullWalkPins(spark, root)
-        }
-    }
   }
 
   /** MERGE `batch` into the affected partitions and commit a global
@@ -545,35 +420,6 @@ object PartitionedSnapshotLake {
       key: String, tsCol: String, exclude: Seq[String] = Nil)
       : (Long, Map[String, Long]) = {
     val fs = fsFor(spark, root)
-    // A lake BORN through commitMerge has a complete commit log by
-    // construction — every commit writes its entry BEFORE its marker
-    // from the very first rename — so the O(1) object-store read path
-    // is enabled at birth instead of waiting for a manual
-    // [[repairManifest]] (VERDICT r11 ask #3). Only a genuinely empty
-    // root qualifies: pre-existing partition dirs may hold marker'd
-    // versions committed by pre-log code with no entries, and a
-    // pre-existing _snapshots dir implies history this writer cannot
-    // vouch for — those lakes keep requiring one repairManifest.
-    // Crash-safe (entry-before-marker holds even for a writer that
-    // dies mid-commit); a mixed fleet where a PRE-LOG writer later
-    // commits into an auto-enabled lake is out of contract, the same
-    // caveat repairManifest-enabled lakes already carry. NOTE the
-    // trade this makes on OBJECT STORES: a certified lake's readLatest
-    // no longer full-walks, so out-of-band [[SnapshotLake.commit]]s
-    // into a partition dir (no log entry, no usable dir mtime) stay
-    // invisible until repairManifest — previously a FRESH uncertified
-    // lake caught them via the full walk. Lakes that take out-of-band
-    // commits on s3a-class stores must schedule repairManifest (the
-    // documented limitation certified lakes have always had).
-    val bornFresh = !fs.exists(new Path(root)) ||
-      (!fs.exists(snapsDir(root)) &&
-        !fs.listStatus(new Path(root)).exists(
-          _.getPath.getName.startsWith("part_date=")))
-    if (bornFresh) {
-      fs.mkdirs(logDir(root))
-      val out = fs.create(logEnabledMarker(root), true)
-      out.write("0".getBytes("UTF-8")); out.close()
-    }
     val b = batch.withColumn("part_date", to_date(col(tsCol)))
 
     // affected partition names from the batch's distinct dates —
@@ -631,8 +477,8 @@ object PartitionedSnapshotLake {
                 if (fs.exists(dest)) fs.delete(dest, true) // stale orphan
                 require(fs.rename(tp, dest), s"commit failed: $tp -> $dest")
                 // commit-log entry BEFORE the marker: every marker'd
-                // version has an entry (readLatest's object-store
-                // delta); a crash here leaves a dangling entry that
+                // version has an entry (readLatest's delta); a crash
+                // here leaves a dangling entry that
                 // the marker-existence check filters and vacuum sweeps
                 logPartitionCommit(fs, root, tp.getName, v)
                 // partition commit point — create-if-absent as a belt
@@ -685,14 +531,14 @@ object PartitionedSnapshotLake {
     * the horizon is retained (pins kept) regardless of
     * `retainSnapshots`, and any partition VERSION whose SUCCESSOR's
     * commit marker is younger is kept even when no manifest pins it —
-    * readLatest serves marker-resolved (manifest-less,
-    * crash-stranded) versions through its mtime delta, and such a
-    * version was resolvable as "the latest" right up until its
-    * successor landed, so its hazard clock runs from the successor's
-    * marker. Together: a readLatest that resolved pins at time T is
-    * safe as long as its scan finishes within readerHazardMs of T
-    * (each resolved pin was either the newest manifest's — always
-    * retained — or its partition's latest at T, deletable only once
+    * readLatest serves manifest-less (crash-stranded, mid-commit)
+    * versions through its commit-log delta, and such a version was
+    * resolvable as "the latest" right up until its successor landed,
+    * so its hazard clock runs from the successor's marker. Together:
+    * a readLatest that resolved pins at time T is safe as long as its
+    * scan finishes within readerHazardMs of T (each resolved pin was
+    * either the newest manifest's — always retained — or its
+    * partition's newest logged version at T, deletable only once
     * superseded for a full horizon).
     * Size it ≥ your longest snapshot read or merge; `retainSnapshots`
     * alone is only safe when retainSnapshots × commit cadence already
@@ -775,10 +621,10 @@ object PartitionedSnapshotLake {
             val commits = new Path(pr, "_commits")
             // marker mtimes in one listing: versions whose COMMIT is
             // younger than the hazard horizon are kept even when no
-            // manifest pins them — readLatest serves marker-resolved
-            // (manifest-less, crash-stranded) versions through its
-            // delta path, so a lockless reader may be mid-scan on one;
-            // manifest-age protection alone cannot see those pins
+            // manifest pins them — readLatest serves manifest-less
+            // (crash-stranded, mid-commit) versions through its
+            // commit-log delta, so a lockless reader may be mid-scan on
+            // one; manifest-age protection alone cannot see those pins
             val markerTimes: Map[Long, Long] =
               if (!fs.exists(commits)) Map.empty
               else fs.listStatus(commits).toSeq.flatMap { st =>
@@ -789,7 +635,7 @@ object PartitionedSnapshotLake {
             if (vs.nonEmpty) {
               val liveLocked = sweepLocks(commits)
               val latest = vs.last
-              // a version was resolvable as "the latest" by delta
+              // a version was resolvable as "the latest" by log-delta
               // readers until its SUCCESSOR's marker landed — so the
               // hazard clock for version v runs from marker(v+next),
               // not from v's own commit: keep v while its successor is
@@ -841,14 +687,6 @@ object PartitionedSnapshotLake {
         fs.delete(st.getPath, true)
     }
     sweepLocks(new Path(snapsDir(root), "_commits")): Unit
-    // crash-stranded manifest clock probes (commitManifest's settled
-    // stat deletes its own in a finally; only process death leaves one)
-    if (fs.exists(new Path(snapsDir(root), "_commits")))
-      fs.listStatus(new Path(snapsDir(root), "_commits")).foreach { st =>
-        if (st.getPath.getName.startsWith("clock-") &&
-          now - st.getModificationTime >= lockTtlMs)
-          fs.delete(st.getPath, false)
-      }
     // commit-log hygiene: entries covered by the newest KEPT manifest
     // are redundant (the delta test ignores v <= pin); dangling
     // entries (no commit marker — a crash between entry and marker,
@@ -904,28 +742,6 @@ object PartitionedSnapshotLake {
       fs.delete(new Path(snapsDir(root), s"$s.manifest"), false)
     }
   }
-
-  /** Attempt budgets for [[commitManifest]]'s settled stat (the
-    * same-tick-strand closure). On exhaustion — a partition under
-    * sustained out-of-band commits, or an FS clock that never reads
-    * past the observed mtimes — the pin degrades to mtime−1 (always
-    * correct: the busy partition re-resolves on every read until the
-    * next commit re-pins it). Package-visible so the degradation spec
-    * can trigger the bail path without multi-second waits. */
-  @volatile private[catalog] var settleAttemptsMax: Int = 500
-  @volatile private[catalog] var settleClockTriesMax: Int = 2000
-
-  /** Wall-clock ceiling for the WHOLE settle loop (r12 advice): the
-    * attempt budgets alone admit a worst case of tens of minutes
-    * holding the heartbeated manifest mutex (settleAttemptsMax
-    * attempts × up to settleClockTriesMax·2 ms of clock waits each)
-    * under sustained out-of-band commits on a coarse-mtime
-    * filesystem — blocking every other committer. Elapsed time past
-    * this ceiling trips the SAME safe under-pin degrade (mtime−1 ⇒
-    * the busy partition re-resolves on every read until the next
-    * commit re-pins it), so no committer waits behind a settle for
-    * more than ~this plus one clock wait. */
-  @volatile private[catalog] var settleWallBudgetMs: Long = 5000L
 
   /** TTL after which a manifest-mutex holder with no heartbeat is
     * presumed dead and its lock broken by a waiter. The mutex is held
@@ -992,98 +808,10 @@ object PartitionedSnapshotLake {
     try SnapshotLake.withLockHeartbeat(fs, manifestLock(root)) {
       val prev = latestSnapshot(spark, root)
       val n = prev.getOrElse(0L) + 1L
-      // pinnedAt for this commit's overlay = each overlay PARTITION
-      // DIR's current mtime, statted here inside the mutex. That is
-      // the exact value latestPins will compare against (strictly
-      // greater ⇒ re-check), so the domain is the filesystem's clock
-      // on both sides — no writer-clock skew — and the pin is "clean
-      // as of the state we can see now": any commit to the partition
-      // AFTER this stat bumps the dir mtime past pinnedAt and gets
-      // re-resolved. The residual: a concurrent same-partition
-      // writer's version landing BETWEEN our rename and this stat is
-      // absorbed into pinnedAt and stays hidden until repairManifest
-      // — the same-partition-concurrency caveat this class already
-      // documents (writers on disjoint partitions compose perfectly).
-      // O(touched) getFileStatus calls, inside the mutex.
-      val prevPins = prev
-        .map(manifestWithTimes(spark, root, _))
-        .getOrElse(Map.empty[String, (Long, Long)])
-      // same-tick strand closure (VERDICT r11 ask #8): the delta test
-      // is STRICTLY `mtime > pinnedAt`, so a version landing in the
-      // SAME filesystem mtime tick as this stat would never read as
-      // newer — on log-less lakes (and for out-of-band commits on any
-      // lake) it would strand until an unrelated commit bumps the
-      // tick. Pin a SETTLED mtime instead of a raw one: re-stat until
-      // the FS clock (probe file, same clock domain as the mtimes) is
-      // strictly past the observed mtime AND the mtime did not move
-      // during the wait. From then on, any event strictly after the
-      // stat stamps mtime >= fsNow > pinnedAt and re-resolves; events
-      // that landed during the wait bumped the mtime and re-looped.
-      // Cost: one probe create+stat per loop, exits one mtime tick
-      // after the dir goes quiet. Skipped where the mtime delta never
-      // runs (object-store schemes — pinnedAt is unused there). The
-      // absorbed-concurrent-writer residual (a same-partition version
-      // landing between our rename and the stat, hidden behind OUR
-      // pin until repairManifest) is unchanged and documented above.
-      def statAll(): Map[String, Long] = overlay.keys.map { p =>
-        p -> fs.getFileStatus(new Path(partRoot(root, p)))
-          .getModificationTime
-      }.toMap
-      val settled: Map[String, Long] =
-        if (!dirMtimesUsable(fs) || overlay.isEmpty) statAll()
-        else {
-          // batched: one clock-settle for the whole overlay (a 500-
-          // partition repair waits one tick once, not 500 times).
-          // BOUNDED — this runs while HOLDING the heartbeated manifest
-          // mutex, so it must never spin on (a) a partition receiving
-          // sustained out-of-band commits (every re-stat sees a moved
-          // mtime) or (b) an FS clock stepping backward. After the
-          // attempt budget, degrade to pinning mtime−1: a pin strictly
-          // BELOW the observed mtime makes the delta test re-resolve
-          // that partition on every read until the next commit re-pins
-          // it — always correct, merely unpruned for the busy
-          // partition, which is the safe direction.
-          val probe = new Path(
-            new Path(snapsDir(root), "_commits"), s"clock-$token")
-          def fsNow(): Long = {
-            val o = fs.create(probe, true); o.close()
-            fs.getFileStatus(probe).getModificationTime
-          }
-          try {
-            val t0 = System.nanoTime()
-            def overBudget(): Boolean =
-              (System.nanoTime() - t0) / 1000000L > settleWallBudgetMs
-            var m = statAll()
-            var quiet = false
-            var attempts = 0
-            while (!quiet && attempts < settleAttemptsMax &&
-                !overBudget()) {
-              attempts += 1
-              val maxM = m.values.max
-              var clockTries = 0
-              while (fsNow() <= maxM &&
-                  clockTries < settleClockTriesMax && !overBudget()) {
-                clockTries += 1; Thread.sleep(2)
-              }
-              // bail (clock stuck, or the WALL budget elapsed — the
-              // iteration budgets can't bound a loop whose every
-              // re-stat sees a moved mtime) → the under-pin below
-              if (clockTries >= settleClockTriesMax || overBudget())
-                attempts = settleAttemptsMax
-              else {
-                val m2 = statAll()
-                if (m2 == m) quiet = true else m = m2
-              }
-            }
-            if (quiet) m
-            else m.map { case (p, v) => p -> (v - 1) } // safe under-pin
-          } finally fs.delete(probe, false)
-        }
-      val pins = prevPins ++ overlay.map { case (p, v) =>
-        p -> (v, settled(p))
-      }
+      val pins = prev.map(manifest(spark, root, _))
+        .getOrElse(Map.empty[String, Long]) ++ overlay
       val body = pins.toSeq.sortBy(_._1)
-        .map { case (p, (v, at)) => s"$p\t$v\t$at" }.mkString("\n")
+        .map { case (p, v) => s"$p\t$v" }.mkString("\n")
       val out = fs.create(new Path(snapsDir(root), s"$n.manifest"), true)
       out.write(body.getBytes("UTF-8")); out.close()
       // fencing check, then create-if-absent marker: if the mutex was
@@ -1103,18 +831,13 @@ object PartitionedSnapshotLake {
       // delta test (`v > pin`) ignores them — so the log stays
       // O(commits since the newest manifest). Best-effort: a crash
       // mid-prune leaves harmless covered entries.
-      if (fs.exists(logDir(root)))
-        fs.listStatus(logDir(root)).foreach { st =>
-          val name = st.getPath.getName
-          val at = name.lastIndexOf('@')
-          if (at > 0) name.drop(at + 1).toLongOption.foreach { v =>
-            if (pins.get(name.take(at)).exists(_._1 >= v))
-              try fs.delete(st.getPath, false)
-              catch { case scala.util.control.NonFatal(_) => }
-              // the snapshot IS committed — a prune hiccup must not
-              // fail the commit; vacuum re-sweeps covered entries
-          }
-        }
+      logEntries(fs, root).foreach { case (p, v) =>
+        if (pins.get(p).exists(_ >= v))
+          try fs.delete(new Path(logDir(root), s"$p@$v"), false)
+          catch { case scala.util.control.NonFatal(_) => }
+          // the snapshot IS committed — a prune hiccup must not fail
+          // the commit; vacuum re-sweeps covered entries
+      }
       n
     } finally {
       // release only if still ours — never delete a breaker's lock
@@ -1128,25 +851,12 @@ object PartitionedSnapshotLake {
     * the only full-listing manifest builder. Run after a writer died
     * between its partition commits and its manifest (those versions
     * are visible to [[readLatest]] but absent from snapshots), or to
-    * bootstrap manifests over a lake written before snapshots were
-    * enabled. */
+    * pin versions committed out of band (no commit-log entry, so not
+    * yet visible to [[readLatest]]). */
   def repairManifest(spark: SparkSession, root: String): Long = {
-    val full = partitions(spark, root).flatMap { p =>
-      SnapshotLake.latestVersion(spark, partRoot(root, p)).map(p -> _)
-    }.toMap
+    val full = fullWalkPins(spark, root)
     require(full.nonEmpty, s"nothing to repair at $root: no committed " +
       "partition versions")
-    val n = commitManifest(spark, root, full)
-    // ONLY repair certifies the log as a complete delta source: its
-    // full-walk manifest pins every marker'd version, so from here on
-    // "not pinned ⇒ has a log entry" holds (every post-upgrade commit
-    // writes entries unconditionally). Written AFTER the manifest's
-    // commit point — a crash mid-repair leaves the log untrusted and
-    // readers on the safe pre-log paths.
-    val fs = fsFor(spark, root)
-    fs.mkdirs(logDir(root))
-    val out = fs.create(logEnabledMarker(root), true)
-    out.write(n.toString.getBytes("UTF-8")); out.close()
-    n
+    commitManifest(spark, root, full)
   }
 }

@@ -358,8 +358,8 @@ object DedupOps {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
     // the default (materialize=true) path APPENDS to the signature
-    // store, so it is a writer entry point like compactStore /
-    // migrateStore and must hold the store's writer lease for the
+    // store, so it is a writer entry point like compactStore and
+    // must hold the store's writer lease for the
     // probe→append span: an append landing inside a concurrent
     // compact's read→swap window would be silently discarded with the
     // swapped-aside store (the exact lost-rows race the lease exists
@@ -394,7 +394,7 @@ object DedupOps {
     val storeFs =
       storePath.getFileSystem(spark.sessionState.newHadoopConf())
     // a missing store dir with swap debris next to it is an
-    // interrupted compact/migrate, NOT a fresh pipeline — roll it
+    // interrupted compact, NOT a fresh pipeline — roll it
     // forward/back instead of silently reseeding an empty store and
     // discarding the dedup history
     if (!storeFs.exists(storePath)) recoverStoreSwap(storeFs, store)
@@ -405,15 +405,13 @@ object DedupOps {
           .select(col("doc_id"))
       else {
         val corpus = spark.read.parquet(store)
-        // layout guard: a store written before the hashed layout
-        // (doc_id, band, band_key) must not half-work or get mixed
-        // schemas appended next to it — fail with the migration path
+        // layout guard: a store without the hashed (doc_id, bh)
+        // layout must not half-work or get mixed schemas appended
+        // next to it
         if (!corpus.columns.contains("bh"))
           throw new IllegalStateException(
-            s"signature store at $store uses the pre-hash layout " +
-              s"(${corpus.columns.mkString(", ")}); run " +
-              "DedupOps.migrateStore(spark, store) once to rewrite " +
-              "it as (doc_id, bh)")
+            s"signature store at $store is not a (doc_id, bh) store " +
+              s"(columns: ${corpus.columns.mkString(", ")})")
         // the batch side broadcasts ONLY while its band table is
         // broadcast-sized — a catch-up batch after stream downtime can
         // carry millions of docs (16 band rows each), and forcing a
@@ -566,13 +564,13 @@ object DedupOps {
     * (~128 MB, or `targetFiles` if given), deduplicating rows on the
     * way — at-least-once replay can append the same (doc_id, bh)
     * twice, which is verdict-harmless (hits are distinct'd) but pure
-    * waste on disk. Same tmp+swap as [[migrateStore]]. NOT safe
-    * against a concurrent writer: run it from the ingest job between
-    * batches, where foreachBatch already serializes store access — or
-    * from a separate cron job with `leaseWaitMs` > 0, which QUEUES
-    * behind a live ingest batch's lease for up to that long instead
-    * of crashing on ConcurrentWriterException (r15 ask #5's
-    * operational shape; the default stays throw-immediately). */
+    * waste on disk. Rewrites to `store.next`, then [[swapStore]].
+    * NOT safe against a concurrent writer: run it from the ingest job
+    * between batches, where foreachBatch already serializes store
+    * access — or from a separate cron job with `leaseWaitMs` > 0,
+    * which QUEUES behind a live ingest batch's lease for up to that
+    * long instead of crashing on ConcurrentWriterException (r15 ask
+    * #5's operational shape; the default stays throw-immediately). */
   def compactStore(spark: SparkSession, store: String,
       targetFiles: Int = 0, leaseWaitMs: Long = 0L): Unit = {
     val fs = new org.apache.hadoop.fs.Path(store)
@@ -591,9 +589,9 @@ object DedupOps {
     val corpus = spark.read.parquet(store)
     if (!corpus.columns.contains("bh"))
       throw new IllegalStateException(
-        s"signature store at $store uses the pre-hash layout " +
-          s"(${corpus.columns.mkString(", ")}); run " +
-          "DedupOps.migrateStore(spark, store) before compacting")
+        s"signature store at $store is not a (doc_id, bh) store " +
+          s"(columns: ${corpus.columns.mkString(", ")}); refusing to " +
+          "compact it")
     val bytes = fs.getContentSummary(
       new org.apache.hadoop.fs.Path(store)).getLength
     val n =
@@ -635,14 +633,14 @@ object DedupOps {
     fs.delete(old, true): Unit
   }
 
-  /** Heal interrupted [[swapStore]]/[[migrateStore]] states: if the
-    * store is missing but a fully-written replacement (`store.next` /
-    * `store.migrating`) exists, roll FORWARD (the replacement was
-    * complete before the old store was touched); if only `store.old`
-    * remains, roll BACK. When the store EXISTS alongside a lingering
-    * `store.old`, the aside is always STALE residue — left by a crash
-    * at swapStore's final delete, or by an earlier roll-forward heal
-    * here (rename `.next` in, `.old` stays behind); after a compact
+  /** Heal interrupted [[swapStore]] states: if the store is missing
+    * but a fully-written replacement (`store.next`) exists, roll
+    * FORWARD (the replacement was complete before the old store was
+    * touched); if only `store.old` remains, roll BACK. When the store
+    * EXISTS alongside a lingering `store.old`, the aside is always
+    * STALE residue — left by a crash at swapStore's final delete, or
+    * by an earlier roll-forward heal here (rename `.next` in, `.old`
+    * stays behind); after a compact
     * that residue is a full copy of the store, doubling its footprint
     * until the next swap happens to run (found by
     * StoreMaintCrashFuzzSpec's kill at that delete). WRITER entry
@@ -699,7 +697,7 @@ object DedupOps {
     // holderIsLive would be trivially true for themselves anyway).
     if (!dropAside && graft.catalog.WriterLease.holderIsLive(fs, store))
       return
-    Seq(store + ".next", store + ".migrating", store + ".old")
+    Seq(store + ".next", store + ".old")
       .map(new org.apache.hadoop.fs.Path(_))
       .find(fs.exists)
       .foreach { p =>
@@ -708,36 +706,6 @@ object DedupOps {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"recovered interrupted store swap at $store from $p")
       }
-  }
-
-  /** One-time upgrade of a pre-round-10 signature store
-    * ((doc_id, band, band_key) rows) to the hashed layout
-    * ((doc_id, bh)): rewrite to a temp dir, then swap. Idempotent —
-    * an already-hashed store is left untouched. */
-  def migrateStore(spark: SparkSession, store: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.catalog.WriterLease.withLease(fs, store, "migrateStore") {
-      migrateStoreHeld(spark, store, fs)
-    }
-  }
-
-  private def migrateStoreHeld(spark: SparkSession, store: String,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    // writer entry: heal an interrupted swap AND reclaim a stale aside
-    recoverStoreSwap(fs, store, dropAside = true)
-    val old = spark.read.parquet(store)
-    if (old.columns.contains("bh")) return
-    require(old.columns.contains("band") &&
-      old.columns.contains("band_key"),
-      s"store at $store is neither hashed nor pre-hash layout: " +
-        old.columns.mkString(", "))
-    val tmp = new org.apache.hadoop.fs.Path(store + ".next")
-    fs.delete(tmp, true)
-    old.select(col("doc_id"),
-        xxhash64(col("band"), col("band_key")).as("bh"))
-      .write.parquet(tmp.toString)
-    swapStore(fs, store)
   }
 
   /** Bands as `rowsPerBand`-lane slices of an EXISTING (doc_id, sig)

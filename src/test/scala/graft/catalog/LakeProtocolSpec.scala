@@ -31,9 +31,8 @@ object CountingLocalFs {
 /** An "object store": counts listStatus like [[CountingLocalFs]], but
   * registers under the `s3a` scheme and reports mtime 0 for every
   * DIRECTORY — the flat-namespace semantics (S3/GCS/ABFS) where a
-  * parent dir's mtime never reflects child creation. The lake's
-  * dir-mtime delta path is useless here by construction; the commit
-  * log must carry readLatest on its own. */
+  * parent dir's mtime never reflects child creation, so nothing the
+  * lake reads may depend on dir mtimes. */
 class NoMtimeCountingFs extends CountingLocalFs {
   override def getScheme: String = "s3a"
   override def getUri: URI = URI.create("s3a:///")
@@ -53,62 +52,6 @@ class NoMtimeCountingFs extends CountingLocalFs {
     strip(super.getFileStatus(f))
 }
 
-/** HDFS-like (dir mtimes DO move on child create) but with a COARSE
-  * mtime clock: every reported mtime truncates to [[CoarseMtimeFs.Tick]]
-  * ms — the same-tick-strand stand-in (real filesystems have 1 ms–2 s
-  * granularity; 1.5 s makes the window reliably hittable in a test). */
-class CoarseMtimeFs extends CountingLocalFs {
-  override def getScheme: String = "coarsefs"
-  override def getUri: URI = URI.create("coarsefs:///")
-  private def strip(st: FileStatus): FileStatus =
-    new FileStatus(st.getLen, st.isDirectory, st.getReplication,
-      st.getBlockSize,
-      st.getModificationTime / CoarseMtimeFs.Tick * CoarseMtimeFs.Tick,
-      st.getPath)
-  override def listStatus(f: Path): Array[FileStatus] =
-    super.listStatus(f).map(strip)
-  override def getFileStatus(f: Path): FileStatus =
-    strip(super.getFileStatus(f))
-}
-object CoarseMtimeFs { val Tick = 1500L }
-
-/** HDFS-like, but the manifest clock PROBE files (`clock-*`) always
-  * report mtime 0 — the "FS clock never advances past the observed
-  * mtimes" pathology that must make the settled stat BAIL (bounded)
-  * rather than spin inside the manifest mutex. */
-class FrozenClockFs extends CountingLocalFs {
-  override def getScheme: String = "frozenfs"
-  override def getUri: URI = URI.create("frozenfs:///")
-  override def getFileStatus(f: Path): FileStatus = {
-    val st = super.getFileStatus(f)
-    if (f.getName.startsWith("clock-"))
-      new FileStatus(st.getLen, st.isDirectory, st.getReplication,
-        st.getBlockSize, 0L, st.getPath)
-    else st
-  }
-}
-
-/** HDFS-like, but every PARTITION-DIR stat reports a strictly newer
-  * mtime than the one before — the settled stat's view of SUSTAINED
-  * out-of-band commits: every re-stat observes movement, the
-  * iteration budgets never converge, and only the wall-clock budget
-  * can end the settle. */
-// (registered under the `busyfs` scheme via fs.busyfs.impl)
-class BusyDirFs extends CountingLocalFs {
-  override def getScheme: String = "busyfs"
-  override def getUri: URI = URI.create("busyfs:///")
-  override def getFileStatus(f: Path): FileStatus = {
-    val st = super.getFileStatus(f)
-    if (st.isDirectory && f.getName.startsWith("part_date="))
-      new FileStatus(st.getLen, true, st.getReplication,
-        st.getBlockSize,
-        st.getModificationTime + BusyDirFs.bumps.incrementAndGet(),
-        st.getPath)
-    else st
-  }
-}
-object BusyDirFs { val bumps = new AtomicLong(0) }
-
 /** Lock-protocol and at-scale contracts of the snapshot lakes that the
   * black-box [[graft.SnapshotLakeSpec]] cannot reach: the claim ABA
   * recheck, the vacuum heartbeat, the manifest mutex, and the
@@ -127,6 +70,22 @@ class LakeProtocolSpec extends AnyFunSuite {
     new URI("file:///"), spark.sparkContext.hadoopConfiguration)
 
   private def frame(rows: (Long, String)*) = rows.toSeq.toDF("id", "val")
+
+  /** The on-disk state a [[PartitionedSnapshotLake.commitMerge]] leaves
+    * when its writer dies after a partition commit and before its
+    * manifest: the v-dir, its commit-log entry and its commit marker.
+    * `dir` is the lake's local path, whatever scheme the lake uses. */
+  private def strandCommit(dir: String, part: String, v: Long,
+      rows: (Long, String, String)*): Unit = {
+    rows.toSeq.toDF("id", "ts", "val").write
+      .parquet(new java.io.File(dir, s"$part/v=$v").getAbsolutePath)
+    val log = new java.io.File(dir, "_snapshots/_log")
+    log.mkdirs()
+    assert(new java.io.File(log, s"$part@$v").createNewFile())
+    val commits = new java.io.File(dir, s"$part/_commits")
+    commits.mkdirs()
+    assert(new java.io.File(commits, v.toString).createNewFile())
+  }
 
   test("ABA guard: a claim computed from a STALE latest cannot re-take " +
       "a committed version whose lock was already released") {
@@ -224,17 +183,15 @@ class LakeProtocolSpec extends AnyFunSuite {
       rows.toSeq.toDF("id", "ts", "val")
     PartitionedSnapshotLake.commitMerge(spark, root,
       df((1L, "2026-04-01", "a"), (2L, "2026-04-02", "b")), "id", "ts")
-    // simulate a writer that committed a partition version but died
-    // before its manifest: commit straight into the partition's lake
+    // a writer that committed a partition version but died before
+    // its manifest
     val p = "part_date=2026-04-03"
-    SnapshotLake.commit(spark, s"$root/$p",
-      Seq((3L, java.sql.Timestamp.valueOf("2026-04-03 00:00:00"), "c"))
-        .toDF("id", "ts", "val"))
+    strandCommit(root, p, 1L, (3L, "2026-04-03", "c"))
     assert(PartitionedSnapshotLake
       .manifest(spark, root, 1L).get(p).isEmpty,
       "stranded partition must be absent from the pre-crash manifest")
     assert(PartitionedSnapshotLake.readLatest(spark, root).count() == 3,
-      "readLatest is marker-based and must already see the orphan")
+      "readLatest must already see the orphan through its log entry")
     val s2 = PartitionedSnapshotLake.repairManifest(spark, root)
     assert(s2 == 2L)
     assert(PartitionedSnapshotLake.manifest(spark, root, s2) ==
@@ -281,12 +238,10 @@ class LakeProtocolSpec extends AnyFunSuite {
     parts.drop(1).foreach { p =>
       copyTree(seed, new java.io.File(dir, p))
     }
-    // hand-write manifest 2 pinning all NParts at v1 (the repair shape:
-    // pinnedAt = now, as repairManifest would stamp)
+    // hand-write manifest 2 pinning all NParts at v1 (the repair shape)
     val snaps = new java.io.File(dir, "_snapshots")
-    val pinAt = System.currentTimeMillis()
     java.nio.file.Files.write(new java.io.File(snaps, "2.manifest").toPath,
-      parts.sorted.map(p => s"$p\t1\t$pinAt").mkString("\n")
+      parts.sorted.map(p => s"$p\t1").mkString("\n")
         .getBytes("UTF-8"))
     java.nio.file.Files.write(new java.io.File(snaps, "2").toPath,
       Array.emptyByteArray)
@@ -296,14 +251,14 @@ class LakeProtocolSpec extends AnyFunSuite {
     val (s3, _) = PartitionedSnapshotLake.commitMerge(spark, root,
       df((10L, "2023-01-05", "x"), (11L, "2023-01-06", "y")), "id", "ts")
     val listCalls = CountingLocalFs.calls.get()
-    val rootLists = {
+    def rootLists(): Int = {
       val canonical = new java.io.File(dir).getAbsolutePath
       CountingLocalFs.listed.toArray(Array.empty[String])
         .count(p => p.stripSuffix("/") == canonical)
     }
     assert(s3 == 3L)
-    assert(rootLists == 0,
-      s"commit listed the lake ROOT $rootLists times — that is " +
+    assert(rootLists() == 0,
+      s"commit listed the lake ROOT ${rootLists()} times — that is " +
         "O(partitions), not O(touched)")
     assert(listCalls < 150,
       s"commit of 2 touched partitions issued $listCalls listStatus " +
@@ -329,12 +284,12 @@ class LakeProtocolSpec extends AnyFunSuite {
     assert(snap.filter($"part_date" === "2023-01-06")
       .select("val").as[String].collect().toSet == Set("seed", "y"))
 
-    // readLatest's PIN RESOLUTION is O(1)-listing (round-10):
-    // newest-manifest pins + a single root listing for the mtime
-    // delta — never a per-partition marker walk over them all. (The
-    // data scan itself then lists the pinned v-dirs, as any scan of
-    // hundreds of partitions must — that part is Spark's parallel file
-    // index, not the protocol.)
+    // readLatest's PIN RESOLUTION is O(1)-listing: newest-manifest
+    // pins + one commit-log listing — never the lake root, never a
+    // per-partition marker walk over them all. (The data scan itself
+    // then lists the pinned v-dirs, as any scan of hundreds of
+    // partitions must — that part is Spark's parallel file index, not
+    // the protocol.)
     CountingLocalFs.reset()
     val pins = PartitionedSnapshotLake.latestPins(spark, root)
     val pinCalls = CountingLocalFs.calls.get()
@@ -342,6 +297,9 @@ class LakeProtocolSpec extends AnyFunSuite {
       s"latestPins issued $pinCalls listStatus calls over a " +
         s"$NParts-partition lake — pin resolution is O(partitions), " +
         "not O(1)-listing")
+    assert(rootLists() == 0,
+      s"latestPins listed the lake ROOT ${rootLists()} times — the " +
+        "delta must come from the commit log alone")
     assert(pins.size == NParts)
     assert(pins("part_date=2023-01-05") == 2L &&
       pins("part_date=2023-01-09") == 1L)
@@ -349,12 +307,9 @@ class LakeProtocolSpec extends AnyFunSuite {
       .count() == NParts + 2L)
 
     // a partition version stranded AFTER the manifest (crashed writer)
-    // must still be visible: its dir mtime moves past the manifest's,
-    // so the delta path re-resolves exactly that partition
-    Thread.sleep(1100) // local-FS mtime granularity can be 1 s
-    SnapshotLake.commit(spark, s"$root/part_date=2023-01-09",
-      Seq((99L, java.sql.Timestamp.valueOf("2023-01-09 00:00:00"),
-        "stranded")).toDF("id", "ts", "val"))
+    // must still be visible: its log entry names exactly that partition
+    strandCommit(dir, "part_date=2023-01-09", 2L,
+      (99L, "2023-01-09", "stranded"))
     CountingLocalFs.reset()
     val pins2 = PartitionedSnapshotLake.latestPins(spark, root)
     val strandCalls = CountingLocalFs.calls.get()
@@ -364,9 +319,8 @@ class LakeProtocolSpec extends AnyFunSuite {
     assert(strandCalls <= 15,
       s"the 1-partition delta cost $strandCalls listStatus calls — " +
         "delta resolution is not O(delta)")
-    // v=2 is a full partition snapshot (SnapshotLake.commit semantics),
-    // so latest serves exactly it — while snapshot 3 still time-travels
-    // to the pre-strand v=1
+    // v=2 is a full partition snapshot, so latest serves exactly it —
+    // while snapshot 3 still time-travels to the pre-strand v=1
     assert(PartitionedSnapshotLake.readLatest(spark, root)
       .filter($"part_date" === "2023-01-09")
       .select("val").as[String].collect().toSet == Set("stranded"),
@@ -377,10 +331,8 @@ class LakeProtocolSpec extends AnyFunSuite {
 
     // the carried-pin trap: a LATER writer now commits a DIFFERENT
     // partition, minting manifest 4 that carries 2023-01-09 forward at
-    // its stale pin. The strand must STAY visible — each pin's delta
-    // test compares against that pin's own pinnedAt (which predates
-    // the strand), never against the newest manifest's mtime (which
-    // postdates it and would hide it forever)
+    // its stale pin. The strand must STAY visible — the carried v1 pin
+    // does not cover the v2 entry, so manifest-commit pruning keeps it
     PartitionedSnapshotLake.commitMerge(spark, root,
       df((20L, "2023-01-07", "later")), "id", "ts")
     val pins3 = PartitionedSnapshotLake.latestPins(spark, root)
@@ -401,8 +353,7 @@ class LakeProtocolSpec extends AnyFunSuite {
       rows.toSeq.toDF("id", "ts", "val")
 
     // seed partition 0 through the real protocol (manifest 1 + the
-    // commit log dir), then fabricate 499 more partitions by file
-    // copy and hand-write manifest 2 pinning all 500 at v1
+    // commit log dir), then fabricate 499 more partitions by file copy
     PartitionedSnapshotLake.commitMerge(spark, root,
       df((0L, "2024-01-01", "seed")), "id", "ts")
     val seed = new java.io.File(dir, "part_date=2024-01-01")
@@ -417,24 +368,9 @@ class LakeProtocolSpec extends AnyFunSuite {
     val parts = (0 until 500).map(i => s"part_date=${day0.plusDays(i)}")
     parts.drop(1).foreach(p => copyTree(seed, new java.io.File(dir, p)))
     val snaps = new java.io.File(dir, "_snapshots")
-    // simulate a PRE-LOG lake (upgraded fleet): commitMerge certifies
-    // fresh lakes at birth since r12, but this lake's 499 fabricated
-    // partitions are exactly the versions-without-entries state an
-    // upgrade produces — drop the birth certificate, as a pre-r12
-    // lake would never have had one
-    assert(new java.io.File(snaps, "_log/_enabled").delete(),
-      "commitMerge on a fresh root should have auto-certified the log")
-    // the documented enablement flow: repairManifest pins all 500 at
-    // v1 (manifest 2) and certifies the log complete (_enabled) —
-    // WITHOUT it latestPins must keep the safe full walk on s3a
-    CountingLocalFs.reset()
-    val preEnable = PartitionedSnapshotLake.latestPins(spark, root)
-    assert(preEnable.size == 500 && CountingLocalFs.calls.get() > 100,
-      "an UNCERTIFIED log (no _enabled) must keep the full-walk " +
-        "fallback on an object store — a manifest-1-only lake with " +
-        "fabricated partitions has versions no log entry covers")
+    // the fabricated partitions carry no log entries (they arrived out
+    // of band): repairManifest pins all 500 at v1 (manifest 2)
     assert(PartitionedSnapshotLake.repairManifest(spark, root) == 2L)
-    assert(new java.io.File(snaps, "_log/_enabled").exists)
 
     // clean state: pin resolution is O(1)-listing with NO mtime help
     CountingLocalFs.reset()
@@ -450,14 +386,7 @@ class LakeProtocolSpec extends AnyFunSuite {
     // v-dir renamed in, LOG ENTRY written, marker written, writer
     // died before its manifest
     val p = "part_date=2024-01-09"
-    copyTree(new java.io.File(dir, s"$p/v=1"),
-      new java.io.File(dir, s"$p/v=2"))
-    java.nio.file.Files.write(
-      new java.io.File(snaps, s"_log/$p@2").toPath,
-      Array.emptyByteArray)
-    java.nio.file.Files.write(
-      new java.io.File(dir, s"$p/_commits/2").toPath,
-      Array.emptyByteArray)
+    strandCommit(dir, p, 2L, (0L, "2024-01-09", "seed"))
     // and a DANGLING entry (died between entry and marker): must not
     // surface — its version never committed
     val q = "part_date=2024-01-10"
@@ -539,9 +468,9 @@ class LakeProtocolSpec extends AnyFunSuite {
     lock.delete(): Unit
   }
 
-  test("BORN CERTIFIED: a lake created and grown purely through " +
-      "commitMerge on an object store gets O(1) readLatest with ZERO " +
-      "repairManifest calls (r12: the birth certificate)") {
+  test("a lake created and grown purely through commitMerge on an " +
+      "object store gets O(1) readLatest with ZERO repairManifest " +
+      "calls") {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.s3a.impl", classOf[NoMtimeCountingFs].getName)
     val dir = tmp()
@@ -550,8 +479,6 @@ class LakeProtocolSpec extends AnyFunSuite {
       rows.toSeq.toDF("id", "ts", "val")
     PartitionedSnapshotLake.commitMerge(spark, root,
       df((1L, "2027-01-01", "a"), (2L, "2027-01-02", "b")), "id", "ts")
-    assert(new java.io.File(dir, "_snapshots/_log/_enabled").exists,
-      "first commitMerge on a fresh root must certify the commit log")
     PartitionedSnapshotLake.commitMerge(spark, root,
       df((1L, "2027-01-01", "a2"), (3L, "2027-01-03", "c")), "id", "ts")
     CountingLocalFs.reset()
@@ -559,107 +486,14 @@ class LakeProtocolSpec extends AnyFunSuite {
     assert(pins == Map("part_date=2027-01-01" -> 2L,
       "part_date=2027-01-02" -> 1L, "part_date=2027-01-03" -> 1L))
     assert(CountingLocalFs.calls.get() <= 8,
-      s"born-certified lake cost ${CountingLocalFs.calls.get()} " +
-        "listStatus calls — the O(1) log path is not on by default " +
-        "for fresh lakes")
+      s"a commitMerge-grown lake cost ${CountingLocalFs.calls.get()} " +
+        "listStatus calls — the O(1) log path is not on by default")
     // a crash-stranded commit (entry + marker, no manifest) is served
-    // through the log alone — the dir-mtime path is useless on s3a
+    // through the log alone
     val p = "part_date=2027-01-02"
-    def copyTree(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs()
-        src.listFiles().foreach(c =>
-          copyTree(c, new java.io.File(dst, c.getName)))
-      } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-    }
-    copyTree(new java.io.File(dir, s"$p/v=1"),
-      new java.io.File(dir, s"$p/v=2"))
-    java.nio.file.Files.write(
-      new java.io.File(dir, s"_snapshots/_log/$p@2").toPath,
-      Array.emptyByteArray)
-    java.nio.file.Files.write(
-      new java.io.File(dir, s"$p/_commits/2").toPath,
-      Array.emptyByteArray)
+    strandCommit(dir, p, 2L, (2L, "2027-01-02", "b"))
     assert(PartitionedSnapshotLake.latestPins(spark, root)(p) == 2L,
-      "born-certified log path missed a crash-stranded version")
-    // an EXISTING lake (pre-existing partitions, no certificate) must
-    // NOT get certified by a later commitMerge — only repair may
-    val dir2 = tmp()
-    val root2 = s"s3a://$dir2"
-    PartitionedSnapshotLake.commitMerge(spark, root2,
-      df((1L, "2027-02-01", "x")), "id", "ts")
-    assert(new java.io.File(dir2, "_snapshots/_log/_enabled").delete())
-    PartitionedSnapshotLake.commitMerge(spark, root2,
-      df((2L, "2027-02-02", "y")), "id", "ts")
-    assert(!new java.io.File(dir2, "_snapshots/_log/_enabled").exists,
-      "commitMerge certified a lake that already had history — " +
-        "pre-log versions could lack entries; only repairManifest " +
-        "(or birth) may write _enabled")
-  }
-
-  test("SAME-TICK STRAND closed (r12): on a log-less coarse-mtime " +
-      "HDFS-class lake, a version committed immediately after a " +
-      "manifest pin — inside what WOULD have been the pin's mtime " +
-      "tick — is still served by readLatest (the settled-stat wait)") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.coarsefs.impl", classOf[CoarseMtimeFs].getName)
-    val dir = tmp()
-    val root = s"coarsefs://$dir"
-    def df(rows: (Long, String, String)*) =
-      rows.toSeq.toDF("id", "ts", "val")
-    PartitionedSnapshotLake.commitMerge(spark, root,
-      df((1L, "2027-03-01", "a")), "id", "ts")
-    // log-less HDFS lake: drop the birth certificate so the mtime
-    // delta is the ONLY delta source — the path under test
-    assert(new java.io.File(dir, "_snapshots/_log/_enabled").delete())
-    // out-of-band commit IMMEDIATELY after the manifest's pin stat:
-    // without the settled-stat wait this lands in the same 1.5 s
-    // mtime tick as pinnedAt, mtime == pinnedAt fails the STRICT >
-    // delta test, and the version strands until an unrelated commit
-    val p = "part_date=2027-03-01"
-    SnapshotLake.commit(spark, s"$root/$p",
-      Seq((9L, java.sql.Timestamp.valueOf("2027-03-01 00:00:00"), "b"))
-        .toDF("id", "ts", "val"))
-    val pins = PartitionedSnapshotLake.latestPins(spark, root)
-    assert(pins(p) == 2L,
-      "same-tick strand: a version committed in the pin's own mtime " +
-        "tick is invisible to readLatest — the settled-stat wait in " +
-        "commitManifest regressed")
-  }
-
-  test("settled-stat DEGRADATION: when the FS clock never advances " +
-      "past the observed mtimes, commitManifest bails within its " +
-      "budget and under-pins — the commit completes and a same-tick " +
-      "follow-up version is still served") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.frozenfs.impl", classOf[FrozenClockFs].getName)
-    val dir = tmp()
-    val root = s"frozenfs://$dir"
-    def df(rows: (Long, String, String)*) =
-      rows.toSeq.toDF("id", "ts", "val")
-    val (oldA, oldC) = (PartitionedSnapshotLake.settleAttemptsMax,
-      PartitionedSnapshotLake.settleClockTriesMax)
-    PartitionedSnapshotLake.settleClockTriesMax = 3 // bail fast
-    try {
-      val t0 = System.nanoTime()
-      PartitionedSnapshotLake.commitMerge(spark, root,
-        df((1L, "2027-04-01", "a")), "id", "ts")
-      assert((System.nanoTime() - t0) / 1e9 < 30,
-        "commitManifest spun on a frozen clock instead of bailing")
-      // log-less HDFS lake: the mtime delta is the only delta source
-      assert(new java.io.File(dir, "_snapshots/_log/_enabled").delete())
-      // the under-pin (mtime-1) must keep a same-tick follow-up
-      // version visible: the whole point of the degradation direction
-      val p = "part_date=2027-04-01"
-      SnapshotLake.commit(spark, s"$root/$p",
-        Seq((9L, java.sql.Timestamp.valueOf("2027-04-01 00:00:00"), "b"))
-          .toDF("id", "ts", "val"))
-      assert(PartitionedSnapshotLake.latestPins(spark, root)(p) == 2L,
-        "under-pin degradation lost a same-tick follow-up version")
-    } finally {
-      PartitionedSnapshotLake.settleAttemptsMax = oldA
-      PartitionedSnapshotLake.settleClockTriesMax = oldC
-    }
+      "the commit-log path missed a crash-stranded version")
   }
 
   test("out-of-band commits into a CERTIFIED lake are detected and " +
@@ -668,17 +502,19 @@ class LakeProtocolSpec extends AnyFunSuite {
     def merge(id: Long, v: String) =
       PartitionedSnapshotLake.commitMerge(spark, root,
         Seq((id, "2027-06-01", v)).toDF("id", "ts", "val"), "id", "ts")
-    merge(1L, "a") // born through commitMerge -> certified at birth
+    merge(1L, "a")
     merge(2L, "b") // in-contract: detector must stay SILENT
     assert(PartitionedSnapshotLake.lastOutOfBandWarning.isEmpty,
       "an in-contract commit false-flagged as out-of-band")
     // OUT-OF-BAND: a direct SnapshotLake.commit into the partition dir
-    // writes a marker but no log entry — the class the certified
-    // object-store read path cannot see (USAGE.md's repairManifest
-    // caveat, now surfaced by the engine itself)
+    // writes a marker but no log entry — the class readLatest's log
+    // delta cannot see, on file:// exactly as on an object store
     val p = "part_date=2027-06-01"
     SnapshotLake.commit(spark, s"$root/$p",
       Seq((9L, "2027-06-01", "c")).toDF("id", "ts", "val")) // v3
+    assert(PartitionedSnapshotLake.latestPins(spark, root)(p) == 2L,
+      "readLatest served an out-of-band version with no log entry — " +
+        "freshness must come from the commit log alone")
     merge(3L, "d") // next commitMerge touching the partition: WARNs
     val missing = PartitionedSnapshotLake.lastOutOfBandWarning
     assert(missing.get(p).exists(_ == Seq(3L)),
@@ -688,42 +524,5 @@ class LakeProtocolSpec extends AnyFunSuite {
     merge(4L, "e")
     assert(PartitionedSnapshotLake.lastOutOfBandWarning.isEmpty,
       "the detector kept warning after a manifest covered the orphan")
-  }
-
-  test("settled-stat WALL budget: under sustained out-of-band commits " +
-      "(every re-stat sees a moved mtime) the settle ends on elapsed " +
-      "time, not iteration counts, and under-pins safely") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.busyfs.impl", classOf[BusyDirFs].getName)
-    val dir = tmp()
-    val root = s"busyfs://$dir"
-    val (oldA, oldW) = (PartitionedSnapshotLake.settleAttemptsMax,
-      PartitionedSnapshotLake.settleWallBudgetMs)
-    // iteration budgets effectively unbounded: ONLY the wall budget
-    // can end this settle — the r12-advice scenario where attempt
-    // counts alone admitted minutes inside the manifest mutex
-    PartitionedSnapshotLake.settleAttemptsMax = Int.MaxValue
-    PartitionedSnapshotLake.settleWallBudgetMs = 300L
-    try {
-      val t0 = System.nanoTime()
-      PartitionedSnapshotLake.commitMerge(spark, root,
-        Seq((1L, "2027-05-01", "a")).toDF("id", "ts", "val"),
-        "id", "ts")
-      assert((System.nanoTime() - t0) / 1e9 < 30,
-        "the settle ignored its wall budget under a busy partition dir")
-      // log-less lake: the mtime delta (and thus the under-pin) is
-      // the only freshness source readLatest has
-      assert(new java.io.File(dir, "_snapshots/_log/_enabled").delete())
-      val p = "part_date=2027-05-01"
-      SnapshotLake.commit(spark, s"$root/$p",
-        Seq((9L, java.sql.Timestamp.valueOf("2027-05-01 00:00:00"), "b"))
-          .toDF("id", "ts", "val"))
-      assert(PartitionedSnapshotLake.latestPins(spark, root)(p) == 2L,
-        "wall-budget under-pin lost a follow-up version on the busy " +
-          "partition")
-    } finally {
-      PartitionedSnapshotLake.settleAttemptsMax = oldA
-      PartitionedSnapshotLake.settleWallBudgetMs = oldW
-    }
   }
 }

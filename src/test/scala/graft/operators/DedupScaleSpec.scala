@@ -283,8 +283,8 @@ class DedupScaleSpec extends AnyFunSuite {
     assert(stored == Set(1L, 2L, 11L))
   }
 
-  test("a pre-hash-layout store fails loudly and migrateStore upgrades " +
-      "it in place (round-10 store format)") {
+  test("a pre-hash-layout store fails loudly on probe and on compaction " +
+      "(round-10 store format)") {
     graft.GraftFunctions.register(spark)
     val store = java.nio.file.Files
       .createTempDirectory("graft_oldstore").resolve("bands").toString
@@ -303,21 +303,14 @@ class DedupScaleSpec extends AnyFunSuite {
         Seq((3L, "the quick brown fox jumps over the lazy dog"))
           .toDF("doc_id", "text")).collect()
     }
-    assert(e.getMessage.contains("migrateStore"))
-    DedupOps.migrateStore(spark, store)
+    assert(e.getMessage.contains("not a (doc_id, bh) store"))
+    val c = intercept[IllegalStateException] {
+      DedupOps.compactStore(spark, store)
+    }
+    assert(c.getMessage.contains("not a (doc_id, bh) store"))
+    // neither refusal touched the store
     assert(spark.read.parquet(store).columns.sorted.toSeq ==
-      Seq("bh", "doc_id"))
-    // post-migration the probe works and the old corpus still hits:
-    // doc 3 is an exact copy of stored doc 1
-    val verdicts = DedupOps.probeAndExtend(store,
-      Seq((3L, "the quick brown fox jumps over the lazy dog"),
-        (4L, "totally novel content that matches nothing at all"))
-        .toDF("doc_id", "text"))
-      .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
-    assert(verdicts == Map(3L -> true, 4L -> false))
-    // migrate is idempotent
-    DedupOps.migrateStore(spark, store)
-    assert(spark.read.parquet(store).columns.contains("bh"))
+      Seq("band", "band_key", "doc_id"))
   }
 
   test("compactStore collapses per-batch append files and dedupes " +
