@@ -1,118 +1,110 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
-  * Each table is one parquet file under the sf directory. At 100 TB each
-  * of these would be a partitioned parquet lake directory; the loader API
-  * is the same either way (`spark.read.parquet(dir)` handles both), so
-  * query code never cares.
+  * Each table is `<sfDir>/<table>.parquet`: one file in the testdata,
+  * a directory of part files (a multi-file lake table) at 100 TB. The
+  * loader API is the same either way (`spark.read.parquet(dir)` handles
+  * both), so query code never cares.
+  *
+  * '''Table info, one cache.''' Each table's facts — its schema, its
+  * scan-task count and its row count — live in one entry keyed by the
+  * table's stamp: the path plus the Hadoop `FileStatus` (mtime, length)
+  * of it, resolved like Spark's own read of the path
+  * ([[graft.util.Fs]]), so it reads the real stamp on `hdfs://` and
+  * `s3a://` too. An in-process rewrite of the same path (test tooling
+  * overwriting `$dst/$t.parquet`) gets a fresh entry instead of a
+  * stale schema; a directory table stamps with the directory's own
+  * status, which bumps on a child add/remove where the filesystem
+  * keeps directory mtimes. The schema is inferred on first load and passed explicitly
+  * afterwards (a bare `spark.read.parquet` re-reads footers on every
+  * plan build, ~30-80 ms per table — what a metastore saves at scale);
+  * the scan-task and row counts are computed only when [[spread]]
+  * needs them.
+  *
+  * '''One spread rule.''' [[spread]] is the only place that decides
+  * whether a per-row hash/compute loop gets a hash repartition in
+  * front of it, and how wide. Layout repartitions that a downstream
+  * operator consumes are not spreads and stay where they are: a3's
+  * `repartition(l_orderkey)` is its aggregate's own exchange moved
+  * earlier (a fixed width would change its plan and AQE coalescing),
+  * and GraphOps' `repartition(shuf, src)` is the layout of the three
+  * PageRank joins.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Schema cache per parquet path (r17 optimization, guide §6): a
-    * bare `spark.read.parquet(path)` re-reads parquet footers to infer
-    * the schema on EVERY call — ~30-80 ms per table per plan build,
-    * paid inside every timed run (multi-table queries paid ~0.5 s of
-    * construction before any execution). The first inference (under
-    * the same nanosAsLong conf) is cached and later loads pass it
-    * explicitly — exactly what a metastore/table-format catalog does
-    * at 100 TB scale instead of per-query footer inference. Values,
-    * pruning and pushdown are unchanged: the passed schema IS the
-    * inferred one. The key carries the file's (mtime, length) next to
-    * the path (r17 advice): an in-process rewrite of the same path
-    * with a different schema — e.g. test tooling like ScaleUp
-    * overwriting $dst/$t.parquet — re-infers instead of silently
-    * serving the stale schema. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  /** One table's facts under one stamp. The counts are taken only on
+    * first use — scan tasks by partition planning (no job), rows from
+    * footer statistics — through the active session, so a cached entry
+    * never pins the session that created it. */
+  private final class Info(path: String, val schema: StructType) {
+    private def read = SparkSession.active.read.schema(schema).parquet(path)
+    lazy val scanTasks: Int = read.rdd.getNumPartitions
+    lazy val rows: Long = read.count()
+  }
 
-  /** (path, mtime, length) stamp — path alone is not an identity for
-    * a rewriteable file. Directories (a partitioned lake table) stamp
-    * with the dir's own mtime, which bumps on any child add/remove. */
-  private def pathStamp(path: String): String = {
-    val f = new java.io.File(path)
-    s"$path@${f.lastModified}:${f.length}"
+  private val infos = new java.util.concurrent.ConcurrentHashMap[String, Info]()
+
+  private def info(spark: SparkSession, path: String): Info = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val st = graft.util.Fs.forPath(spark, path).getFileStatus(new Path(path))
+    infos.computeIfAbsent(s"$path@${st.getModificationTime}:${st.getLen}",
+      _ => new Info(path, spark.read.parquet(path).schema))
   }
 
   /** The events table stores TIMESTAMP(NANOS) parquet, which Spark only
-    * reads via the nanosAsLong legacy conf (as a raw long). We truncate
+    * reads via the nanosAsLong legacy conf (as a raw long; [[info]] sets
+    * it for the session before the first read). We truncate
     * nanos → micros exactly like DuckDB's TIMESTAMP_NS → TIMESTAMP cast,
     * so both engines see identical microsecond timestamps.
     */
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/$table.parquet"
-    val schema = schemaCache.computeIfAbsent(pathStamp(path),
-      _ => spark.read.parquet(path).schema)
-    val df = spark.read.schema(schema).parquet(path)
+    val df = spark.read.schema(info(spark, path).schema).parquet(path)
     df.schema.find(f => f.name == "ts" && f.dataType == LongType) match {
       case Some(_) => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case None    => df
     }
   }
 
-  /** Scan-task count of a table's parquet scan, cached per path stamp
-    * (no job runs — partition planning only). Used by [[narrowScan]]
-    * to decide whether a §2.5 spread is needed at all. */
-  private val scanPartsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** True when `table`'s scan CANNOT fill the executors on its own —
-    * fewer scan tasks than the session's core count. The §2.5 spreads
-    * (d7/d13/m3: hash-repartition before a heavy per-row compute loop)
-    * exist for exactly this case — locally every testdata table is one
-    * small single-row-group file, so every scan is 1 task and per-row
-    * hash loops would otherwise run single-threaded on a 32-core box.
-    * On a multi-file 100 TB lake the scan splits into thousands of
-    * tasks and the same repartition would be a pure extra full-corpus
-    * shuffle with no downstream consumer of the layout (r17 verdict) —
-    * so the spread is gated here, not applied unconditionally. The
-    * task count is Spark's own byte-range split count, which
+  /** Spread `df` — derived from `table`'s scan — over the cores before
+    * a heavy per-row compute loop (guide §2.5), by a hash repartition
+    * on `key`, only when the scan cannot fill the cores itself.
+    *
+    *  - If `table`'s scan already has at least `defaultParallelism`
+    *    tasks (a multi-file lake table), `df` is returned unchanged:
+    *    the repartition would be a pure extra full-corpus shuffle.
+    *  - Otherwise (locally every testdata table is one small
+    *    single-row-group file, so its scan is 1 task and the loop would
+    *    run single-threaded) it is `repartition(n, col(key))` with
+    *    n = min(shuffle width, rows/512 + 1): ~512 rows per task
+    *    amortize the ~5 ms task launch (an unqualified
+    *    `repartition(col)` pinned 32 few-hundred-row tasks at sf0.1
+    *    whose launch cost exceeded their hash work), and the cap is the
+    *    session's shuffle width, so at corpus scale n IS that width.
+    *
+    * The scan-task count is Spark's byte-range split count; it
     * over-estimates row parallelism only for a multi-hundred-MB file
-    * holding one giant row group — a layout production writers bound. */
-  def narrowScan(spark: SparkSession, sfDir: String, table: String): Boolean = {
-    val path = s"$sfDir/$table.parquet"
-    val parts = scanPartsCache.computeIfAbsent(pathStamp(path),
-      _ => Integer.valueOf(load(spark, sfDir, table).rdd.getNumPartitions))
-    parts.intValue < spark.sparkContext.defaultParallelism
-  }
-
-  /** Table row count from parquet metadata (a count() over the scan is
-    * footer-statistics-only — no data pages are read), cached per path
-    * stamp like the schema. */
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  def rowCount(spark: SparkSession, sfDir: String, table: String): Long = {
-    val path = s"$sfDir/$table.parquet"
-    rowCountCache.computeIfAbsent(pathStamp(path),
-      _ => java.lang.Long.valueOf(load(spark, sfDir, table).count())).longValue
-  }
-
-  /** Data-proportional width for an explicit pre-compute spread
-    * (round brief / guide §2: derive partitioning from input size,
-    * never from the core count alone). An explicit
-    * `repartition(col(key))` pins the session's full shuffle width —
-    * at sf0.1 that is 32 one-to-few-hundred-row tasks whose launch
-    * overhead EXCEEDS the per-row hash work they carry (measured: a
-    * third of the suite runs faster at 8 cores than 32, and the
-    * spread queries are the worst of it — d14 0.42×, d13 0.57×).
-    * `rows / rowsPerTask` sizes each task to amortize scheduling
-    * (~512 rows ≈ 50–100k hash ops ≈ tens of ms against a ~5 ms task
-    * launch); the cap is the session's configured shuffle width — the
-    * cluster-tuned knob — so above ~512·width rows this IS the
-    * shuffle width and production behavior is unchanged. */
-  def spreadParts(spark: SparkSession, sfDir: String, table: String,
-      rowsPerTask: Long = 512L): Int = {
-    val shuf = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val byRows = rowCount(spark, sfDir, table) / rowsPerTask + 1
-    math.max(1L, math.min(shuf.toLong, byRows)).toInt
+    * holding one giant row group, a layout production writers bound.
+    * The width is sized from `table`'s rows, not from `df`'s: d5 and d9
+    * spread a union of 2× the base rows, d13/d14/d15 add re-keyed
+    * copies of a seventh to a quarter of them. */
+  def spread(df: DataFrame, sfDir: String, table: String, key: String)
+      : DataFrame = {
+    val spark = df.sparkSession
+    val t = info(spark, s"$sfDir/$table.parquet")
+    if (t.scanTasks >= spark.sparkContext.defaultParallelism) df
+    else {
+      val shuf = spark.conf.get("spark.sql.shuffle.partitions").toLong
+      df.repartition(math.min(shuf, t.rows / 512 + 1).toInt, col(key))
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.catalog
 
+import graft.util.Fs
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, date_format, lit, to_date}
@@ -101,11 +102,6 @@ object PartitionedSnapshotLake {
   val VacuumParallelism: Int =
     math.min(32, Runtime.getRuntime.availableProcessors())
 
-  private def fsFor(spark: SparkSession, path: String): FileSystem =
-    FileSystem.get(new java.net.URI(
-      if (path.contains("://")) path else s"file://$path"),
-      spark.sparkContext.hadoopConfiguration)
-
   private def partRoot(root: String, part: String) = s"$root/$part"
   private def snapsDir(root: String) = new Path(root, "_snapshots")
   private def logDir(root: String) = new Path(snapsDir(root), "_log")
@@ -183,7 +179,7 @@ object PartitionedSnapshotLake {
     * one. */
   private[catalog] def outOfBandVersions(spark: SparkSession,
       root: String, parts: Seq[String]): Map[String, Seq[Long]] = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     val before = latestSnapshot(spark, root)
     val pins: Map[String, Long] = before
       .map(s => manifest(spark, root, s)).getOrElse(Map.empty)
@@ -251,7 +247,7 @@ object PartitionedSnapshotLake {
 
   /** Partition directory names present on disk (committed or not). */
   def partitions(spark: SparkSession, root: String): Seq[String] = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     if (!fs.exists(new Path(root))) Seq.empty
     else fs.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("part_date=")).sorted
@@ -264,7 +260,7 @@ object PartitionedSnapshotLake {
 
   /** Committed global snapshot numbers, ascending. */
   def snapshots(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     val dir = snapsDir(root)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq
@@ -279,7 +275,7 @@ object PartitionedSnapshotLake {
     * `partition TAB version` line each. */
   def manifest(spark: SparkSession, root: String,
       snap: Long): Map[String, Long] = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     require(fs.exists(new Path(snapsDir(root), snap.toString)),
       s"snapshot $snap is not committed at $root; " +
         s"committed: ${snapshots(spark, root)}")
@@ -316,7 +312,7 @@ object PartitionedSnapshotLake {
     latestSnapshot(spark, root)
       .flatMap(s => manifest(spark, root, s).headOption)
       .map { case (p, v) =>
-        val file = fsFor(spark, root)
+        val file = Fs.forPath(spark, root)
           .listStatus(new Path(partRoot(root, p), s"v=$v")).map(_.getPath)
           .filter(_.getName.endsWith(".parquet")).head
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -399,7 +395,7 @@ object PartitionedSnapshotLake {
     * falls back to the full marker walk rather than spinning. */
   private[catalog] def latestPins(spark: SparkSession,
       root: String): Map[String, Long] = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     var tries = 0
     while (tries < 3) {
       val before = latestSnapshot(spark, root)
@@ -419,7 +415,7 @@ object PartitionedSnapshotLake {
   def commitMerge(spark: SparkSession, root: String, batch: DataFrame,
       key: String, tsCol: String, exclude: Seq[String] = Nil)
       : (Long, Map[String, Long]) = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     val b = batch.withColumn("part_date", to_date(col(tsCol)))
 
     // affected partition names from the batch's distinct dates —
@@ -552,7 +548,7 @@ object PartitionedSnapshotLake {
       lockTtlMs: Long = 60L * 60 * 1000,
       readerHazardMs: Long = DefaultReaderHazardMs): Unit = {
     require(retainSnapshots >= 1, "retainSnapshots >= 1")
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     val snaps = snapshots(spark, root)
     if (snaps.isEmpty) return
     // staleness detector (r12 ask #6) over the WHOLE lake — vacuum
@@ -802,7 +798,7 @@ object PartitionedSnapshotLake {
     * and the manifest are recovered by [[repairManifest]]. */
   private def commitManifest(spark: SparkSession, root: String,
       overlay: Map[String, Long]): Long = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     fs.mkdirs(snapsDir(root))
     val token = acquireManifestMutex(fs, root, manifestLockTtlMs)
     try SnapshotLake.withLockHeartbeat(fs, manifestLock(root)) {

@@ -1,5 +1,6 @@
 package graft.catalog
 
+import graft.util.Fs
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.MergeOps
@@ -53,11 +54,6 @@ import graft.operators.MergeOps
   * applied under each `part_date=` directory.
   */
 object SnapshotLake {
-
-  private def fsFor(spark: SparkSession, path: String): FileSystem =
-    FileSystem.get(new java.net.URI(
-      if (path.contains("://")) path else s"file://$path"),
-      spark.sparkContext.hadoopConfiguration)
 
   private def commitsDir(root: String) = new Path(root, "_commits")
   private def versionDir(root: String, v: Long) = new Path(root, s"v=$v")
@@ -145,7 +141,7 @@ object SnapshotLake {
 
   /** Committed versions, ascending (empty if the table doesn't exist). */
   def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     val dir = commitsDir(root)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq
@@ -161,7 +157,7 @@ object SnapshotLake {
     * BEFORE any data is written, so racing writers serialize into
     * distinct versions (see the protocol in the class doc). */
   def commit(spark: SparkSession, root: String, df: DataFrame): Long = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     fs.mkdirs(commitsDir(root))
     val n = claimVersion(fs, root,
       () => latestVersion(spark, root).getOrElse(0L))
@@ -196,7 +192,7 @@ object SnapshotLake {
 
   /** Time travel: read snapshot `v` exactly as committed. */
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     require(fs.exists(new Path(commitsDir(root), v.toString)),
       s"version $v is not committed at $root (rolled back, vacuumed, " +
         s"or never existed); committed: ${versions(spark, root)}")
@@ -223,7 +219,7 @@ object SnapshotLake {
     * `v` is the latest again. Data dirs of rolled-back versions remain
     * until [[vacuum]] (or until a later commit reuses their number). */
   def rollback(spark: SparkSession, root: String, v: Long): Unit = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     val vs = versions(spark, root)
     require(vs.contains(v), s"cannot roll back to uncommitted $v ($vs)")
     vs.filter(_ > v).foreach { n =>
@@ -261,7 +257,7 @@ object SnapshotLake {
   def vacuum(spark: SparkSession, root: String, retain: Int,
       lockTtlMs: Long = 60L * 60 * 1000): Unit = {
     require(retain >= 1, "retain >= 1")
-    val fs = fsFor(spark, root)
+    val fs = Fs.forPath(spark, root)
     val vs = versions(spark, root)
     if (vs.isEmpty) return
     val keep = vs.takeRight(retain).toSet

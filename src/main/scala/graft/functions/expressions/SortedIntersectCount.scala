@@ -29,10 +29,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * in the DESCRIBE FUNCTION usage string (the SQL user's view), and
   * by an OPT-IN runtime order check — set
   * `spark.graft.sortedIntersect.check=true` (SQL conf, read at plan
-  * time) or `-Dgraft.sortedIntersect.check=true` and any
-  * non-increasing input throws instead of undercounting. The check
-  * adds a branch per element, so it stays off in the verify hot loop
-  * by default. Array elements must be non-null.
+  * time) and any non-increasing input throws instead of undercounting.
+  * The check adds a branch per element, so it stays off in the verify
+  * hot loop by default. Array elements must be non-null.
   */
 @ExpressionDescription(
   usage = """_FUNC_(a, b) - |a ∩ b| for two bigint arrays that MUST each
@@ -130,19 +129,17 @@ case class SortedIntersectCount(left: Expression, right: Expression,
 }
 
 object SortedIntersectCount {
-  /** Conf snapshot used as the constructor default: SQL conf first,
-    * JVM property as the session-less fallback. Resolved at
+  /** SQL conf snapshot used as the constructor default. Resolved at
     * CONSTRUCTION (driver, analysis time) but carried as a case-class
     * constructor parameter, so it participates in equality/
     * canonicalization — an instance built with the check on can never
     * be unified by plan/expression caching with one built while it was
     * off, and the value serializes to executors with the expression. */
   def checkEnabled(): Boolean =
-    java.lang.Boolean.getBoolean("graft.sortedIntersect.check") ||
-      (try org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.sortedIntersect.check", "false")
-        .toBoolean
-      catch { case _: Exception => false })
+    try org.apache.spark.sql.internal.SQLConf.get
+      .getConfString("spark.graft.sortedIntersect.check", "false")
+      .toBoolean
+    catch { case _: Exception => false }
 
   /** Shared by the interpreted and generated check paths (generated
     * code calls it statically — keep the signature stable). */

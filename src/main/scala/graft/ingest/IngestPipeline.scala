@@ -49,7 +49,7 @@ object IngestPipeline {
     * scale-out appends full-tag-surface exam families beyond the base
     * corpus — every added file runs the complete codec path (explicit
     * VR walk, CSA block flatten, ASCCONV parse). */
-  private def writeCorpus(dir: java.io.File, families: Int = 1): Unit = {
+  private def writeCorpus(dir: java.io.File, families: Int): Unit = {
     import graft.DicomFixture._
     dir.mkdirs()
     dir.listFiles().foreach(f => f.delete(): Unit)
@@ -252,33 +252,35 @@ object IngestPipeline {
     put("junk.bin", Array.fill[Byte](300)(0x5A))
   }
 
+  /** The staging prologue of i1, i2, i3 and i5: write the corpus
+    * (`families` families) into `<name>_src`, parse it ONCE and cache
+    * the parse, and stage the parse boundary for the oracle as
+    * `<name>_kv` — one row per (file, header key), scalar columns
+    * DuckDB pivots back. The kv write and the query's own chain both
+    * consume the cached parse (at 100 TB the parse pass IS the cost);
+    * the cache holds only (path, length, header map), never the
+    * binary content. Phase attribution: the driver-side corpus write
+    * and the kv staging job (codec parse + FS write) are stage-artifact
+    * work, tagged `corpus_stage` and `kv_stage_write`, so a
+    * `graft.Bench` artifact splits them from the pure-Spark residual
+    * and a cross-box FS-speed swing is attributable without an A/B. */
+  private def stagedMeta(s: SparkSession, name: String, families: Int)
+      : DataFrame = {
+    val src = new java.io.File(StageRoot, s"${name}_src")
+    graft.PhaseLog.timed("corpus_stage") { writeCorpus(src, families) }
+    val meta = DicomLike.parseMeta(
+      s.read.format("binaryFile").load(src.getAbsolutePath)).cache()
+    graft.PhaseLog.timed("kv_stage_write") {
+      meta.select(col("path"), col("length"),
+          explode(col("meta")).as(Seq("key", "value")))
+        .write.mode("overwrite").parquet(s"$StageRoot/${name}_kv")
+    }
+    meta
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "i1_ingest_pipeline" -> ((s, dir) => {
-      val src = new java.io.File(StageRoot, "i1_src")
-      // phase attribution (r13 verdict ask #4): i1's wall time is
-      // dominated by STAGE-ARTIFACT work, not the analytical plan —
-      // the driver-side DICOM corpus write and the kv staging parquet
-      // job (codec parse + FS write) both land in the artifact so the
-      // regression gate diffs the pure-Spark residual and a cross-box
-      // FS-speed swing is attributable without a worktree A/B
-      graft.PhaseLog.timed("corpus_stage") {
-        writeCorpus(src, familiesFor(dir))
-      }
-      val binary = s.read.format("binaryFile").load(src.getAbsolutePath)
-      // ONE parse of the corpus, cached: the kv staging write, the
-      // header/stack chain, and the duration rollup each consumed
-      // parseMeta separately — three full read+dicom_parse passes for
-      // one query (r17 optimization; at 100 TB the parse pass IS the
-      // cost). The cache holds only (path, length, header map) — the
-      // binary content never persists.
-      val meta = DicomLike.parseMeta(binary).cache()
-      // stage the parse boundary for the oracle: one row per
-      // (file, header key) — scalar columns DuckDB pivots back
-      graft.PhaseLog.timed("kv_stage_write") {
-        meta.select(col("path"), col("length"),
-            explode(col("meta")).as(Seq("key", "value")))
-          .write.mode("overwrite").parquet(s"$StageRoot/i1_kv")
-      }
+      val meta = stagedMeta(s, "i1", familiesFor(dir))
       val headers = DicomLike.headersOf(meta)
       val exams = DicomLike.exams(DicomLike.stacks(headers))
       val durPerExam = meta.select(
@@ -308,16 +310,7 @@ object IngestPipeline {
     // re-derivation over the staged kv table. One row per file so the
     // compare covers every instance the codec parsed.
     "i2_series_info" -> ((s, dir) => {
-      val src = new java.io.File(StageRoot, "i2_src")
-      writeCorpus(src, familiesFor(dir))
-      val binary = s.read.format("binaryFile").load(src.getAbsolutePath)
-      // parse once, cache (see i1): kv staging + seriesInfo both
-      // consume the same parse
-      val meta = DicomLike.parseMeta(binary).cache()
-      meta.select(col("path"), col("length"),
-          explode(col("meta")).as(Seq("key", "value")))
-        .write.mode("overwrite").parquet(s"$StageRoot/i2_kv")
-      DicomLike.seriesInfo(meta)
+      DicomLike.seriesInfo(stagedMeta(s, "i2", familiesFor(dir)))
         .select(col("path"), col("series_uid"), col("acq_time"),
           col("seq_name"), col("seq_type"), col("tr"), col("te"),
           col("ti"), col("size_x"), col("size_y"), col("size_z"),
@@ -333,15 +326,7 @@ object IngestPipeline {
     // files missing a path key surface as skip rows, never silently.
     // DuckDB re-derives path, action, and dest from the staged kv.
     "i3_tri_dicom" -> ((s, _) => {
-      val src = new java.io.File(StageRoot, "i3_src")
-      writeCorpus(src)
-      val binary = s.read.format("binaryFile").load(src.getAbsolutePath)
-      // parse once, cache (see i1)
-      val meta = DicomLike.parseMeta(binary).cache()
-      meta.select(col("path"), col("length"),
-          explode(col("meta")).as(Seq("key", "value")))
-        .write.mode("overwrite").parquet(s"$StageRoot/i3_kv")
-      DicomLike.triDicomMoves(meta).orderBy(col("path"))
+      DicomLike.triDicomMoves(stagedMeta(s, "i3", 1)).orderBy(col("path"))
     }),
 
     // The NIfTI conversion manifest (convert_series, Exam_info.py:
@@ -399,14 +384,7 @@ object IngestPipeline {
     // from the staged kv with the same md5 arithmetic. At 100 TB this
     // runs at scan speed and only the manifest crosses the shuffle.
     "i5_deidentify" -> ((s, _) => {
-      val src = new java.io.File(StageRoot, "i5_src")
-      writeCorpus(src)
-      val binary = s.read.format("binaryFile").load(src.getAbsolutePath)
-      // parse once, cache (see i1)
-      val meta = DicomLike.parseMeta(binary).cache()
-      meta.select(col("path"), col("length"),
-          explode(col("meta")).as(Seq("key", "value")))
-        .write.mode("overwrite").parquet(s"$StageRoot/i5_kv")
+      val meta = stagedMeta(s, "i5", 1)
       import graft.functions.Fns.md5Bucket
       val pname = coalesce(element_at(col("meta"), "PatientName"),
         lit("UNKNOWN"))

@@ -501,24 +501,17 @@ object DedupOps {
 
   /** Hash-based shingles (array<long> via the native shingle_hash64):
     * identical Jaccard modulo 64-bit collisions, far cheaper to compute,
-    * shuffle, and intersect than string arrays. Docs are repartitioned
-    * BEFORE the per-doc expressions: the single-file parquet scan is one
-    * partition, and signature math must run on all cores (and, on a
-    * cluster, all executors). */
+    * shuffle, and intersect than string arrays. Docs are spread
+    * ([[graft.Tables.spread]]) BEFORE the per-doc expressions, so the
+    * signature math runs on all cores. */
   /** Docs with no shingle (length < 8) are dropped up front — they can
     * contribute no pair, and the oracles' substring ranges drop them
     * too. */
   private def docsWithHashedShingles(s: SparkSession, dir: String)
       : DataFrame =
-    load(s, dir, "documents")
+    graft.Tables.spread(load(s, dir, "documents")
       .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) >= 8)
-      // data-proportional spread width (r18, Tables.spreadParts): an
-      // unqualified repartition(col) pinned the full shuffle width —
-      // 32 few-hundred-row tasks at sf0.1 whose launch overhead
-      // exceeded the hash work; capped at the shuffle width, so at
-      // corpus scale this IS the session width.
-      .repartition(graft.Tables.spreadParts(s, dir, "documents"), col("doc_id"))
+      .filter(length(col("text")) >= 8), dir, "documents", "doc_id")
       // md5-based 60-bit hashes: the minhash permutation input (top 28
       // bits) must match the oracle's ('0x'||substr(md5(s),1,7))::BIGINT
       .withColumn("shingles", expr("md5_shingle60(text)"))
@@ -1158,8 +1151,9 @@ object DedupOps {
         .select((col("doc_id") + 400000000L).as("doc_id"),
           concat_ws(" ", expr("slice(split(text, ' '), 4, size(split(text, ' ')))"))
             .as("text"))
-      val all = base.union(cop).filter(length(col("text")) >= 8)
-        .repartition(graft.Tables.spreadParts(s, dir, "documents"), col("doc_id"))
+      val all = graft.Tables.spread(
+          base.union(cop).filter(length(col("text")) >= 8),
+          dir, "documents", "doc_id")
         .withColumn("shingles", expr("md5_shingle60(text)"))
         .cache() // feeds banding, both verify sides, and the truth join
       val sh = all.select(col("doc_id"), col("shingles"))
@@ -1298,13 +1292,12 @@ object DedupOps {
       // oracle's ('0x'||substr(md5(s),1,15))::BIGINT) feeds the native
       // SimHash60 majority-vote signature; pairs from bucket-collect,
       // Hamming verify.
-      val sim = load(s, dir, "documents")
+      val sim = graft.Tables.spread(load(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         // shingle-less docs (length < 8) drop out of the oracle's
         // unnest; drop them here too, or simhash60([]) = 0 would pair
         // every short doc with every other at Hamming 0
-        .filter(length(col("text")) >= 8)
-        .repartition(graft.Tables.spreadParts(s, dir, "documents"), col("doc_id"))
+        .filter(length(col("text")) >= 8), dir, "documents", "doc_id")
         .select(col("doc_id"),
           expr("simhash60(md5_shingle60(text))").as("sim"))
       val banded = sim.select(
@@ -1413,21 +1406,10 @@ object DedupOps {
     // doc. Grams join on md5 hex (shared Spark/DuckDB hash) — at scale
     // the 32-byte key keeps the exploded corpus rows narrow.
     "d7_decontaminate" -> ((s, dir) => {
-      // spread the per-gram md5 loop off a NARROW scan only (guide
-      // §2.5, gated since r18): locally the single-row-group parquet
-      // scan is one task and the ~0.5M md5(8-gram) calls below would
-      // run single-threaded (r17 measurement: the whole query was
-      // scan-stage bound), so the repartition applies. On a multi-file
-      // lake whose scan already fills the cores the repartition would
-      // be a pure full-corpus shuffle of (doc_id, words) — the whole
-      // tokenized text — with NO downstream consumer of that layout
-      // (the gram join keys on md5 hex), so it is skipped there.
-      val docs0 = load(s, dir, "documents")
+      // spread the ~0.5M md5(8-gram) calls below (Tables.spread)
+      val docs = graft.Tables.spread(load(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .filter(size(col("w")) >= 8)
-      val docs = if (graft.Tables.narrowScan(s, dir, "documents"))
-        docs0.repartition(graft.Tables.spreadParts(s, dir, "documents"),
-          col("doc_id")) else docs0
+        .filter(size(col("w")) >= 8), dir, "documents", "doc_id")
       val grams = docs
         .select(col("doc_id"), explode(expr(
           """array_distinct(transform(sequence(1, size(w)-7), i ->
@@ -1456,9 +1438,8 @@ object DedupOps {
       // (the sorted_intersect_count contract). Hash-identity equals
       // string-set identity modulo 64-bit collisions, and the prefix
       // filter below is recall-exact under any consistent token order
-      val tg = load(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .repartition(graft.Tables.spreadParts(s, dir, "documents"), col("doc_id"))
+      val tg = graft.Tables.spread(load(s, dir, "documents")
+        .select(col("doc_id"), col("text")), dir, "documents", "doc_id")
         .withColumn("shingles", expr("word_trigram_hash64(text)"))
         .filter(size(col("shingles")) > 0)
         .select(col("doc_id"), col("shingles"))
@@ -1545,20 +1526,14 @@ object DedupOps {
       val copies = base.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 200000000L).as("doc_id"),
           slice(col("w"), 1, 30).as("w"))
-      val docs0 = base.union(copies).filter(size(col("w")) >= 20)
-        .select(col("doc_id"), size(col("w")).as("n_words"), col("w"))
-      // spread the per-window md5 loop (~180 windows/doc) off the
-      // 2-task union-of-scans — gated on scan narrowness like d7
-      // (guide §2.5, r18). NOTE this exchange is NOT reused
-      // downstream (the r17 comment claimed it was — contradicted by
-      // the captured plan, 4→6 exchange nodes): the cross-doc dup
-      // join keys on the window hash `h`, which destroys the doc_id
-      // layout before the per-doc window runs, so on an
-      // already-parallel scan the repartition would be pure added
-      // shuffle and is skipped.
-      val docs = if (graft.Tables.narrowScan(s, dir, "documents"))
-        docs0.repartition(graft.Tables.spreadParts(s, dir, "documents"),
-          col("doc_id")) else docs0
+      // spread the per-window md5 loop (~180 windows/doc). The
+      // exchange is NOT reused downstream: the cross-doc dup join keys
+      // on the window hash `h`, which destroys the doc_id layout
+      // before the per-doc window runs.
+      val docs = graft.Tables.spread(
+          base.union(copies).filter(size(col("w")) >= 20)
+            .select(col("doc_id"), size(col("w")).as("n_words"), col("w")),
+          dir, "documents", "doc_id")
       val wins = docs.select(col("doc_id"), col("n_words"),
           posexplode(expr(
             """transform(sequence(1, size(w)-19), i ->
@@ -1609,15 +1584,12 @@ object DedupOps {
         .select((col("doc_id") + 300000000L).as("doc_id"),
           concat(array(lit("zq"), lit("zr"), lit("zs")), col("w"))
             .as("w"))
-      val toks = base.union(copies)
-        // spread BEFORE the per-word explode + md5 anchor test: the
-        // 2-task union-of-scans otherwise runs ~1M md5Bucket calls
-        // single-threaded, and the per-doc window below needs
-        // ClusteredDistribution(doc_id) anyway — hash-partitioning the
-        // slim doc rows here parallelizes the hashing AND is the one
-        // exchange the window reuses (no extra shuffle; guide §2.4/2.5).
-        // Width is data-proportional (r18, see Tables.spreadParts).
-        .repartition(graft.Tables.spreadParts(s, dir, "documents"), col("doc_id"))
+      // spread BEFORE the per-word explode + md5 anchor test (~1M
+      // md5Bucket calls). The per-doc window below needs
+      // ClusteredDistribution(doc_id): on a narrow scan it reuses this
+      // exchange; on a wide one it plans its own.
+      val toks = graft.Tables.spread(base.union(copies), dir, "documents",
+          "doc_id")
         .select(col("doc_id"), posexplode(col("w")).as(Seq("pos", "word")))
         .withColumn("anchor",
           (graft.functions.Fns.md5Bucket(col("word"), 8) === 0)

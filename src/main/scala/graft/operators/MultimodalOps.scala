@@ -157,19 +157,10 @@ object MultimodalOps {
     * one an interpreted per-character HOF fold. Value parity with
     * that chain is pinned by ChunkAsciiStatsSpec. */
   private def chunkFeatures(s: SparkSession, dir: String): DataFrame = {
-    // spread the per-chunk feature math off a NARROW scan only (guide
-    // §2.5, gated since r18): locally the one-row-group parquet scan
-    // is a single task and the per-character ascii fold + two regex
-    // scans per chunk (~20k chunks × 64 steps) would run
-    // single-threaded, so the repartition applies. On a multi-file
-    // lake whose scan already fills the cores it would be a pure
-    // added full-text shuffle with no downstream consumer of the
-    // doc_id layout — skipped there (r17 verdict).
+    // spread the per-chunk feature math (~20k chunks, Tables.spread)
     graft.GraftFunctions.register(s)
-    val docs0 = load(s, dir, "documents")
-    val docs = if (graft.Tables.narrowScan(s, dir, "documents"))
-      docs0.repartition(graft.Tables.spreadParts(s, dir, "documents"),
-        col("doc_id")) else docs0
+    val docs = graft.Tables.spread(load(s, dir, "documents"), dir,
+      "documents", "doc_id")
     sampledChunks(docs)
       .withColumn("st", expr("chunk_ascii_stats(c)"))
       .select(col("doc_id"), col("chunk_idx"),

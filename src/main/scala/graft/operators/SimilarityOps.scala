@@ -165,10 +165,8 @@ object SimilarityOps {
       val scaled = base.select((col("vec_id") + 100000000L).as("vec_id"),
         expr("transform(embedding, x -> x * cast(1.01 as float))")
           .as("embedding"))
-      val all = base.union(scaled)
-        // data-proportional width (r18, Tables.spreadParts)
-        .repartition(graft.Tables.spreadParts(s, dir, "embeddings"),
-          col("vec_id"))
+      val all = graft.Tables.spread(base.union(scaled), dir, "embeddings",
+          "vec_id")
         // feeds banding and both verify sides — cache the slim table
         // instead of recomputing the union subtree three times. The
         // vectors stay FLOAT32 end to end: cosine_sim widens each
@@ -371,10 +369,8 @@ object SimilarityOps {
       val scaled = base.select((col("vec_id") + 100000000L).as("vec_id"),
         expr("transform(embedding, x -> x * cast(1.01 as float))")
           .as("embedding"))
-      val all = base.union(scaled)
-        // data-proportional width (r18, Tables.spreadParts)
-        .repartition(graft.Tables.spreadParts(s, dir, "embeddings"),
-          col("vec_id"))
+      val all = graft.Tables.spread(base.union(scaled), dir, "embeddings",
+          "vec_id")
         .withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
         .select(col("vec_id"), col("v"))
         .cache()

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,11 +32,7 @@ object FileScans {
     * first level does. */
   def listFiles(spark: SparkSession, root: String): Dataset[FileMeta] = {
     import spark.implicits._
-    def uri(r: String) = new java.net.URI(
-      if (r.contains("://")) r else s"file://$r")
-    val fs = FileSystem.get(uri(root),
-      spark.sparkContext.hadoopConfiguration)
-    val top = fs.listStatus(new Path(root))
+    val top = graft.util.Fs.forPath(spark, root).listStatus(new Path(root))
     val topFiles = top.filter(_.isFile).map(f =>
       FileMeta(f.getPath.toUri.getPath, f.getModificationTime,
         f.getLen, isDir = false)).toSeq

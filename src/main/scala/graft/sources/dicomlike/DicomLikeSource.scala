@@ -2,7 +2,7 @@ package graft.sources.dicomlike
 
 import java.util
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -216,11 +216,7 @@ class DicomLikeScan(path: String, required: StructType,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = FileSystem.get(new java.net.URI(path match {
-      case p if p.contains("://") => p
-      case p => s"file://$p"
-    }), conf)
+    val fs = graft.util.Fs.forPath(spark, path)
     val prefixes = DicomLikeSource.pathPrefixes(pushed.toSeq)
     def fileKept(p: String, len: Long, mtimeMs: Long): Boolean =
       pushed.forall(DicomLikeSource.keeps(_, p, len, mtimeMs))
@@ -240,7 +236,8 @@ class DicomLikeScan(path: String, required: StructType,
       if (subDirs.isEmpty) Nil
       else {
         val bc = spark.sparkContext.broadcast(
-          new graft.util.SerializableHadoopConf(conf))
+          new graft.util.SerializableHadoopConf(
+            spark.sessionState.newHadoopConf()))
         val pushedBc = spark.sparkContext.broadcast(pushed)
         spark.sparkContext
           .parallelize(subDirs, math.min(subDirs.length, 64))

@@ -496,6 +496,33 @@ class LakeProtocolSpec extends AnyFunSuite {
       "the commit-log path missed a crash-stranded version")
   }
 
+  test("a lake root without a scheme resolves against fs.defaultFS, " +
+      "like Spark's own reads and writes of it") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countfs.impl", classOf[CountingLocalFs].getName)
+    val prev = Option(conf.get("fs.defaultFS"))
+    val root = tmp()
+    conf.set("fs.defaultFS", "countfs:///")
+    try {
+      CountingLocalFs.reset()
+      PartitionedSnapshotLake.commitMerge(spark, root,
+        Seq((1L, "2027-02-01", "a"), (2L, "2027-02-02", "b"))
+          .toDF("id", "ts", "val"), "id", "ts")
+      val got = PartitionedSnapshotLake.readLatest(spark, root)
+        .select("id", "val").as[(Long, String)].collect().sorted.toSeq
+      assert(got == Seq((1L, "a"), (2L, "b")))
+      // Spark never lists the lake's own protocol dirs: these listings
+      // can only come from the lake's filesystem calls
+      val listed = CountingLocalFs.listed.toArray(Array.empty[String])
+        .map(_.stripSuffix("/")).toSet
+      assert(listed.exists(_.endsWith("/_snapshots/_log")),
+        s"the lake listed its commit log off the default FS: $listed")
+    } finally prev match {
+      case Some(v) => conf.set("fs.defaultFS", v)
+      case None => conf.unset("fs.defaultFS")
+    }
+  }
+
   test("out-of-band commits into a CERTIFIED lake are detected and " +
       "warned on the next commitMerge; in-contract commits stay silent") {
     val root = tmp()

@@ -21,12 +21,20 @@ def norm(df):
     # columns sorted by name; row order is handled at compare time
     return df.reindex(sorted(df.columns), axis=1)
 
-def main(sf_dir, out_dir):
-    con = duckdb.connect()
+def register_tables(con, sf_dir):
+    """One view per table. A table is <sf>/<t>.parquet: a single file, or
+    a directory of part files (the multi-file layout Tables reads)."""
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+        if os.path.isdir(p):
+            p = f"{p}/*.parquet"
+        elif not os.path.exists(p):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+
+def main(sf_dir, out_dir):
+    con = duckdb.connect()
+    register_tables(con, sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):

@@ -5,11 +5,9 @@ slow in DuckDB at sf0.1; the scale-sensitive blocked operators are not).
 
 Usage: python3 tools/check_subset.py <sfDir> <verifyOutDir> [name ...]
 """
-import json, glob, os, sys
+import json, glob, sys
 import duckdb, pandas as pd
-
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
+from check import register_tables
 
 DEFAULT = ["d3_simhash_hamming", "d5_embedding_neardup", "v2_ann_bucketed",
            "j3_band_self_join", "a1_dup_exam_groups", "k3_merge_upsert",
@@ -19,10 +17,7 @@ DEFAULT = ["d3_simhash_hamming", "d5_embedding_neardup", "v2_ann_bucketed",
 
 def main(sf_dir, out_dir, names):
     con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    register_tables(con, sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     fails = 0
     for name in names or DEFAULT:
