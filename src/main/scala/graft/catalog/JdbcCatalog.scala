@@ -4,7 +4,9 @@ import java.sql.DriverManager
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
+import org.apache.spark.sql.jdbc.JdbcDialects
+import org.apache.spark.sql.types.{DoubleType, StructType}
 import graft.Tables.load
 
 /** JDBC catalog path — the declared architecture ("Spark with JDBC sink
@@ -182,32 +184,76 @@ object JdbcCatalog {
   }
 
   /** K2/K3: staged MERGE upsert. Returns rows affected by the upsert
-    * (inserted + updated; 0 on an idempotent re-run). */
+    * (inserted + updated; 0 on an idempotent re-run).
+    *
+    * The staging table `<table>_STAGE` persists between calls. When it
+    * already has the batch's columns ([[stageFits]]) it is cleared with
+    * `DELETE` and the batch appended, so a stream of same-shape
+    * deliveries runs no DDL: Derby gives every re-created table and
+    * index a new container file in `seg0`, which grew the catalog by
+    * 64 KiB per call. A missing or drifted stage is re-created from the
+    * batch. The stage has no index — the MERGE scans it and probes the
+    * target's key index, created here on first use. Concurrent upserts
+    * into one table share its stage and are not supported. */
   def stagedUpsert(spark: SparkSession, url: String, table: String,
       batch: DataFrame, key: String, exclude: Seq[String] = Nil,
       colTypes: Map[String, String] = Map.empty): Long = {
     val stage = table + "_STAGE"
-    write(batch, url, stage, SaveMode.Overwrite, colTypes)
-    val sqls = upsertSqls(url, table, stage, batch.schema, key, exclude)
     ensureDriver(url)
     val conn = DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()
       try {
-        // Index both merge keys first: without them Derby executes the
-        // MERGE as a nested-loop join of full table scans —
-        // O(target × staging) row probes (observed: minutes for
-        // 150k × 45k). The staging index is recreated each call (the
-        // overwrite drops it with the table); the target's may already
-        // exist — a duplicate-name error is the fine outcome.
-        def tryIndex(ddl: String): Unit =
-          try st.executeUpdate(ddl)
-          catch { case _: java.sql.SQLException => }
-        tryIndex(s"CREATE INDEX ${table}_KEYIDX ON $table (${q(key)})")
-        tryIndex(s"CREATE INDEX ${stage}_KEYIDX ON $stage (${q(key)})")
-        sqls.map(st.executeUpdate(_).toLong).sum
+        if (stageFits(conn, url, stage, batch.schema, colTypes)) {
+          st.executeUpdate(s"DELETE FROM $stage")
+          write(batch, url, stage, SaveMode.Append)
+        } else write(batch, url, stage, SaveMode.Overwrite, colTypes)
+        // without the target's key index Derby runs the MERGE as a
+        // nested loop of full scans (minutes for 150k × 45k); it may
+        // already exist — a duplicate-name error is the fine outcome
+        try st.executeUpdate(
+          s"CREATE INDEX ${table}_KEYIDX ON $table (${q(key)})")
+        catch { case _: java.sql.SQLException => }
+        upsertSqls(url, table, stage, batch.schema, key, exclude)
+          .map(st.executeUpdate(_).toLong).sum
       } finally st.close()
     } finally conn.close()
+  }
+
+  /** Whether `stage` exists with exactly the columns creating it from
+    * `schema` would give: names in order, DDL type (`colTypes` or the
+    * dialect's) and nullability, as the database reports them. A type
+    * the database renders differently from its DDL reads as drift,
+    * which costs only a re-create. */
+  private def stageFits(conn: java.sql.Connection, url: String,
+      stage: String, schema: StructType,
+      colTypes: Map[String, String]): Boolean = {
+    def norm(t: String) = t.toUpperCase(java.util.Locale.ROOT)
+      .replaceAll("\\s+", "").replace("DOUBLEPRECISION", "DOUBLE")
+    val dialect = JdbcDialects.get(url)
+    val want = schema.fields.toSeq.map { f =>
+      (f.name, norm(colTypes.getOrElse(f.name,
+        JdbcUtils.getJdbcType(f.dataType, dialect).databaseTypeDefinition)),
+        f.nullable)
+    }
+    val st = conn.createStatement()
+    try {
+      val md = st.executeQuery(s"SELECT * FROM $stage WHERE 1 = 0")
+        .getMetaData
+      val have = (1 to md.getColumnCount).map { i =>
+        val name = norm(md.getColumnTypeName(i))
+        val ddl = name match {
+          case "CHAR" | "VARCHAR" => s"$name(${md.getPrecision(i)})"
+          case "DECIMAL" | "NUMERIC" =>
+            s"$name(${md.getPrecision(i)},${md.getScale(i)})"
+          case _ => name
+        }
+        (md.getColumnName(i), ddl,
+          md.isNullable(i) != java.sql.ResultSetMetaData.columnNoNulls)
+      }
+      have == want
+    } catch { case _: java.sql.SQLException => false } // no stage yet
+    finally st.close()
   }
 
   // ------------------------------------------------------------------

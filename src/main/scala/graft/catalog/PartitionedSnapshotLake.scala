@@ -2,9 +2,9 @@ package graft.catalog
 
 import graft.util.Fs
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, date_format, lit, to_date}
-import org.apache.spark.sql.types.{DataType, DateType, StructType}
+import org.apache.spark.sql.types.{DateType, StructType}
 import graft.operators.MergeOps
 
 /** Fact-scale snapshot lake: [[SnapshotLake]]'s marker protocol applied
@@ -139,7 +139,8 @@ object PartitionedSnapshotLake {
       else n.drop(at + 1).toLongOption.map(v => (n.take(at), v))
     }
 
-  /** The commit-log delta over `base` pins: every logged version newer
+  /** The commit-log delta over `base` pins: every logged version in
+    * `entries` (a [[logEntries]] listing) newer
     * than its partition's pin whose commit marker EXISTS (max per
     * partition). Complete for every in-contract write, because
     * [[commitMerge]] writes the entry before the marker and every lake
@@ -149,8 +150,9 @@ object PartitionedSnapshotLake {
     * `exists` per fresh entry — O(1) in partition count, O(delta) in
     * stranded commits, and no directory-mtime dependence. */
   private def logDelta(fs: FileSystem, root: String,
-      base: Map[String, Long]): Map[String, Long] =
-    logEntries(fs, root)
+      entries: Seq[(String, Long)], base: Map[String, Long])
+      : Map[String, Long] =
+    entries
       .filter { case (p, v) => v > base.getOrElse(p, 0L) }
       .filter { case (p, v) =>
         fs.exists(new Path(new Path(partRoot(root, p), "_commits"),
@@ -180,18 +182,16 @@ object PartitionedSnapshotLake {
   private[catalog] def outOfBandVersions(spark: SparkSession,
       root: String, parts: Seq[String]): Map[String, Seq[Long]] = {
     val fs = Fs.forPath(spark, root)
-    val before = latestSnapshot(spark, root)
-    val pins: Map[String, Long] = before
-      .map(s => manifest(spark, root, s)).getOrElse(Map.empty)
-    // LISTING ORDER IS LOAD-BEARING: markers FIRST, log entries
-    // SECOND. In-contract commits write entry-before-marker, so any
-    // marker visible in the first listing had its entry on disk
-    // before it — a log listing taken AFTER the marker listing must
-    // contain that entry (unless pruned, which the latestSnapshot
-    // re-check below catches). The reverse order would race a
-    // concurrent healthy writer: entry lands after our log listing,
-    // marker lands before our _commits listing → false out-of-band
-    // WARN on an in-contract commit.
+    // READ ORDER IS LOAD-BEARING: markers FIRST, log entries SECOND,
+    // the manifest LAST. In-contract commits write entry-before-marker,
+    // so any marker visible in the first listing had its entry on disk
+    // before it — a log listing taken AFTER the marker listing holds
+    // that entry unless a prune removed it, and a prune removes only
+    // entries a committed manifest covers: the manifest read after the
+    // listing is that one or a newer one, and manifests never lower a
+    // pin, so the version sits at or under its pin and is not flagged.
+    // Any other order would race a concurrent healthy writer into a
+    // false out-of-band WARN.
     val markers: Map[String, Seq[Long]] = parts.flatMap { p =>
       val commits = new Path(partRoot(root, p), "_commits")
       if (!fs.exists(commits)) None
@@ -200,24 +200,14 @@ object PartitionedSnapshotLake {
     }.toMap
     val logged: Map[String, Set[Long]] = logEntries(fs, root)
       .groupBy(_._1).map { case (p, vs) => p -> vs.map(_._2).toSet }
-    val missing = markers.flatMap { case (p, vers) =>
+    val pins: Map[String, Long] = latestSnapshot(spark, root)
+      .map(s => manifest(spark, root, s)).getOrElse(Map.empty)
+    markers.flatMap { case (p, vers) =>
       val pin = pins.getOrElse(p, 0L)
       val entries = logged.getOrElse(p, Set.empty)
       val bad = vers.filter(v => v > pin && !entries.contains(v)).sorted
       if (bad.isEmpty) None else Some(p -> bad)
     }.toMap
-    // concurrent-prune re-check (the latestPins lesson, applied to the
-    // diagnostic): an in-contract commit landing between the manifest
-    // read and the listings (entry → marker → newer manifest → entry
-    // pruned) would read as "marker with no entry". Pruning only
-    // happens after a newer snapshot marker exists, so an unchanged
-    // latestSnapshot proves the (manifest, log) pair was consistent;
-    // a moved one makes THIS pass unreliable — skip it (best-effort
-    // diagnostic, the next commit/vacuum re-checks) rather than
-    // false-flag a healthy writer.
-    if (missing.nonEmpty && latestSnapshot(spark, root) != before)
-      Map.empty
-    else missing
   }
 
   /** Run [[outOfBandVersions]] best-effort and WARN naming the remedy
@@ -303,33 +293,28 @@ object PartitionedSnapshotLake {
     else df.withColumn("part_date", lit(value).cast("date"))
   }
 
+  /** The pinned v-dirs, in partition order. */
+  private def pinDirs(root: String, pins: Map[String, Long]): Seq[Path] =
+    pins.toSeq.sortBy(_._1)
+      .map { case (p, v) => new Path(partRoot(root, p), s"v=$v") }
+
   /** The live schema without a Spark job: the row schema Spark stores
-    * in the footer of one file of one pinned partition of the newest
-    * manifest, plus the `part_date` the readers restore. None before
-    * the first manifest. */
+    * in the footer of a file of the newest manifest's pinned versions
+    * ([[SnapshotLake.footerSchema]]), plus the `part_date` the readers
+    * restore. None before the first manifest. */
   private def pinnedSchema(spark: SparkSession,
       root: String): Option[StructType] =
     latestSnapshot(spark, root)
-      .flatMap(s => manifest(spark, root, s).headOption)
-      .map { case (p, v) =>
-        val file = Fs.forPath(spark, root)
-          .listStatus(new Path(partRoot(root, p), s"v=$v")).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).head
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
-            spark.sparkContext.hadoopConfiguration))
-        val json =
-          try reader.getFooter.getFileMetaData.getKeyValueMetaData
-            .get("org.apache.spark.sql.parquet.row.metadata")
-          finally reader.close()
-        DataType.fromJson(json).asInstanceOf[StructType]
-          .add("part_date", DateType)
-      }
+      .flatMap(s => SnapshotLake.footerSchema(spark,
+        pinDirs(root, manifest(spark, root, s))))
+      .map(_.add("part_date", DateType))
 
   /** ONE multi-path parquet scan over all pinned v-dirs — a snapshot
     * read over 10 000 partitions plans a single `FileSourceScan`
-    * relation instead of a 10 000-way union. Hive-style discovery
-    * under `basePath` parses BOTH path levels into columns:
+    * relation instead of a 10 000-way union. The data schema comes from
+    * one pinned file's footer ([[SnapshotLake.readKnownSchema]]), so
+    * planning the read runs no schema-inference job. Hive-style
+    * discovery under `basePath` parses BOTH path levels into columns:
     * `part_date` (kept, cast to DATE; the default partition reads back
     * as null) and `v` (the pinned version number — dropped, it is
     * protocol metadata, not data). Data columns named `v` are
@@ -337,9 +322,8 @@ object PartitionedSnapshotLake {
   private def readPins(spark: SparkSession, root: String,
       pins: Map[String, Long]): DataFrame = {
     require(pins.nonEmpty, s"empty snapshot at $root")
-    val paths = pins.toSeq.sortBy(_._1)
-      .map { case (p, v) => s"${partRoot(root, p)}/v=$v" }
-    val df = spark.read.option("basePath", root).parquet(paths: _*)
+    val df = SnapshotLake.readKnownSchema(spark, pinDirs(root, pins),
+      Some(root))
     val dated =
       if (df.columns.contains("part_date"))
         df.withColumn("part_date", col("part_date").cast("date"))
@@ -369,9 +353,9 @@ object PartitionedSnapshotLake {
     * entries. A version committed out of band ([[SnapshotLake.commit]]
     * straight into a partition dir) has no entry and is served only
     * after the next commitMerge to that partition or a
-    * [[repairManifest]]. Concurrent manifest commits can prune log
-    * entries out from under a lockless reader; [[latestPins]] detects
-    * that (snapshot re-check) and re-resolves. */
+    * [[repairManifest]]. Concurrent manifest commits prune log entries
+    * a lockless reader may be about to list; [[latestPins]] stays
+    * consistent by listing the log before it reads the manifest. */
   def readLatest(spark: SparkSession, root: String): DataFrame =
     readPins(spark, root, latestPins(spark, root))
 
@@ -381,30 +365,23 @@ object PartitionedSnapshotLake {
       SnapshotLake.latestVersion(spark, partRoot(root, p)).map(p -> _)
     }.toMap
 
-  /** Pin resolution — newest manifest ++ [[logDelta]] — with a
-    * CONSISTENCY RE-CHECK against concurrent log pruning: a lockless
-    * reader that resolved `latestSnapshot = s` races a writer
-    * committing s+1 — the writer's post-commit prune can delete the
-    * very log entries that carried s's delta before this reader lists
-    * them. Pruning only ever happens AFTER a newer snapshot marker
-    * exists, so the race is detectable: if `latestSnapshot` is
-    * unchanged after the resolution, no prune completed inside the
-    * window and the (manifest, log) pair was consistent; if it moved,
-    * re-resolve from the newer manifest (whose pins cover everything
-    * the prune removed). Bounded retries — a pathological commit storm
-    * falls back to the full marker walk rather than spinning. */
+  /** Pin resolution — newest manifest ++ [[logDelta]] — in ONE pass,
+    * consistent against concurrent log pruning by ORDER: the log is
+    * listed FIRST, the newest manifest read SECOND. An entry missing
+    * from the listing was either never written (its version has no
+    * marker yet) or pruned before the listing — and every prune
+    * (manifest commit or vacuum) deletes only entries a committed
+    * manifest already covers. That manifest committed before the
+    * listing, so the manifest read after it is the same or newer, and
+    * manifests never lower a pin ([[commitManifest]]): its pin covers
+    * the pruned version. */
   private[catalog] def latestPins(spark: SparkSession,
       root: String): Map[String, Long] = {
     val fs = Fs.forPath(spark, root)
-    var tries = 0
-    while (tries < 3) {
-      val before = latestSnapshot(spark, root)
-      val base = before.map(manifest(spark, root, _)).getOrElse(Map.empty)
-      val pins = base ++ logDelta(fs, root, base)
-      if (latestSnapshot(spark, root) == before) return pins
-      tries += 1
-    }
-    fullWalkPins(spark, root)
+    val entries = logEntries(fs, root)
+    val base = latestSnapshot(spark, root).map(manifest(spark, root, _))
+      .getOrElse(Map.empty)
+    base ++ logDelta(fs, root, entries, base)
   }
 
   /** MERGE `batch` into the affected partitions and commit a global
@@ -419,25 +396,30 @@ object PartitionedSnapshotLake {
     val b = batch.withColumn("part_date", to_date(col(tsCol)))
 
     // affected partition names from the batch's distinct dates —
-    // bounded by the date span, not the row count
+    // bounded by the date span, not the row count. One job and no
+    // shuffle: each task returns its own date set, merged here
     val affected: Seq[String] = b
-      .select(date_format(col("part_date"), "yyyy-MM-dd").as("d"))
-      .distinct().collect()
-      .map(r => if (r.isNullAt(0)) DefaultPart
-                else s"part_date=${r.getString(0)}").toSeq
+      .select(date_format(col("part_date"), "yyyy-MM-dd"))
+      .as(Encoders.STRING)
+      .mapPartitions((ds: Iterator[String]) => ds.toSet.iterator)(
+        Encoders.STRING)
+      .collect().distinct.toSeq
+      .map(d => if (d == null) DefaultPart else s"part_date=$d")
 
     // staleness detector (r12 ask #6): against the PRE-commit state —
     // this merge's own versions don't exist yet, so anything newer
     // than the pins without a log entry is an out-of-band commit
     warnOutOfBand(spark, root, affected)
 
-    // current state of ONLY the affected partitions
-    val existing = affected.flatMap { p =>
-      SnapshotLake.latestVersion(spark, partRoot(root, p))
-        .map(v => readPartitionVersion(spark, root, p, v))
-    }.reduceOption(_.unionByName(_))
-    // schema drift guard: the touched partitions' schema is already
-    // resolved; a batch of only new dates checks one pinned footer
+    // current state of ONLY the affected partitions: one scan over
+    // their latest versions
+    val basePins = affected.flatMap { p =>
+      SnapshotLake.latestVersion(spark, partRoot(root, p)).map(p -> _)
+    }.toMap
+    val existing =
+      if (basePins.isEmpty) None else Some(readPins(spark, root, basePins))
+    // schema drift guard: the base scan's schema is already resolved;
+    // a batch of only new dates checks one pinned footer
     existing.map(_.schema).orElse(pinnedSchema(spark, root))
       .foreach(MergeOps.requireSameSchema(_, b.schema))
     val merged = existing match {
@@ -789,14 +771,18 @@ object PartitionedSnapshotLake {
 
   /** Commit global snapshot N as snapshot N−1's pins overlaid with
     * `overlay` (the partitions this writer just committed) — O(touched
-    * partitions), no filesystem re-listing. Commits serialize on the
-    * heartbeated manifest mutex, so snapshot numbers totally order
+    * partitions), no filesystem re-listing. A pin is never LOWERED: the
+    * overlay takes the max of the previous pin and its own version, so a
+    * writer that committed `p@1` and stalled before its manifest cannot
+    * roll `p` back under another writer's later `p@2` manifest (whose
+    * log entry is already pruned — readLatest would lose its rows).
+    * Commits serialize on the heartbeated manifest mutex, so snapshot numbers totally order
     * manifest CONTENT: each snapshot is exactly one commit applied to
     * the previous one, and a concurrent writer's half-finished
     * partition commits can never leak into someone else's pins.
     * Partition versions stranded by a crash between partition commits
     * and the manifest are recovered by [[repairManifest]]. */
-  private def commitManifest(spark: SparkSession, root: String,
+  private[catalog] def commitManifest(spark: SparkSession, root: String,
       overlay: Map[String, Long]): Long = {
     val fs = Fs.forPath(spark, root)
     fs.mkdirs(snapsDir(root))
@@ -804,8 +790,11 @@ object PartitionedSnapshotLake {
     try SnapshotLake.withLockHeartbeat(fs, manifestLock(root)) {
       val prev = latestSnapshot(spark, root)
       val n = prev.getOrElse(0L) + 1L
-      val pins = prev.map(manifest(spark, root, _))
-        .getOrElse(Map.empty[String, Long]) ++ overlay
+      val prevPins = prev.map(manifest(spark, root, _))
+        .getOrElse(Map.empty[String, Long])
+      val pins = prevPins ++ overlay.map { case (p, v) =>
+        p -> math.max(v, prevPins.getOrElse(p, 0L))
+      }
       val body = pins.toSeq.sortBy(_._1)
         .map { case (p, v) => s"$p\t$v" }.mkString("\n")
       val out = fs.create(new Path(snapsDir(root), s"$n.manifest"), true)

@@ -2,7 +2,10 @@ package graft.catalog
 
 import graft.util.Fs
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.operators.MergeOps
 
 /** Versioned snapshot lake — MVCC history for a parquet table: every
@@ -190,13 +193,49 @@ object SnapshotLake {
       latestVersion(spark, root).getOrElse(
         throw new IllegalStateException(s"no committed versions at $root")))
 
-  /** Time travel: read snapshot `v` exactly as committed. */
+  /** Time travel: read snapshot `v` exactly as committed, with the
+    * schema its own footer records ([[readKnownSchema]]) — planning
+    * the read runs no Spark job. */
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
     val fs = Fs.forPath(spark, root)
     require(fs.exists(new Path(commitsDir(root), v.toString)),
       s"version $v is not committed at $root (rolled back, vacuumed, " +
         s"or never existed); committed: ${versions(spark, root)}")
-    spark.read.parquet(versionDir(root, v).toString)
+    readKnownSchema(spark, Seq(versionDir(root, v)), None)
+  }
+
+  /** The row schema Spark stored in the footer of the first parquet
+    * file found under `dirs`, tried in order (usually one listing and
+    * one footer read, in the calling JVM). None when no dir holds a parquet
+    * file or the file carries no Spark schema. */
+  private[catalog] def footerSchema(spark: SparkSession,
+      dirs: Seq[Path]): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dirs.iterator.flatMap { d =>
+      Fs.forPath(spark, d.toString).listStatus(d).iterator.map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
+    }.nextOption().flatMap { file =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(file, conf))
+      val json =
+        try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally reader.close()
+      Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
+    }
+  }
+
+  /** A parquet read of `dirs` that passes [[footerSchema]] to the reader
+    * instead of letting it infer one — inference is a Spark job per
+    * read, and every file of a lake version carries the same schema.
+    * Hive-style partition columns under `basePath` are still discovered
+    * from the paths. Falls back to inference when no footer schema is
+    * found. */
+  private[catalog] def readKnownSchema(spark: SparkSession, dirs: Seq[Path],
+      basePath: Option[String]): DataFrame = {
+    val r = basePath.fold(spark.read)(spark.read.option("basePath", _))
+    footerSchema(spark, dirs).fold(r)(r.schema)
+      .parquet(dirs.map(_.toString): _*)
   }
 
   /** MERGE `batch` into the latest snapshot and commit the result as a

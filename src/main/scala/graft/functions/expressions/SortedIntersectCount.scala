@@ -134,12 +134,16 @@ object SortedIntersectCount {
     * constructor parameter, so it participates in equality/
     * canonicalization — an instance built with the check on can never
     * be unified by plan/expression caching with one built while it was
-    * off, and the value serializes to executors with the expression. */
-  def checkEnabled(): Boolean =
-    try org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.sortedIntersect.check", "false")
-      .toBoolean
-    catch { case _: Exception => false }
+    * off, and the value serializes to executors with the expression.
+    * A value other than true/false (any case) fails, naming the key,
+    * rather than silently leaving the check off. */
+  def checkEnabled(): Boolean = {
+    val key = "spark.graft.sortedIntersect.check"
+    val raw = org.apache.spark.sql.internal.SQLConf.get
+      .getConfString(key, "false")
+    raw.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be true or false, got '$raw'"))
+  }
 
   /** Shared by the interpreted and generated check paths (generated
     * code calls it statically — keep the signature stable). */

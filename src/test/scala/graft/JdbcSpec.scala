@@ -1,5 +1,7 @@
 package graft
 
+import java.sql.DriverManager
+
 import org.apache.spark.sql.{Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -107,6 +109,103 @@ class JdbcSpec extends AnyFunSuite {
     val out = JdbcCatalog.scan(spark, url, "NULLS").orderBy("id")
       .collect().map(r => Option(r.getString(1)))
     assert(out.toSeq == Seq(Some("filled"), None))
+  }
+
+  /** (name, type, precision, nullable) of each column of `table`, as
+    * the database reports them. */
+  private def columns(url: String, table: String)
+      : Seq[(String, String, Int, Boolean)] = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val md = c.createStatement()
+        .executeQuery(s"SELECT * FROM $table WHERE 1 = 0").getMetaData
+      (1 to md.getColumnCount).map(i => (md.getColumnName(i),
+        md.getColumnTypeName(i), md.getPrecision(i),
+        md.isNullable(i) != java.sql.ResultSetMetaData.columnNoNulls))
+    } finally c.close()
+  }
+
+  /** The `seg0` container files (heap and indexes) of `table`. */
+  private def containers(url: String, table: String): Set[String] = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(
+        "SELECT c.CONGLOMERATENUMBER FROM SYS.SYSCONGLOMERATES c " +
+          "JOIN SYS.SYSTABLES t ON c.TABLEID = t.TABLEID " +
+          s"WHERE t.TABLENAME = '$table'")
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => s"c${java.lang.Long.toHexString(r.getLong(1))}.dat").toSet
+    } finally c.close()
+  }
+
+  test("stagedUpsert reuses its staging table: same-shape upserts run " +
+      "no DDL and grow no file but the target's") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_derby")
+      .resolve("db")
+    val disk = s"jdbc:derby:$dir;create=true"
+    def seg0(): Map[String, Long] =
+      dir.resolve("seg0").toFile.listFiles().toSeq
+        .map(f => f.getName -> f.length).toMap
+    JdbcCatalog.write(Seq(
+      (1L, "alice", 2.0, "2024-01-01"), (2L, "bob", 10.0, "2024-01-02"))
+      .toDF("id", "name", "price", "day"), disk, "TGT", SaveMode.Overwrite,
+      types)
+    // each batch updates one row, keeps one, inserts one
+    def batch(k: Int) = Seq((1L, "alice", 3.0 + k, "2024-01-01"),
+      (2L, "bob", 10.0, "2024-01-02"), (100L + k, s"new$k", 1.0, "2024-02-01"))
+      .toDF("id", "name", "price", "day")
+    def upsert(k: Int) = JdbcCatalog.stagedUpsert(spark, disk, "TGT",
+      batch(k), "id", colTypes = types)
+    assert(upsert(0) == 2) // creates the stage and the target's index
+    val before = seg0()
+    (1 to 5).foreach(k => assert(upsert(k) == 2))
+    val after = seg0()
+    assert(after.keySet == before.keySet,
+      s"upserts created containers ${after.keySet -- before.keySet}")
+    val grew = after.keySet.filter(f => after(f) != before(f))
+    assert((grew -- containers(disk, "TGT")).isEmpty,
+      s"files other than the target's grew: $grew")
+    val out = JdbcCatalog.scan(spark, disk, "TGT").orderBy("id")
+      .select("id", "price").as[(Long, Double)].collect().toSeq
+    assert(out == Seq((1L, 8.0), (2L, 10.0)) ++
+      (0 to 5).map(k => (100L + k, 1.0)))
+    assert(columns(disk, "TGT_STAGE") == Seq(("id", "BIGINT", 19, false),
+      ("name", "VARCHAR", 64, true), ("price", "DOUBLE", 15, false),
+      ("day", "VARCHAR", 4000, true)))
+  }
+
+  test("stagedUpsert re-creates a stage whose columns or types drifted " +
+      "and merges the new shape correctly") {
+    seed("DRIFT")
+    def upsert(df: org.apache.spark.sql.DataFrame,
+        ct: Map[String, String] = types) =
+      JdbcCatalog.stagedUpsert(spark, url, "DRIFT", df, "id", colTypes = ct)
+    assert(upsert(Seq((1L, "alice", 2.5, "2024-01-01"))
+      .toDF("id", "name", "price", "day")) == 1)
+    // a column fewer: the stage follows, `day` keeps the target's value
+    assert(upsert(Seq((2L, "bob", 12.0)).toDF("id", "name", "price")) == 1)
+    assert(columns(url, "DRIFT_STAGE").map(_._1) == Seq("id", "name", "price"))
+    // a retyped key (INTEGER stage against the BIGINT target)
+    assert(upsert(Seq((3, "carol", 31.0)).toDF("id", "name", "price")) == 1)
+    assert(columns(url, "DRIFT_STAGE").head._2 == "INTEGER")
+    // a narrower string DDL type
+    assert(upsert(Seq((4L, "dan", 4.0)).toDF("id", "name", "price"),
+      Map("name" -> "VARCHAR(8)")) == 1)
+    assert(columns(url, "DRIFT_STAGE")(1) == (("name", "VARCHAR", 8, true)))
+    // nullability: a nullable key after a NOT NULL one
+    val nullable = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, "alice", 3.5)), StructType(Seq(
+        StructField("id", LongType), StructField("name", StringType),
+        StructField("price", DoubleType, false))))
+    assert(upsert(nullable) == 1)
+    assert(columns(url, "DRIFT_STAGE").head == (("id", "BIGINT", 19, true)))
+    val out = JdbcCatalog.scan(spark, url, "DRIFT").orderBy("id")
+      .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("name"),
+        Option(r.getAs[java.lang.Double]("price")).map(_.doubleValue),
+        r.getAs[String]("day"))).toSeq
+    assert(out == Seq((1L, "alice", Some(3.5), "2024-01-01"),
+      (2L, "bob", Some(12.0), "2024-01-02"),
+      (3L, "carol", Some(31.0), "2024-01-03"), (4L, "dan", Some(4.0), null)))
   }
 
   test("mysql dialect emits UPDATE..JOIN + INSERT..NOT EXISTS with " +

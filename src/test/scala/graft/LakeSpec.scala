@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import org.apache.spark.SparkProbes
 import org.apache.spark.sql.functions._
 import graft.catalog.PartitionedSnapshotLake
 import graft.functions.BvecMath
@@ -130,6 +131,78 @@ class LakeSpec extends AnyFunSuite {
       Map("updated" -> 1L, "kept" -> 1L))
     assert(latest.filter(col("id") === 9L)
       .select("name").as[String].head() == "z2")
+  }
+
+  test("lake reads plan without a Spark job and commitMerge runs only " +
+      "its dates job and its write (the schema comes from a footer)") {
+    val path = Files.createTempDirectory("graft_lake_jobs")
+      .resolve("t").toString
+    val sc = spark.sparkContext
+    def ts(d: String) = java.sql.Timestamp.valueOf(d + " 08:00:00")
+    val nullTs = null.asInstanceOf[java.sql.Timestamp]
+    def frame(rows: (Long, String, Double, java.sql.Timestamp)*) =
+      rows.toSeq.toDF("id", "name", "price", "acq")
+    PartitionedSnapshotLake.commitMerge(spark, path, frame(
+      (1L, "a", 1.0, ts("2024-04-01")), (2L, "b", 2.0, ts("2024-04-02")),
+      (9L, "z", 9.0, nullTs)), "id", "acq")
+
+    // an update in two live partitions (one the null-date one) and an
+    // insert into a new one
+    val batch = frame((1L, "a2", 1.5, ts("2024-04-01")),
+      (9L, "z2", 9.5, nullTs), (3L, "c", 3.0, ts("2024-04-03"))).cache()
+    batch.count()
+    val ((snap, counts), jobs) = SparkProbes.jobsDuring(sc) {
+      PartitionedSnapshotLake.commitMerge(spark, path, batch, "id", "acq")
+    }
+    batch.unpersist()
+    assert(counts == Map("updated" -> 2L, "inserted" -> 1L))
+    // no job outside a SQL execution (no schema inference or listing),
+    // and two executions: the affected dates, one job with no shuffle,
+    // then the merge write
+    assert(jobs.forall(_.nonEmpty), s"jobs: $jobs")
+    val execs = jobs.flatten.distinct.sorted
+    assert(execs.size == 2, s"jobs: $jobs")
+    assert(jobs.count(_.contains(execs.head)) == 1, s"jobs: $jobs")
+
+    val ((latest, version), readJobs) = SparkProbes.jobsDuring(sc) {
+      val l = PartitionedSnapshotLake.readLatest(spark, path)
+      val v = PartitionedSnapshotLake.readVersion(spark, path, snap)
+      l.queryExecution.executedPlan
+      v.queryExecution.executedPlan
+      (l, v)
+    }
+    assert(readJobs.isEmpty, s"reads planned ${readJobs.size} jobs")
+    val expected = Seq((1L, "a2", "2024-04-01"), (2L, "b", "2024-04-02"),
+      (3L, "c", "2024-04-03"), (9L, "z2", null))
+    Seq(latest, version).foreach { df =>
+      assert(df.orderBy("id").select(col("id"), col("name"),
+        col("part_date").cast("string")).as[(Long, String, String)]
+        .collect().toSeq == expected)
+    }
+    // the footer schema is the schema inference would find
+    val inferred = spark.read
+      .parquet(s"$path/part_date=2024-04-01/v=2").schema
+    assert(latest.drop("part_date").schema == inferred)
+    assert(latest.schema("part_date").dataType ==
+      org.apache.spark.sql.types.DateType)
+  }
+
+  test("the footer schema skips a pinned version that holds no parquet " +
+      "file") {
+    val path = Files.createTempDirectory("graft_lake_nofile")
+      .resolve("t").toString
+    def merge(rows: (Long, String, String)*) =
+      PartitionedSnapshotLake.commitMerge(spark, path,
+        rows.toSeq.toDF("id", "name", "ts"), "id", "ts")._2
+    merge((1L, "a", "2024-05-01"), (2L, "b", "2024-05-02"))
+    // the first pinned version loses its data files (a foreign or
+    // emptied version dir): readers must find the schema elsewhere
+    new java.io.File(s"$path/part_date=2024-05-01/v=1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).foreach(_.delete())
+    // a batch of only a new date checks its schema against the footer
+    assert(merge((3L, "c", "2024-05-03")) == Map("inserted" -> 1L))
+    assert(PartitionedSnapshotLake.readLatest(spark, path).orderBy("id")
+      .select("id").as[Long].collect().toSeq == Seq(2L, 3L))
   }
 
   test("bvec rotation: identity and axis swap goldens") {

@@ -103,6 +103,26 @@ class SortedIntersectSpec extends AnyFunSuite {
     }
   }
 
+  test("a malformed order-check value fails naming the key instead of " +
+      "leaving the check off") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val df = Seq((Array(1L, 3L), Array(3L, 9L))).toDF("a", "b")
+    withSQLConf("spark.graft.sortedIntersect.check" -> "yes") {
+      val err = intercept[Exception] {
+        df.select(expr("sorted_intersect_count(a, b)")).head
+      }
+      def names(t: Throwable): Boolean = t != null && (
+        Option(t.getMessage).exists(m =>
+          m.contains("spark.graft.sortedIntersect.check") &&
+            m.contains("yes")) || names(t.getCause))
+      assert(names(err), s"unexpected: $err")
+    }
+    withSQLConf("spark.graft.sortedIntersect.check" -> "TRUE") {
+      assert(graft.functions.expressions.SortedIntersectCount.checkEnabled())
+    }
+  }
+
   private def withSQLConf(kv: (String, String))(f: => Unit): Unit = {
     val prev = spark.conf.getOption(kv._1)
     spark.conf.set(kv._1, kv._2)

@@ -52,6 +52,23 @@ class NoMtimeCountingFs extends CountingLocalFs {
     strip(super.getFileStatus(f))
 }
 
+/** A local filesystem under the `slowlog` scheme whose listing of a
+  * commit-log dir (`_log`) sleeps 20 ms on threads that opted in: it
+  * widens a reader's pin resolution so that concurrent manifest commits
+  * land inside it. `getScheme` reports `file`, so the lake's
+  * create-if-absent CAS keeps its atomic `File.createNewFile` path. */
+class SlowLogListingFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("slowlog:///")
+  override def getScheme: String = "file"
+  override def listStatus(f: Path): Array[FileStatus] = {
+    if (SlowLogListingFs.slowed.get && f.getName == "_log") Thread.sleep(20)
+    super.listStatus(f)
+  }
+}
+object SlowLogListingFs {
+  val slowed: ThreadLocal[Boolean] = ThreadLocal.withInitial(() => false)
+}
+
 /** Lock-protocol and at-scale contracts of the snapshot lakes that the
   * black-box [[graft.SnapshotLakeSpec]] cannot reach: the claim ABA
   * recheck, the vacuum heartbeat, the manifest mutex, and the
@@ -551,5 +568,92 @@ class LakeProtocolSpec extends AnyFunSuite {
     merge(4L, "e")
     assert(PartitionedSnapshotLake.lastOutOfBandWarning.isEmpty,
       "the detector kept warning after a manifest covered the orphan")
+  }
+
+  test("a stalled writer's late manifest never lowers a pin") {
+    val root = tmp()
+    val p = "part_date=2027-07-01"
+    def merge(id: Long) =
+      PartitionedSnapshotLake.commitMerge(spark, root,
+        Seq((id, "2027-07-01", "x")).toDF("id", "ts", "val"), "id", "ts")
+    merge(1L) // writer A's p@1 — A stalls before its manifest
+    merge(2L) // writer B merges on v1: p@2, its manifest, log pruned
+    assert(PartitionedSnapshotLake.readLatest(spark, root).count() == 2)
+    // A's manifest lands late, overlaying p -> 1
+    val n = PartitionedSnapshotLake.commitManifest(spark, root, Map(p -> 1L))
+    assert(PartitionedSnapshotLake.manifest(spark, root, n)(p) == 2L,
+      "a late manifest rolled the partition's pin back")
+    assert(PartitionedSnapshotLake.readLatest(spark, root).count() == 2,
+      "readLatest lost a later writer's rows to a late manifest")
+  }
+
+  test("readLatest under a commit storm serves committed partition " +
+      "versions only, never an out-of-band one") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.slowlog.impl", classOf[SlowLogListingFs].getName)
+    val root = s"slowlog://${tmp()}"
+    def frame(rows: (Long, String, String)*) =
+      rows.toSeq.toDF("id", "ts", "val")
+    val (a, b) = ("2027-08-01", "2027-08-02")
+    val oob = "part_date=2027-08-03"
+    def batch(k: Int) = frame((1L, a, s"$k"), (2L, a, s"$k"),
+      (11L, b, s"$k"), (12L, b, s"$k"))
+    PartitionedSnapshotLake.commitMerge(spark, root,
+      batch(0).union(frame((21L, "2027-08-03", "seed"))), "id", "ts")
+    // a marker-only version committed out of band: readLatest must keep
+    // serving the logged v1 until a commitMerge or repairManifest
+    SnapshotLake.commit(spark, s"$root/$oob",
+      frame((21L, "2027-08-03", "out-of-band")))
+
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    def thread(body: => Unit) = {
+      val t = new Thread(() =>
+        try body catch { case e: Throwable => failure.compareAndSet(null, e) })
+      t.start(); t
+    }
+    // manifest-only commits, back to back: with the reader's log
+    // listing slowed, the snapshot moves under every pin resolution
+    // it makes
+    val storm = thread {
+      while (!stop.get) {
+        PartitionedSnapshotLake.commitManifest(spark, root, Map.empty)
+        Thread.sleep(2) // lets the writer's 20 ms mutex poll in
+      }
+    }
+    val writer = thread {
+      (1 to 4).foreach(k => PartitionedSnapshotLake.commitMerge(spark,
+        root, batch(k), "id", "ts"))
+    }
+    var reads = 0
+    SlowLogListingFs.slowed.set(true)
+    try {
+      while (writer.isAlive && failure.get == null) {
+        val pins = PartitionedSnapshotLake.latestPins(spark, root)
+        assert(pins(oob) == 1L, s"latestPins served the out-of-band $pins")
+        if (reads % 20 == 0) {
+          val rows = PartitionedSnapshotLake.readLatest(spark, root)
+            .select($"id", $"val", $"part_date".cast("string"))
+            .as[(Long, String, String)].collect().toSeq
+          assert(rows.map(_._1).sorted == Seq(1L, 2L, 11L, 12L, 21L))
+          assert(rows.filter(_._1 == 21L).map(_._2) == Seq("seed"))
+          // each partition reads back as ONE committed version
+          rows.filter(_._1 < 21L).groupBy(_._3).foreach { case (d, rs) =>
+            assert(rs.map(_._2).distinct.size == 1,
+              s"partition $d mixes versions: $rs")
+          }
+        }
+        reads += 1
+      }
+    } finally {
+      SlowLogListingFs.slowed.set(false)
+      stop.set(true)
+      writer.join(); storm.join()
+    }
+    Option(failure.get).foreach(throw _)
+    assert(reads > 0)
+    assert(PartitionedSnapshotLake.readLatest(spark, root)
+      .filter($"id" < 21L).select("val").as[String].collect().toSet ==
+      Set("4"))
   }
 }
