@@ -76,11 +76,15 @@ object GraftFunctions {
 
   /** Idempotent per-session registration (functions + the bucket-prune
     * optimizer rule — extraOptimizations is the live-session analog of
-    * injectOptimizerRule). */
+    * injectOptimizerRule). A function whose registered builder is
+    * already graft's own is left alone — re-registering it would log a
+    * "replaced a previously registered function" WARN on every call —
+    * while a user's function of the same name is still replaced. */
   def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(id.funcName, builder, "built-in")
+      if (!registry.lookupFunctionBuilder(id).exists(_ eq builder))
+        registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
     }
     val rule = graft.plans.TimeBucketPruneRule
     if (!spark.experimental.extraOptimizations.contains(rule)) {

@@ -52,13 +52,16 @@ import graft.operators.MergeOps
   *    axis (the "what did yesterday's partition look like before
   *    today's backfill" question, without touching the other 36500).
   *
-  * Multi-writer: partition versions are claimed via
-  * [[SnapshotLake.atomicCreate]] lock CAS (with the ABA recheck), so
-  * concurrent committers serialize into distinct versions — no version
-  * is lost or overwritten. Manifest commits serialize on a single
-  * heartbeated mutex (`_snapshots/_commits/manifest.lock`), so
-  * manifest N is ALWAYS manifest N−1 plus exactly one commit's
-  * overlay — numbers order content. Like SnapshotLake.commitMerge,
+  * Multi-writer: each partition version is committed by
+  * [[SnapshotLake.commitVersion]] — the one version-commit step both
+  * lakes share (lock-CAS claim with the ABA recheck, heartbeated while
+  * held) — so concurrent committers serialize into distinct versions:
+  * no version is lost or overwritten. Manifest commits serialize on a
+  * [[WriterLease]] (`_snapshots/_commits/manifest.writer.lease`:
+  * heartbeated, token-fenced, a stale lease taken over by exactly one
+  * contender), so manifest N is ALWAYS manifest N−1 plus exactly one
+  * commit's overlay — numbers order content. Retention runs
+  * [[SnapshotLake.sweep]] per partition. Like SnapshotLake.commitMerge,
   * the merge itself is optimistic (no read-conflict detection across
   * writers on the SAME partition; writers on disjoint partitions
   * compose perfectly).
@@ -105,6 +108,8 @@ object PartitionedSnapshotLake {
   private def partRoot(root: String, part: String) = s"$root/$part"
   private def snapsDir(root: String) = new Path(root, "_snapshots")
   private def logDir(root: String) = new Path(snapsDir(root), "_log")
+  private def snapCommitsDir(root: String) =
+    new Path(snapsDir(root), "_commits")
 
   /** One commit-log entry per committed partition version — the one
     * delta source for [[latestPins]].
@@ -155,8 +160,7 @@ object PartitionedSnapshotLake {
     entries
       .filter { case (p, v) => v > base.getOrElse(p, 0L) }
       .filter { case (p, v) =>
-        fs.exists(new Path(new Path(partRoot(root, p), "_commits"),
-          v.toString))
+        fs.exists(SnapshotLake.markerPath(partRoot(root, p), v))
       }
       .groupBy(_._1).map { case (p, vs) => p -> vs.map(_._2).max }
 
@@ -249,14 +253,8 @@ object PartitionedSnapshotLake {
     SnapshotLake.versions(spark, partRoot(root, part))
 
   /** Committed global snapshot numbers, ascending. */
-  def snapshots(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = Fs.forPath(spark, root)
-    val dir = snapsDir(root)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .sorted
-  }
+  def snapshots(spark: SparkSession, root: String): Seq[Long] =
+    SnapshotLake.numbered(Fs.forPath(spark, root), snapsDir(root))
 
   def latestSnapshot(spark: SparkSession, root: String): Option[Long] =
     snapshots(spark, root).lastOption
@@ -438,41 +436,27 @@ object PartitionedSnapshotLake {
       val (_, counts) = MergeOps.writeCounted(merged)(
         _.write.mode("overwrite").partitionBy("part_date")
           .parquet(tmp.toString))
-      // claim locks release on EVERY exit and the tmp dir never
-      // outlives the call: a failure mid-loop leaves already-renamed
-      // partitions committed (marker'd — the next manifest picks them
-      // up) but leaks neither locks nor the staged rewrite
+      // each staged part_date= subdir RENAMES into its partition's
+      // next version through the shared version-commit step; the tmp
+      // dir never outlives the call: a failure mid-loop leaves
+      // already-committed partitions marker'd (the next manifest picks
+      // them up) but leaks neither claim locks nor the staged rewrite
       val committed =
         try {
           fs.listStatus(tmp).map(_.getPath)
             .filter(_.getName.startsWith("part_date=")).map { tp =>
-              val pr = partRoot(root, tp.getName)
-              fs.mkdirs(new Path(pr, "_commits"))
-              val v = SnapshotLake.claimVersion(fs, pr,
-                () => SnapshotLake.latestVersion(spark, pr).getOrElse(0L))
-              try {
-                val dest = new Path(pr, s"v=$v")
+              // the commit-log entry is written BEFORE the marker, so
+              // every marker'd version has one (readLatest's delta; a
+              // crash in between leaves a dangling entry that the
+              // marker-existence check filters and vacuum sweeps), and
+              // re-asserted AFTER it (heals the frozen-writer ×
+              // concurrent-vacuum window, see logPartitionCommit)
+              tp.getName -> SnapshotLake.commitVersion(fs,
+                  partRoot(root, tp.getName),
+                  logPartitionCommit(fs, root, tp.getName, _)) { dest =>
                 if (fs.exists(dest)) fs.delete(dest, true) // stale orphan
                 require(fs.rename(tp, dest), s"commit failed: $tp -> $dest")
-                // commit-log entry BEFORE the marker: every marker'd
-                // version has an entry (readLatest's delta); a crash
-                // here leaves a dangling entry that
-                // the marker-existence check filters and vacuum sweeps
-                logPartitionCommit(fs, root, tp.getName, v)
-                // partition commit point — create-if-absent as a belt
-                // over claimVersion's ABA recheck (never overwrite a
-                // committed version's marker)
-                if (!SnapshotLake.atomicCreate(fs,
-                  new Path(new Path(pr, "_commits"), v.toString)))
-                  throw new IllegalStateException(
-                    s"commit marker $v already exists under $pr — " +
-                      "concurrent commit protocol violation")
-                // re-assert the entry now that the marker exists (see
-                // logPartitionCommit: heals the frozen-writer ×
-                // concurrent-vacuum window)
-                logPartitionCommit(fs, root, tp.getName, v)
-              } finally SnapshotLake.releaseVersion(fs, pr, v)
-              tp.getName -> v
+              }
             }.toMap
         } finally fs.delete(tmp, true)
       // an empty delta (0-row batch) must not mint a snapshot: over an
@@ -495,12 +479,15 @@ object PartitionedSnapshotLake {
     * Reads past the horizon fail loudly at the marker check rather
     * than half-reading.
     *
-    * Live-writer safety mirrors [[SnapshotLake.vacuum]]: lock AGE, not
-    * version position, distinguishes an in-flight claim from crash
-    * residue — locks (and their in-flight data) younger than
+    * Each partition is swept by [[SnapshotLake.sweep]], the same sweep
+    * [[SnapshotLake.vacuum]] runs, so live-writer safety is the same:
+    * lock AGE, not version position, distinguishes an in-flight claim
+    * from crash residue — locks (and their in-flight data) younger than
     * `lockTtlMs` are never touched, and live holders heartbeat their
     * locks ([[SnapshotLake.withLockHeartbeat]]) so a long commit never
-    * ages past the TTL. The READER-side hazard is different: readers
+    * ages past the TTL. Every age is taken on the filesystem's clock
+    * ([[SnapshotLake.fsNow]]), the clock that stamped the mtimes it is
+    * compared with. The READER-side hazard is different: readers
     * and merge bases hold no lock (the Delta/Iceberg VACUUM race), so
     * the retention horizon must exceed the longest read in flight.
     * That bound is named here as `readerHazardMs`
@@ -539,36 +526,8 @@ object PartitionedSnapshotLake {
     // for "did anything commit out-of-band since the last manifest"
     warnOutOfBand(spark, root, partitions(spark, root))
     // every age this sweep computes (lock TTLs, manifest supersession,
-    // marker supersession, tmp-dir staleness) compares against
-    // FS-STAMPED mtimes, so "now" must come from the same clock: a
-    // vacuum host running minutes ahead of the namenode would
-    // otherwise overstate every age and delete inside the hazard
-    // horizon. One throwaway touch, statted back.
-    val now: Long = {
-      val probe = new Path(new Path(snapsDir(root), "_commits"), "clock")
-      fs.mkdirs(probe.getParent)
-      val out = fs.create(probe, true); out.close()
-      val t = fs.getFileStatus(probe).getModificationTime
-      fs.delete(probe, false) // throwaway — never leave probe litter
-      t
-    }
-    val lockPat = "^(\\d+)\\.lock$".r
-    def sweepLocks(commits: Path): Set[Long] = {
-      if (!fs.exists(commits)) return Set.empty
-      val locks = fs.listStatus(commits).toSeq.flatMap { st =>
-        st.getPath.getName match {
-          case lockPat(n) => Some((n.toLong, st))
-          case _ => None
-        }
-      }
-      locks.foreach { case (_, st) =>
-        if (now - st.getModificationTime >= lockTtlMs)
-          fs.delete(st.getPath, false)
-      }
-      locks.collect {
-        case (n, st) if now - st.getModificationTime < lockTtlMs => n
-      }.toSet
-    }
+    // marker supersession, tmp-dir staleness) is on the FS clock
+    val now = SnapshotLake.fsNow(fs, snapCommitsDir(root))
     // reader-hazard horizon: snapshot s was "the newest" — what a
     // lockless readLatest resolves — until its successor's manifest
     // landed, so s's hazard clock runs from the SUCCESSOR's mtime:
@@ -594,55 +553,24 @@ object PartitionedSnapshotLake {
     try {
       val sweeps = partitions(spark, root).map { p =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = {
-            val pr = partRoot(root, p)
-            val commits = new Path(pr, "_commits")
-            // marker mtimes in one listing: versions whose COMMIT is
-            // younger than the hazard horizon are kept even when no
-            // manifest pins them — readLatest serves manifest-less
-            // (crash-stranded, mid-commit) versions through its
-            // commit-log delta, so a lockless reader may be mid-scan on
-            // one; manifest-age protection alone cannot see those pins
-            val markerTimes: Map[Long, Long] =
-              if (!fs.exists(commits)) Map.empty
-              else fs.listStatus(commits).toSeq.flatMap { st =>
-                st.getPath.getName.toLongOption
-                  .map(_ -> st.getModificationTime)
-              }.toMap
-            val vs = markerTimes.keys.toSeq.sorted
-            if (vs.nonEmpty) {
-              val liveLocked = sweepLocks(commits)
-              val latest = vs.last
-              // a version was resolvable as "the latest" by log-delta
-              // readers until its SUCCESSOR's marker landed — so the
-              // hazard clock for version v runs from marker(v+next),
-              // not from v's own commit: keep v while its successor is
-              // younger than the horizon (markers commit in version
-              // order under the claim protocol)
-              val recentlySuperseded: Set[Long] =
-                vs.zip(vs.drop(1)).collect {
-                  case (v, nxt)
-                    if now - markerTimes(nxt) < readerHazardMs => v
-                }.toSet
-              val keep = pinned.getOrElse(p, Set.empty) + latest ++
-                recentlySuperseded
-              vs.filterNot(keep).foreach { v =>
-                fs.delete(new Path(pr, s"v=$v"), true)
-                fs.delete(
-                  new Path(new Path(pr, "_commits"), v.toString), false)
-              }
-              // uncommitted orphans (crash leftovers) — unless a young
-              // lock marks the version as possibly-live in-flight data
-              fs.listStatus(new Path(pr)).foreach { st =>
-                st.getPath.getName.stripPrefix("v=").toLongOption
-                  .foreach { v =>
-                    if (st.getPath.getName.startsWith("v=") && !keep(v) &&
-                      v < latest && !liveLocked(v))
-                      fs.delete(st.getPath, true)
+          // keep: the pinned versions plus every version superseded
+          // within the hazard horizon — readLatest serves manifest-less
+          // (crash-stranded, mid-commit) versions through its commit-log
+          // delta, so a lockless reader may be mid-scan on one, and
+          // such a version was resolvable as "the latest" until its
+          // SUCCESSOR's marker landed: its hazard clock runs from that
+          // marker (markers commit in version order under the claim
+          // protocol)
+          override def call(): Unit =
+            SnapshotLake.sweep(fs, partRoot(root, p), now, lockTtlMs) {
+              markerTimes =>
+                val vs = markerTimes.keys.toSeq.sorted
+                pinned.getOrElse(p, Set.empty[Long]) ++
+                  vs.zip(vs.drop(1)).collect {
+                    case (v, nxt)
+                      if now - markerTimes(nxt) < readerHazardMs => v
                   }
-              }
             }
-          }
         })
       }
       // fail-stop: on the first failure cancel everything still queued
@@ -664,7 +592,6 @@ object PartitionedSnapshotLake {
         now - st.getModificationTime >= lockTtlMs)
         fs.delete(st.getPath, true)
     }
-    sweepLocks(new Path(snapsDir(root), "_commits")): Unit
     // commit-log hygiene: entries covered by the newest KEPT manifest
     // are redundant (the delta test ignores v <= pin); dangling
     // entries (no commit marker — a crash between entry and marker,
@@ -682,7 +609,7 @@ object PartitionedSnapshotLake {
         val at = name.lastIndexOf('@')
         if (at > 0) name.drop(at + 1).toLongOption.foreach { v =>
           val p = name.take(at)
-          val commits = new Path(partRoot(root, p), "_commits")
+          val pr = partRoot(root, p)
           val covered = newestPins.get(p).exists(_ >= v)
           // dangling = no marker, aged past the TTL, AND no live
           // (young, heartbeated) claim lock on the version — a live
@@ -690,10 +617,10 @@ object PartitionedSnapshotLake {
           // while it holds the claim, so the lock is the liveness
           // signal, not the entry's own mtime
           lazy val dangling =
-            !fs.exists(new Path(commits, v.toString)) &&
+            !fs.exists(SnapshotLake.markerPath(pr, v)) &&
             now - st.getModificationTime >= lockTtlMs &&
             (try now - fs.getFileStatus(
-              new Path(commits, s"$v.lock")).getModificationTime >=
+              SnapshotLake.lockPath(pr, v)).getModificationTime >=
               lockTtlMs
             catch { case _: java.io.FileNotFoundException => true })
           // dangling deletes re-verify marker ABSENCE at the last
@@ -705,69 +632,32 @@ object PartitionedSnapshotLake {
           // The residual self-heals on the next commit to the
           // partition or repairManifest (documented in USAGE.md).
           if (covered || (dangling &&
-              !fs.exists(new Path(commits, v.toString))))
+              !fs.exists(SnapshotLake.markerPath(pr, v))))
             fs.delete(st.getPath, false)
         }
       }
     }
-    // stale manifest mutex (crashed holder — a live one heartbeats)
-    val mlock = manifestLock(root)
-    if (fs.exists(mlock) &&
-      now - fs.getFileStatus(mlock).getModificationTime >= lockTtlMs)
-      fs.delete(mlock, false)
     snaps.filterNot(keepSnaps.contains).foreach { s =>
       fs.delete(new Path(snapsDir(root), s.toString), false)
       fs.delete(new Path(snapsDir(root), s"$s.manifest"), false)
     }
   }
 
-  /** TTL after which a manifest-mutex holder with no heartbeat is
-    * presumed dead and its lock broken by a waiter. The mutex is held
-    * for milliseconds (read previous manifest + write one small file)
+  /** Stale horizon of the manifest lease: a holder whose lease has not
+    * been heartbeated for this long is presumed dead and the lease is
+    * taken over by the next committer. The lease is held for
+    * milliseconds (read the previous manifest + write one small file)
     * and heartbeated every [[SnapshotLake.heartbeatIntervalMs]] = 30 s,
-    * so 2 minutes = four missed beats. Package-visible for race
-    * specs. */
+    * so 2 minutes = four missed beats. A committer waits at most twice
+    * this for a LIVE holder, then fails with
+    * [[WriterLease.ConcurrentWriterException]]. Package-visible for
+    * race specs. */
   @volatile private[catalog] var manifestLockTtlMs: Long = 2L * 60 * 1000
 
-  private def manifestLock(root: String): Path =
-    new Path(new Path(snapsDir(root), "_commits"), "manifest.lock")
-
-  private def readLockToken(fs: FileSystem, lock: Path): String =
-    try {
-      val in = fs.open(lock)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    } catch { case _: java.io.IOException => "" }
-
-  /** Acquire the manifest mutex: create-if-absent CAS on ONE lock file,
-    * then write a fencing token into it. A held lock whose mtime has
-    * aged past `ttlMs` (its holder heartbeats, so age means death or a
-    * freeze longer than the TTL) is broken and re-raced. Returns the
-    * token; [[commitManifest]] re-verifies it before its commit point
-    * so a frozen holder whose lock was broken aborts instead of
-    * overwriting the breaker's manifest. The verify-to-marker window
-    * is the inherent residual of lease-style locks without server-side
-    * fencing (the Delta/Iceberg catalog-commit problem). */
-  private def acquireManifestMutex(fs: FileSystem, root: String,
-      ttlMs: Long): String = {
-    val lock = manifestLock(root)
-    fs.mkdirs(lock.getParent)
-    val token = java.util.UUID.randomUUID().toString
-    while (true) {
-      if (SnapshotLake.atomicCreate(fs, lock)) {
-        val out = fs.create(lock, true) // ours: stamp the fencing token
-        out.write(token.getBytes("UTF-8")); out.close()
-        return token
-      }
-      val age =
-        try System.currentTimeMillis() -
-          fs.getFileStatus(lock).getModificationTime
-        catch { case _: java.io.FileNotFoundException => -1L } // freed
-      if (age >= ttlMs) fs.delete(lock, false) // stale: break + re-race
-      else Thread.sleep(20)
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  /** The [[WriterLease]] key that serializes manifest commits; its lease
+    * file is `_snapshots/_commits/manifest.writer.lease`. */
+  private def manifestLease(root: String): String =
+    new Path(snapCommitsDir(root), "manifest").toString
 
   /** Commit global snapshot N as snapshot N−1's pins overlaid with
     * `overlay` (the partitions this writer just committed) — O(touched
@@ -776,18 +666,37 @@ object PartitionedSnapshotLake {
     * writer that committed `p@1` and stalled before its manifest cannot
     * roll `p` back under another writer's later `p@2` manifest (whose
     * log entry is already pruned — readLatest would lose its rows).
-    * Commits serialize on the heartbeated manifest mutex, so snapshot numbers totally order
+    * Partition versions stranded by a crash between partition commits
+    * and the manifest are recovered by [[repairManifest]].
+    *
+    * Commits serialize on the manifest [[WriterLease]] (heartbeated;
+    * a live holder is waited for up to twice [[manifestLockTtlMs]]; a
+    * stale lease is renamed aside, and exactly one contender's rename
+    * of it succeeds), so snapshot numbers totally order
     * manifest CONTENT: each snapshot is exactly one commit applied to
     * the previous one, and a concurrent writer's half-finished
-    * partition commits can never leak into someone else's pins.
-    * Partition versions stranded by a crash between partition commits
-    * and the manifest are recovered by [[repairManifest]]. */
+    * partition commits can never leak into someone else's pins. The
+    * lease is FENCED twice, before the manifest write and before the
+    * marker ([[WriterLease.stillHeld]]): a holder that lost the lease —
+    * frozen past the stale horizon, or displaced by a contender that
+    * acted on an outdated stale stat — aborts instead of overwriting
+    * the new holder's manifest or committing a snapshot number the new
+    * holder owns. The residual is losing the lease after a check and
+    * before the step it guards (from the first check through the
+    * write, or from the second check to the marker): lease-style locks
+    * without server-side fencing cannot close it (the Delta/Iceberg
+    * catalog-commit problem). */
   private[catalog] def commitManifest(spark: SparkSession, root: String,
       overlay: Map[String, Long]): Long = {
     val fs = Fs.forPath(spark, root)
-    fs.mkdirs(snapsDir(root))
-    val token = acquireManifestMutex(fs, root, manifestLockTtlMs)
-    try SnapshotLake.withLockHeartbeat(fs, manifestLock(root)) {
+    val lease = manifestLease(root)
+    def fence(step: String): Unit =
+      if (!WriterLease.stillHeld(fs, lease))
+        throw new java.util.ConcurrentModificationException(
+          s"manifest lease at $root was taken over while held (writer " +
+            s"stalled past manifestLockTtlMs); aborting before the $step")
+    WriterLease.withLease(fs, lease, "commitManifest",
+        staleMs = manifestLockTtlMs, waitMs = 2 * manifestLockTtlMs) {
       val prev = latestSnapshot(spark, root)
       val n = prev.getOrElse(0L) + 1L
       val prevPins = prev.map(manifest(spark, root, _))
@@ -797,21 +706,16 @@ object PartitionedSnapshotLake {
       }
       val body = pins.toSeq.sortBy(_._1)
         .map { case (p, v) => s"$p\t$v" }.mkString("\n")
+      fence("manifest write")
       val out = fs.create(new Path(snapsDir(root), s"$n.manifest"), true)
       out.write(body.getBytes("UTF-8")); out.close()
-      // fencing check, then create-if-absent marker: if the mutex was
-      // broken while this writer was frozen, abort loudly rather than
-      // overwrite the breaker's committed snapshot
-      if (readLockToken(fs, manifestLock(root)) != token)
-        throw new java.util.ConcurrentModificationException(
-          s"manifest mutex at $root was broken while held (writer " +
-            "stalled past manifestLockTtlMs); aborting manifest commit")
+      fence("snapshot marker")
       if (!SnapshotLake.atomicCreate(fs,
         new Path(snapsDir(root), n.toString)))
         throw new IllegalStateException(
           s"snapshot marker $n already exists at $root — concurrent " +
             "manifest commit protocol violation")
-      // post-commit-point log pruning (still inside the mutex):
+      // post-commit-point log pruning (still under the lease):
       // entries this manifest's pins now cover are redundant — the
       // delta test (`v > pin`) ignores them — so the log stays
       // O(commits since the newest manifest). Best-effort: a crash
@@ -824,10 +728,6 @@ object PartitionedSnapshotLake {
           // the commit; vacuum re-sweeps covered entries
       }
       n
-    } finally {
-      // release only if still ours — never delete a breaker's lock
-      if (readLockToken(fs, manifestLock(root)) == token)
-        fs.delete(manifestLock(root), false)
     }
   }
 

@@ -52,16 +52,23 @@ import graft.operators.MergeOps
   *
   * At 100 TB each version is a full snapshot directory, which is the
   * right shape for the catalog tables this serves (the reference's
-  * exam/serie tables — GB-scale); a fact-scale lake would version
-  * per-partition manifests instead, which is this same protocol
-  * applied under each `part_date=` directory.
+  * exam/serie tables — GB-scale); the fact-scale lake
+  * ([[PartitionedSnapshotLake]]) versions per partition instead and
+  * runs this object's protocol steps under each `part_date=`
+  * directory: the version commit ([[commitVersion]]) and the retention
+  * sweep ([[sweep]]) exist here once and serve both lakes.
   */
 object SnapshotLake {
 
-  private def commitsDir(root: String) = new Path(root, "_commits")
+  private[catalog] def commitsDir(root: String) = new Path(root, "_commits")
   private def versionDir(root: String, v: Long) = new Path(root, s"v=$v")
-  private def lockPath(root: String, v: Long) =
+  private[catalog] def lockPath(root: String, v: Long) =
     new Path(commitsDir(root), s"$v.lock")
+  private[catalog] def markerPath(root: String, v: Long) =
+    new Path(commitsDir(root), v.toString)
+
+  /** A claim lock's file name: `<n>.lock` under `_commits`. */
+  private val LockName = "^(\\d+)\\.lock$".r
 
   /** Atomic create-if-absent — the commit protocol's CAS primitive.
     * `java.io.File.createNewFile` (O_CREAT|O_EXCL) for file:// because
@@ -142,15 +149,18 @@ object SnapshotLake {
     try body finally { beat.interrupt(); beat.join(1000) }
   }
 
-  /** Committed versions, ascending (empty if the table doesn't exist). */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = Fs.forPath(spark, root)
-    val dir = commitsDir(root)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
+  /** The numeric file names in `dir`, ascending; empty when `dir` does
+    * not exist. Both lakes' numbered axes are such a listing: a table's
+    * commit markers ([[versions]]) and a partitioned lake's snapshot
+    * markers ([[PartitionedSnapshotLake.snapshots]]). */
+  private[catalog] def numbered(fs: FileSystem, dir: Path): Seq[Long] =
+    try fs.listStatus(dir).toSeq.flatMap(_.getPath.getName.toLongOption)
       .sorted
-  }
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** Committed versions, ascending (empty if the table doesn't exist). */
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    numbered(Fs.forPath(spark, root), commitsDir(root))
 
   def latestVersion(spark: SparkSession, root: String): Option[Long] =
     versions(spark, root).lastOption
@@ -158,31 +168,38 @@ object SnapshotLake {
   /** Commit `df` as the next version; returns the new version number.
     * Multi-writer safe: the version number is claimed by lock-file CAS
     * BEFORE any data is written, so racing writers serialize into
-    * distinct versions (see the protocol in the class doc). */
-  def commit(spark: SparkSession, root: String, df: DataFrame): Long = {
-    val fs = Fs.forPath(spark, root)
+    * distinct versions (see the protocol in the class doc).
+    * mode=overwrite clobbers an orphan dir a crashed writer left at
+    * the same uncommitted version number. */
+  def commit(spark: SparkSession, root: String, df: DataFrame): Long =
+    commitVersion(Fs.forPath(spark, root), root)(dir =>
+      df.write.mode("overwrite").parquet(dir.toString))
+
+  /** The version-commit step of both lakes: claim the next version
+    * ([[claimVersion]]), `land` the data in its `v=n` dir, create the
+    * commit marker — create-if-absent, so an existing marker (a
+    * protocol violation) fails loudly instead of being overwritten —
+    * then release the claim. `bracket(n)` runs right before the marker
+    * and again right after it: the partitioned lake writes its
+    * commit-log entry there. The claim lock is heartbeated
+    * ([[withLockHeartbeat]]) for the whole step, so a concurrent
+    * vacuum's lock-TTL test never mistakes a long-running LIVE commit
+    * for crash residue, and it is released on EVERY exit: on success
+    * the marker exists first, on failure the freed number is safely
+    * re-claimable (`land` must clobber an orphan dir it finds). */
+  private[catalog] def commitVersion(fs: FileSystem, root: String,
+      bracket: Long => Unit = _ => ())(land: Path => Unit): Long = {
     fs.mkdirs(commitsDir(root))
     val n = claimVersion(fs, root,
-      () => latestVersion(spark, root).getOrElse(0L))
-    // the lock is released on EVERY exit: on success the marker exists
-    // first, on failure the freed number is safely re-claimable (its
-    // orphan data dir is clobbered by the next owner's overwrite).
-    // The heartbeat keeps the claim lock's mtime fresh for the whole
-    // write, so a concurrent vacuum's lock-TTL test never mistakes a
-    // long-running LIVE commit for crash residue.
+      () => numbered(fs, commitsDir(root)).lastOption.getOrElse(0L))
     try withLockHeartbeat(fs, lockPath(root, n)) {
-      // mode=overwrite clobbers an orphan dir a crashed (pre-lock-era)
-      // writer left at this same uncommitted version number
-      df.write.mode("overwrite").parquet(versionDir(root, n).toString)
-      // marker existence = the commit point. create-if-absent as a
-      // belt over claimVersion's ABA recheck: an existing marker here
-      // means a protocol violation — fail loudly, never overwrite a
-      // committed version
-      val marker = new Path(commitsDir(root), n.toString)
-      if (!atomicCreate(fs, marker))
+      land(versionDir(root, n))
+      bracket(n)
+      if (!atomicCreate(fs, markerPath(root, n)))
         throw new IllegalStateException(
           s"commit marker $n already exists at $root — concurrent " +
             "commit protocol violation, refusing to overwrite")
+      bracket(n)
     } finally releaseVersion(fs, root, n)
     n
   }
@@ -198,7 +215,7 @@ object SnapshotLake {
     * the read runs no Spark job. */
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
     val fs = Fs.forPath(spark, root)
-    require(fs.exists(new Path(commitsDir(root), v.toString)),
+    require(fs.exists(markerPath(root, v)),
       s"version $v is not committed at $root (rolled back, vacuumed, " +
         s"or never existed); committed: ${versions(spark, root)}")
     readKnownSchema(spark, Seq(versionDir(root, v)), None)
@@ -261,16 +278,16 @@ object SnapshotLake {
     val fs = Fs.forPath(spark, root)
     val vs = versions(spark, root)
     require(vs.contains(v), s"cannot roll back to uncommitted $v ($vs)")
-    vs.filter(_ > v).foreach { n =>
-      fs.delete(new Path(commitsDir(root), n.toString), false)
-    }
+    vs.filter(_ > v).foreach(n => fs.delete(markerPath(root, n), false))
   }
 
   /** Delete data dirs that are (a) committed but older than the last
     * `retain` versions — their markers go too, so reads past the
     * horizon fail loudly rather than half-read — or (b) uncommitted
     * orphans (crash leftovers / rollbacks) whose version is NOT under
-    * a recent claim lock. The latest version is never touched.
+    * a recent claim lock. The latest version is never touched. The
+    * deletes are [[sweep]], the retention sweep both lakes share; this
+    * vacuum only supplies its keep set.
     *
     * Live-writer safety under multi-writer commits: a lock younger
     * than `lockTtlMs` marks a possibly-IN-FLIGHT claim — its version
@@ -281,9 +298,12 @@ object SnapshotLake {
     * [[heartbeatIntervalMs]] = 30 s) for the whole commit write, so a
     * lock older than the TTL is crash residue (or a process frozen
     * longer than the TTL — the inherent lease bound) and is reclaimed
-    * together with its orphan dir. `lockTtlMs` therefore only needs to
-    * exceed the heartbeat cadence with slack for clock/FS skew, not
-    * the longest commit.
+    * together with its orphan dir. Ages are taken on the FILESYSTEM's
+    * clock ([[fsNow]]), the clock that stamped the lock mtimes, so a
+    * vacuum host whose clock runs ahead of the filesystem's never
+    * ages a live lock past the TTL. `lockTtlMs` therefore only needs
+    * to exceed the heartbeat cadence with slack, not the longest
+    * commit.
     *
     * READER-side hazard (locks protect writers only): a long-running
     * [[readVersion]] — or a [[commitMerge]] whose merge base is a lazy
@@ -297,38 +317,68 @@ object SnapshotLake {
       lockTtlMs: Long = 60L * 60 * 1000): Unit = {
     require(retain >= 1, "retain >= 1")
     val fs = Fs.forPath(spark, root)
-    val vs = versions(spark, root)
-    if (vs.isEmpty) return
-    val keep = vs.takeRight(retain).toSet
-    val now = System.currentTimeMillis()
-    val lockPat = "^(\\d+)\\.lock$".r
-    val (liveLocked, staleLocks) = {
-      val locks = fs.listStatus(commitsDir(root)).toSeq.flatMap { st =>
-        st.getPath.getName match {
-          case lockPat(n) => Some((n.toLong, st))
-          case _ => None
-        }
-      }
-      (locks.collect {
-        case (n, st) if now - st.getModificationTime < lockTtlMs => n
-      }.toSet,
-        locks.collect {
-          case (n, st) if now - st.getModificationTime >= lockTtlMs => st
-        })
-    }
-    vs.filterNot(keep).foreach { n =>
-      fs.delete(versionDir(root, n), true)
-      fs.delete(new Path(commitsDir(root), n.toString), false)
-    }
-    val latest = vs.last
-    val vPat = "^v=(\\d+)$".r
-    fs.listStatus(new Path(root)).foreach { st =>
+    if (fs.exists(commitsDir(root)))
+      sweep(fs, root, fsNow(fs, commitsDir(root)), lockTtlMs)(
+        _.keys.toSeq.sorted.takeRight(retain).toSet)
+  }
+
+  /** "Now" on the filesystem's clock: one throwaway file in `dir`,
+    * created and statted back. Every age a vacuum computes compares
+    * against FS-stamped mtimes, so its "now" must come from the same
+    * clock — a vacuum host running ahead of the namenode by more than
+    * `lockTtlMs` would otherwise delete a live writer's claim lock and
+    * its in-flight `v=` dir. */
+  private[catalog] def fsNow(fs: FileSystem, dir: Path): Long = {
+    val probe = new Path(dir, "clock")
+    fs.mkdirs(dir)
+    fs.create(probe, true).close()
+    try fs.getFileStatus(probe).getModificationTime
+    finally fs.delete(probe, false) // throwaway — never leave probe litter
+  }
+
+  /** The retention sweep of ONE versioned directory (a table root, or
+    * one partition of the partitioned lake), ages taken against `now`
+    * ([[fsNow]]):
+    *  - claim locks (`<n>.lock`) split into young (younger than
+    *    `lockTtlMs`: a possibly-live writer) and stale (crash residue);
+    *  - committed versions outside `keep(markerMtimes)` are deleted with
+    *    their markers — never the latest;
+    *  - uncommitted `v=` dirs below the latest that no young lock claims
+    *    (crash leftovers, rollbacks) are deleted;
+    *  - stale locks are dropped.
+    * `keep` maps each committed version to its marker's mtime — the
+    * only thing the two lakes' retention rules differ on. No-op on a
+    * directory with no committed version. */
+  private[catalog] def sweep(fs: FileSystem, root: String, now: Long,
+      lockTtlMs: Long)(keep: Map[Long, Long] => Set[Long]): Unit = {
+    val listing =
+      try fs.listStatus(commitsDir(root)).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val markers: Map[Long, Long] = listing.flatMap { st =>
+      st.getPath.getName.toLongOption.map(_ -> st.getModificationTime)
+    }.toMap
+    if (markers.isEmpty) return
+    val (young, stale) = listing.flatMap { st =>
       st.getPath.getName match {
-        case vPat(n) if !keep(n.toLong) && n.toLong < latest &&
-          !liveLocked(n.toLong) => fs.delete(st.getPath, true)
-        case _ => ()
+        case LockName(n) => Some(n.toLong -> st)
+        case _ => None
       }
+    }.partition { case (_, st) => now - st.getModificationTime < lockTtlMs }
+    val latest = markers.keys.max
+    val kept = keep(markers) + latest
+    markers.keys.filterNot(kept).foreach { v =>
+      fs.delete(versionDir(root, v), true)
+      fs.delete(markerPath(root, v), false)
     }
-    staleLocks.foreach(st => fs.delete(st.getPath, false))
+    val liveLocked = young.map(_._1).toSet
+    fs.listStatus(new Path(root)).foreach { st =>
+      val name = st.getPath.getName
+      if (name.startsWith("v="))
+        name.stripPrefix("v=").toLongOption.foreach { v =>
+          if (!kept(v) && v < latest && !liveLocked(v))
+            fs.delete(st.getPath, true)
+        }
+    }
+    stale.foreach { case (_, st) => fs.delete(st.getPath, false) }
   }
 }

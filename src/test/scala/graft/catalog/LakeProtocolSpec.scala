@@ -4,7 +4,9 @@ import java.net.URI
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -67,6 +69,179 @@ class SlowLogListingFs extends RawLocalFileSystem {
 }
 object SlowLogListingFs {
   val slowed: ThreadLocal[Boolean] = ThreadLocal.withInitial(() => false)
+}
+
+/** A local filesystem under the `skewfs` scheme whose reported mtimes
+  * lag the host clock by [[LaggingMtimeFs.LagMs]] (2 h): the shape of a
+  * vacuum host whose clock runs ahead of the filesystem's. Statuses are
+  * rebuilt as plain `FileStatus`es (see [[NoMtimeCountingFs]]). */
+class LaggingMtimeFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("skewfs:///")
+  override def getScheme: String = "file"
+  // the lag is taken from the file itself, so a status that passes
+  // through both overrides (listStatus stats each child) lags once
+  private def lag(st: FileStatus): FileStatus =
+    new FileStatus(st.getLen, st.isDirectory, st.getReplication,
+      st.getBlockSize, new java.io.File(st.getPath.toUri.getPath)
+        .lastModified - LaggingMtimeFs.LagMs, st.getPath)
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(lag)
+  override def getFileStatus(f: Path): FileStatus =
+    lag(super.getFileStatus(f))
+}
+object LaggingMtimeFs {
+  val LagMs: Long = 2L * 60 * 60 * 1000
+}
+
+/** A local filesystem under the `latchfs` scheme that sequences two
+  * manifest committers, A and B (roles set per thread in
+  * [[LatchingFs.role]]), through the stale-lock takeover race. The
+  * manifest lock is any `manifest*` file directly under
+  * `_snapshots/_commits`, whatever the lock implementation names it
+  * (takeover tombstones excluded). The schedule:
+  *  1. each committer's first stat of the lock while it is stale waits
+  *     for the other's — both then act on a stale stat;
+  *  2. B's takeover (a delete or rename of the lock) waits until A
+  *     holds a fresh lock of its own, stamped;
+  *  3. A's first listing of `_snapshots` after its stamp waits until B
+  *     holds (B stamped, then listed `_snapshots`);
+  *  4. A's manifest write waits until B has written its manifest and
+  *     read the lock back; that read of B's waits until A's call ends.
+  * A committer "writes" from its manifest create until its call ends
+  * ([[LatchingFs.end]]); [[LatchingFs.overlaps]] counts manifest
+  * creates made while the other committer writes. A wait that runs
+  * out is recorded in [[LatchingFs.timeouts]] and then goes on.
+  * Role C's deletes and renames of the lock fail: a holder that
+  * crashes in its release leaves the lock behind. `getScheme` reports
+  * `file`, so the lake's create-if-absent CAS keeps its atomic
+  * `File.createNewFile` path. */
+class LatchingFs extends RawLocalFileSystem {
+  import LatchingFs._
+  override def getUri: URI = URI.create("latchfs:///")
+  override def getScheme: String = "file"
+
+  override def getFileStatus(f: Path): FileStatus = {
+    val st = super.getFileStatus(f)
+    val r = role.get
+    if ((r == "A" || r == "B") && isLock(f) &&
+      System.currentTimeMillis() - st.getModificationTime > StaleMs &&
+      statedStale.add(r))
+      await("both stale stats", bothStale.countDown())(
+        bothStale.getCount == 0)
+    st
+  }
+
+  private def takeover(f: Path): Unit = role.get match {
+    case "C" if isLock(f) =>
+      throw new java.io.IOException("latchfs: lock release crashed")
+    case "B" if isLock(f) && !bTookOver.getAndSet(true) =>
+      await("A's fresh stamped lock", ())(
+        aStamped.get && localFile(f).length > 0)
+    case _ => ()
+  }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    takeover(f); super.delete(f, recursive)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    takeover(src); super.rename(src, dst)
+  }
+
+  // the lake's `create(path, overwrite)` reaches this overload, Spark's
+  // writers the one with a permission; both pass the same hook
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    created(f, overwrite)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    created(f, overwrite)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+
+  private def created(f: Path, overwrite: Boolean): Unit = {
+    val r = role.get
+    if (r == "A" || r == "B") {
+      if (isLock(f) && overwrite) // the holder's stamp
+        (if (r == "A") aStamped else bStamped).set(true)
+      if (f.getName.endsWith(".manifest")) {
+        if (r == "A")
+          await("B's manifest write + lock read", ())(bWrote.get)
+        if (writing(other(r)).get) overlaps.incrementAndGet()
+        writing(r).set(true)
+      }
+    }
+  }
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    if (f.getName == "_snapshots") role.get match {
+      case "A" if aStamped.get && !aListed.getAndSet(true) =>
+        await("B holding the lock", ())(bHolds.get)
+      case "B" if bStamped.get => bHolds.set(true)
+      case _ => ()
+    }
+    super.listStatus(f)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (role.get == "B" && isLock(f) && writing("B").get) {
+      bWrote.set(true)
+      await("A's call to end", ())(aDone.get)
+    }
+    super.open(f, bufferSize)
+  }
+}
+object LatchingFs {
+  import java.util.concurrent.atomic.AtomicBoolean
+  val role: ThreadLocal[String] = new ThreadLocal[String]
+  /** An aged lock is older than this. */
+  val StaleMs: Long = 30L * 60 * 1000
+  private val WaitMs = 30000L
+  @volatile private var bothStale =
+    new java.util.concurrent.CountDownLatch(2)
+  private val statedStale =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val aStamped, bStamped, bTookOver, aListed, bHolds, bWrote,
+    aDone = new AtomicBoolean(false)
+  private val writing = Map("A" -> new AtomicBoolean(false),
+    "B" -> new AtomicBoolean(false))
+  val overlaps = new AtomicLong(0)
+  val timeouts = new ConcurrentLinkedQueue[String]()
+
+  def reset(): Unit = {
+    bothStale = new java.util.concurrent.CountDownLatch(2)
+    statedStale.clear()
+    (Seq(aStamped, bStamped, bTookOver, aListed, bHolds, bWrote, aDone) ++
+      writing.values).foreach(_.set(false))
+    overlaps.set(0); timeouts.clear()
+  }
+
+  /** The committer in role `r` ended its call. */
+  def end(r: String): Unit = {
+    writing.get(r).foreach(_.set(false))
+    if (r == "A") aDone.set(true)
+  }
+
+  private def other(r: String) = if (r == "A") "B" else "A"
+  private def isLock(f: Path): Boolean =
+    f.getParent != null && f.getParent.getName == "_commits" &&
+      f.getParent.getParent != null &&
+      f.getParent.getParent.getName == "_snapshots" &&
+      f.getName.startsWith("manifest") && !f.getName.contains(".stale.")
+  private def localFile(f: Path) = new java.io.File(f.toUri.getPath)
+
+  /** Run `arrive`, then poll until `ready` or the wait runs out. */
+  private def await(what: String, arrive: => Unit)(
+      ready: => Boolean): Unit = {
+    arrive
+    val deadline = System.currentTimeMillis() + WaitMs
+    while (!ready && System.currentTimeMillis() < deadline)
+      Thread.sleep(5)
+    if (!ready) timeouts.add(s"${role.get} waiting for $what")
+  }
 }
 
 /** Lock-protocol and at-scale contracts of the snapshot lakes that the
@@ -182,7 +357,7 @@ class LakeProtocolSpec extends AnyFunSuite {
       df((1L, "2026-03-01", "a")), "id", "ts")
     // crashed holder: mutex exists, no heartbeat, mtime far in the past
     val mlock = new java.io.File(
-      s"$root/_snapshots/_commits/manifest.lock")
+      s"$root/_snapshots/_commits/manifest.writer.lease")
     mlock.getParentFile.mkdirs()
     assert(mlock.createNewFile())
     assert(mlock.setLastModified(
@@ -191,6 +366,90 @@ class LakeProtocolSpec extends AnyFunSuite {
       df((1L, "2026-03-01", "a2")), "id", "ts")
     assert(s2 == 2L, "commit did not break the stale manifest mutex")
     assert(!mlock.exists, "broken+released mutex must not linger")
+  }
+
+  test("two committers that both find the manifest lock stale: at most " +
+      "one writes a manifest at a time, and every commitMerge that " +
+      "returns has its batch in readLatest") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.latchfs.impl", classOf[LatchingFs].getName)
+    val prevDefault = Option(conf.get("fs.defaultFS"))
+    val dir = tmp()
+    def batch(id: Long, date: String, v: String) =
+      Seq((id, date, v)).toDF("id", "ts", "val")
+    LatchingFs.reset()
+    // two spellings of one root, so no in-process registry keyed by
+    // the root string can serialize the committers: the on-disk
+    // takeover is what is tested
+    conf.set("fs.defaultFS", "latchfs:///")
+    val (rootA, rootB) = (dir, s"latchfs://$dir")
+    try {
+      PartitionedSnapshotLake.commitMerge(spark, rootA,
+        batch(1L, "2027-09-01", "seed"), "id", "ts")
+      // a holder that crashed in its release leaves the manifest lock
+      // behind; aged past any stale horizon, it is a dead holder's lock
+      LatchingFs.role.set("C")
+      try scala.util.Try(
+        PartitionedSnapshotLake.commitManifest(spark, rootA, Map.empty))
+      finally LatchingFs.role.remove()
+      val locks = new java.io.File(dir, "_snapshots/_commits").listFiles()
+        .filter(_.getName.startsWith("manifest"))
+      assert(locks.nonEmpty, "the crashed holder left no manifest lock")
+      locks.foreach(f => assert(f.setLastModified(
+        System.currentTimeMillis() - 2 * LatchingFs.StaleMs)))
+
+      val returned = new ConcurrentLinkedQueue[String]()
+      def committer(r: String, root: String, id: Long, date: String) =
+        new Thread(() => {
+          LatchingFs.role.set(r)
+          try {
+            PartitionedSnapshotLake.commitMerge(spark, root,
+              batch(id, date, r), "id", "ts")
+            returned.add(r)
+          } catch { case scala.util.control.NonFatal(_) => () }
+          finally LatchingFs.end(r)
+        })
+      val threads = Seq(committer("A", rootA, 2L, "2027-09-02"),
+        committer("B", rootB, 3L, "2027-09-03"))
+      threads.foreach(_.start()); threads.foreach(_.join())
+      assert(LatchingFs.timeouts.isEmpty,
+        s"the race schedule did not run: ${LatchingFs.timeouts}")
+      assert(LatchingFs.overlaps.get == 0,
+        "two committers wrote a manifest at the same time — both held " +
+          "the manifest lock")
+      assert(!returned.isEmpty, "neither committer returned")
+      val latest = PartitionedSnapshotLake.readLatest(spark, rootA)
+        .select("val").as[String].collect().toSet
+      returned.forEach { r =>
+        assert(latest.contains(r),
+          s"committer $r returned, but readLatest lost its batch: $latest")
+      }
+    } finally prevDefault match {
+      case Some(v) => conf.set("fs.defaultFS", v)
+      case None => conf.unset("fs.defaultFS")
+    }
+  }
+
+  test("SnapshotLake.vacuum ages locks on the filesystem's clock: a " +
+      "just-claimed version survives a filesystem whose mtimes lag the " +
+      "vacuum host's clock by 2 h") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.skewfs.impl", classOf[LaggingMtimeFs].getName)
+    val root = tmp()
+    SnapshotLake.commit(spark, root, frame(1L -> "v1"))
+    // a live writer just claimed v2 and is writing it; another writer
+    // commits v3 past it
+    val lock = new java.io.File(s"$root/_commits/2.lock")
+    assert(lock.createNewFile())
+    frame(9L -> "inflight").write.parquet(s"$root/v=2")
+    assert(SnapshotLake.commit(spark, root, frame(1L -> "v3")) == 3L)
+    SnapshotLake.vacuum(spark, s"skewfs://$root", retain = 1) // TTL 1 h
+    assert(lock.exists(),
+      "vacuum aged a just-claimed lock on the host clock and deleted it")
+    assert(new java.io.File(s"$root/v=2").exists(),
+      "vacuum deleted a live writer's in-flight data")
+    assert(!new java.io.File(s"$root/v=1").exists(),
+      "the retention sweep did not run")
   }
 
   test("repairManifest picks up partition versions stranded by a crash " +
