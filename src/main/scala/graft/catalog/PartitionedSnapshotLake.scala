@@ -57,9 +57,9 @@ import graft.operators.MergeOps
   * lakes share (lock-CAS claim with the ABA recheck, heartbeated while
   * held) — so concurrent committers serialize into distinct versions:
   * no version is lost or overwritten. Manifest commits serialize on a
-  * [[WriterLease]] (`_snapshots/_commits/manifest.writer.lease`:
-  * heartbeated, token-fenced, a stale lease taken over by exactly one
-  * contender), so manifest N is ALWAYS manifest N−1 plus exactly one
+  * [[WriterLease]] (`_snapshots/_commits/manifest.writer.lease/`:
+  * numbered generations, heartbeated, a stale holder superseded by
+  * exactly one contender's next generation), so manifest N is ALWAYS manifest N−1 plus exactly one
   * commit's overlay — numbers order content. Retention runs
   * [[SnapshotLake.sweep]] per partition. Like SnapshotLake.commitMerge,
   * the merge itself is optimistic (no read-conflict detection across
@@ -655,7 +655,7 @@ object PartitionedSnapshotLake {
   @volatile private[catalog] var manifestLockTtlMs: Long = 2L * 60 * 1000
 
   /** The [[WriterLease]] key that serializes manifest commits; its lease
-    * file is `_snapshots/_commits/manifest.writer.lease`. */
+    * directory is `_snapshots/_commits/manifest.writer.lease/`. */
   private def manifestLease(root: String): String =
     new Path(snapCommitsDir(root), "manifest").toString
 
@@ -671,17 +671,16 @@ object PartitionedSnapshotLake {
     *
     * Commits serialize on the manifest [[WriterLease]] (heartbeated;
     * a live holder is waited for up to twice [[manifestLockTtlMs]]; a
-    * stale lease is renamed aside, and exactly one contender's rename
-    * of it succeeds), so snapshot numbers totally order
-    * manifest CONTENT: each snapshot is exactly one commit applied to
-    * the previous one, and a concurrent writer's half-finished
-    * partition commits can never leak into someone else's pins. The
-    * lease is FENCED twice, before the manifest write and before the
-    * marker ([[WriterLease.stillHeld]]): a holder that lost the lease —
-    * frozen past the stale horizon, or displaced by a contender that
-    * acted on an outdated stale stat — aborts instead of overwriting
-    * the new holder's manifest or committing a snapshot number the new
-    * holder owns. The residual is losing the lease after a check and
+    * stale holder is superseded by creating the next lease generation,
+    * which exactly one contender's create wins), so snapshot numbers
+    * totally order manifest CONTENT: each snapshot is exactly one
+    * commit applied to the previous one, and a concurrent writer's
+    * half-finished partition commits can never leak into someone
+    * else's pins. The lease is FENCED twice, before the manifest write
+    * and before the marker ([[WriterLease.stillHeld]]): a holder that
+    * lost the lease — frozen past the stale horizon and superseded —
+    * aborts instead of overwriting the new holder's manifest or
+    * committing a snapshot number the new holder owns. The residual is losing the lease after a check and
     * before the step it guards (from the first check through the
     * write, or from the second check to the marker): lease-style locks
     * without server-side fencing cannot close it (the Delta/Iceberg

@@ -70,25 +70,30 @@ object SnapshotLake {
   /** A claim lock's file name: `<n>.lock` under `_commits`. */
   private val LockName = "^(\\d+)\\.lock$".r
 
-  /** Atomic create-if-absent — the commit protocol's CAS primitive.
-    * `java.io.File.createNewFile` (O_CREAT|O_EXCL) for file:// because
-    * Hadoop's RawLocalFileSystem `create(overwrite=false)` is a
-    * non-atomic exists-then-open; HDFS-like filesystems get
+  /** Atomic create-if-absent — the commit protocol's CAS primitive —
+    * writing `content` in the creating stream. An O_CREAT|O_EXCL open
+    * (`Files.newOutputStream(CREATE_NEW)`) for file:// because Hadoop's
+    * RawLocalFileSystem `create(overwrite=false)` is a non-atomic
+    * exists-then-open; HDFS-like filesystems get
     * `fs.create(overwrite=false)`, which is atomic on the namenode. */
-  private[catalog] def atomicCreate(fs: FileSystem, p: Path): Boolean =
-    if (fs.getScheme == "file") {
-      val f = new java.io.File(p.toUri.getPath)
-      f.getParentFile.mkdirs()
-      f.createNewFile()
-    } else {
-      // ONLY already-exists means "lock taken" — any other IOException
-      // (permissions, network) must propagate, or the claim loop would
-      // spin forever mistaking a broken filesystem for contention
-      try { fs.create(p, false).close(); true }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
+  private[catalog] def atomicCreate(fs: FileSystem, p: Path,
+      content: Array[Byte] = Array.emptyByteArray): Boolean =
+    // ONLY already-exists means "taken" — any other IOException
+    // (permissions, network) must propagate, or a claim loop would spin
+    // forever mistaking a broken filesystem for contention
+    try {
+      val out =
+        if (fs.getScheme == "file") {
+          val f = new java.io.File(p.toUri.getPath)
+          f.getParentFile.mkdirs()
+          java.nio.file.Files.newOutputStream(f.toPath,
+            java.nio.file.StandardOpenOption.CREATE_NEW)
+        } else fs.create(p, false)
+      try out.write(content) finally out.close()
+      true
+    } catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case _: java.nio.file.FileAlreadyExistsException => false
     }
 
   /** Claim the next free version ≥ latest+1 via lock-file CAS; the
@@ -327,9 +332,11 @@ object SnapshotLake {
     * against FS-stamped mtimes, so its "now" must come from the same
     * clock — a vacuum host running ahead of the namenode by more than
     * `lockTtlMs` would otherwise delete a live writer's claim lock and
-    * its in-flight `v=` dir. */
+    * its in-flight `v=` dir. Each call probes its own uniquely named
+    * file, so concurrent vacuums of one lake never delete each other's
+    * probe between its create and its stat. */
   private[catalog] def fsNow(fs: FileSystem, dir: Path): Long = {
-    val probe = new Path(dir, "clock")
+    val probe = new Path(dir, s"clock.${java.util.UUID.randomUUID()}")
     fs.mkdirs(dir)
     fs.create(probe, true).close()
     try fs.getFileStatus(probe).getModificationTime

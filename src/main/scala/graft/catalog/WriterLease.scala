@@ -1,124 +1,68 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** Single-writer lease — the one heartbeated, token-fenced lock file
-  * in graft, built on the lake's lock-CAS primitive
-  * ([[SnapshotLake.atomicCreate]]). It serves:
+/** Single-writer lease over numbered generations, built on the lake's
+  * create-if-absent primitive ([[SnapshotLake.atomicCreate]]) the way
+  * [[SnapshotLake.claimVersion]] claims versions. It serves:
   *  - the MUTABLE stores (the streaming IVF vector store and the dedup
-  *    signature store), whose no-concurrent-writer contract was
-  *    previously prose only (r13 verdict ask #2). Every writer entry
-  *    point ([[graft.operators.SimilarityOps.extendVectorStore]],
+  *    signature store). Every writer entry point
+  *    ([[graft.operators.SimilarityOps.extendVectorStore]],
   *    `compactVectorStore`, `splitHotCells`, `mergeColdCells`,
-  *    `maintainVectorStore`, [[graft.operators.DedupOps.compactStore]])
-  *    claims `<store>.writer.lease` (a SIBLING of the store path, so
-  *    the rename-aside store swaps never move it) for the duration of
-  *    the call and releases it on every exit;
+  *    `maintainVectorStore`, [[graft.operators.DedupOps.compactStore]],
+  *    `DedupOps.probeAndExtend`) holds `<store>.writer.lease/` (a
+  *    SIBLING of the store path, so the rename-aside store swaps never
+  *    move it) for the duration of the call;
   *  - the partitioned lake's manifest commits
   *    ([[PartitionedSnapshotLake.commitManifest]]), which serialize on
-  *    `_snapshots/_commits/manifest.writer.lease` with a bounded wait
+  *    `_snapshots/_commits/manifest.writer.lease/` with a bounded wait
   *    and fence each commit step on [[stillHeld]].
   *
-  * Why a lease and not nothing: the stores' crash contracts
-  * (rename-aside swaps, guarded sweeps, replay-tolerant appends) make
-  * any SINGLE writer safe to kill anywhere, but two CONCURRENT
-  * writers can interleave destructively — e.g. two compacts both
-  * read the corpus, both write `.next`, and the second swap silently
-  * discards every row the first admitted after its read. The
-  * documented remedy was "run maintenance from the ingest job between
-  * batches"; this lease turns that prose into a checked invariant
-  * that fails LOUDLY ([[ConcurrentWriterException]]) instead of
-  * corrupting quietly.
+  * Why a lease: the stores' crash contracts (rename-aside swaps,
+  * guarded sweeps, replay-tolerant appends) make any SINGLE writer
+  * safe to kill anywhere, but two CONCURRENT writers interleave
+  * destructively (two compacts both read the corpus, and the second
+  * swap discards every row the first admitted). The lease makes that
+  * a loud [[ConcurrentWriterException]] instead of quiet corruption.
   *
-  * Protocol:
-  *  - CLAIM: atomic create-if-absent of the lease file (O_CREAT|O_EXCL
-  *    on file://, namenode-atomic `create(overwrite=false)` on
-  *    HDFS-likes — the lake's primitive, shared).
-  *  - HOLD: a daemon heartbeat refreshes the lease mtime every
-  *    [[SnapshotLake.heartbeatIntervalMs]] (30 s production), so a
-  *    long-running LIVE writer never looks stale.
-  *  - CONFLICT: a claim against a FRESH lease (mtime younger than
-  *    `staleMs`) throws [[ConcurrentWriterException]] naming the
-  *    holder — the caller must not proceed and must not retry blindly.
-  *    SAME-PROCESS contention never reaches the filesystem: a
-  *    `putIfAbsent` registration admits exactly one claiming/holding
-  *    thread per store, refusing siblings atomically (which also
-  *    closes the window where a sibling could mistake a half-finished
-  *    claim for reclaimable debris).
-  *  - TAKEOVER: a lease whose mtime is older than `staleMs` (default
-  *    [[DefaultStaleLeaseMs]], 10 min — 20 missed heartbeats) belongs
-  *    to a CRASHED holder. Reclaim is race-safe without delete-CAS:
-  *    the contender RENAMES the stale lease to a uuid tombstone
-  *    (atomic; exactly one contender's rename succeeds), deletes the
-  *    tombstone, and retries the claim — the losing contender's
-  *    rename fails and its re-claim then sees the winner's fresh
-  *    lease. Same hazard-horizon caveat as the lake's vacuum: a
-  *    process FROZEN longer than `staleMs` (STW pause, SIGSTOP) can
-  *    lose its lease while still alive; that bound is inherent to
-  *    lease-style locks. The stores' crash contracts make the
-  *    takeover itself safe — everything a crashed writer left behind
-  *    is debris the re-entered primitives heal. The thawed loser's
-  *    RELEASE is token-checked (it reads the stamp and deletes only
-  *    when the evidence supports the file being its own: its token,
-  *    or no readable token while its own stamp write is known to
-  *    have FAILED), so losing the lease cannot cascade into deleting
-  *    the new holder's fresh lease and silently admitting a third
-  *    writer — not even when the takeover's own best-effort stamp
-  *    write faulted and left the fresh lease unstamped (r15 verdict
-  *    ask #2). DOCUMENTED RESIDUAL (the one shape the evidence
-  *    cannot discriminate): when BOTH our stamp write AND the
-  *    takeover's stamp write failed, an unstamped fresh lease reads
-  *    as our own kill-at-stamp debris and the thawed writer deletes
-  *    the takeover's file — two independent stamp-write faults
-  *    bracketing a freeze past the stale horizon, on a filesystem
-  *    whose atomic create still works. Narrowing it further would
-  *    need the claim to be refused whenever the stamp write fails,
-  *    trading a doubly-faulted corner for unavailability on every
-  *    singly-faulted one.
-  *  - DEAD-PID FAST RECLAIM: the stamp carries pid+host+start; a
-  *    contender on the SAME host asks the kernel (`ProcessHandle.of`)
-  *    whether the holder still exists and reclaims a dead holder's
-  *    lease immediately instead of waiting out the horizon — a
-  *    crashed ingest job must not block its own restart for 10
-  *    minutes. The start field (the holder's
-  *    `ProcessHandle.info.startInstant`, epoch ms) makes the
-  *    identity check exact on a RECYCLED pid (r16 verdict ask #4): a
-  *    live process at the stamped pid whose start instant differs
-  *    from the stamped one is a DIFFERENT process wearing a dead
-  *    holder's pid, and the lease is reclaimed immediately. Old
-  *    stamps without the field — and kernels that surface no start
-  *    instant — keep the conservative horizon rules; foreign hosts
-  *    are never fast-reclaimed (no shared kernel).
-  *  - SAME-PROCESS RESTART: a failed call whose release delete ALSO
-  *    failed (one filesystem fault takes both — the kill-point fuzz's
-  *    exact shape) leaves a fresh-mtime lease; within this process an
-  *    in-memory registry is the ground truth, so the restart reclaims
-  *    immediately instead of waiting out the horizon. The reclaim is
-  *    TOKEN-CHECKED: each claim stamps a per-claim uuid into the lease
-  *    and the immediate reclaim only fires when the on-disk stamp
-  *    carries OUR token, or no readable token while our own stamp
-  *    write is known to have FAILED (the fuzz's kill-at-stamp shape —
-  *    only then can an unstamped file still be ours). A readable
-  *    FOREIGN stamp refuses even with the orphan marker set — and so
-  *    does an unreadable one when our stamp is known written: if our
-  *    retry comes later than the stale horizon, a foreign process may
-  *    have legitimately taken the lease over (possibly with its own
-  *    stamp write faulted), and our stamp's known success is the
-  *    evidence that an unstamped file is no longer our debris.
-  *    Cross-process restarts still wait — they have no shared memory
-  *    to consult.
-  *  - BOUNDED-WAIT CLAIM (opt-in): `withLease(waitMs = …)` retries a
-  *    refused claim every [[ClaimWaitPollMs]] until the window closes,
-  *    then throws; the default stays throw-immediately.
+  * Layout: the lease directory holds generation files named `g`
+  * (content: the holder's stamp `what pid= host= start=`) and release
+  * markers `g.released`. The highest generation on disk decides.
+  *  - CLAIM: list the directory once; the lease is claimable when
+  *    there is no generation, or the highest generation `g` is
+  *    released, older than `staleMs` (no heartbeat — default
+  *    [[DefaultStaleLeaseMs]], 10 min), this process's recorded orphan
+  *    (its release failed), or stamped by a dead or recycled pid on
+  *    this host. The claimant then creates `g+1` create-if-absent with
+  *    its stamp, re-lists to check that no higher generation predates
+  *    it (the [[SnapshotLake.claimVersion]] ABA recheck: a sweep may
+  *    have freed an old number), and deletes the generations below,
+  *    best-effort. Two contenders that judged `g` claimable both
+  *    target `g+1` and exactly one create succeeds; the loser re-lists
+  *    and finds a live holder. No takeover ever moves or deletes the
+  *    file a holder holds, so no live holder is displaced by a
+  *    contender acting on an outdated listing.
+  *  - HOLD: a daemon heartbeat touches the held generation file every
+  *    [[SnapshotLake.heartbeatIntervalMs]] (30 s), so a live writer
+  *    never looks stale. A process FROZEN longer than `staleMs` (STW
+  *    pause, SIGSTOP) can still be superseded — the bound inherent to
+  *    lease-style locks; [[stillHeld]] is the fence it checks.
+  *  - RELEASE: create `g.released` for the holder's own generation;
+  *    reads nothing. A superseded holder marks a generation no claim
+  *    reads.
+  *  - SAME-PROCESS contention never reaches the filesystem: a
+  *    `putIfAbsent` registration admits one claiming or holding thread
+  *    per store string.
+  *  - BOUNDED WAIT (opt-in): `withLease(waitMs = …)` retries a refused
+  *    claim every [[ClaimWaitPollMs]] until the window closes.
   *  - REENTRANT per thread: [[graft.operators.SimilarityOps
-  *    .maintainVectorStore]] claims once and the three primitives it
-  *    sequences re-enter without touching the filesystem (a
-  *    thread-local held-set keyed by the store string).
+  *    .maintainVectorStore]] claims once and the primitives it
+  *    sequences re-enter without touching the filesystem.
   *
-  * READERS NEVER LOCK — probes stay zero-coordination, exactly like
-  * the lake's readers; the probe-side safety against an in-flight
+  * READERS NEVER LOCK: the probe-side safety against an in-flight
   * maintenance writer is the rename-aside swap plus the per-(q,id)
-  * candidate collapse, both spec-pinned in VectorStoreSpec. */
+  * candidate collapse, both spec-pinned in VectorStoreSpec;
+  * [[holderIsLive]] lets readers leave a live writer's swap alone. */
 object WriterLease {
 
   /** A live concurrent writer holds the store's lease. The caller
@@ -127,205 +71,106 @@ object WriterLease {
   class ConcurrentWriterException(msg: String)
     extends IllegalStateException(msg)
 
-  /** Takeover horizon: a lease this stale (no heartbeat for 20
+  /** Takeover horizon: a generation this stale (no heartbeat for 20
     * production beat intervals) is a crashed holder's residue. */
   val DefaultStaleLeaseMs: Long = 10L * 60 * 1000
 
-  /** Claim attempts before giving up — each non-throwing retry means
-    * the observed lease VANISHED or went stale between stat and act
-    * (a racing release/takeover), so a tiny bound suffices; exceeding
-    * it means the filesystem is misbehaving, which must surface. */
+  /** Claim attempts before giving up — each retry means another
+    * claimant created the generation this one targeted, and the next
+    * listing normally shows it live; exceeding the bound means the
+    * filesystem is misbehaving, which must surface. */
   private val MaxClaimAttempts = 5
-
-  def leasePath(store: String): Path = new Path(store + ".writer.lease")
-
-  /** Store keys this THREAD currently holds, with the claim that
-    * holds each — the reentrancy set, and what [[stillHeld]] checks
-    * the disk against. Keyed by the store string as passed (all call
-    * sites of one store pass the same path string through the public
-    * API). */
-  private val held =
-    new ThreadLocal[scala.collection.mutable.Map[String, Claim]] {
-      override def initialValue()
-          : scala.collection.mutable.Map[String, Claim] =
-        scala.collection.mutable.Map.empty
-    }
-
-  /** Whether the calling thread still holds `store`'s lease ON DISK:
-    * it holds a claim on `store` and the lease file carries that
-    * claim's token. False once a takeover replaced the lease (this
-    * holder was frozen past the stale horizon, or a contender acted on
-    * an outdated stat of a stale lease) — the fence a holder checks
-    * before each step a displaced holder must not take. An unreadable
-    * stamp reads as not held. */
-  private[catalog] def stillHeld(fs: FileSystem, store: String): Boolean =
-    held.get().get(store).exists { c =>
-      readStamp(fs, leasePath(store)).flatMap(tokenOf).contains(c.token)
-    }
-
-  /** Stores whose lease is held by a live call SOMEWHERE in this
-    * process (any thread) — the in-process ground truth the on-disk
-    * mtime horizon only approximates across processes. */
-  private val liveInProcess =
-    new java.util.concurrent.ConcurrentHashMap[String, Thread]()
-
-  /** What a claim knows about the lease file it created: the per-claim
-    * token, and whether the best-effort stamp write that carries it
-    * VERIFIABLY reached the disk. `stamped` is the release's and the
-    * orphan check's discriminator for an UNREADABLE stamp: when our
-    * stamp is known to be on disk, a file with no readable token
-    * cannot be ours (it is a takeover whose own stamp write failed, or
-    * a transient read fault — either way not provably ours); only when
-    * our stamp write itself failed can an unstamped lease still be our
-    * file. */
-  private[catalog] final case class Claim(token: String, stamped: Boolean)
-
-  /** Stores where THIS process created a lease file that may still be
-    * on disk, mapped to that claim's [[Claim]] record: set at claim,
-    * cleared only when the release delete completed without throwing
-    * (a non-throwing delete means the file is gone — deleted by us, or
-    * already absent). A fresh lease at a marked store with no
-    * [[liveInProcess]] holder and a stamp carrying our token (or no
-    * readable stamp, WHEN our own stamp write is known to have failed)
-    * is OUR OWN crashed call's debris — the fault that killed the
-    * writer body also killed the release delete in the finally
-    * (exactly what the maintenance kill-point fuzz injects, and what a
-    * mid-batch filesystem brown-out does in production) — and a
-    * SAME-PROCESS restart may reclaim it immediately instead of
-    * waiting out the cross-process horizon. A readable FOREIGN stamp
-    * under the marker means a cross-process stale takeover beat our
-    * retry; that lease is live and must be refused — and so must an
-    * UNREADABLE stamp when our own stamp write succeeded (the r15
-    * residual window: a takeover whose stamp write faulted leaves a
-    * fresh unstamped lease that is NOT ours). */
-  private val mayHaveOrphan =
-    new java.util.concurrent.ConcurrentHashMap[String, Claim]()
-
-  /** Whether an on-disk stamp token is consistent with `marker` being
-    * OUR orphan: a readable token must MATCH; an unreadable one is
-    * only acceptably ours when our own stamp write failed. */
-  private def couldBeOurOrphan(marker: Claim,
-      stampToken: Option[String]): Boolean = stampToken match {
-    case Some(t) => t == marker.token
-    case None => !marker.stamped
-  }
 
   /** Poll interval for [[withLease]]'s bounded-wait claim. */
   private[catalog] val ClaimWaitPollMs: Long = 50L
 
+  def leasePath(store: String): Path = new Path(store + ".writer.lease")
+
+  private def genPath(lease: Path, g: Long) = new Path(lease, g.toString)
+
+  private val ReleasedName = """^(\d+)\.released$""".r
+
+  /** Generations this THREAD holds, by store key — the reentrancy set
+    * and what [[stillHeld]] checks the disk against. Keyed by the
+    * store string as passed. */
+  private val held =
+    new ThreadLocal[scala.collection.mutable.Map[String, Long]] {
+      override def initialValue(): scala.collection.mutable.Map[String, Long] =
+        scala.collection.mutable.Map.empty
+    }
+
+  /** The thread claiming or holding each store's lease in this
+    * process. */
+  private val liveInProcess =
+    new java.util.concurrent.ConcurrentHashMap[String, Thread]()
+
+  /** The generation this process last claimed per store, until its
+    * release marker is written: a crashed call whose release failed
+    * too leaves it unreleased, and a same-process restart reclaims it
+    * at once instead of waiting out the horizon. Generations start at
+    * 1, so 0 reads as "none". */
+  private val orphans =
+    new java.util.concurrent.ConcurrentHashMap[String, Long]()
+
+  /** Whether the calling thread holds `store`'s lease ON DISK: the
+    * highest generation is the one it claimed, and is not released.
+    * False once a claimant superseded it (this holder was frozen past
+    * the stale horizon) — the fence a holder checks before each step a
+    * superseded holder must not take. */
+  private[catalog] def stillHeld(fs: FileSystem, store: String): Boolean =
+    held.get().get(store).exists { g =>
+      top(listing(fs, leasePath(store))).exists(t => t.gen == g && !t.released)
+    }
+
   /** Run `body` holding the store's writer lease; claim on entry,
     * heartbeat while running, release on every exit. Reentrant within
-    * the owning thread. Throws [[ConcurrentWriterException]] if a
-    * LIVE writer (fresh lease) holds the store.
-    *
-    * `waitMs` (r15 verdict ask #5): with the default 0 a live
-    * conflict throws IMMEDIATELY — the spec'd semantics every writer
-    * entry point relies on (fail loudly, never interleave). A
-    * positive `waitMs` bounds a wait-and-retry instead: the claimant
-    * re-tries (in-process and on-disk) every [[ClaimWaitPollMs]]
-    * until it wins or the window closes, then throws the same
-    * [[ConcurrentWriterException]]. Operational use: two jobs sharing
-    * a store on a known cadence (a cron compact racing an ingest
-    * batch's maintenance trigger) queue for one cycle instead of
-    * crashing the later job. The wait applies ONLY to the claim
-    * phase — exceptions from `body` (including a nested claim on a
-    * DIFFERENT store) propagate untouched and never re-run the
-    * body. */
+    * the owning thread. With the default `waitMs = 0` a live holder
+    * makes the claim throw [[ConcurrentWriterException]] at once; a
+    * positive `waitMs` retries the claim (in-process and on disk)
+    * every [[ClaimWaitPollMs]] until it wins or the window closes,
+    * then throws the same exception. The wait covers the claim only:
+    * exceptions from `body` propagate untouched. */
   def withLease[T](fs: FileSystem, store: String, what: String,
       staleMs: Long = DefaultStaleLeaseMs, waitMs: Long = 0L)
       (body: => T): T = {
     val mine = held.get()
     if (mine.contains(store)) return body // reentrant hold
     val lease = leasePath(store)
-    val deadline = System.currentTimeMillis() + math.max(0L, waitMs)
-    // claim phase, bounded-wait: loop register+claim; a conflict
-    // inside the window sleeps and retries, past it rethrows. Kept
-    // OUTSIDE the body's try so a ConcurrentWriterException thrown by
-    // the body itself can never be mistaken for claim contention.
-    var claimed: Claim = null
-    while (claimed == null) {
-      try claimed = registerAndClaim(fs, lease, store, what, staleMs)
+    val start = System.currentTimeMillis()
+    val deadline = // saturated: waitMs = Long.MaxValue waits forever
+      if (waitMs > Long.MaxValue - start) Long.MaxValue
+      else start + math.max(0L, waitMs)
+    var g = 0L
+    while (g == 0L) {
+      try g = registerAndClaim(fs, lease, store, what, staleMs)
       catch {
         case e: ConcurrentWriterException =>
           val now = System.currentTimeMillis()
-          if (waitMs <= 0L || now >= deadline) throw e
-          Thread.sleep(
-            math.min(ClaimWaitPollMs, math.max(1L, deadline - now)))
+          if (now >= deadline) throw e
+          Thread.sleep(math.min(ClaimWaitPollMs, deadline - now))
       }
     }
     try {
-      mine(store) = claimed
-      try SnapshotLake.withLockHeartbeat(fs, lease)(body)
+      mine(store) = g
+      try SnapshotLake.withLockHeartbeat(fs, genPath(lease, g))(body)
       finally {
         mine -= store
-        // release: TOKEN-CHECKED (r14 verdict ask #2). A writer FROZEN
-        // past the stale horizon (STW pause, SIGSTOP) can lose its
-        // lease to a takeover while still alive; when it thaws, an
-        // UNCONDITIONAL delete here would destroy the NEW holder's
-        // fresh lease and silently re-open the door to a third writer.
-        // So read the stamp first and delete only when it is provably
-        // OURS: it carries OUR claim's token, or it carries no
-        // readable token AND our own stamp write is known to have
-        // failed (then the unstamped file can only be ours). An
-        // unreadable token with OUR stamp known on disk is NOT
-        // deletable (r15 residual window, closed r16): a takeover
-        // whose best-effort stamp write faulted leaves a fresh
-        // UNSTAMPED lease, and deleting it would re-admit the third
-        // writer the token check exists to block. A readable FOREIGN
-        // token is the takeover's positive evidence — log, leave the
-        // new holder's lease intact, and CLEAR the orphan marker (our
-        // own file is provably gone: renamed to a tombstone by the
-        // takeover). An UNREADABLE token clears nothing (r16 advice):
-        // the unreadable read may equally be a transient fault on our
-        // OWN still-on-disk lease, and dropping the marker would
-        // forfeit the same-process fast reclaim — every future
-        // claimant would wait the full horizon for what is our own
-        // debris. Keeping it is safe in both worlds: a later claim
-        // re-reads the stamp, reclaims on OUR token, and refuses on a
-        // foreign one (couldBeOurOrphan refuses unreadable-with-
-        // stamped=true too, so a takeover's unstamped lease stays
-        // protected). Declining the delete on a transient stamp-read
-        // fault degrades to the horizon wait — availability, not
-        // safety. The read→delete gap is a far narrower rewind of
-        // the same inherent freeze hazard (ms, not a whole writer
-        // call) and the claim side's token check bounds its damage.
-        // ORDER: the check+delete runs while this thread is STILL the
-        // registered in-process holder — dropping the registration
-        // first would open a window where a sibling thread
-        // orphan-reclaims the not-yet-deleted lease and our delayed
-        // delete then destroys the SIBLING's fresh lease.
+        // runs while this thread is still the registered in-process
+        // holder, so no sibling thread claims before the marker lands
         try {
-          val stampToken = readStamp(fs, lease).flatMap(tokenOf)
-          if (couldBeOurOrphan(claimed, stampToken)) {
-            fs.delete(lease, false)
-            mayHaveOrphan.remove(store): Unit
-          } else {
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"writer lease $lease now carries a " +
-                stampToken.fold("token we cannot read (and ours is " +
-                  "known on disk)")(_ => "FOREIGN token") +
-                s" — this '$what' writer was frozen past the stale " +
-                "horizon and lost the lease to a takeover (or the " +
-                "stamp read faulted transiently); leaving the lease " +
-                "file intact")
-            // clear the marker ONLY on a readable foreign token
-            if (stampToken.isDefined) mayHaveOrphan.remove(store): Unit
-          }
-        } catch { case _: java.io.IOException => () }
+          SnapshotLake.atomicCreate(fs, new Path(lease, s"$g.released"))
+          orphans.remove(store, g): Unit
+        } catch { case _: java.io.IOException => () } // stays an orphan
       }
     } finally
       liveInProcess.remove(store, Thread.currentThread()): Unit
   }
 
   /** One claim attempt: register this thread as the in-process holder
-    * (atomic putIfAbsent — in-process contention resolves here,
-    * without a filesystem race, and the orphan-marker reclaim in
-    * claim() can never fire against a SIBLING thread's half-finished
-    * claim, whose registration is already visible), then claim on
-    * disk. Unregisters on ANY claim failure so a bounded-wait retry
-    * or a different thread can claim next. */
+    * (atomic putIfAbsent), then claim on disk; unregisters on any
+    * claim failure so a retry or another thread can claim next. */
   private def registerAndClaim(fs: FileSystem, lease: Path,
-      store: String, what: String, staleMs: Long): Claim = {
+      store: String, what: String, staleMs: Long): Long = {
     val prev = liveInProcess.putIfAbsent(store, Thread.currentThread())
     if (prev != null)
       throw new ConcurrentWriterException(
@@ -335,263 +180,187 @@ object WriterLease {
           "single-writer")
     var ok = false
     try {
-      val c = claim(fs, lease, store, what, staleMs)
+      val g = claim(fs, lease, store, what, staleMs)
       ok = true
-      c
+      g
     } finally
       if (!ok) liveInProcess.remove(store, Thread.currentThread()): Unit
   }
 
-  /** Read the lease stamp FULLY (loop to EOF/capacity): a single
-    * read() may legally return short on HDFS-likes, and a stamp
-    * truncated before its `token=` would read as "no token" — exactly
-    * the evidence the orphan check and the token-checked release need
-    * intact. None on any fault (unreadable ≠ foreign). */
-  private def readStamp(fs: FileSystem, lease: Path): Option[String] =
+  /** One listing of the lease directory; empty when it does not
+    * exist. */
+  private def listing(fs: FileSystem, lease: Path): Seq[FileStatus] =
+    try fs.listStatus(lease).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** The generation a generation file or release marker belongs to. */
+  private def genOf(st: FileStatus): Option[Long] =
+    st.getPath.getName match {
+      case ReleasedName(g) => Some(g.toLong)
+      case name => name.toLongOption
+    }
+
+  /** The highest generation in a listing: its number, its generation
+    * file (absent only when deleted by hand), and whether it is
+    * released. */
+  private final case class Top(gen: Long, file: Option[FileStatus],
+      released: Boolean)
+
+  private def top(ls: Seq[FileStatus]): Option[Top] =
+    ls.flatMap(genOf).maxOption.map { g =>
+      Top(g, ls.find(_.getPath.getName == g.toString),
+        ls.exists(_.getPath.getName == s"$g.released"))
+    }
+
+  /** Why the highest generation may be superseded, or None while its
+    * holder is live: released, older than `staleMs`, this process's
+    * orphan, or a dead or recycled same-host pid. */
+  private def vacancy(fs: FileSystem, lease: Path, store: String, t: Top,
+      staleMs: Long): Option[String] = {
+    val age = t.file.fold(Long.MaxValue)(f =>
+      System.currentTimeMillis() - f.getModificationTime)
+    if (t.released) Some("released")
+    else if (age > staleMs)
+      Some(s"stale: age $age ms > $staleMs ms — crashed holder")
+    else if (orphans.getOrDefault(store, 0L) == t.gen)
+      Some("this process's orphan: a failed call's release failed too")
+    else readStamp(fs, genPath(lease, t.gen))
+      .filter(isDeadLocalHolder)
+      .map(s => s"dead same-host holder [$s]")
+  }
+
+  /** Claim the next generation; returns its number. */
+  private def claim(fs: FileSystem, lease: Path, store: String,
+      what: String, staleMs: Long): Long = {
+    var attempt = 0
+    while (attempt < MaxClaimAttempts) {
+      attempt += 1
+      val prev = top(listing(fs, lease))
+      val why = prev.map(t => vacancy(fs, lease, store, t, staleMs)
+        .getOrElse(throw liveHolder(fs, lease, t, what, staleMs)))
+      val g = prev.fold(1L)(_.gen + 1)
+      if (SnapshotLake.atomicCreate(fs, genPath(lease, g), stamp(what))) {
+        val ls = listing(fs, lease)
+        if (top(ls).exists(_.gen == g)) {
+          orphans.put(store, g)
+          why.filter(_ != "released").foreach(w =>
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"took over writer lease $lease at generation $g for " +
+                s"'$what' (generation ${g - 1}: $w)"))
+          ls.filter(genOf(_).exists(_ < g)).foreach(st =>
+            try fs.delete(st.getPath, false)
+            catch { case _: java.io.IOException => () })
+          return g
+        }
+        // a higher generation predates our create (our listing was
+        // older than the sweep that freed `g`): ours is debris
+        try fs.delete(genPath(lease, g), false)
+        catch { case _: java.io.IOException => () }
+      }
+    }
+    throw new IllegalStateException(
+      s"could not claim writer lease $lease after $MaxClaimAttempts " +
+        "attempts — generations keep appearing, which points at " +
+        "filesystem misbehavior, not contention")
+  }
+
+  private def liveHolder(fs: FileSystem, lease: Path, t: Top, what: String,
+      staleMs: Long): ConcurrentWriterException = {
+    val age = t.file.fold(0L)(f =>
+      System.currentTimeMillis() - f.getModificationTime)
+    new ConcurrentWriterException(
+      s"store writer lease $lease is held by a LIVE writer " +
+        s"[${readStamp(fs, genPath(lease, t.gen)).getOrElse("(unstamped)")}] " +
+        s"(generation ${t.gen}, age $age ms ≤ stale horizon $staleMs ms); " +
+        s"refusing to run '$what' concurrently — the mutable stores are " +
+        "single-writer")
+  }
+
+  /** The holder stamp a claim writes into its generation file. The
+    * start field (the process's start instant, epoch ms, when the
+    * kernel exposes one) makes the dead-pid check exact on a recycled
+    * pid. */
+  private def stamp(what: String): Array[Byte] = {
+    val me = ProcessHandle.current()
+    val start = startMillisOf(me).fold("")(ms => s"start=$ms ")
+    (s"$what pid=${me.pid()} " +
+      s"host=${java.net.InetAddress.getLocalHost.getHostName} $start")
+      .getBytes("UTF-8")
+  }
+
+  /** Read a generation's stamp fully (a single read() may return short
+    * on HDFS-likes). None on any fault or an empty file. */
+  private def readStamp(fs: FileSystem, gen: Path): Option[String] =
     try {
-      val in = fs.open(lease)
+      val in = fs.open(gen)
       try {
         val buf = new Array[Byte](512)
         var off = 0
         var n = in.read(buf, 0, buf.length)
         while (n > 0) {
           off += n
-          n = if (off < buf.length)
-            in.read(buf, off, buf.length - off) else 0
+          n = if (off < buf.length) in.read(buf, off, buf.length - off)
+            else 0
         }
         if (off > 0) Some(new String(buf, 0, off, "UTF-8")) else None
       } finally in.close()
     } catch { case _: java.io.IOException => None }
 
-  /** The `token=` tail of a stamp, if present — `lastIndexOf` so a
-    * `what` string containing "token=" cannot shadow the real one
-    * (the token is always the stamp's final field). */
-  private def tokenOf(stamp: String): Option[String] = {
-    val i = stamp.lastIndexOf("token=")
-    if (i >= 0) Some(stamp.substring(i + "token=".length).trim) else None
-  }
-
-  /** pid/host fields of a stamp (the claim always writes them in this
-    * order before the token). */
   private val PidHost = """ pid=(\d+) host=(\S+) """.r.unanchored
 
-  /** Optional start-instant field (epoch ms) a claim stamps after
-    * host — absent in pre-r16 stamps, which keep horizon rules. */
+  /** Optional start-instant field (epoch ms); stamps without it keep
+    * horizon rules. */
   private val StartField = """ start=(\d+) """.r.unanchored
 
-  /** The holder process's start instant as epoch ms, if the kernel
-    * exposes one (it may not — some container/proc configurations
-    * return an empty Optional, and the check then stays
-    * conservative). */
+  /** The process's start instant as epoch ms, if the kernel exposes
+    * one. */
   private def startMillisOf(h: ProcessHandle): Option[Long] = {
     val si = h.info().startInstant()
     if (si.isPresent) Some(si.get().toEpochMilli) else None
   }
 
-  /** Whether a stamped holder is a process on THIS host that the
-    * kernel says no longer exists. Conservative: foreign hosts and
-    * unparseable stamps read as not-dead; a live pid with no start
-    * evidence on either side reads as not-dead. A RECYCLED pid is
-    * detected exactly when both sides carry a start instant (r16
-    * verdict ask #4): the stamp records the claimant's
-    * `ProcessHandle.info.startInstant` at claim time, and a live
-    * process at that pid whose start instant DIFFERS is a different
-    * process wearing a dead holder's pid — dead for lease purposes,
-    * reclaim now instead of degrading to the 10-minute horizon. */
-  private def isDeadLocalHolder(stamp: Option[String]): Boolean =
-    stamp.exists { s =>
-      s match {
-        case PidHost(pid, host) =>
-          host == java.net.InetAddress.getLocalHost.getHostName &&
-            pid != ProcessHandle.current().pid().toString &&
-            scala.util.Try {
-              val h = ProcessHandle.of(pid.toLong)
-              if (!(h.isPresent && h.get().isAlive)) true
-              else {
-                val stampedStart = s match {
-                  case StartField(ms) => Some(ms.toLong)
-                  case _ => None
-                }
-                (stampedStart, startMillisOf(h.get())) match {
-                  case (Some(was), Some(now)) => was != now // recycled
-                  case _ => false // no start evidence: horizon rules
-                }
+  /** Whether a stamp names a process on THIS host that no longer
+    * exists, or whose pid now belongs to a process with a different
+    * start instant (recycled). Conservative: foreign hosts, our own
+    * pid, unreadable stamps and a live pid without start evidence on
+    * both sides read as not dead. */
+  private def isDeadLocalHolder(stamp: String): Boolean =
+    stamp match {
+      case s @ PidHost(pid, host) =>
+        host == java.net.InetAddress.getLocalHost.getHostName &&
+          pid != ProcessHandle.current().pid().toString &&
+          scala.util.Try {
+            val h = ProcessHandle.of(pid.toLong)
+            if (!(h.isPresent && h.get().isAlive)) true
+            else {
+              val stampedStart = s match {
+                case StartField(ms) => Some(ms.toLong)
+                case _ => None
               }
-            }.getOrElse(false)
-        case _ => false
-      }
+              (stampedStart, startMillisOf(h.get())) match {
+                case (Some(was), Some(now)) => was != now // recycled
+                case _ => false // no start evidence: horizon rules
+              }
+            }
+          }.getOrElse(false)
+      case _ => false
     }
 
-  /** Whether the store's lease belongs to a writer that is LIVE as far
-    * as this process can observe — the READ paths' guard: a reader
-    * that finds rename-aside swap debris must not "heal" an IN-FLIGHT
-    * swap out from under a live maintenance writer (the roll-forward
-    * rename would steal the writer's own second rename). Never locks,
-    * never mutates — a bounded stat/read. Decision ladder, most exact
-    * first: the in-process registry (a live call HERE), then our own
-    * orphan marker (our crashed call's debris is not a live writer),
-    * then the stamp's pid asked of the kernel (same host only), then
-    * the mtime horizon. */
+  /** Whether the store's lease is held by a writer that is LIVE as far
+    * as this process can observe — the read paths' guard: a reader
+    * that finds rename-aside swap debris must not heal an IN-FLIGHT
+    * swap out from under a live writer. Never locks, never mutates.
+    * The in-process registry answers first (this thread's own hold is
+    * not a foreign writer: writers heal swap debris under their own
+    * lease); otherwise the claim's rule is applied to the highest
+    * generation. */
   private[graft] def holderIsLive(fs: FileSystem, store: String,
       staleMs: Long = DefaultStaleLeaseMs): Boolean = {
     val inProc = liveInProcess.get(store)
-    // OUR OWN held lease is not a foreign live writer: a writer's
-    // entry points heal swap debris under their own lease (the
-    // probeAndExtend shape — lease claimed, THEN the shared body's
-    // read-side heal runs), and answering "live" here would make a
-    // writer refuse to heal the very debris it is responsible for
     if (inProc eq Thread.currentThread()) return false
     if (inProc != null) return true
     val lease = leasePath(store)
-    val st =
-      try fs.getFileStatus(lease)
-      catch { case _: java.io.FileNotFoundException => return false }
-    if (System.currentTimeMillis() - st.getModificationTime > staleMs)
-      return false
-    val stamp = readStamp(fs, lease)
-    val stampToken = stamp.flatMap(tokenOf)
-    val ourDebris = Option(mayHaveOrphan.get(store))
-      .exists(couldBeOurOrphan(_, stampToken))
-    !ourDebris && !isDeadLocalHolder(stamp)
-  }
-
-  /** Claim the lease, returning the per-claim token stamped into it
-    * (the release compares the on-disk stamp against it before
-    * deleting) plus whether the stamp write verifiably succeeded. */
-  private def claim(fs: FileSystem, lease: Path, store: String,
-      what: String, staleMs: Long): Claim = {
-    var attempt = 0
-    while (attempt < MaxClaimAttempts) {
-      attempt += 1
-      if (SnapshotLake.atomicCreate(fs, lease)) {
-        // the marker (with this claim's token, stamped=false until the
-        // write below is KNOWN complete) precedes the (best-effort,
-        // failure-prone) stamp write: any exit from here on may leave
-        // the file behind
-        val token = java.util.UUID.randomUUID().toString
-        mayHaveOrphan.put(store, Claim(token, stamped = false))
-        // we own the file — stamp holder info for the loser's error
-        // message and the token for same-process orphan discrimination
-        // and the token-checked release (best-effort: the CLAIM is the
-        // empty file's existence, not this content)
-        val stamped =
-          try {
-            // start= (our own startInstant, epoch ms) makes the dead-
-            // pid check exact on pid recycling; written only when the
-            // kernel exposes one, and readers treat its absence as
-            // "horizon rules" — old stamps stay valid
-            val start = startMillisOf(ProcessHandle.current())
-              .fold("")(ms => s"start=$ms ")
-            val stamp = s"$what pid=${ProcessHandle.current().pid()} " +
-              s"host=${java.net.InetAddress.getLocalHost.getHostName} " +
-              start + s"token=$token"
-            val out = fs.create(lease, true)
-            out.write(stamp.getBytes("UTF-8"))
-            out.close()
-            true
-          } catch { case _: java.io.IOException => false }
-        val c = Claim(token, stamped)
-        if (stamped) mayHaveOrphan.put(store, c)
-        return c
-      }
-      // lease exists (or just vanished): stat it; a vanished lease is
-      // a racing release — loop straight back to the claim
-      val st =
-        try Some(fs.getFileStatus(lease))
-        catch { case _: java.io.FileNotFoundException => None }
-      st.foreach { s =>
-        val age = System.currentTimeMillis() - s.getModificationTime
-        // in-process orphan: OUR process left this file (marker set
-        // with the claim's token) and the on-disk stamp does not
-        // CONTRADICT ownership — it carries our token, or carries no
-        // readable token when our own stamp write is known to have
-        // failed (the kill-at-stamp fuzz shape). A readable token
-        // that is NOT ours means a cross-process stale takeover
-        // already replaced our debris with a live foreign lease, and
-        // an UNREADABLE token with our stamp known written means the
-        // same takeover with a faulted stamp write — horizon rules
-        // apply to both. Another LIVE thread of this process can
-        // never appear here: the putIfAbsent registration in
-        // withLease admits exactly one in-process claimant, so the
-        // registered holder is this thread (kept as a defensive
-        // check).
-        val stamp = readStamp(fs, lease)
-        val stampToken = stamp.flatMap(tokenOf)
-        val ourOrphan =
-          (liveInProcess.get(store) eq Thread.currentThread()) &&
-          Option(mayHaveOrphan.get(store))
-            .exists(couldBeOurOrphan(_, stampToken))
-        // same-host crashed-process fast reclaim (r14 verdict ask #6):
-        // the stamp carries pid+host; when the host is OURS we can ask
-        // the kernel whether the holder still exists instead of waiting
-        // out the 10-minute horizon — a crashed ingest job must not
-        // block its own restart. Conservative by construction: a
-        // recycled pid reads as alive (ProcessHandle.of is present) and
-        // degrades to the horizon wait; a FOREIGN host is never fast-
-        // reclaimed (no shared kernel to consult); an unparseable stamp
-        // (crashed before the stamp write) keeps horizon rules.
-        val deadLocalHolder = isDeadLocalHolder(stamp)
-        if (age <= staleMs && !ourOrphan && !deadLocalHolder) {
-          val holder = stamp.getOrElse("(unstamped)")
-          throw new ConcurrentWriterException(
-            s"store writer lease $lease is held by a LIVE writer " +
-              s"[$holder] (age ${age} ms ≤ stale horizon ${staleMs} " +
-              s"ms); refusing to run '$what' concurrently — the " +
-              "mutable stores are single-writer")
-        }
-        // stale (or our own orphan): reclaim via atomic
-        // rename-to-tombstone; exactly one contender wins the rename,
-        // the loser loops and then sees the winner's fresh lease
-        // (→ ConcurrentWriterException)
-        val tomb = new Path(lease.getParent,
-          lease.getName + ".stale." + java.util.UUID.randomUUID())
-        val won =
-          try fs.rename(lease, tomb)
-          catch { case _: java.io.IOException => false }
-        if (won) {
-          // the file we may have left behind is gone — clear the
-          // marker NOW, or a third process's fresh lease arriving
-          // before our re-claim could be mistaken for our orphan
-          mayHaveOrphan.remove(store)
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            if (ourOrphan)
-              s"reclaimed this process's orphaned writer lease $lease " +
-                s"(a failed call's release could not delete it) for " +
-                s"'$what'"
-            else if (age <= staleMs)
-              s"reclaimed writer lease $lease of a DEAD same-host " +
-                s"process [${stamp.getOrElse("(unstamped)")}] before " +
-                s"the ${staleMs} ms horizon for '$what'"
-            else
-              s"reclaimed stale writer lease $lease (age ${age} ms > " +
-                s"${staleMs} ms — crashed holder) for '$what'")
-          // tombstone cleanup is BEST-EFFORT: the RENAME is what freed
-          // the lease path, so a delete fault here must not abort a
-          // claim that has already succeeded in substance (the retry
-          // loop claims the freed path next pass). The debris is inert
-          // — a uuid-suffixed name no claim/stat path ever reads — and
-          // any tombstones earlier faulted claims left behind are
-          // swept on the same best-effort basis.
-          // listStatus + name-prefix filter, NOT globStatus: a glob
-          // built from the raw store path would interpret glob
-          // metacharacters ([, {, ?, *) in every path component — a
-          // store named `data[2024]` would throw (degrading to
-          // no-sweep) or, pathologically, match unintended files
-          try {
-            fs.delete(tomb, false)
-            val prefix = lease.getName + ".stale."
-            fs.listStatus(lease.getParent,
-                (p: Path) => p.getName.startsWith(prefix))
-              .foreach(s =>
-                try fs.delete(s.getPath, false)
-                catch { case _: java.io.IOException => () })
-          } catch { case _: java.io.IOException => () }
-        }
-      }
-    }
-    throw new IllegalStateException(
-      s"could not claim writer lease $lease after $MaxClaimAttempts " +
-        "attempts — the lease keeps vanishing/appearing, which points " +
-        "at filesystem misbehavior, not contention")
+    top(listing(fs, lease))
+      .exists(vacancy(fs, lease, store, _, staleMs).isEmpty)
   }
 }

@@ -650,9 +650,11 @@ object DedupOps {
     *
     * FOREIGN-HOST-CRASH WINDOW (r15, accepted tradeoff): readers back
     * off whenever [[graft.catalog.WriterLease.holderIsLive]] says the
-    * lease looks live. For a holder that CRASHED mid-swap on a
-    * FOREIGN host, the lease stays fresh-looking until the stale
-    * horizon (no shared kernel to ask, heartbeat residue ≤ 10 min),
+    * lease looks live (its highest generation is unreleased, younger
+    * than the stale horizon, not this process's orphan and not
+    * stamped by a dead same-host pid). For a holder that CRASHED
+    * mid-swap on a FOREIGN host, the lease stays live-looking until
+    * the stale horizon (no shared kernel to ask, ≤ 10 min),
     * so a plain [[graft.operators.SimilarityOps.probeVectorStore]]
     * caller gets an unretried FileNotFoundException for up to that
     * horizon where pre-r15 it would have self-healed — availability
@@ -663,8 +665,8 @@ object DedupOps {
     * crashed-foreign-holder window itself is closed only by time or
     * by a writer: same-host crashes reclaim immediately via the
     * dead-pid check, the horizon expires in ≤ 10 min, and any WRITER
-    * entry (`dropAside = true`, its own lease claim having waited out
-    * or reclaimed the stale one) heals the swap on arrival. */
+    * entry (`dropAside = true`, its own claim having superseded the
+    * stale generation) heals the swap on arrival. */
   private[operators] def recoverStoreSwap(
       fs: org.apache.hadoop.fs.FileSystem, store: String,
       dropAside: Boolean = false): Unit = {
@@ -686,8 +688,8 @@ object DedupOps {
     // rename fail and aborting a healthy maintenance cycle. Readers
     // (dropAside = false) back off and let the probe fail/retry
     // ([[graft.operators.SimilarityOps.probeVectorStoreConsistent]]);
-    // writers heal under their own held lease (dropAside = true, and
-    // holderIsLive would be trivially true for themselves anyway).
+    // writers heal under their own held lease (dropAside = true;
+    // holderIsLive answers false for the calling holder's own lease).
     if (!dropAside && graft.catalog.WriterLease.holderIsLive(fs, store))
       return
     Seq(store + ".next", store + ".old")

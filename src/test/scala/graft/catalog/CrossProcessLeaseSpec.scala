@@ -22,11 +22,13 @@ import graft.SharedSpark
   *    confirms the holder is gone — no 10-minute horizon wait for a
   *    crashed job's own restart);
   *  - a FOREIGN-host holder's fresh lease still refuses (no kernel to
-  *    consult — horizon rules), and the SAME file aged past the
-  *    horizon is taken over by the rename-to-tombstone path.
+  *    consult — horizon rules), and the SAME generation aged past the
+  *    horizon is superseded by the next generation.
   *
   * SlowTest tier: two JVM spawns (~3-8 s). */
 class CrossProcessLeaseSpec extends AnyFunSuite {
+  import WriterLeaseSpec.{plant, unreleased}
+
   // force the shared session so the suite behaves like every other
   // spec under parallel execution (the FS calls don't need Spark)
   private lazy val spark = SharedSpark.spark
@@ -88,7 +90,7 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
       var ran = false
       WriterLease.withLease(fs, store, "after-release") { ran = true }
       assert(ran)
-      assert(!fs.exists(WriterLease.leasePath(store)))
+      assert(unreleased(fs, store).isEmpty)
     } finally proc.destroyForcibly(): Unit
   }
 
@@ -97,12 +99,11 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
     val fs = localFs
     val store = java.nio.file.Files
       .createTempDirectory("xprockill").resolve("store").toString
-    val lease = WriterLease.leasePath(store)
     val proc = spawnHolder(store, holdMs = 120000L)
     proc.destroyForcibly()
     assert(proc.waitFor(30, TimeUnit.SECONDS), "kill did not land")
-    assert(fs.exists(lease),
-      "SIGKILL should leave the crashed holder's lease behind")
+    assert(unreleased(fs, store).nonEmpty,
+      "SIGKILL should leave the crashed holder's generation behind")
 
     // the lease is FRESH (seconds old, default 10-min horizon) and
     // stamped with our host + the killed JVM's pid: the kernel says
@@ -114,7 +115,7 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
     assert(ran, "dead same-host holder's fresh lease was not reclaimed")
     assert((System.nanoTime() - t0) < 30L * 1000 * 1000 * 1000,
       "fast reclaim took implausibly long — did it wait a horizon?")
-    assert(!fs.exists(lease))
+    assert(unreleased(fs, store).isEmpty)
   }
 
   test("a FOREIGN-host holder's fresh lease refuses (no kernel to " +
@@ -123,18 +124,14 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
     val fs = localFs
     val store = java.nio.file.Files
       .createTempDirectory("xprocforeign").resolve("store").toString
-    val lease = WriterLease.leasePath(store)
     // a crashed holder on ANOTHER machine: fresh mtime, live-looking
     // pid number, but a host we cannot ask — exactly what the fast
     // path must NOT touch. (Deliberately uses this machine's OWN
     // live pid as the stamp's pid: if the fast path wrongly consulted
     // the pid without the host check, the pid would read alive and
     // mask the bug — a dead pid here would pass for the wrong reason.)
-    val out = fs.create(lease, false)
-    out.write(("cross-host-holder pid=" + ProcessHandle.current().pid() +
-      " host=some-other-machine token=" + java.util.UUID.randomUUID())
-      .getBytes("UTF-8"))
-    out.close()
+    plant(fs, store, 1L, "cross-host-holder pid=" +
+      ProcessHandle.current().pid() + " host=some-other-machine ")
     val e = intercept[WriterLease.ConcurrentWriterException] {
       WriterLease.withLease(fs, store, "too-early") {
         fail("claimed a fresh foreign-host lease")
@@ -145,11 +142,12 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
 
     // age the SAME file past the horizon: the crashed holder never
     // heartbeats again, so this is exactly the state 10 minutes later
-    fs.setTimes(lease, System.currentTimeMillis() - 11L * 60 * 1000, -1)
+    fs.setTimes(new Path(WriterLease.leasePath(store), "1"),
+      System.currentTimeMillis() - 11L * 60 * 1000, -1)
     var ran = false
     WriterLease.withLease(fs, store, "after-horizon") { ran = true }
     assert(ran, "stale foreign lease was not taken over")
-    assert(!fs.exists(lease))
+    assert(unreleased(fs, store).isEmpty)
   }
 
   test("a RECYCLED pid is detected by the stamped start instant (r16 " +
@@ -171,14 +169,9 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
           "rules by design")
       val startMs = si.get().toEpochMilli
       val host = java.net.InetAddress.getLocalHost.getHostName
-      def forge(store: String, startField: String): Unit = {
-        val lease = WriterLease.leasePath(store)
-        val out = fs.create(lease, false)
-        out.write((s"crashed-writer pid=${h.pid()} host=$host " +
-          startField + "token=" + java.util.UUID.randomUUID())
-          .getBytes("UTF-8"))
-        out.close()
-      }
+      def forge(store: String, startField: String): Unit =
+        plant(fs, store, 1L, s"crashed-writer pid=${h.pid()} host=$host " +
+          startField)
 
       // wrong start instant = the stamping process is DEAD and its
       // pid was recycled by the sleeper: fresh mtime, live pid, and
@@ -194,7 +187,7 @@ class CrossProcessLeaseSpec extends AnyFunSuite {
       assert(ran, "recycled-pid lease was not reclaimed")
       assert((System.nanoTime() - t0) < 30L * 1000 * 1000 * 1000,
         "recycled-pid reclaim took implausibly long — horizon wait?")
-      assert(!fs.exists(WriterLease.leasePath(recycled)))
+      assert(unreleased(fs, recycled).isEmpty)
 
       // control 1: the TRUE start instant = genuinely live holder —
       // the exact check must not turn into a false reclaim

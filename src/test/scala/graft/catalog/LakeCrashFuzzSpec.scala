@@ -22,6 +22,16 @@ import graft.SharedSpark
 class FaultInjectingFs extends RawLocalFileSystem {
   override def getScheme: String = "failfs"
   override def getUri: URI = URI.create("failfs:///")
+  // both create overloads RawLocalFileSystem implements: every
+  // permission-less create, the lake's `fs.create(path, overwrite)`
+  // included (manifests, log entries, markers, lease generations),
+  // reaches this one; a create with a permission reaches the one below
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    FaultInjectingFs.gate()
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
   override def create(f: Path, permission: FsPermission,
       overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: Progressable): FSDataOutputStream = {

@@ -4,7 +4,7 @@ import java.net.URI
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -95,55 +95,40 @@ object LaggingMtimeFs {
 
 /** A local filesystem under the `latchfs` scheme that sequences two
   * manifest committers, A and B (roles set per thread in
-  * [[LatchingFs.role]]), through the stale-lock takeover race. The
-  * manifest lock is any `manifest*` file directly under
-  * `_snapshots/_commits`, whatever the lock implementation names it
-  * (takeover tombstones excluded). The schedule:
-  *  1. each committer's first stat of the lock while it is stale waits
-  *     for the other's — both then act on a stale stat;
-  *  2. B's takeover (a delete or rename of the lock) waits until A
-  *     holds a fresh lock of its own, stamped;
-  *  3. A's first listing of `_snapshots` after its stamp waits until B
-  *     holds (B stamped, then listed `_snapshots`);
-  *  4. A's manifest write waits until B has written its manifest and
-  *     read the lock back; that read of B's waits until A's call ends.
+  * [[LatchingFs.role]]), through a stale-lease race. The manifest
+  * lease is the `manifest*` entry directly under `_snapshots/_commits`.
+  * The schedule:
+  *  1. each committer's first listing of the lease while it holds a
+  *     stale generation is taken, then waits for the other's — both
+  *     then act on a stale listing;
+  *  2. B's stale listing is returned only once A holds a fresh
+  *     generation, so B acts on a view from before A's claim;
+  *  3. A's manifest write waits until B has listed the lease again
+  *     (B has seen A's generation while A holds it).
   * A committer "writes" from its manifest create until its call ends
   * ([[LatchingFs.end]]); [[LatchingFs.overlaps]] counts manifest
   * creates made while the other committer writes. A wait that runs
   * out is recorded in [[LatchingFs.timeouts]] and then goes on.
-  * Role C's deletes and renames of the lock fail: a holder that
-  * crashes in its release leaves the lock behind. `getScheme` reports
-  * `file`, so the lake's create-if-absent CAS keeps its atomic
-  * `File.createNewFile` path. */
+  * `getScheme` reports `file`, so the lake's create-if-absent CAS keeps
+  * its atomic local path. */
 class LatchingFs extends RawLocalFileSystem {
   import LatchingFs._
   override def getUri: URI = URI.create("latchfs:///")
   override def getScheme: String = "file"
 
-  override def getFileStatus(f: Path): FileStatus = {
-    val st = super.getFileStatus(f)
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val ls = super.listStatus(f)
     val r = role.get
-    if ((r == "A" || r == "B") && isLock(f) &&
-      System.currentTimeMillis() - st.getModificationTime > StaleMs &&
-      statedStale.add(r))
-      await("both stale stats", bothStale.countDown())(
-        bothStale.getCount == 0)
-    st
-  }
-
-  private def takeover(f: Path): Unit = role.get match {
-    case "C" if isLock(f) =>
-      throw new java.io.IOException("latchfs: lock release crashed")
-    case "B" if isLock(f) && !bTookOver.getAndSet(true) =>
-      await("A's fresh stamped lock", ())(
-        aStamped.get && localFile(f).length > 0)
-    case _ => ()
-  }
-  override def delete(f: Path, recursive: Boolean): Boolean = {
-    takeover(f); super.delete(f, recursive)
-  }
-  override def rename(src: Path, dst: Path): Boolean = {
-    takeover(src); super.rename(src, dst)
+    if ((r == "A" || r == "B") && isLease(f)) {
+      val now = System.currentTimeMillis()
+      if (ls.exists(now - _.getModificationTime > StaleMs) &&
+          statedStale.add(r)) {
+        await("both stale listings", bothStale.countDown())(
+          bothStale.getCount == 0)
+        if (r == "B") await("A's fresh generation", ())(freshGeneration(f))
+      } else if (r == "B" && statedStale.contains("B")) bRelisted.set(true)
+    }
+    ls
   }
 
   // the lake's `create(path, overwrite)` reaches this overload, Spark's
@@ -151,61 +136,37 @@ class LatchingFs extends RawLocalFileSystem {
   override def create(f: Path, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
-    created(f, overwrite)
+    created(f)
     super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
   override def create(f: Path, permission: FsPermission,
       overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: Progressable): FSDataOutputStream = {
-    created(f, overwrite)
+    created(f)
     super.create(f, permission, overwrite, bufferSize, replication,
       blockSize, progress)
   }
 
-  private def created(f: Path, overwrite: Boolean): Unit = {
+  private def created(f: Path): Unit = {
     val r = role.get
-    if (r == "A" || r == "B") {
-      if (isLock(f) && overwrite) // the holder's stamp
-        (if (r == "A") aStamped else bStamped).set(true)
-      if (f.getName.endsWith(".manifest")) {
-        if (r == "A")
-          await("B's manifest write + lock read", ())(bWrote.get)
-        if (writing(other(r)).get) overlaps.incrementAndGet()
-        writing(r).set(true)
-      }
+    if ((r == "A" || r == "B") && f.getName.endsWith(".manifest")) {
+      if (r == "A") await("B's listing of A's generation", ())(bRelisted.get)
+      if (writing(other(r)).get) overlaps.incrementAndGet()
+      writing(r).set(true)
     }
-  }
-
-  override def listStatus(f: Path): Array[FileStatus] = {
-    if (f.getName == "_snapshots") role.get match {
-      case "A" if aStamped.get && !aListed.getAndSet(true) =>
-        await("B holding the lock", ())(bHolds.get)
-      case "B" if bStamped.get => bHolds.set(true)
-      case _ => ()
-    }
-    super.listStatus(f)
-  }
-
-  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
-    if (role.get == "B" && isLock(f) && writing("B").get) {
-      bWrote.set(true)
-      await("A's call to end", ())(aDone.get)
-    }
-    super.open(f, bufferSize)
   }
 }
 object LatchingFs {
   import java.util.concurrent.atomic.AtomicBoolean
   val role: ThreadLocal[String] = new ThreadLocal[String]
-  /** An aged lock is older than this. */
+  /** An aged lease generation is older than this. */
   val StaleMs: Long = 30L * 60 * 1000
   private val WaitMs = 30000L
   @volatile private var bothStale =
     new java.util.concurrent.CountDownLatch(2)
   private val statedStale =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val aStamped, bStamped, bTookOver, aListed, bHolds, bWrote,
-    aDone = new AtomicBoolean(false)
+  private val bRelisted = new AtomicBoolean(false)
   private val writing = Map("A" -> new AtomicBoolean(false),
     "B" -> new AtomicBoolean(false))
   val overlaps = new AtomicLong(0)
@@ -214,24 +175,23 @@ object LatchingFs {
   def reset(): Unit = {
     bothStale = new java.util.concurrent.CountDownLatch(2)
     statedStale.clear()
-    (Seq(aStamped, bStamped, bTookOver, aListed, bHolds, bWrote, aDone) ++
-      writing.values).foreach(_.set(false))
+    (bRelisted +: writing.values.toSeq).foreach(_.set(false))
     overlaps.set(0); timeouts.clear()
   }
 
   /** The committer in role `r` ended its call. */
-  def end(r: String): Unit = {
-    writing.get(r).foreach(_.set(false))
-    if (r == "A") aDone.set(true)
-  }
+  def end(r: String): Unit = writing.get(r).foreach(_.set(false))
 
   private def other(r: String) = if (r == "A") "B" else "A"
-  private def isLock(f: Path): Boolean =
+  private def isLease(f: Path): Boolean =
     f.getParent != null && f.getParent.getName == "_commits" &&
       f.getParent.getParent != null &&
       f.getParent.getParent.getName == "_snapshots" &&
-      f.getName.startsWith("manifest") && !f.getName.contains(".stale.")
-  private def localFile(f: Path) = new java.io.File(f.toUri.getPath)
+      f.getName.startsWith("manifest")
+  private def freshGeneration(lease: Path): Boolean =
+    Option(new java.io.File(lease.toUri.getPath).listFiles()).toSeq
+      .flatten.exists(g => g.getName.toLongOption.isDefined &&
+        System.currentTimeMillis() - g.lastModified < StaleMs)
 
   /** Run `arrive`, then poll until `ready` or the wait runs out. */
   private def await(what: String, arrive: => Unit)(
@@ -242,6 +202,45 @@ object LatchingFs {
       Thread.sleep(5)
     if (!ready) timeouts.add(s"${role.get} waiting for $what")
   }
+}
+
+/** A local filesystem under the `probefs` scheme that interleaves two
+  * callers' (roles A and B) filesystem-clock probes: each probe's stat
+  * waits until both probes are created, and B's stat also waits until
+  * A has deleted its probe — create A, create B, stat A, delete A,
+  * stat B. */
+class ProbeLatchFs extends RawLocalFileSystem {
+  import ProbeLatchFs._
+  override def getUri: URI = URI.create("probefs:///")
+  override def getScheme: String = "file"
+  private def probe(f: Path) =
+    role.get != null && f.getName.startsWith("clock")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication,
+      blockSize, progress)
+    if (probe(f)) created.countDown()
+    out
+  }
+  override def getFileStatus(f: Path): FileStatus = {
+    if (probe(f)) {
+      created.await(20, java.util.concurrent.TimeUnit.SECONDS)
+      if (role.get == "B")
+        aDeleted.await(20, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    super.getFileStatus(f)
+  }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    val r = super.delete(f, recursive)
+    if (probe(f) && role.get == "A") aDeleted.countDown()
+    r
+  }
+}
+object ProbeLatchFs {
+  val role: ThreadLocal[String] = new ThreadLocal[String]
+  val created = new java.util.concurrent.CountDownLatch(2)
+  val aDeleted = new java.util.concurrent.CountDownLatch(1)
 }
 
 /** Lock-protocol and at-scale contracts of the snapshot lakes that the
@@ -355,17 +354,20 @@ class LakeProtocolSpec extends AnyFunSuite {
       rows.toSeq.toDF("id", "ts", "val")
     PartitionedSnapshotLake.commitMerge(spark, root,
       df((1L, "2026-03-01", "a")), "id", "ts")
-    // crashed holder: mutex exists, no heartbeat, mtime far in the past
-    val mlock = new java.io.File(
-      s"$root/_snapshots/_commits/manifest.writer.lease")
-    mlock.getParentFile.mkdirs()
-    assert(mlock.createNewFile())
-    assert(mlock.setLastModified(
+    // crashed holder: a newer generation of the manifest lease than
+    // the first commit's, unreleased, mtime far in the past
+    val gen = new java.io.File(
+      s"$root/_snapshots/_commits/manifest.writer.lease/5")
+    gen.getParentFile.mkdirs()
+    assert(gen.createNewFile())
+    assert(gen.setLastModified(
       System.currentTimeMillis() - 3L * 60 * 60 * 1000))
     val (s2, _) = PartitionedSnapshotLake.commitMerge(spark, root,
       df((1L, "2026-03-01", "a2")), "id", "ts")
     assert(s2 == 2L, "commit did not break the stale manifest mutex")
-    assert(!mlock.exists, "broken+released mutex must not linger")
+    assert(WriterLeaseSpec.unreleased(localFs,
+      s"$root/_snapshots/_commits/manifest").isEmpty,
+      "broken+released mutex must not linger")
   }
 
   test("two committers that both find the manifest lock stale: at most " +
@@ -386,17 +388,16 @@ class LakeProtocolSpec extends AnyFunSuite {
     try {
       PartitionedSnapshotLake.commitMerge(spark, rootA,
         batch(1L, "2027-09-01", "seed"), "id", "ts")
-      // a holder that crashed in its release leaves the manifest lock
-      // behind; aged past any stale horizon, it is a dead holder's lock
-      LatchingFs.role.set("C")
-      try scala.util.Try(
-        PartitionedSnapshotLake.commitManifest(spark, rootA, Map.empty))
-      finally LatchingFs.role.remove()
-      val locks = new java.io.File(dir, "_snapshots/_commits").listFiles()
-        .filter(_.getName.startsWith("manifest"))
-      assert(locks.nonEmpty, "the crashed holder left no manifest lock")
-      locks.foreach(f => assert(f.setLastModified(
-        System.currentTimeMillis() - 2 * LatchingFs.StaleMs)))
+      // a holder that crashed leaves its generation of the manifest
+      // lease unreleased; aged past any stale horizon, it is a dead
+      // holder's lease
+      val gen = new java.io.File(dir,
+        "_snapshots/_commits/manifest.writer.lease/9")
+      gen.getParentFile.mkdirs()
+      java.nio.file.Files.write(gen.toPath,
+        "crashed-committer pid=1 host=elsewhere ".getBytes("UTF-8"))
+      assert(gen.setLastModified(
+        System.currentTimeMillis() - 2 * LatchingFs.StaleMs))
 
       val returned = new ConcurrentLinkedQueue[String]()
       def committer(r: String, root: String, id: Long, date: String) =
@@ -417,17 +418,37 @@ class LakeProtocolSpec extends AnyFunSuite {
       assert(LatchingFs.overlaps.get == 0,
         "two committers wrote a manifest at the same time — both held " +
           "the manifest lock")
-      assert(!returned.isEmpty, "neither committer returned")
+      // B's stale listing cannot displace A: A commits, B waits for
+      // A's release and commits after it
+      assert(returned.toArray.toSet == Set("A", "B"),
+        s"not both committers returned: $returned")
       val latest = PartitionedSnapshotLake.readLatest(spark, rootA)
         .select("val").as[String].collect().toSet
-      returned.forEach { r =>
-        assert(latest.contains(r),
-          s"committer $r returned, but readLatest lost its batch: $latest")
-      }
+      assert(Set("A", "B").subsetOf(latest),
+        s"readLatest lost a committed batch: $latest")
     } finally prevDefault match {
       case Some(v) => conf.set("fs.defaultFS", v)
       case None => conf.unset("fs.defaultFS")
     }
+  }
+
+  test("two concurrent filesystem-clock probes of one directory never " +
+      "delete each other's probe") {
+    val fs = new ProbeLatchFs
+    fs.initialize(URI.create("probefs:///"),
+      spark.sparkContext.hadoopConfiguration)
+    val dir = new Path(tmp(), "_commits")
+    val errors = new ConcurrentLinkedQueue[Throwable]()
+    val now = new ConcurrentLinkedQueue[Long]()
+    val ts = Seq("A", "B").map(r => new Thread(() => {
+      ProbeLatchFs.role.set(r)
+      try now.add(SnapshotLake.fsNow(fs, dir))
+      catch { case t: Throwable => errors.add(t) }
+    }))
+    ts.foreach(_.start()); ts.foreach(_.join(60000))
+    assert(errors.isEmpty, s"an fsNow call failed: $errors")
+    assert(now.size == 2)
+    assert(fs.listStatus(dir).isEmpty, "a probe file was left behind")
   }
 
   test("SnapshotLake.vacuum ages locks on the filesystem's clock: a " +

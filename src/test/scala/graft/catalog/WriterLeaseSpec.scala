@@ -1,30 +1,36 @@
 package graft.catalog
 
+import java.net.URI
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 import graft.operators.{DedupOps, SimilarityOps}
 
-/** The single-writer lease on the mutable stores (r13 verdict ask #2):
-  * exactly one of two racing writers proceeds, the loser fails loudly,
-  * a crashed holder's stale lease is reclaimed, a live holder's
-  * heartbeat defeats the stale horizon, and the store survives a
-  * refused writer bit-for-bit. */
+/** The single-writer lease on the mutable stores: exactly one of two
+  * racing writers proceeds, the loser fails loudly, a crashed holder's
+  * stale generation is superseded, a live holder's heartbeat defeats
+  * the stale horizon, no contender acting on an outdated listing
+  * displaces a live holder, and the store survives a refused writer
+  * bit-for-bit. */
 class WriterLeaseSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
 
+  import WriterLeaseSpec._
+
   private def localFs = new Path("/tmp")
     .getFileSystem(spark.sessionState.newHadoopConf())
 
+  private def newStore(prefix: String): String = java.nio.file.Files
+    .createTempDirectory(prefix).resolve("store").toString
+
   test("two racing writer threads: exactly one body runs, the loser " +
       "throws ConcurrentWriterException, the lease is gone afterward") {
-    val store = java.nio.file.Files
-      .createTempDirectory("leaserace").resolve("store").toString
+    val store = newStore("leaserace")
     val fs = localFs
     val inBody = new CountDownLatch(1)
     val release = new CountDownLatch(1)
@@ -48,8 +54,7 @@ class WriterLeaseSpec extends AnyFunSuite {
     assert(ran.get() == 1, "both writers ran concurrently")
     release.countDown()
     t1.join(20000)
-    assert(!fs.exists(WriterLease.leasePath(store)),
-      "lease not released on exit")
+    assert(unreleased(fs, store).isEmpty, "lease not released on exit")
     // after release, a new claim proceeds
     WriterLease.withLease(fs, store, "race-test-2") { ran.incrementAndGet() }
     assert(ran.get() == 2)
@@ -57,23 +62,23 @@ class WriterLeaseSpec extends AnyFunSuite {
 
   test("a crashed holder's stale lease is reclaimed; a LIVE holder's " +
       "heartbeat keeps it fresh past the stale horizon") {
-    val store = java.nio.file.Files
-      .createTempDirectory("leasestale").resolve("store").toString
+    val store = newStore("leasestale")
     val fs = localFs
-    val lease = WriterLease.leasePath(store)
-    // fabricate a crashed holder: a lease whose mtime is far past the
-    // horizon and whose owner will never heartbeat again
-    fs.create(lease, false).close()
-    fs.setTimes(lease, System.currentTimeMillis() - 3600L * 1000, -1)
+    // a crashed holder: generation 1, far past the horizon, whose
+    // owner will never heartbeat again
+    plant(fs, store, 1L, "crashed pid=1 host=elsewhere ", ageMs = 3600000L)
     var reclaimed = false
     WriterLease.withLease(fs, store, "takeover-test",
         staleMs = 60000L) { reclaimed = true }
     assert(reclaimed, "stale lease was not taken over")
-    assert(!fs.exists(lease), "takeover left the lease behind")
+    assert(unreleased(fs, store).isEmpty, "takeover left a held generation")
+    assert(!fs.exists(new Path(WriterLease.leasePath(store), "1")),
+      "the superseded generation was not swept")
 
-    // live holder: shrink the heartbeat so the lease mtime refreshes
-    // inside a sub-second stale horizon — the contender must STILL be
-    // refused even though the holder entered longer than staleMs ago
+    // live holder: shrink the heartbeat so the generation's mtime
+    // refreshes inside a sub-second stale horizon — the contender must
+    // STILL be refused even though the holder entered longer than
+    // staleMs ago
     val prevBeat = SnapshotLake.heartbeatIntervalMs
     SnapshotLake.heartbeatIntervalMs = 100L
     try {
@@ -96,56 +101,108 @@ class WriterLeaseSpec extends AnyFunSuite {
     } finally SnapshotLake.heartbeatIntervalMs = prevBeat
   }
 
-  test("a tombstone delete fault neither aborts a stale takeover nor " +
-      "leaks the debris past the next takeover's sweep") {
-    val flaky = new FlakyDeleteFs(localFs)
-    val store = java.nio.file.Files
-      .createTempDirectory("leasetomb").resolve("store").toString
+  test("two contenders that both list a stale lease under two spellings " +
+      "of one store: at most one body runs at a time, the late one " +
+      "waits for the holder") {
+    val fs = new StaleRaceFs
+    fs.initialize(URI.create("racefs:///"),
+      spark.sessionState.newHadoopConf())
+    val store = newStore("leasestalerace")
+    // two spellings of one store, so the in-process registry (keyed by
+    // the store string) does not serialize the contenders: only the
+    // on-disk protocol does
+    val (storeA, storeB) = (store, s"racefs://$store")
     val lease = WriterLease.leasePath(store)
-    def plantStale(): Unit = {
-      flaky.create(lease, false).close()
-      flaky.setTimes(lease, System.currentTimeMillis() - 3600L * 1000, -1)
-    }
-    // takeover with EVERY delete faulted: the rename freed the path,
-    // so the claim must still succeed — and the tombstone stays behind
-    plantStale()
-    flaky.failDeletes = true
-    var ran = false
-    try WriterLease.withLease(flaky, store, "tomb-faulted",
-      staleMs = 60000L) { ran = true }
-    finally flaky.failDeletes = false
-    assert(ran, "takeover aborted on a best-effort tombstone delete")
-    val glob = new Path(lease.getParent, lease.getName + ".stale.*")
-    // the faulted release also left the lease file; clear it so the
-    // next takeover exercises the SWEEP, not the orphan fast path
-    flaky.delete(lease, false): Unit
-    assert(Option(flaky.globStatus(glob)).toSeq.flatten.nonEmpty,
-      "expected the faulted delete to leave tombstone debris")
-    // next stale takeover (deletes healthy) sweeps the stragglers
-    plantStale()
-    ran = false
-    WriterLease.withLease(flaky, store, "tomb-sweeper",
-      staleMs = 60000L) { ran = true }
-    assert(ran)
-    assert(Option(flaky.globStatus(glob)).toSeq.flatten.isEmpty,
-      "takeover did not sweep earlier claims' tombstone debris")
+    val stale = System.currentTimeMillis() - 3600000L
+    plant(localFs, store, 1L, "crashed pid=1 host=elsewhere ",
+      ageMs = 3600000L)
+    // the lease path itself aged too, so a layout that stats the path
+    // also reads the lease as stale
+    assert(new java.io.File(lease.toUri.getPath).setLastModified(stale))
+    StaleRaceFs.reset(lease.toUri.getPath)
+    val inBody = new java.util.concurrent.atomic.AtomicInteger(0)
+    val maxInBody = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def contender(r: String, st: String): Thread = new Thread(() => {
+      StaleRaceFs.role.set(r)
+      try WriterLease.withLease(fs, st, s"contender-$r", staleMs = 60000L,
+          waitMs = 30000L) {
+        maxInBody.accumulateAndGet(inBody.incrementAndGet(), math.max)
+        if (r == "A") StaleRaceFs.aInBody.countDown()
+        Thread.sleep(1000) // B acts on its outdated listing meanwhile
+        inBody.decrementAndGet()
+        ran.add(r)
+      } catch { case t: Throwable => errors.add(t) }
+    })
+    val ts = Seq(contender("A", storeA), contender("B", storeB))
+    ts.foreach(_.start()); ts.foreach(_.join(60000))
+    assert(StaleRaceFs.timeouts.isEmpty,
+      s"the race schedule did not run: ${StaleRaceFs.timeouts}")
+    assert(errors.isEmpty, s"a contender failed: $errors")
+    assert(maxInBody.get == 1,
+      "two bodies ran at once: the late contender displaced the holder")
+    assert(ran.size == 2, s"not both contenders ran in turn: $ran")
+    assert(unreleased(localFs, store).isEmpty)
   }
 
-  /** Local FS whose delete — and, separately, whose OVERWRITING create
-    * — can be made to throw: the one-fault-takes-both shape (body dies
-    * AND the release delete dies) that leaves a same-process orphan
-    * lease behind, and the kill-at-stamp shape (the claim's
-    * atomicCreate on file:// goes through java.io.File directly, so
-    * `failOverwrites` faults ONLY the best-effort stamp write,
-    * `fs.create(lease, overwrite = true)`). */
+  test("withLease(waitMs = Long.MaxValue) waits for the holder instead " +
+      "of throwing at once") {
+    val fs = localFs
+    val store = newStore("leasemaxwait")
+    val entered = new CountDownLatch(1)
+    val t = new Thread(() =>
+      WriterLease.withLease(fs, store, "holder") {
+        entered.countDown()
+        Thread.sleep(300)
+      })
+    t.start()
+    assert(entered.await(20, TimeUnit.SECONDS), "holder never entered")
+    var ran = false
+    WriterLease.withLease(fs, store, "unbounded", waitMs = Long.MaxValue) {
+      ran = true
+    }
+    t.join(20000)
+    assert(ran)
+  }
+
+  test("a sweep-delete fault neither aborts a stale takeover nor leaks " +
+      "the debris past the next claim's sweep") {
+    val flaky = new FlakyDeleteFs(localFs)
+    val store = newStore("leasesweep")
+    val lease = WriterLease.leasePath(store)
+    plant(flaky, store, 1L, "crashed pid=1 host=elsewhere ",
+      ageMs = 3600000L)
+    // takeover with EVERY delete faulted: generation 2 is claimed, so
+    // the claim must succeed — and the stale generation stays behind
+    flaky.failDeletes = true
+    var ran = false
+    try WriterLease.withLease(flaky, store, "sweep-faulted",
+      staleMs = 60000L) { ran = true }
+    finally flaky.failDeletes = false
+    assert(ran, "takeover aborted on a best-effort sweep delete")
+    assert(flaky.exists(new Path(lease, "1")),
+      "expected the faulted sweep to leave generation 1 behind")
+    // the next claim (deletes healthy) sweeps everything below its own
+    ran = false
+    WriterLease.withLease(flaky, store, "sweeper") { ran = true }
+    assert(ran)
+    assert(flaky.listStatus(lease).map(_.getPath.getName).toSet ==
+      Set("3", "3.released"),
+      "the next claim did not sweep the earlier generations")
+  }
+
+  /** Local FS whose delete, create and open can each be made to throw.
+    * It reports a scheme other than `file`, so the lease's
+    * create-if-absent goes through [[create]] (non-atomic on a local
+    * disk, which these single-claimant cases do not need). */
   private class FlakyDeleteFs(underlying: org.apache.hadoop.fs.FileSystem)
       extends org.apache.hadoop.fs.FilterFileSystem(underlying) {
     // FilterFileSystem does not delegate getScheme (the base throws
-    // UnsupportedOperationException), and WriterLease's claim consults
-    // it to pick the O_EXCL primitive
-    override def getScheme: String = "file"
+    // UnsupportedOperationException)
+    override def getScheme: String = "flaky"
     @volatile var failDeletes = false
-    @volatile var failOverwrites = false
+    @volatile var failCreates = false
     @volatile var failReads = false
     override def delete(p: Path, recursive: Boolean): Boolean =
       if (failDeletes) throw new java.io.IOException("injected delete fault")
@@ -160,31 +217,32 @@ class WriterLeaseSpec extends AnyFunSuite {
         blockSize: Long,
         progress: org.apache.hadoop.util.Progressable)
         : org.apache.hadoop.fs.FSDataOutputStream =
-      if (failOverwrites && overwrite)
-        throw new java.io.IOException("injected stamp-write fault")
+      if (failCreates) throw new java.io.IOException("injected create fault")
       else super.create(f, permission, overwrite, bufferSize,
         replication, blockSize, progress)
   }
 
+  /** A store whose writer crashed and whose release failed too (one
+    * fault takes both — the kill-point fuzz's shape): its generation
+    * stays unreleased. `emptyStamp` also empties the generation file,
+    * as a stamp lost with the crash. */
   private def orphanedStore(flaky: FlakyDeleteFs, prefix: String,
-      failStamp: Boolean = false): String = {
-    val store = java.nio.file.Files
-      .createTempDirectory(prefix).resolve("store").toString
-    flaky.failDeletes = true
-    flaky.failOverwrites = failStamp
+      emptyStamp: Boolean = false): String = {
+    val store = newStore(prefix)
     try {
       val e = intercept[RuntimeException] {
         WriterLease.withLease(flaky, store, "crasher") {
+          if (emptyStamp)
+            flaky.create(new Path(WriterLease.leasePath(store),
+              unreleased(flaky, store).max.toString), true).close()
+          flaky.failCreates = true
           throw new RuntimeException("body died")
         }
       }
       assert(e.getMessage == "body died", s"unexpected failure: $e")
-    } finally {
-      flaky.failDeletes = false
-      flaky.failOverwrites = false
-    }
-    assert(flaky.exists(WriterLease.leasePath(store)),
-      "crashed call left no orphan lease")
+    } finally flaky.failCreates = false
+    assert(unreleased(flaky, store).nonEmpty,
+      "crashed call left no orphan generation")
     store
   }
 
@@ -194,46 +252,38 @@ class WriterLeaseSpec extends AnyFunSuite {
       "orphan marker set") {
     val flaky = new FlakyDeleteFs(localFs)
 
-    // token match: the on-disk stamp is OURS → immediate reclaim,
-    // no 10-minute horizon wait (default staleMs)
+    // the unreleased generation is this process's recorded orphan →
+    // immediate reclaim, no 10-minute horizon wait (default staleMs)
     val s1 = orphanedStore(flaky, "leaseorphan1")
     var ran = false
     WriterLease.withLease(flaky, s1, "restart") { ran = true }
     assert(ran, "same-process restart did not reclaim its own orphan")
-    assert(!flaky.exists(WriterLease.leasePath(s1)))
+    assert(unreleased(flaky, s1).isEmpty)
 
-    // unstamped orphan (the kill-at-stamp-write fuzz shape): our own
-    // stamp write FAILED, so no readable token cannot CONTRADICT
-    // ownership → still reclaims. (When our stamp write SUCCEEDED an
-    // unstamped file is refused as foreign — the r15 release-window
-    // test below pins that side.)
-    val s2 = orphanedStore(flaky, "leaseorphan2", failStamp = true)
+    // the orphan is recognized by its generation number, not its
+    // content: an emptied generation file still reclaims
+    val s2 = orphanedStore(flaky, "leaseorphan2", emptyStamp = true)
     ran = false
     WriterLease.withLease(flaky, s2, "restart") { ran = true }
     assert(ran, "unstamped same-process orphan was not reclaimed")
 
-    // foreign takeover beat the retry: the fresh lease carries ANOTHER
-    // writer's token — the marker must not steal it
+    // a foreign takeover beat the retry: a newer, fresh generation
+    // carries ANOTHER writer's stamp — the orphan record must not
+    // steal it
     val s3 = orphanedStore(flaky, "leaseorphan3")
-    val lease3 = WriterLease.leasePath(s3)
-    flaky.delete(lease3, false) // the foreign stale-reclaim
-    val out = flaky.create(lease3, false)
-    out.write(("foreign-maint pid=99999 host=elsewhere token=" +
-      java.util.UUID.randomUUID()).getBytes("UTF-8"))
-    out.close()
+    plant(flaky, s3, unreleased(flaky, s3).max + 1,
+      "foreign-maint pid=99999 host=elsewhere ")
     intercept[WriterLease.ConcurrentWriterException] {
       WriterLease.withLease(flaky, s3, "retry") {
         fail("stole a live foreign writer's lease")
       }
     }
-    flaky.delete(lease3, false): Unit
   }
 
   test("a thawed FROZEN writer's release leaves the takeover holder's " +
       "fresh lease intact (token-checked release, r14 ask #2)") {
     val fs = localFs
-    val store = java.nio.file.Files
-      .createTempDirectory("leasefrozen").resolve("store").toString
+    val store = newStore("leasefrozen")
     val lease = WriterLease.leasePath(store)
     val entered = new CountDownLatch(1)
     val thaw = new CountDownLatch(1)
@@ -246,49 +296,33 @@ class WriterLeaseSpec extends AnyFunSuite {
       })
     t.start()
     assert(entered.await(20, TimeUnit.SECONDS), "holder never entered")
-    // simulate the cross-process stale takeover the frozen writer
-    // cannot see: the contender renames our stale lease aside and
-    // claims fresh with ITS stamp (direct FS ops — a real second
-    // process would not be visible to the in-process registries
-    // either, which is the point of the hazard)
-    val foreignToken = java.util.UUID.randomUUID().toString
-    assert(fs.delete(lease, false))
-    val out = fs.create(lease, false)
-    out.write(("foreign-maint pid=1 host=elsewhere " +
-      s"token=$foreignToken").getBytes("UTF-8"))
-    out.close()
-    // thaw: the release must read the FOREIGN token and leave the file
+    // the cross-process takeover the frozen writer cannot see: a
+    // contender that judged generation 1 stale claims generation 2
+    // (direct FS ops — a real second process would not be visible to
+    // the in-process registries either, which is the point)
+    plant(fs, store, 2L, "foreign-maint pid=1 host=elsewhere ")
     thaw.countDown()
     t.join(20000)
-    assert(fs.exists(lease),
-      "the thawed frozen writer deleted the takeover holder's lease — " +
-        "the third-writer door the token-checked release closes")
-    val in = fs.open(lease)
-    val buf = new Array[Byte](512)
-    val n = in.read(buf); in.close()
-    assert(new String(buf, 0, n, "UTF-8").contains(foreignToken),
-      "the surviving lease is not the takeover holder's")
-    // and the fresh foreign lease still refuses the next claim — no
-    // silent third writer
+    assert(fs.exists(new Path(lease, "1.released")),
+      "the thawed writer did not mark its own generation released")
+    assert(unreleased(fs, store) == Seq(2L),
+      "the thawed frozen writer released the takeover holder's lease")
+    // and the fresh foreign generation still refuses the next claim —
+    // no silent third writer
     intercept[WriterLease.ConcurrentWriterException] {
       WriterLease.withLease(fs, store, "third-writer") {
         fail("third writer ran against a live foreign lease")
       }
     }
-    fs.delete(lease, false): Unit
   }
 
-  test("unstamped-takeover release window (r15 ask #2): a writer whose " +
-      "own stamp is known on disk refuses to delete an UNSTAMPED " +
-      "replacement lease; a writer whose stamp write FAILED still " +
-      "deletes its own unstamped file") {
+  test("unstamped-takeover release window: a thawed writer marks only " +
+      "its own generation, an UNSTAMPED newer generation stays live, and " +
+      "an unstamped own generation still releases") {
     val fs = localFs
-    // (a) our stamp succeeded → an unreadable token cannot be ours:
-    // a takeover whose stamp write faulted left a fresh EMPTY lease,
-    // and the thawed frozen writer's release must leave it intact
-    val s1 = java.nio.file.Files
-      .createTempDirectory("leaseunstamped").resolve("store").toString
-    val lease1 = WriterLease.leasePath(s1)
+    // (a) a takeover whose stamp was lost left a fresh EMPTY newer
+    // generation; the thawed writer's release must leave it held
+    val s1 = newStore("leaseunstamped")
     val entered = new CountDownLatch(1)
     val thaw = new CountDownLatch(1)
     val t = new Thread(() =>
@@ -298,82 +332,75 @@ class WriterLeaseSpec extends AnyFunSuite {
       })
     t.start()
     assert(entered.await(20, TimeUnit.SECONDS), "holder never entered")
-    // the takeover: rename our lease aside, claim fresh — and its own
-    // stamp write faults, leaving the new lease EMPTY
-    assert(fs.delete(lease1, false))
-    fs.create(lease1, false).close() // fresh, unstamped
+    plant(fs, s1, 2L, "") // fresh, unstamped
     thaw.countDown()
     t.join(20000)
-    assert(fs.exists(lease1),
-      "the thawed writer deleted the takeover's UNSTAMPED fresh lease " +
-        "— the residual third-writer door r15 ask #2 closes")
-    fs.delete(lease1, false): Unit
+    assert(unreleased(fs, s1) == Seq(2L),
+      "the thawed writer released the takeover's UNSTAMPED generation")
+    intercept[WriterLease.ConcurrentWriterException] {
+      WriterLease.withLease(fs, s1, "third-writer") {
+        fail("third writer ran against a live unstamped generation")
+      }
+    }
 
-    // (b) our OWN stamp write failed → an unstamped file can still be
-    // ours, and the release must delete it (no leaked lease)
-    val failStamp = new FlakyDeleteFs(localFs)
-    val s2 = java.nio.file.Files
-      .createTempDirectory("leasenostamp").resolve("store").toString
-    val lease2 = WriterLease.leasePath(s2)
-    failStamp.failOverwrites = true
+    // (b) the release reads nothing: a holder whose own generation
+    // file lost its stamp still releases it (no leaked lease)
+    val s2 = newStore("leasenostamp")
     var ran = false
-    try WriterLease.withLease(failStamp, s2, "stampless-writer") {
+    WriterLease.withLease(fs, s2, "stampless-writer") {
       ran = true
-      assert(failStamp.exists(lease2), "claim did not create the lease")
-      // the claim is the file's existence; the stamp write faulted
-      val in = failStamp.open(lease2)
-      assert(in.read() == -1, "stamp write was supposed to fault")
-      in.close()
-    } finally failStamp.failOverwrites = false
+      val g = unreleased(fs, s2)
+      assert(g == Seq(1L), s"claim did not create generation 1: $g")
+      fs.create(new Path(WriterLease.leasePath(s2), "1"), true).close()
+    }
     assert(ran)
-    assert(!failStamp.exists(lease2),
-      "a stamp-write-failed claim leaked its own unstamped lease")
+    assert(unreleased(fs, s2).isEmpty,
+      "an unstamped own generation was not released")
   }
 
-  test("transient stamp-read fault at release keeps the orphan marker " +
-      "(r16 advice): the declined delete leaves OUR lease on disk, and " +
-      "the next same-process claim re-reads our token and reclaims " +
-      "immediately instead of waiting the horizon") {
+  test("a transient stamp-read fault neither blocks a release (which " +
+      "reads nothing) nor lets a claim take a live generation over") {
     val flaky = new FlakyDeleteFs(localFs)
-    val store = java.nio.file.Files
-      .createTempDirectory("leasereadfault").resolve("store").toString
-    val lease = WriterLease.leasePath(store)
-    // the release-time stamp READ faults: with our stamp known on disk
-    // (stamped=true) the release must decline the delete — it cannot
-    // tell its own still-on-disk lease from a takeover's unstamped one
+    val store = newStore("leasereadfault")
     flaky.failReads = true
-    var ran = false
-    try WriterLease.withLease(flaky, store, "read-faulted-release") {
-      ran = true
+    try {
+      var ran = false
+      WriterLease.withLease(flaky, store, "read-faulted-release") {
+        ran = true
+      }
+      assert(ran)
+      assert(unreleased(flaky, store).isEmpty,
+        "release depended on a read")
+      // the next claim proceeds at once: the released generation is
+      // decided from the listing alone
+      ran = false
+      WriterLease.withLease(flaky, store, "next") { ran = true }
+      assert(ran)
+      // a fresh generation stamped by a DEAD same-host pid: unreadable,
+      // the stamp is no evidence of death, so the claim refuses
+      val dead = new ProcessBuilder("true").start()
+      dead.waitFor()
+      plant(flaky, store, 10L, s"dead-holder pid=${dead.pid()} " +
+        s"host=${java.net.InetAddress.getLocalHost.getHostName} ")
+      intercept[WriterLease.ConcurrentWriterException] {
+        WriterLease.withLease(flaky, store, "blind") {
+          fail("took a live-looking generation over on an unread stamp")
+        }
+      }
+      // readable again: the dead-pid path reclaims it at once
+      flaky.failReads = false
+      ran = false
+      WriterLease.withLease(flaky, store, "sighted") { ran = true }
+      assert(ran, "a dead same-host holder's generation was not reclaimed")
+      assert(unreleased(flaky, store).isEmpty)
     } finally flaky.failReads = false
-    assert(ran)
-    assert(flaky.exists(lease),
-      "release deleted under an unreadable stamp with stamped=true — " +
-        "the r15-closed window reopened")
-    // the fault was transient and the file is OURS: the marker must
-    // have survived the declined delete, so this claim re-reads the
-    // stamp, sees our token, and reclaims NOW (pre-fix: the marker was
-    // dropped and this claim would refuse until the 10-min horizon)
-    val t0 = System.nanoTime()
-    var reclaimed = false
-    WriterLease.withLease(flaky, store, "restart-after-fault") {
-      reclaimed = true
-    }
-    assert(reclaimed,
-      "same-process restart did not reclaim its own lease after a " +
-        "transient release-time stamp-read fault")
-    assert((System.nanoTime() - t0) < 30L * 1000 * 1000 * 1000,
-      "reclaim took implausibly long — did the dropped marker force a " +
-        "horizon wait?")
-    assert(!flaky.exists(lease))
   }
 
   test("bounded-wait claim (r15 ask #5): a second claimant with waitMs " +
       "wins after the holder releases inside the window, and still " +
       "throws past it — on both the in-process and the on-disk path") {
     val fs = localFs
-    val store = java.nio.file.Files
-      .createTempDirectory("leasewait").resolve("store").toString
+    val store = newStore("leasewait")
     val entered = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     val t = new Thread(() =>
@@ -401,14 +428,11 @@ class WriterLeaseSpec extends AnyFunSuite {
     t.join(20000); t2.join(20000)
     assert(won.get(),
       "queued claimant did not win after the release inside its window")
-    assert(!fs.exists(WriterLease.leasePath(store)))
+    assert(unreleased(fs, store).isEmpty)
 
-    // on-disk path (no in-process holder): a fresh FOREIGN lease file
+    // on-disk path (no in-process holder): a fresh FOREIGN generation
     val lease = WriterLease.leasePath(store)
-    val out = fs.create(lease, false)
-    out.write(("foreign-maint pid=99999 host=elsewhere token=" +
-      java.util.UUID.randomUUID()).getBytes("UTF-8"))
-    out.close()
+    plant(fs, store, 100L, "foreign-maint pid=99999 host=elsewhere ")
     intercept[WriterLease.ConcurrentWriterException] {
       WriterLease.withLease(fs, store, "impatient2", waitMs = 250L) {
         fail("claimant body must not run against a live foreign lease")
@@ -416,7 +440,7 @@ class WriterLeaseSpec extends AnyFunSuite {
     }
     val freer = new Thread(() => {
       Thread.sleep(300)
-      fs.delete(lease, false): Unit
+      fs.create(new Path(lease, "100.released"), false).close()
     })
     freer.start()
     var ran = false
@@ -424,7 +448,7 @@ class WriterLeaseSpec extends AnyFunSuite {
       ran = true
     }
     freer.join(20000)
-    assert(ran, "claimant did not win after the foreign lease vanished " +
+    assert(ran, "claimant did not win after the foreign holder released " +
       "inside its window")
   }
 
@@ -484,7 +508,7 @@ class WriterLeaseSpec extends AnyFunSuite {
     val report = SimilarityOps.maintainVectorStore(spark, store,
       centPath, hotCellThreshold = 100L, coldCellThreshold = 0L)
     assert(report.hot.isEmpty)
-    assert(!fs.exists(WriterLease.leasePath(store)),
+    assert(unreleased(fs, store).isEmpty,
       "cycle did not release its lease")
 
     // the dedup signature store's writer entry carries the lease too
@@ -516,7 +540,7 @@ class WriterLeaseSpec extends AnyFunSuite {
         "compactStore/probeAndExtend were not both refused")
     }
     DedupOps.compactStore(spark, dstore) // free lease → proceeds
-    assert(!fs.exists(WriterLease.leasePath(dstore)))
+    assert(unreleased(fs, dstore).isEmpty)
 
     // r15 ask #5 plumbed through the operational entry points: a
     // cron-style compact queued with leaseWaitMs waits out a live
@@ -541,6 +565,78 @@ class WriterLeaseSpec extends AnyFunSuite {
     holderT.join(60000); cronT.join(120000)
     assert(compactErr.get() == null,
       s"queued compact failed instead of waiting: ${compactErr.get()}")
-    assert(!fs.exists(WriterLease.leasePath(dstore)))
+    assert(unreleased(fs, dstore).isEmpty)
+  }
+}
+
+object WriterLeaseSpec {
+
+  /** The generations in `store`'s lease directory that carry no
+    * release marker, ascending. */
+  def unreleased(fs: FileSystem, store: String): Seq[Long] = {
+    val lease = WriterLease.leasePath(store)
+    val names =
+      if (!fs.exists(lease)) Set.empty[String]
+      else fs.listStatus(lease).map(_.getPath.getName).toSet
+    names.toSeq.flatMap(_.toLongOption)
+      .filterNot(g => names(s"$g.released")).sorted
+  }
+
+  /** Write generation `g` of `store`'s lease with `stamp`, its mtime
+    * `ageMs` in the past — what a holder in another process leaves. */
+  def plant(fs: FileSystem, store: String, g: Long, stamp: String,
+      ageMs: Long = 0L): Unit = {
+    val gen = new Path(WriterLease.leasePath(store), g.toString)
+    val out = fs.create(gen, false)
+    out.write(stamp.getBytes("UTF-8"))
+    out.close()
+    if (ageMs > 0)
+      fs.setTimes(gen, System.currentTimeMillis() - ageMs, -1)
+  }
+}
+
+/** A local filesystem under the `racefs` scheme that makes two lease
+  * contenders (roles A and B, set per thread in [[StaleRaceFs.role]])
+  * act on outdated reads: each contender's FIRST read (stat or listing)
+  * of the lease path is taken, then waits until the other contender
+  * has read too; B's read is then returned only once A's body runs. So
+  * B acts on a view of the lease from before A claimed it. `getScheme`
+  * reports `file`, so the lease's create-if-absent keeps its atomic
+  * local path. */
+class StaleRaceFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("racefs:///")
+  override def getScheme: String = "file"
+  override def getFileStatus(f: Path): FileStatus =
+    StaleRaceFs.hold(f)(super.getFileStatus(f))
+  override def listStatus(f: Path): Array[FileStatus] =
+    StaleRaceFs.hold(f)(super.listStatus(f))
+}
+object StaleRaceFs {
+  val role: ThreadLocal[String] = new ThreadLocal[String]
+  @volatile private var lease = ""
+  @volatile private var bothRead = new CountDownLatch(2)
+  @volatile var aInBody = new CountDownLatch(1)
+  private val seen =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val timeouts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  def reset(leasePath: String): Unit = {
+    lease = leasePath
+    bothRead = new CountDownLatch(2)
+    aInBody = new CountDownLatch(1)
+    seen.clear(); timeouts.clear()
+  }
+
+  def hold[T](f: Path)(read: => T): T = {
+    val view = read
+    val r = role.get
+    if (r != null && f.toUri.getPath == lease && seen.add(r)) {
+      bothRead.countDown()
+      if (!bothRead.await(20, TimeUnit.SECONDS))
+        timeouts.add(s"$r waiting for the other read")
+      if (r == "B" && !aInBody.await(20, TimeUnit.SECONDS))
+        timeouts.add("B waiting for A's body")
+    }
+    view
   }
 }
