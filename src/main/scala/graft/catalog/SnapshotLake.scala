@@ -180,11 +180,12 @@ object SnapshotLake {
     commitVersion(Fs.forPath(spark, root), root)(dir =>
       df.write.mode("overwrite").parquet(dir.toString))
 
-  /** The version-commit step of both lakes: claim the next version
-    * ([[claimVersion]]), `land` the data in its `v=n` dir, create the
-    * commit marker — create-if-absent, so an existing marker (a
-    * protocol violation) fails loudly instead of being overwritten —
-    * then release the claim. `bracket(n)` runs right before the marker
+  /** The version-commit step of both lakes and both stores
+    * ([[StoreLake]]): claim the next version ([[claimVersion]]), `land`
+    * the data in its `v=n` dir, create the empty commit marker —
+    * create-if-absent, so an existing marker (a protocol violation)
+    * fails loudly instead of being overwritten — then release the
+    * claim. `bracket(n)` runs right before the marker
     * and again right after it: the partitioned lake writes its
     * commit-log entry there. The claim lock is heartbeated
     * ([[withLockHeartbeat]]) for the whole step, so a concurrent
@@ -334,13 +335,18 @@ object SnapshotLake {
     * `lockTtlMs` would otherwise delete a live writer's claim lock and
     * its in-flight `v=` dir. Each call probes its own uniquely named
     * file, so concurrent vacuums of one lake never delete each other's
-    * probe between its create and its stat. */
+    * probe between its create and its stat. The probe's delete is
+    * best-effort: a failed delete (or a crash before it) leaves one
+    * `clock.<uuid>` file, which [[sweep]] drops once it is as old as
+    * the lock TTL. */
   private[catalog] def fsNow(fs: FileSystem, dir: Path): Long = {
     val probe = new Path(dir, s"clock.${java.util.UUID.randomUUID()}")
     fs.mkdirs(dir)
     fs.create(probe, true).close()
     try fs.getFileStatus(probe).getModificationTime
-    finally fs.delete(probe, false) // throwaway — never leave probe litter
+    finally
+      try fs.delete(probe, false)
+      catch { case _: java.io.IOException => () }
   }
 
   /** The retention sweep of ONE versioned directory (a table root, or
@@ -352,7 +358,9 @@ object SnapshotLake {
     *    their markers — never the latest;
     *  - uncommitted `v=` dirs below the latest that no young lock claims
     *    (crash leftovers, rollbacks) are deleted;
-    *  - stale locks are dropped.
+    *  - stale locks are dropped, and so are [[fsNow]] probe files
+    *    (`clock.<uuid>`) as old as `lockTtlMs` — a crash between a
+    *    probe's create and its delete leaves one behind.
     * `keep` maps each committed version to its marker's mtime — the
     * only thing the two lakes' retention rules differ on. No-op on a
     * directory with no committed version. */
@@ -387,5 +395,10 @@ object SnapshotLake {
         }
     }
     stale.foreach { case (_, st) => fs.delete(st.getPath, false) }
+    listing.foreach { st =>
+      if (st.getPath.getName.startsWith("clock.") &&
+        now - st.getModificationTime >= lockTtlMs)
+        fs.delete(st.getPath, false)
+    }
   }
 }

@@ -11,27 +11,29 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    `compactVectorStore`, `splitHotCells`, `mergeColdCells`,
   *    `maintainVectorStore`, [[graft.operators.DedupOps.compactStore]],
   *    `DedupOps.probeAndExtend`) holds `<store>.writer.lease/` (a
-  *    SIBLING of the store path, so the rename-aside store swaps never
-  *    move it) for the duration of the call;
+  *    sibling of the store path) for the duration of the call;
   *  - the partitioned lake's manifest commits
   *    ([[PartitionedSnapshotLake.commitManifest]]), which serialize on
   *    `_snapshots/_commits/manifest.writer.lease/` with a bounded wait
   *    and fence each commit step on [[stillHeld]].
   *
-  * Why a lease: the stores' crash contracts (rename-aside swaps,
-  * guarded sweeps, replay-tolerant appends) make any SINGLE writer
-  * safe to kill anywhere, but two CONCURRENT writers interleave
-  * destructively (two compacts both read the corpus, and the second
-  * swap discards every row the first admitted). The lease makes that
-  * a loud [[ConcurrentWriterException]] instead of quiet corruption.
+  * Why a lease: every store write commits one snapshot-lake version
+  * ([[StoreLake]]), so any SINGLE writer is safe to kill anywhere, but
+  * two CONCURRENT writers interleave destructively (a compaction
+  * commits its own base, so an append that committed after the
+  * compaction read its pin is dropped from every later read). The
+  * lease makes that a loud [[ConcurrentWriterException]] instead of
+  * quiet data loss.
   *
   * Layout: the lease directory holds generation files named `g`
   * (content: the holder's stamp `what pid= host= start=`) and release
   * markers `g.released`. The highest generation on disk decides.
   *  - CLAIM: list the directory once; the lease is claimable when
   *    there is no generation, or the highest generation `g` is
-  *    released, older than `staleMs` (no heartbeat — default
-  *    [[DefaultStaleLeaseMs]], 10 min), this process's recorded orphan
+  *    released, older than `staleMs` on the filesystem clock
+  *    ([[SnapshotLake.fsNow]], probed only when `g` is unreleased; no
+  *    heartbeat — default [[DefaultStaleLeaseMs]], 10 min), this
+  *    process's recorded orphan
   *    (its release failed), or stamped by a dead or recycled pid on
   *    this host. The claimant then creates `g+1` create-if-absent with
   *    its stamp, re-lists to check that no higher generation predates
@@ -59,10 +61,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    .maintainVectorStore]] claims once and the primitives it
   *    sequences re-enter without touching the filesystem.
   *
-  * READERS NEVER LOCK: the probe-side safety against an in-flight
-  * maintenance writer is the rename-aside swap plus the per-(q,id)
-  * candidate collapse, both spec-pinned in VectorStoreSpec;
-  * [[holderIsLive]] lets readers leave a live writer's swap alone. */
+  * READERS NEVER LOCK: a store reader pins the newest commit marker
+  * and reads only immutable committed versions ([[StoreLake.pin]]). */
 object WriterLease {
 
   /** A live concurrent writer holds the store's lease. The caller
@@ -212,15 +212,15 @@ object WriterLease {
         ls.exists(_.getPath.getName == s"$g.released"))
     }
 
-  /** Why the highest generation may be superseded, or None while its
-    * holder is live: released, older than `staleMs`, this process's
-    * orphan, or a dead or recycled same-host pid. */
+  /** Why the unreleased highest generation may be superseded, or None
+    * while its holder is live: older than `staleMs` on the filesystem
+    * clock (`now`, [[SnapshotLake.fsNow]] — the clock that stamped the
+    * generation's mtime), this process's orphan, or a dead or recycled
+    * same-host pid. */
   private def vacancy(fs: FileSystem, lease: Path, store: String, t: Top,
-      staleMs: Long): Option[String] = {
-    val age = t.file.fold(Long.MaxValue)(f =>
-      System.currentTimeMillis() - f.getModificationTime)
-    if (t.released) Some("released")
-    else if (age > staleMs)
+      staleMs: Long, now: Long): Option[String] = {
+    val age = t.file.fold(Long.MaxValue)(now - _.getModificationTime)
+    if (age > staleMs)
       Some(s"stale: age $age ms > $staleMs ms — crashed holder")
     else if (orphans.getOrDefault(store, 0L) == t.gen)
       Some("this process's orphan: a failed call's release failed too")
@@ -236,8 +236,16 @@ object WriterLease {
     while (attempt < MaxClaimAttempts) {
       attempt += 1
       val prev = top(listing(fs, lease))
-      val why = prev.map(t => vacancy(fs, lease, store, t, staleMs)
-        .getOrElse(throw liveHolder(fs, lease, t, what, staleMs)))
+      // the clock is probed only against an unreleased generation, so
+      // an uncontended claim makes no filesystem call for it
+      val why = prev.map { t =>
+        if (t.released) "released"
+        else {
+          val now = SnapshotLake.fsNow(fs, lease)
+          vacancy(fs, lease, store, t, staleMs, now)
+            .getOrElse(throw liveHolder(fs, lease, t, what, staleMs, now))
+        }
+      }
       val g = prev.fold(1L)(_.gen + 1)
       if (SnapshotLake.atomicCreate(fs, genPath(lease, g), stamp(what))) {
         val ls = listing(fs, lease)
@@ -247,9 +255,17 @@ object WriterLease {
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               s"took over writer lease $lease at generation $g for " +
                 s"'$what' (generation ${g - 1}: $w)"))
-          ls.filter(genOf(_).exists(_ < g)).foreach(st =>
-            try fs.delete(st.getPath, false)
-            catch { case _: java.io.IOException => () })
+          // sweep the generations below ours, and the clock probes
+          // ([[SnapshotLake.fsNow]]) a failed delete left, once older
+          // than `staleMs` on the clock our generation's mtime reads
+          val now = ls.find(_.getPath.getName == g.toString)
+            .map(_.getModificationTime)
+          ls.filter(st => genOf(st).exists(_ < g) ||
+              st.getPath.getName.startsWith("clock.") &&
+                now.exists(_ - st.getModificationTime > staleMs))
+            .foreach(st =>
+              try fs.delete(st.getPath, false)
+              catch { case _: java.io.IOException => () })
           return g
         }
         // a higher generation predates our create (our listing was
@@ -265,9 +281,8 @@ object WriterLease {
   }
 
   private def liveHolder(fs: FileSystem, lease: Path, t: Top, what: String,
-      staleMs: Long): ConcurrentWriterException = {
-    val age = t.file.fold(0L)(f =>
-      System.currentTimeMillis() - f.getModificationTime)
+      staleMs: Long, now: Long): ConcurrentWriterException = {
+    val age = t.file.fold(0L)(now - _.getModificationTime)
     new ConcurrentWriterException(
       s"store writer lease $lease is held by a LIVE writer " +
         s"[${readStamp(fs, genPath(lease, t.gen)).getOrElse("(unstamped)")}] " +
@@ -345,22 +360,4 @@ object WriterLease {
           }.getOrElse(false)
       case _ => false
     }
-
-  /** Whether the store's lease is held by a writer that is LIVE as far
-    * as this process can observe — the read paths' guard: a reader
-    * that finds rename-aside swap debris must not heal an IN-FLIGHT
-    * swap out from under a live writer. Never locks, never mutates.
-    * The in-process registry answers first (this thread's own hold is
-    * not a foreign writer: writers heal swap debris under their own
-    * lease); otherwise the claim's rule is applied to the highest
-    * generation. */
-  private[graft] def holderIsLive(fs: FileSystem, store: String,
-      staleMs: Long = DefaultStaleLeaseMs): Boolean = {
-    val inProc = liveInProcess.get(store)
-    if (inProc eq Thread.currentThread()) return false
-    if (inProc != null) return true
-    val lease = leasePath(store)
-    top(listing(fs, lease))
-      .exists(vacancy(fs, lease, store, _, staleMs).isEmpty)
-  }
 }

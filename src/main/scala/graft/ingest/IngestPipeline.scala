@@ -59,8 +59,6 @@ object IngestPipeline {
     def seriesBlob(entries: (String, String)*): Array[Byte] =
       el(0x0029, 0x1020, "OB", csaBlob(Seq(
         "MrPhoenixProtocol" -> Seq(ascconv(entries)))))
-    def durationBlob(sec: Int): Array[Byte] =
-      seriesBlob("lTotalScanTimeSec" -> sec.toString)
     def imageBlob(tags: (String, Seq[String])*): Array[Byte] =
       el(0x0029, 0x1010, "OB", csaBlob(tags))
     def explicitDs(series: String, inst: Int, echo: Int, expected: Int,

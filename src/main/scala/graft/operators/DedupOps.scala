@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftFunctions
 import graft.Tables.load
+import graft.catalog.StoreLake
 
 /** Deduplication suite for large-scale training-data pipelines: exact
   * (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket join),
@@ -360,17 +361,15 @@ object DedupOps {
     // the default (materialize=true) path APPENDS to the signature
     // store, so it is a writer entry point like compactStore and
     // must hold the store's writer lease for the
-    // probe→append span: an append landing inside a concurrent
-    // compact's read→swap window would be silently discarded with the
-    // swapped-aside store (the exact lost-rows race the lease exists
-    // for — the v-side twin extendVectorStore claims for the same
-    // reason). The materialize=false plan-audit form never writes and
-    // stays lockless like every reader.
-    val leaseFs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    // probe→append span: an append committed after a concurrent
+    // compaction pinned its input would fall below the compaction's
+    // base and drop out of every later read (the lost-rows race the
+    // lease exists for — the v-side twin extendVectorStore claims for
+    // the same reason). The materialize=false plan-audit form never
+    // writes and stays lockless like every reader.
     if (materialize)
-      graft.catalog.WriterLease.withLease(leaseFs, store,
-        "probeAndExtend") {
+      graft.catalog.WriterLease.withLease(
+          graft.util.Fs.forPath(spark, store), store, "probeAndExtend") {
         probeAndExtendBody(store, batch, maxBroadcastBandRows,
           materialize = true)
       }
@@ -386,32 +385,17 @@ object DedupOps {
       .withColumn("shingles", expr("md5_shingle60(text)"))
       .select(col("doc_id"), col("shingles"))
     val bands = bandHashes(sh).cache()
-    // store existence resolves through Hadoop's FileSystem, not
-    // java.io.File: on hdfs:// / s3a:// a File-based check is always
-    // false, silently disabling the probe exactly at the scale this
-    // operator targets (round-6 advice)
-    val storePath = new org.apache.hadoop.fs.Path(store)
-    val storeFs =
-      storePath.getFileSystem(spark.sessionState.newHadoopConf())
-    // a missing store dir with swap debris next to it is an
-    // interrupted compact, NOT a fresh pipeline — roll it
-    // forward/back instead of silently reseeding an empty store and
-    // discarding the dedup history
-    if (!storeFs.exists(storePath)) recoverStoreSwap(storeFs, store)
-    val storeExists = storeFs.exists(storePath)
-    val storeHits =
-      if (!storeExists)
+    // the store resolves through Hadoop's FileSystem, not java.io.File:
+    // on hdfs:// / s3a:// a File-based check is always false, silently
+    // disabling the probe exactly at the scale this operator targets
+    val fs = graft.util.Fs.forPath(spark, store)
+    val pin = StoreLake.pin(fs, store)
+    val storeHits = pin match {
+      case None =>
         spark.emptyDataFrame.withColumn("doc_id", lit(0L)).limit(0)
           .select(col("doc_id"))
-      else {
-        val corpus = spark.read.parquet(store)
-        // layout guard: a store without the hashed (doc_id, bh)
-        // layout must not half-work or get mixed schemas appended
-        // next to it
-        if (!corpus.columns.contains("bh"))
-          throw new IllegalStateException(
-            s"signature store at $store is not a (doc_id, bh) store " +
-              s"(columns: ${corpus.columns.mkString(", ")})")
+      case Some(p) =>
+        val corpus = StoreLake.read(spark, store, p)
         // the batch side broadcasts ONLY while its band table is
         // broadcast-sized — a catch-up batch after stream downtime can
         // carry millions of docs (16 band rows each), and forcing a
@@ -422,7 +406,7 @@ object DedupOps {
         batchSide.join(
           corpus.withColumnRenamed("doc_id", "corpus_id"), Seq("bh"))
           .select(col("doc_id")).distinct()
-      }
+    }
     // within-batch duplicates never reach the store probe (neither
     // copy is stored yet), so a batch-sized self-probe closes the
     // blind spot: in every band bucket the batch's min doc_id is the
@@ -464,11 +448,18 @@ object DedupOps {
     // documented contract for REPLAYED docs across batches, not for a
     // frame consumed within the batch that admitted them). Skipping
     // the append keeps the lazy frame value-correct AND keeps a plan
-    // audit from mutating store state as a side effect.
-    if (materialize)
-      bands.join(verdict.filter(!col("is_dup")).select(col("doc_id")),
-          "doc_id")
-        .write.mode("append").parquet(store)
+    // audit from mutating store state as a side effect. The append
+    // writes ONLY the batch's novel bands, as one new version on the
+    // store's base (a first append is its own base); a batch with no
+    // novel doc commits nothing, so it adds no version for later
+    // probes to read.
+    if (materialize && !verdict.filter(!col("is_dup")).isEmpty)
+      StoreLake.commit(fs, store,
+          n => Map("base" -> pin.fold(n)(_.base))) { dir =>
+        bands.join(verdict.filter(!col("is_dup")).select(col("doc_id")),
+            "doc_id")
+          .write.mode("overwrite").parquet(dir.toString)
+      }
     bands.unpersist()
     verdict
   }
@@ -551,156 +542,55 @@ object DedupOps {
       .select(col("doc_id"), xxhash64(col("band"), col("band_key")).as("bh"))
 
   /** Maintenance compaction for the streaming signature store: every
-    * micro-batch's novel-band append leaves its own small parquet
-    * file, so after ten thousand batches the per-batch probe scan is
-    * file-OPEN bound, not byte bound. Rewrite to size-targeted files
-    * (~128 MB, or `targetFiles` if given), deduplicating rows on the
-    * way — at-least-once replay can append the same (doc_id, bh)
-    * twice, which is verdict-harmless (hits are distinct'd) but pure
-    * waste on disk. Rewrites to `store.next`, then [[swapStore]].
-    * NOT safe against a concurrent writer: run it from the ingest job
-    * between batches, where foreachBatch already serializes store
-    * access — or from a separate cron job with `leaseWaitMs` > 0,
-    * which QUEUES behind a live ingest batch's lease for up to that
-    * long instead of crashing on ConcurrentWriterException (r15 ask
-    * #5's operational shape; the default stays throw-immediately). */
+    * micro-batch's novel-band append leaves its own small version, so
+    * after ten thousand batches the per-batch probe scan is file-OPEN
+    * bound, not byte bound. Rewrite the pinned store to size-targeted
+    * files (~128 MB, or `targetFiles` if given) as one new version that
+    * is its own base, deduplicating rows on the way — at-least-once
+    * replay can append the same (doc_id, bh) twice, which is
+    * verdict-harmless (hits are distinct'd) but pure waste on disk —
+    * then sweep ([[StoreLake.sweep]]): superseded
+    * versions stay readable for the reader hazard horizon. Holds the
+    * store's writer lease: run it from the ingest job between batches,
+    * or from a separate cron job with `leaseWaitMs` > 0, which QUEUES
+    * behind a live ingest batch's lease for up to that long instead of
+    * crashing on ConcurrentWriterException (the default stays
+    * throw-immediately). */
   def compactStore(spark: SparkSession, store: String,
       targetFiles: Int = 0, leaseWaitMs: Long = 0L): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = graft.util.Fs.forPath(spark, store)
     graft.catalog.WriterLease.withLease(fs, store, "compactStore",
         waitMs = leaseWaitMs) {
-      compactStoreHeld(spark, store, fs, targetFiles)
+      StoreLake.pin(fs, store).foreach { pin =>
+        val bytes = pin.versions.map(v => fs.getContentSummary(
+          new org.apache.hadoop.fs.Path(store, s"v=$v")).getLength).sum
+        val files =
+          if (targetFiles > 0) targetFiles
+          else math.max(1L, bytes / (128L * 1024 * 1024)).toInt
+        // ONE shuffle, not two: hash-repartition on bh into the target
+        // file count, then dedup in place — HashPartitioning(bh)
+        // satisfies dropDuplicates' ClusteredDistribution(doc_id, bh)
+        // (subset keys), so no second exchange follows. bh is itself a
+        // hash, so the n output files stay size-balanced.
+        StoreLake.commit(fs, store, n => Map("base" -> n)) { dir =>
+          StoreLake.read(spark, store, pin)
+            .select(col("doc_id"), col("bh"))
+            .repartition(files, col("bh"))
+            .dropDuplicates(Seq("doc_id", "bh"))
+            .write.mode("overwrite").parquet(dir.toString)
+        }
+        StoreLake.sweep(fs, store)
+      }
     }
   }
 
-  private def compactStoreHeld(spark: SparkSession, store: String,
-      fs: org.apache.hadoop.fs.FileSystem, targetFiles: Int): Unit = {
-    // writer entry: heal an interrupted swap AND reclaim a stale aside
-    recoverStoreSwap(fs, store, dropAside = true)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(store))) return // no-op
-    val corpus = spark.read.parquet(store)
-    if (!corpus.columns.contains("bh"))
-      throw new IllegalStateException(
-        s"signature store at $store is not a (doc_id, bh) store " +
-          s"(columns: ${corpus.columns.mkString(", ")}); refusing to " +
-          "compact it")
-    val bytes = fs.getContentSummary(
-      new org.apache.hadoop.fs.Path(store)).getLength
-    val n =
-      if (targetFiles > 0) targetFiles
-      else math.max(1L, bytes / (128L * 1024 * 1024)).toInt
-    val tmp = new org.apache.hadoop.fs.Path(store + ".next")
-    fs.delete(tmp, true)
-    // ONE shuffle, not two: hash-repartition on bh into the target
-    // file count, then dedup in place — HashPartitioning(bh) satisfies
-    // dropDuplicates' ClusteredDistribution(doc_id, bh) (subset keys),
-    // so no second exchange follows; the old distinct().repartition(n)
-    // form shuffled the whole store twice. bh is itself a hash, so the
-    // n output files stay size-balanced.
-    corpus.select(col("doc_id"), col("bh"))
-      .repartition(n, col("bh"))
-      .dropDuplicates(Seq("doc_id", "bh"))
-      .write.parquet(tmp.toString)
-    swapStore(fs, store)
-  }
-
-  /** Crash-safe-enough store swap: `store.next` (the fully-written
-    * replacement) moves in via rename-aside — old store → `store.old`,
-    * next → store, delete old. A crash in the middle leaves either
-    * the old store in place (before the first rename) or the
-    * `store.old`+`store.next` debris pair, which [[recoverStoreSwap]]
-    * — called by every maintenance entry point AND by the
-    * [[probeAndExtend]] existence check — rolls forward or back; the
-    * store path is never observably absent without recoverable
-    * neighbors, so a crashed swap can no longer silently reseed an
-    * empty store. */
-  private[operators] def swapStore(fs: org.apache.hadoop.fs.FileSystem,
-      store: String): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(store)
-    val next = new org.apache.hadoop.fs.Path(store + ".next")
-    val old = new org.apache.hadoop.fs.Path(store + ".old")
-    fs.delete(old, true)
-    require(fs.rename(cur, old), s"swap aside failed: $cur -> $old")
-    require(fs.rename(next, cur), s"swap in failed: $next -> $cur")
-    fs.delete(old, true): Unit
-  }
-
-  /** Heal interrupted [[swapStore]] states: if the store is missing
-    * but a fully-written replacement (`store.next`) exists, roll
-    * FORWARD (the replacement was complete before the old store was
-    * touched); if only `store.old` remains, roll BACK. When the store
-    * EXISTS alongside a lingering `store.old`, the aside is always
-    * STALE residue — left by a crash at swapStore's final delete, or
-    * by an earlier roll-forward heal here (rename `.next` in, `.old`
-    * stays behind); after a compact
-    * that residue is a full copy of the store, doubling its footprint
-    * until the next swap happens to run (found by
-    * StoreMaintCrashFuzzSpec's kill at that delete). WRITER entry
-    * points pass `dropAside = true` to reclaim it; READ paths (the
-    * store probes) keep the default false so healing from a probe
-    * never mutates the store — a read-only principal must be able to
-    * probe past a crashed compact's debris (the roll-forward renames
-    * below only ever fire when the store path itself is GONE, where a
-    * probe would fail anyway). A coexisting `store.next` is never
-    * touched when the store is present — it is an in-progress writer's
-    * staging or a crashed pre-swap build, and the owning maintenance
-    * op deletes and rebuilds it itself. Idempotent, cheap (a few
-    * exists calls).
-    *
-    * FOREIGN-HOST-CRASH WINDOW (r15, accepted tradeoff): readers back
-    * off whenever [[graft.catalog.WriterLease.holderIsLive]] says the
-    * lease looks live (its highest generation is unreleased, younger
-    * than the stale horizon, not this process's orphan and not
-    * stamped by a dead same-host pid). For a holder that CRASHED
-    * mid-swap on a FOREIGN host, the lease stays live-looking until
-    * the stale horizon (no shared kernel to ask, ≤ 10 min),
-    * so a plain [[graft.operators.SimilarityOps.probeVectorStore]]
-    * caller gets an unretried FileNotFoundException for up to that
-    * horizon where pre-r15 it would have self-healed — availability
-    * traded for not stealing an IN-FLIGHT swap's second rename out
-    * from under a live writer. Probes racing LIVE maintenance should
-    * use [[graft.operators.SimilarityOps.probeVectorStoreConsistent]]
-    * (it retries past in-flight swaps without healing anything); the
-    * crashed-foreign-holder window itself is closed only by time or
-    * by a writer: same-host crashes reclaim immediately via the
-    * dead-pid check, the horizon expires in ≤ 10 min, and any WRITER
-    * entry (`dropAside = true`, its own claim having superseded the
-    * stale generation) heals the swap on arrival. */
-  private[operators] def recoverStoreSwap(
-      fs: org.apache.hadoop.fs.FileSystem, store: String,
-      dropAside: Boolean = false): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(store)
-    if (fs.exists(cur)) {
-      val old = new org.apache.hadoop.fs.Path(store + ".old")
-      if (dropAside && fs.exists(old)) {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"dropping stale swap aside $old (a crashed swap's final " +
-            "delete, or a prior roll-forward's leftover)")
-        fs.delete(old, true): Unit
-      }
-      return
-    }
-    // roll-forward/back heals CRASH debris only: when a LIVE writer
-    // holds the store's lease, an absent store path is an IN-FLIGHT
-    // rename-aside swap, and a reader "healing" it would rename
-    // `.next` in under the writer — making the writer's own second
-    // rename fail and aborting a healthy maintenance cycle. Readers
-    // (dropAside = false) back off and let the probe fail/retry
-    // ([[graft.operators.SimilarityOps.probeVectorStoreConsistent]]);
-    // writers heal under their own held lease (dropAside = true;
-    // holderIsLive answers false for the calling holder's own lease).
-    if (!dropAside && graft.catalog.WriterLease.holderIsLive(fs, store))
-      return
-    Seq(store + ".next", store + ".old")
-      .map(new org.apache.hadoop.fs.Path(_))
-      .find(fs.exists)
-      .foreach { p =>
-        require(fs.rename(p, cur), s"store swap recovery failed: " +
-          s"$p -> $cur (recover by hand, do NOT reseed)")
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"recovered interrupted store swap at $store from $p")
-      }
+  /** The signature store's (doc_id, bh) rows as of its newest commit. */
+  def readStore(spark: SparkSession, store: String): DataFrame = {
+    val fs = graft.util.Fs.forPath(spark, store)
+    StoreLake.pin(fs, store)
+      .map(StoreLake.read(spark, store, _))
+      .getOrElse(throw new IllegalStateException(
+        s"no committed signature store at $store"))
   }
 
   /** Bands as `rowsPerBand`-lane slices of an EXISTING (doc_id, sig)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables.load
+import graft.catalog.StoreLake
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (64-dim float vectors).
@@ -1074,19 +1075,26 @@ object SimilarityOps {
 
   // ------------------------------------------------------------------
   // Streaming IVF vector store — the similarity-search counterpart of
-  // DedupOps.probeAndExtend: a continuously-fed ANN index as plain
-  // cell-partitioned parquet. Layout: `store/cid=<cell>/part-*.parquet`
+  // DedupOps.probeAndExtend: a continuously-fed ANN index as
+  // cell-partitioned parquet on the snapshot lake's version protocol
+  // (graft.catalog.StoreLake). Version n holds `v=n/cid=<cell>/part-*`
   // with (vec_id, v) rows — the IVF posting lists, one hive partition
-  // per coarse cell. The partition column is what buys the scale
-  // property: a probe reads ONLY its probed cells' directories
-  // (partition pruning at planning time), so per-query scan cost is
-  // nprobe/nlist of the corpus no matter how big the store grows —
-  // unlike the dedup signature store, whose hash keys spread every
-  // batch across all files. Ingest is append-only per cell; the store
-  // is the only state (restart = source checkpoint + store as
-  // written), mirroring the dedup store's replay story: a replayed
-  // vector appends a duplicate row, which changes no top-k result
-  // ranked with vec_id tiebreak after `distinct`.
+  // per coarse cell — and, when n changed the quantizer,
+  // `v=n/_centroids/` (cid int, cv array<double>); its `v=n/_store`
+  // file records the base and the version of the centroid table in
+  // force.
+  // The cell partition column buys the scale property: a probe reads
+  // ONLY its probed cells' directories (partition pruning at planning
+  // time), so per-query scan cost is nprobe/nlist of the corpus no
+  // matter how big the store grows — unlike the dedup signature store,
+  // whose hash keys spread every batch across all files. The store is
+  // the only state (restart = source checkpoint + store as committed),
+  // mirroring the dedup store's replay story: a replayed vector
+  // appends a duplicate row, which changes no top-k result ranked with
+  // vec_id tiebreak after the per-(query, neighbor) collapse. Rows of
+  // a cell a split or merge retired stay in the pinned range until the
+  // next compaction; every read keeps to the live cells of its pin's
+  // centroid table.
   // ------------------------------------------------------------------
 
   /** Probe-row ceiling for [[probeVectorStore]]'s driver-side
@@ -1242,23 +1250,97 @@ object SimilarityOps {
       .select(col("q_id"), col("top.cid").as("cid"), col("va"))
   }
 
+  /** One pinned read of a vector store: the pin, its centroid table
+    * (cid → cv — k·d doubles, driver-small by the IVF contract) and the
+    * rows of every cell in the pinned range, cells a split or merge
+    * retired included. */
+  private[operators] final class Pinned(spark: SparkSession, store: String,
+      val pin: StoreLake.Pin, val cents: Map[Int, Seq[Double]]) {
+    /** (vec_id, v, cid), read on first use: an append needs only the
+      * centroid table. */
+    lazy val rows: DataFrame =
+      StoreLake.read(spark, store, pin, Some("_schema"))
+        .withColumnRenamed("vec", "v")
+    /** The rows of the cells the centroid table serves. */
+    def live: DataFrame =
+      rows.filter(col("cid").isin(cents.keys.toSeq: _*))
+  }
+
+  private[operators] def pinned(spark: SparkSession,
+      store: String): Option[Pinned] =
+    StoreLake.pin(graft.util.Fs.forPath(spark, store), store).map { p =>
+      new Pinned(spark, store, p, StoreLake.readAt(spark, store,
+          p.fields("centroids"), "_centroids")
+        .select(col("cid").cast("int"), col("cv")).collect()
+        .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap)
+    }
+
+  private def pinnedOrFail(spark: SparkSession, store: String): Pinned =
+    pinned(spark, store).getOrElse(throw new IllegalStateException(
+      s"no committed vector store at $store"))
+
+  /** Commit one vector-store version on `base` (None: a first version,
+    * or a compaction — its own base). `rows` (cid, vec_id, v) land
+    * under `v=n/cid=` as (vec_id, vec) files — on disk the vector
+    * column is `vec`, because `v` names the version dirs — and a
+    * version that is its own base also writes their zero-row schema
+    * file under `v=n/_schema/` for readers. A changed centroid table
+    * lands under `v=n/_centroids/`; otherwise the version's fields
+    * carry the pinned table's version forward. */
+  private def commitVectors(spark: SparkSession, store: String,
+      base: Option[StoreLake.Pin], rows: DataFrame,
+      cents: Option[DataFrame]): Long = {
+    val fs = graft.util.Fs.forPath(spark, store)
+    StoreLake.commit(fs, store, n => Map(
+        "base" -> base.fold(n)(_.base),
+        "centroids" -> cents.fold(base.get.fields("centroids"))(_ => n))) {
+      dir =>
+        fs.delete(dir, true) // a crashed writer's orphan at this number
+        val posting =
+          rows.select(col("cid"), col("vec_id"), col("v").as("vec"))
+        posting.write.partitionBy("cid").parquet(dir.toString)
+        def sub(name: String) =
+          new org.apache.hadoop.fs.Path(dir, name).toString
+        if (base.isEmpty)
+          posting.drop("cid").limit(0).write.parquet(sub("_schema"))
+        cents.foreach(_.coalesce(1).write.parquet(sub("_centroids")))
+    }
+  }
+
+  /** A vector store as of its newest commit: the centroid table
+    * (cid, cv) and the (cid, vec_id, v) rows of its live cells, both
+    * from one pin. */
+  def readVectorStore(spark: SparkSession,
+      store: String): (DataFrame, DataFrame) = {
+    val p = pinnedOrFail(spark, store)
+    (centroidFrame(spark, p.cents.toSeq),
+      p.live.select(col("cid"), col("vec_id"), col("v")))
+  }
+
   /** Assign each batch vector to its nearest centroid (per-row
-    * typed-literal argmax — see [[assignToCells]]) and APPEND to the
-    * cell-partitioned store. `centroids` = (cid int, cv
-    * array<double>), e.g. the v11 fitted quantizer's staged output. */
+    * typed-literal argmax — see [[assignToCells]]) and APPEND it to the
+    * cell-partitioned store as one new version. `centroids` = (cid int,
+    * cv array<double>), e.g. the v11 fitted quantizer's staged output,
+    * seeds a store with no commit yet: its first version records it as
+    * the store's centroid table. A store that exists assigns against
+    * its OWN pinned table, which splits and merges evolve, so a
+    * caller's copy of the seed quantizer never routes a vector into a
+    * retired cell. */
   def extendVectorStore(store: String, centroids: DataFrame,
       batch: DataFrame, idCol: String = "vec_id",
       vecCol: String = "v"): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-    // ingest is a writer: claim the single-writer lease (two streams
-    // appending to one store would race the maintenance swaps), heal
-    // an interrupted compact, and reclaim a stale swap aside (probes
-    // keep the read-only default)
-    graft.catalog.WriterLease.withLease(fs, store, "extendVectorStore") {
-      DedupOps.recoverStoreSwap(fs, store, dropAside = true)
-      assignToCells(centroids, batch, idCol, vecCol)
-        .write.mode("append").partitionBy("cid").parquet(store)
+    val spark = batch.sparkSession
+    // ingest is a writer: claim the single-writer lease (an append
+    // racing a compaction would fall below its base)
+    graft.catalog.WriterLease.withLease(graft.util.Fs.forPath(spark, store),
+        store, "extendVectorStore") {
+      val p = pinned(spark, store)
+      val seed = centroids.select(col("cid").cast("int").as("cid"),
+        col("cv"))
+      val table = p.fold(seed)(x => centroidFrame(spark, x.cents.toSeq))
+      commitVectors(spark, store, p.map(_.pin),
+        assignToCells(table, batch, idCol, vecCol),
+        if (p.isEmpty) Some(seed) else None): Unit
     }
   }
 
@@ -1266,10 +1348,15 @@ object SimilarityOps {
     * cells nearest each query: the probed cell set (≤ queries ×
     * nprobe, bounded by nlist) collects to the driver and becomes a
     * PARTITION FILTER on the store scan — pruned cells' directories
-    * are never listed or read (VectorStoreSpec asserts by recorded
-    * file opens). Probe rows broadcast into the cell-keyed equi-join;
-    * ranking is double-cosine rounded to 6 decimals with vec_id
-    * tiebreak, same determinism contract as v1–v11.
+    * are never read (VectorStoreSpec asserts by recorded file opens).
+    * Probe rows broadcast into the cell-keyed equi-join; ranking is
+    * double-cosine rounded to 6 decimals with vec_id tiebreak, same
+    * determinism contract as v1–v11.
+    *
+    * The centroid table and the postings come from ONE pin of the
+    * store ([[graft.catalog.StoreLake.pin]]): both are immutable
+    * committed versions, so a probe racing a live maintenance cycle
+    * reads one consistent snapshot, with no lock and no retry.
     *
     * `excludeSelf` (default true) drops a neighbor whose id equals
     * the query's — right for in-store queries (self is always cosine
@@ -1285,15 +1372,13 @@ object SimilarityOps {
     * round-10 leak). Batches beyond [[MaxProbeRows]] fail loudly —
     * probe batches that size should go through [[extendVectorStore]]
     * + a bulk join instead. */
-  def probeVectorStore(store: String, centroids: DataFrame,
-      queries: DataFrame, k: Int, nprobe: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "v",
+  def probeVectorStore(store: String, queries: DataFrame, k: Int,
+      nprobe: Int = 2, idCol: String = "vec_id", vecCol: String = "v",
       excludeSelf: Boolean = true): DataFrame = {
     val spark = queries.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    DedupOps.recoverStoreSwap(fs, store) // heal an interrupted compact
-    val probeDf = probeCells(centroids, queries, nprobe, idCol, vecCol)
+    val p = pinnedOrFail(spark, store)
+    val probeDf = probeCells(centroidFrame(spark, p.cents.toSeq), queries,
+      nprobe, idCol, vecCol)
     val probeRows = probeDf.limit(MaxProbeRows + 1).collect()
     require(probeRows.length <= MaxProbeRows,
       s"probeVectorStore: query batch exceeds $MaxProbeRows probe " +
@@ -1303,35 +1388,30 @@ object SimilarityOps {
       java.util.Arrays.asList(probeRows: _*), probeDf.schema)
     val cells = probeRows
       .map(r => r.getInt(r.fieldIndex("cid"))).distinct.toSeq // ≤ nlist
-    // NO distinct here: same-cell replays collapse in the (q_id, n_id)
-    // max-agg below along with cross-cell duplicates — an early
-    // distinct would shuffle every PAYLOAD-carrying posting row over
-    // (cid, n_id, vb) just to drop the rare replay, where the late
-    // collapse shuffles only slim (q_id, n_id, r) rows and the
-    // postings stream map-side through the broadcast join without
-    // ever crossing an exchange. A replayed row costs one extra
-    // cosine; duplicates are the exception, payload bytes are not.
-    val postings = spark.read.parquet(store)
+    // NO distinct here: replays collapse in the (q_id, n_id) max-agg
+    // below — an early distinct would shuffle every PAYLOAD-carrying
+    // posting row over (cid, n_id, vb) just to drop the rare replay,
+    // where the late collapse shuffles only slim (q_id, n_id, r) rows
+    // and the postings stream map-side through the broadcast join
+    // without ever crossing an exchange. A replayed row costs one
+    // extra cosine; duplicates are the exception, payload bytes are
+    // not.
+    val postings = p.rows
       .filter(col("cid").isin(cells: _*)) // partition-pruned scan
       .select(col("cid"), col("vec_id").as("n_id"), col("v").as("vb"))
     val joined = postings.join(broadcast(probes), Seq("cid"))
     val scored = (if (excludeSelf) joined.filter(col("q_id") =!= col("n_id"))
       else joined)
       .withColumn("r", expr("round(cosine_sim(va, vb), 6)"))
-      // CROSS-cell duplicates collapse too (one candidate per
-      // (q_id, n_id), its best score): a vector served from two
-      // probed cells — mergeColdCells' crash window copies a cold
-      // cell's rows into a LIVE survivor cell before the table swap —
-      // must fill ONE top-k slot, not two — and same-cell REPLAYS
-      // collapse here too (identical r), which is why the postings
-      // scan carries no distinct. The explicit q_id repartition makes
-      // this agg and the rank window below share ONE exchange:
-      // HashPartitioning(q_id) satisfies the agg's
+      // one candidate per (q_id, n_id), its best score: a replayed
+      // vector fills ONE top-k slot, not two. The explicit q_id
+      // repartition makes this agg and the rank window below share ONE
+      // exchange: HashPartitioning(q_id) satisfies the agg's
       // ClusteredDistribution(q_id, n_id) — subset-key partitioning
       // co-locates equal pairs — AND the window's q_id clustering,
       // where the groupBy's own HashPartitioning(q_id, n_id) would
       // NOT satisfy the window and Catalyst would plan a second
-      // shuffle of the candidate set (plan-pinned below).
+      // shuffle of the candidate set (plan-pinned in VectorStoreSpec).
       .repartition(col("q_id"))
       .groupBy(col("q_id"), col("n_id")).agg(max(col("r")).as("r"))
     val wk = Window.partitionBy(col("q_id"))
@@ -1341,364 +1421,50 @@ object SimilarityOps {
       .select(col("q_id"), col("rk"), col("n_id"), col("r"))
   }
 
-  /** Metadata fingerprint of the (postings, centroid-table) pair that
-    * [[probeVectorStoreConsistent]] validates against: the store
-    * root's mtime, each cell directory's (name, mtime), and each
-    * centroid-table file's (name, mtime, length). Every maintenance
-    * mutation a reader could tear on — an append landing, a
-    * rename-aside swap of either the store or the table, a split's
-    * child commit, a merge pass, a retired directory's delete —
-    * changes at least one entry, so two captures that compare EQUAL
-    * bracket an interval with no visible mutation. None while a
-    * rename-aside swap has the path absent (the swap's only
-    * non-atomic instant). Cost: two listStatus calls, ≤ nlist + a few
-    * entries — metadata only, never data, so the check stays O(cells)
-    * at any corpus size.
-    *
-    * FILESYSTEM CONTRACT (stated, not defended — the rename-aside
-    * swap this whole store design rests on already assumes
-    * POSIX/HDFS-like semantics): the cell-side fingerprint is
-    * `dirName@mtime` and relies on a DIRECTORY's mtime changing when
-    * a child file is created, renamed, or deleted — true on local
-    * filesystems and HDFS-likes, NOT on object stores (an S3A
-    * "directory" has no mtime that child writes update), where a
-    * mid-read mutation INSIDE an existing cell would validate as a
-    * consistent snapshot. On such stores run probes between
-    * maintenance cycles (the documented cadence) or front the store
-    * with an HDFS-like layer; the centroid-table side is immune (its
-    * entries fingerprint each FILE's name, mtime AND length — see
-    * VectorStoreSpec's same-millisecond case). Second caveat: local-FS
-    * mtimes are millisecond-granular, so a cell mutation landing in
-    * the SAME millisecond as the dir's previous mtime with an
-    * unchanged name set is invisible to the token — unreachable in
-    * practice because maintenance separates its FS mutations by
-    * multi-second Spark jobs. */
-  private[operators] def storeToken(fs: org.apache.hadoop.fs.FileSystem,
-      store: String, centroidPath: String): Option[Seq[String]] =
-    try {
-      val root = fs.getFileStatus(new org.apache.hadoop.fs.Path(store))
-      val cells = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-        .map(s => s"${s.getPath.getName}@${s.getModificationTime}")
-      val cents = fs.listStatus(
-          new org.apache.hadoop.fs.Path(centroidPath))
-        .map(s =>
-          s"${s.getPath.getName}@${s.getModificationTime}#${s.getLen}")
-      Some((s"root@${root.getModificationTime}" +:
-        cells.sorted.toSeq) ++ cents.sorted)
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  /** Whether a probe failure is one of the transient shapes an
-    * in-flight maintenance swap inflicts on a lock-free reader — a
-    * path vanishing between listing and read — as opposed to a real
-    * error that must propagate (bad schema, the MaxProbeRows guard,
-    * a broken filesystem). */
-  private def isTransientScanFailure(e: Throwable): Boolean = {
-    val seen = scala.collection.mutable.Set[Throwable]()
-    var c: Throwable = e
-    while (c != null && seen.add(c)) {
-      c match {
-        case _: java.io.FileNotFoundException => return true
-        case a: org.apache.spark.sql.AnalysisException
-            if Option(a.getMessage).exists(m =>
-              m.contains("PATH_NOT_FOUND") ||
-                m.contains("Path does not exist")) => return true
-        case _ =>
-      }
-      c = c.getCause
-    }
-    false
-  }
-
-  /** Attempts bound for [[probeVectorStoreConsistent]]: generous —
-    * each failed attempt costs a metadata check plus at most one
-    * probe's work, and a reader livelocked past this many attempts
-    * means maintenance is mutating continuously with no gaps, which
-    * deserves a loud error naming the contention, not an infinite
-    * silent loop. */
-  val MaxConsistentProbeAttempts: Int = 240
-
-  /** [[probeVectorStore]] for probes CONCURRENT with a maintenance
-    * writer (r14 verdict ask #3) — an OPTIMISTIC lock-free read:
-    * capture the store's metadata token, run the probe, re-capture;
-    * equal tokens mean every byte the probe read came from one
-    * immutable snapshot of the (postings, centroid-table) pair, so
-    * the result is returned; a changed token or a transient
-    * vanished-path failure means a swap/split/merge landed mid-read
-    * and the probe retries against the NEW snapshot. Readers still
-    * never lock — maintenance is never delayed by any number of
-    * probes, and the reader pays only metadata stats per attempt.
-    *
-    * Why the plain [[probeVectorStore]] isn't enough mid-cycle: its
-    * centroid read and store scan are two separate actions, so a
-    * split's table swap + parent-directory delete landing between
-    * them leaves the probe holding retired cids whose directories
-    * are gone — silently MISSING true neighbors (the crash-window
-    * duplicate collapse covers duplicated rows, not vanished cells).
-    * Between batches (the documented maintenance cadence) the plain
-    * probe remains exactly right and keeps its lazy single-shuffle
-    * plan; this variant MATERIALIZES (the probe API is already
-    * driver-bounded by [[MaxProbeRows]] — results are ≤ queries × k
-    * rows) and returns a local relation.
-    *
-    * Takes the centroid PATH, not a DataFrame: each retry must
-    * re-read the table as of the new snapshot, and the token needs
-    * the path to fingerprint. */
-  def probeVectorStoreConsistent(store: String, centroidPath: String,
-      queries: DataFrame, k: Int, nprobe: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "v",
-      excludeSelf: Boolean = true): DataFrame = {
-    val spark = queries.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // a token must become readable within this many attempts (plus
-    // one 500 ms grace re-check below) or the paths are judged
-    // ABSENT, not contended: a rename-aside swap's path-missing
-    // instant is normally milliseconds, so ~1 s of never-readable is
-    // a wrong path / never-created store, and the caller deserves a
-    // FileNotFoundException naming it, not ~5 s of sleeps ending in a
-    // misleading "maintenance is mutating continuously" (r15 advice;
-    // grace + mid-swap wording r16 advice)
-    val maxNeverReadable = 25
-    var everReadable = false
-    var attempt = 0
-    while (attempt < MaxConsistentProbeAttempts) {
-      attempt += 1
-      storeToken(fs, store, centroidPath) match {
-        case None =>
-          if (!everReadable && attempt >= maxNeverReadable) {
-            // grace re-check before diagnosing ABSENT (r16 advice): a
-            // probe that STARTS inside a rename-aside swap on a
-            // loaded/slow filesystem can see an absence window longer
-            // than the ~0.5 s never-readable budget — one longer sleep
-            // and a final token read discriminate "mid-swap, landed
-            // late" (keep probing) from "wrong path / never-created
-            // store" (throw, naming the missing path)
-            Thread.sleep(500)
-            if (storeToken(fs, store, centroidPath).isEmpty)
-              throw missingProbePath(fs, store, centroidPath)
-            // became readable during the grace: not absent — continue
-          } else Thread.sleep(20) // mid-swap absence window
-        case Some(t0) =>
-          everReadable = true
-          try {
-            val df = probeVectorStore(store,
-              spark.read.parquet(centroidPath), queries, k, nprobe,
-              idCol, vecCol, excludeSelf)
-            val rows = df.collect()
-            if (storeToken(fs, store, centroidPath).contains(t0))
-              return spark.createDataFrame(
-                java.util.Arrays.asList(rows: _*), df.schema)
-            // token moved: a mutation landed mid-read — retry on the
-            // new snapshot (no sleep: the next attempt's work is the
-            // backoff)
-          } catch {
-            case e: Throwable if isTransientScanFailure(e) =>
-              Thread.sleep(10) // a swap was mid-flight; let it land
-          }
-      }
-    }
-    if (!everReadable) throw missingProbePath(fs, store, centroidPath)
-    throw new IllegalStateException(
-      s"probeVectorStoreConsistent: no consistent snapshot of $store " +
-        s"in $MaxConsistentProbeAttempts attempts — maintenance is " +
-        "mutating the store continuously with no readable gaps")
-  }
-
-  /** The error for a probe whose token was NEVER readable: name the
-    * path that is actually missing (a final exists check — the store,
-    * else the centroid table) instead of diagnosing contention. */
-  private def missingProbePath(fs: org.apache.hadoop.fs.FileSystem,
-      store: String, centroidPath: String): java.io.FileNotFoundException =
-    new java.io.FileNotFoundException(
-      if (!fs.exists(new org.apache.hadoop.fs.Path(store)))
-        s"probeVectorStoreConsistent: store path does not exist: " +
-          s"$store (if maintenance is running, a rename-aside swap's " +
-          "absence window may have outlasted the probe's ~1 s " +
-          "never-readable budget — retry once it completes)"
-      else if (!fs.exists(new org.apache.hadoop.fs.Path(centroidPath)))
-        "probeVectorStoreConsistent: centroid table does not exist: " +
-          centroidPath
-      else
-        s"probeVectorStoreConsistent: $store / $centroidPath vanished " +
-          "while probing (deleted mid-probe?)")
-
   /** Maintenance compaction for the streaming vector store — the
     * [[DedupOps.compactStore]] shape applied per cell: every
     * micro-batch append leaves one small file per touched cell, so
     * after ten thousand batches a probe's per-cell scan is file-OPEN
-    * bound. Rewrite collapses each cell to ~one file (repartition by
-    * cid, then the same hive `cid=` layout), deduplicating replayed
-    * rows on the way, with the crash-safe rename-aside swap —
-    * [[DedupOps.recoverStoreSwap]] heals an interrupted swap from
-    * every store entry point.
+    * bound. The rewrite collapses each live cell to ~one file
+    * (repartition by cid, then the same hive `cid=` layout),
+    * deduplicating replayed rows and dropping retired cells' rows on
+    * the way, and commits it — with a copy of the centroid table — as
+    * one version that is its own base; the sweep that follows keeps
+    * superseded versions for the reader hazard horizon
+    * ([[graft.catalog.StoreLake.sweep]]).
     *
     * Also the HOT-CELL AUDIT: per-cell row counts come free with the
     * rewrite; any cell above `hotCellThreshold` rows is returned and
-    * WARN-logged, naming the production remedy (split the centroid —
-    * refit k over the hot cell's vectors and remap), because a hot
-    * cell silently degrades every probe that touches it toward a
-    * brute-force scan. Not safe against a concurrent writer: run from
-    * the ingest job between batches, like the dedup store's compact.
+    * WARN-logged, naming the production remedy ([[splitHotCells]]),
+    * because a hot cell silently degrades every probe that touches it
+    * toward a brute-force scan.
     *
     * @return cells over the threshold, cid → row count (empty = none)
     */
   def compactVectorStore(spark: SparkSession, store: String,
       hotCellThreshold: Long = 1000000L): Map[Int, Long] = {
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = graft.util.Fs.forPath(spark, store)
     graft.catalog.WriterLease.withLease(fs, store, "compactVectorStore") {
-      compactVectorStoreHeld(spark, store, fs, hotCellThreshold)
+      pinned(spark, store).fold(Map.empty[Int, Long]) { p =>
+        val corpus = compactedCorpusFrame(p).cache()
+        val counts = corpus.groupBy(col("cid")).count()
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // ≤ nlist
+        commitVectors(spark, store, None, corpus,
+          Some(centroidFrame(spark, p.cents.toSeq)))
+        corpus.unpersist()
+        graft.catalog.StoreLake.sweep(fs, store)
+        val hot = counts.filter(_._2 > hotCellThreshold)
+        if (hot.nonEmpty)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"vector store $store has ${hot.size} hot cell(s) " +
+              s"(> $hotCellThreshold rows): " +
+              hot.toSeq.sortBy(-_._2).take(10).map { case (c, n) =>
+                s"cid=$c:$n" }.mkString(", ") +
+              " — probes touching them degrade toward brute force; " +
+              "split the centroid ([[splitHotCells]]) and remap")
+        hot
+      }
     }
-  }
-
-  private def compactVectorStoreHeld(spark: SparkSession, store: String,
-      fs: org.apache.hadoop.fs.FileSystem,
-      hotCellThreshold: Long): Map[Int, Long] = {
-    DedupOps.recoverStoreSwap(fs, store, dropAside = true)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(store))) return Map.empty
-    val corpus = compactedCorpusFrame(spark, store).cache()
-    val counts = corpus.groupBy(col("cid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // ≤ nlist rows
-    val tmp = new org.apache.hadoop.fs.Path(store + ".next")
-    fs.delete(tmp, true)
-    corpus.write.partitionBy("cid").parquet(tmp.toString)
-    corpus.unpersist()
-    DedupOps.swapStore(fs, store)
-    val hot = counts.filter(_._2 > hotCellThreshold)
-    if (hot.nonEmpty)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"vector store $store has ${hot.size} hot cell(s) " +
-          s"(> $hotCellThreshold rows): " +
-          hot.toSeq.sortBy(-_._2).take(10).map { case (c, n) =>
-            s"cid=$c:$n" }.mkString(", ") +
-          " — probes touching them degrade toward brute force; " +
-          "split the centroid ([[splitHotCells]]) and remap")
-    hot
-  }
-
-  /** The hot-cell REMEDY [[compactVectorStore]]'s audit names
-    * (VERDICT r11 ask #2): for every cell above `hotCellThreshold`
-    * rows, refit k' child centroids over THAT CELL's vectors
-    * ([[KMeans.fit]] — deterministic Lloyd's, k' sized so expected
-    * child cells land at ~half the threshold, capped at `maxSplitK`),
-    * remap ONLY that cell's postings onto the children, and replace
-    * the hot centroid with its children in the centroid table. Cost is
-    * O(hot cells' rows), never O(store).
-    *
-    * Requires the centroid table to live at a parquet path THIS STORE
-    * OWNS (`centroidPath`, schema (cid int, cv array<double>) — the
-    * [[extendVectorStore]]/[[probeVectorStore]] contract); when the
-    * caller owns the centroid table instead (the graded v3/v5/v11
-    * quantizers), keep using compactVectorStore's WARN audit and split
-    * upstream.
-    *
-    * CRASH SAFETY — the centroid table is the commit point:
-    *  1. children postings APPEND under fresh cids first — invisible
-    *     to probes until those cids enter the centroid table (a probe
-    *     only reads cells the centroid fold can emit);
-    *  2. the new centroid table (old minus hot, plus children) swaps
-    *     in via the rename-aside [[DedupOps.swapStore]] protocol —
-    *     the atomic visibility flip;
-    *  3. the dead hot-cell directories are deleted LAST; a crash
-    *     anywhere leaves either an unreferenced-children store (rolled
-    *     back by the entry sweep on the next maintenance call) or
-    *     unreferenced dead hot dirs (swept the same way). The entry
-    *     sweep deletes any `cid=` directory the centroid table does
-    *     not reference — sound because every live cid is assigned FROM
-    *     that table, so unreferenced dirs can only be split debris.
-    * NOT safe against concurrent store writers/readers: run from the
-    * ingest job between batches, like compact (same contract).
-    *
-    * THE ENTRY SWEEP IS GUARDED (r12 advice): it deletes every `cid=`
-    * directory the passed centroid table does not reference, which is
-    * sound for interrupted-split debris but CATASTROPHIC if a caller
-    * passes a stale or unrelated `centroidPath` (e.g. one of the
-    * caller-owned quantizer tables the paragraph above says to keep
-    * away from this API) — that would mass-delete live postings with
-    * only a WARN per directory. Genuine debris is bounded by one
-    * split run (≤ hot·maxSplitK children + the hot parents) and
-    * coexists with a mostly-referenced store, so the sweep REFUSES —
-    * loudly, deleting nothing — when the table references NO existing
-    * directory, or when the unreferenced set exceeds both
-    * 2·maxSplitK and the referenced count. `force = true` overrides
-    * after a human has verified the pair.
-    *
-    * @return old hot cid → the child cids that replaced it (empty =
-    *         nothing was hot) */
-  /** Guarded unreferenced-cell sweep shared by the store-maintenance
-    * entry points ([[splitHotCells]], [[mergeColdCells]]) — see the
-    * splitHotCells scaladoc for the guard's rationale. Throws
-    * (deleting NOTHING) when the deletion set looks like a wrong
-    * centroid table rather than one run's debris. */
-  private def sweepUnreferencedCells(
-      fs: org.apache.hadoop.fs.FileSystem, store: String,
-      centroidPath: String, live: Set[Int], debrisAllowance: Int,
-      perRefAllowance: Int, force: Boolean): Unit = {
-    import org.apache.hadoop.fs.Path
-    val cidDirs = fs.listStatus(new Path(store)).toSeq
-      .filter(_.getPath.getName.startsWith("cid="))
-      .flatMap(st => st.getPath.getName.stripPrefix("cid=").toIntOption
-        .map(_ -> st.getPath))
-    val (refDirs, unrefDirs) = cidDirs.partition { case (c, _) => live(c) }
-    // mass-delete guard (r12 advice): debris from ONE interrupted run
-    // rides on a mostly-referenced store and is bounded by the run's
-    // own fan-out — the allowance scales with the REFERENCED count
-    // (a multi-hot-cell crash leaves up to hot·maxSplitK children, so
-    // a fixed bound would block the very re-run the sweep enables)
-    // but stays proportional, so a wrong/stale centroidPath that
-    // coincidentally matches a few cells of a big store still
-    // refuses. A table matching NOTHING always refuses.
-    val allowed = math.max(debrisAllowance.toLong,
-      refDirs.size.toLong * perRefAllowance)
-    if (!force && unrefDirs.nonEmpty &&
-      (refDirs.isEmpty || unrefDirs.size.toLong > allowed))
-      throw new IllegalStateException(
-        s"store maintenance: centroid table at $centroidPath " +
-          s"references ${refDirs.size} of ${cidDirs.size} cid= dirs " +
-          s"at $store (${unrefDirs.size} unreferenced, allowance " +
-          s"$allowed) — far beyond one run's debris. Wrong or stale " +
-          "centroidPath? NOTHING was deleted; re-run with force=true " +
-          "only after verifying the pair.")
-    unrefDirs.foreach { case (_, p) =>
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"store maintenance: sweeping unreferenced ${p.getName} at " +
-          s"$store (interrupted-run debris)")
-      fs.delete(p, true)
-    }
-  }
-
-  /** Shared maintenance preamble for [[splitHotCells]] /
-    * [[mergeColdCells]]: heal interrupted swaps, bail on a missing
-    * store or table, load the centroid table to the driver, run the
-    * guarded unreferenced-cell sweep, and count per-cell rows. None =
-    * nothing to maintain (missing pair, or the sweep emptied the
-    * store). Keeping this in ONE place keeps the two entry points'
-    * recovery behavior from diverging. */
-  private def maintenanceEntry(spark: SparkSession, store: String,
-      centroidPath: String, debrisAllowance: Int, perRefAllowance: Int,
-      force: Boolean)
-      : Option[(org.apache.hadoop.fs.FileSystem,
-        Map[Int, Seq[Double]], Map[Int, Long])] = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    DedupOps.recoverStoreSwap(fs, store, dropAside = true)
-    DedupOps.recoverStoreSwap(fs, centroidPath, dropAside = true)
-    if (!fs.exists(new Path(store)) ||
-      !fs.exists(new Path(centroidPath))) return None
-    val liveRows = spark.read.parquet(centroidPath)
-      .select(col("cid").cast("int").as("cid"), col("cv"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap // ≤ nlist
-    sweepUnreferencedCells(fs, store, centroidPath, liveRows.keySet,
-      debrisAllowance, perRefAllowance, force)
-    // a sweep can legitimately empty the store (a force'd sweep with
-    // a fresh table) — nothing left to maintain then
-    if (!fs.listStatus(new Path(store)).exists(
-      _.getPath.getName.startsWith("cid="))) return None
-    val counts = cellCountsFrame(spark, store)
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // ≤ nlist
-    Some((fs, liveRows, counts))
   }
 
   /** The compaction rewrite frame: ONE payload shuffle, not two. The
@@ -1706,42 +1472,40 @@ object SimilarityOps {
     * one output file) and the FULL-ROW distinct runs IN PLACE after
     * it — HashPartitioning(cid) satisfies distinct's
     * ClusteredDistribution over all three columns (subset keys), so
-    * no second exchange follows; the old distinct().repartition(cid)
-    * form crossed every payload row over the wire twice. Full-row,
-    * not (cid, vec_id): a same-id row whose PAYLOAD differs (an
-    * updated vector re-ingested under its old id) must survive like
-    * it always has — the probe's max-collapse serves the better
-    * score, and a key-narrowed dedup here would delete one of the two
-    * versions arbitrarily. Plan-pinned (VectorStoreSpec: exactly one
-    * Exchange). */
-  private[operators] def compactedCorpusFrame(spark: SparkSession,
-      store: String): DataFrame =
-    spark.read.parquet(store)
-      .select(col("cid"), col("vec_id"), col("v"))
+    * no second exchange follows. Full-row, not (cid, vec_id): a
+    * same-id row whose PAYLOAD differs (an updated vector re-ingested
+    * under its old id) must survive — the probe's max-collapse serves
+    * the better score, and a key-narrowed dedup here would delete one
+    * of the two versions arbitrarily. Plan-pinned (VectorStoreSpec:
+    * exactly one Exchange). */
+  private[operators] def compactedCorpusFrame(p: Pinned): DataFrame =
+    p.live.select(col("cid"), col("vec_id"), col("v"))
       .repartition(col("cid"))
       .distinct()
 
-  /** Per-cell row counts for the maintenance entry. `cid` is the
-    * store's PARTITION column, so this groupBy-count prunes the read
-    * schema to ZERO data columns — the scan is parquet-METADATA-bound
-    * (row counts from footers + partition values from paths; the
-    * vector bytes are never decoded), O(files) not O(rows) at any
-    * store size. That property is what keeps the maintenance pair's
-    * entry cost independent of the store's data volume, so it is
-    * plan-pinned (VectorStoreSpec: empty ReadSchema) rather than left
-    * to Catalyst's discretion. */
-  private[operators] def cellCountsFrame(spark: SparkSession,
-      store: String): DataFrame =
-    spark.read.parquet(store).groupBy(col("cid")).count()
+  /** Per-cell row counts over `rows`. `cid` is the store's PARTITION
+    * column, so this groupBy-count prunes the read schema to ZERO data
+    * columns — the scan is parquet-METADATA-bound (row counts from
+    * footers + partition values from paths; the vector bytes are never
+    * decoded), O(files) not O(rows) at any store size. That property
+    * keeps maintenance entry cost independent of the store's data
+    * volume, so it is plan-pinned (VectorStoreSpec: empty ReadSchema)
+    * rather than left to Catalyst's discretion. */
+  private[operators] def cellCountsFrame(rows: DataFrame): DataFrame =
+    rows.groupBy(col("cid")).count()
 
-  /** (cid, cv) single-partition frame from driver-side centroid rows
-    * — the model-sized table both maintenance ops stage and swap. */
+  private def cellCounts(rows: DataFrame): Map[Int, Long] =
+    cellCountsFrame(rows).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap // ≤ cells in range
+
+  /** (cid, cv) local relation from driver-side centroid rows — the
+    * model-sized table the maintenance ops commit and every probe and
+    * assignment folds over (collecting it runs no job). */
   private def centroidFrame(spark: SparkSession,
       rows: Seq[(Int, Seq[Double])]): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        rows.sortBy(_._1).map { case (c, v) =>
-          org.apache.spark.sql.Row(c, v) }, 1),
+      java.util.Arrays.asList(rows.sortBy(_._1).map { case (c, v) =>
+        org.apache.spark.sql.Row(c, v) }: _*),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("cid",
           org.apache.spark.sql.types.IntegerType),
@@ -1749,87 +1513,80 @@ object SimilarityOps {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.DoubleType)))))
 
+  /** The hot-cell REMEDY [[compactVectorStore]]'s audit names: for
+    * every live cell above `hotCellThreshold` rows, refit k' child
+    * centroids over THAT CELL's vectors ([[KMeans.fit]] —
+    * deterministic Lloyd's, k' sized so expected child cells land at
+    * ~half the threshold, capped at `maxSplitK`), remap ONLY that
+    * cell's postings onto the children, and replace the hot centroid
+    * with its children in the store's centroid table. Cost is O(hot
+    * cells' rows), never O(store).
+    *
+    * One commit: the children's postings and the new centroid table
+    * land in ONE version on the store's base, so a reader pins either
+    * the parent or its children, never a mix, and a kill anywhere
+    * leaves the previous version in force. The parent's rows stay in
+    * the pinned range until the next compaction, unread (its cid left
+    * the table); children take cids above every cid with rows in that
+    * range, so a retired cid is never issued again while its rows can
+    * be read.
+    *
+    * @return old hot cid → the child cids that replaced it (empty =
+    *         nothing was hot) */
   def splitHotCells(spark: SparkSession, store: String,
-      centroidPath: String, hotCellThreshold: Long = 1000000L,
-      maxSplitK: Int = 64, force: Boolean = false): Map[Int, Seq[Int]] = {
-    val leaseFs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.catalog.WriterLease.withLease(leaseFs, store, "splitHotCells") {
-      splitHotCellsHeld(spark, store, centroidPath, hotCellThreshold,
-        maxSplitK, force)
+      hotCellThreshold: Long = 1000000L,
+      maxSplitK: Int = 64): Map[Int, Seq[Int]] =
+    graft.catalog.WriterLease.withLease(graft.util.Fs.forPath(spark, store),
+        store, "splitHotCells") {
+      pinned(spark, store).fold(Map.empty[Int, Seq[Int]]) { p =>
+        val counts = cellCounts(p.rows)
+        val hot = counts.filter { case (c, n) =>
+          n > hotCellThreshold && p.cents.contains(c) }
+        var nextCid = (p.cents.keys ++ counts.keys).max + 1
+        val splits = hot.toSeq.sortBy(_._1).map { case (c, n) =>
+          val cell = p.rows
+            .filter(col("cid") === c) // partition-pruned: this cell only
+            .select(col("vec_id"), col("v"))
+          val kChild = math.min(maxSplitK.toLong,
+            math.max(2L, math.ceil(2.0 * n / hotCellThreshold).toLong))
+            .toInt
+          // fit on UNIT-NORMALIZED vectors (spherical k-means): the
+          // store assigns and probes by COSINE, and an L2 fit over raw
+          // vectors can cluster by norm instead of angle — children
+          // that no cosine assignment ever picks (phantom cells that
+          // burn probe slots) while the hot direction stays hot.
+          // Normalizing the fit input makes squared-L2 argmin ≈ cosine
+          // argmax, so children separate by direction; the remap below
+          // still assigns the ORIGINAL vectors (cosine is
+          // norm-invariant in v).
+          val unitCell = cell.select(col("vec_id"), expr(
+            """transform(v, x -> x / sqrt(aggregate(zip_with(v, v,
+              |  (a, b) -> a * b), cast(0.0 as double),
+              |  (acc, y) -> acc + y)))""".stripMargin).as("v"))
+          val childCents = KMeans.fit(unitCell, "vec_id", "v", kChild, 3)
+          val childCids = (nextCid until nextCid + childCents.length).toSeq
+          nextCid += childCents.length
+          val assigned = assignToCells(centroidFrame(spark,
+            childCids.zip(childCents.map(_.toSeq))), cell).cache()
+          // keep only children that actually received vectors: the fit
+          // can leave empty clusters, and an empty child in the
+          // centroid table would be a phantom cell burning a probe slot
+          val filled = assigned.groupBy(col("cid")).count()
+            .collect().map(_.getInt(0)).toSet // ≤ kChild rows
+          (c, assigned, childCids.zip(childCents.map(_.toSeq))
+            .filter { case (cc, _) => filled(cc) })
+        }
+        if (splits.nonEmpty) {
+          val table = p.cents.toSeq.filterNot { case (c, _) =>
+            hot.contains(c) } ++ splits.flatMap(_._3)
+          commitVectors(spark, store, Some(p.pin),
+            splits.map(_._2).reduce(_ union _),
+            Some(centroidFrame(spark, table)))
+          splits.foreach(_._2.unpersist())
+        }
+        splits.map { case (c, _, kids) => c -> kids.map(_._1) }.toMap
+      }
     }
-  }
-
-  private def splitHotCellsHeld(spark: SparkSession, store: String,
-      centroidPath: String, hotCellThreshold: Long,
-      maxSplitK: Int, force: Boolean): Map[Int, Seq[Int]] = {
-    import org.apache.hadoop.fs.Path
-    // shared preamble: swap recovery, guarded debris sweep (one
-    // interrupted split leaves ≤ hot·(maxSplitK+1) unreferenced
-    // dirs, hence the per-referenced allowance), per-cell counts
-    val entry = maintenanceEntry(spark, store, centroidPath,
-      debrisAllowance = 2 * maxSplitK, perRefAllowance = maxSplitK + 1,
-      force = force)
-    if (entry.isEmpty) return Map.empty
-    val (fs, liveRows, counts) = entry.get
-    val hot = counts.filter { case (c, n) =>
-      n > hotCellThreshold && liveRows.contains(c) }
-    if (hot.isEmpty) return Map.empty
-    var nextCid = liveRows.keys.max + 1
-    val mapping = hot.toSeq.sortBy(_._1).map { case (c, n) =>
-      val cell = spark.read.parquet(store)
-        .filter(col("cid") === c) // partition-pruned: this cell only
-        .select(col("vec_id"), col("v"))
-      val kChild = math.min(maxSplitK.toLong,
-        math.max(2L, math.ceil(2.0 * n / hotCellThreshold).toLong)).toInt
-      // fit on UNIT-NORMALIZED vectors (spherical k-means): the store
-      // assigns and probes by COSINE, and an L2 fit over raw vectors
-      // can cluster by norm instead of angle — children that no
-      // cosine assignment ever picks (phantom cells that burn probe
-      // slots) while the hot direction stays hot. Normalizing the fit
-      // input makes squared-L2 argmin ≈ cosine argmax, so children
-      // separate by direction; the remap below still assigns the
-      // ORIGINAL vectors (cosine is norm-invariant in v).
-      val unitCell = cell.select(col("vec_id"), expr(
-        """transform(v, x -> x / sqrt(aggregate(zip_with(v, v,
-          |  (a, b) -> a * b), cast(0.0 as double),
-          |  (acc, y) -> acc + y)))""".stripMargin).as("v"))
-      val childCents = KMeans.fit(unitCell, "vec_id", "v", kChild, 3)
-      val childCids = (nextCid until nextCid + childCents.length).toSeq
-      nextCid += childCents.length
-      val childTable = centroidFrame(spark,
-        childCids.zip(childCents).map { case (cc, cv) => cc -> cv.toSeq })
-      // step 1: children postings land under cids no probe can see yet
-      val assigned = assignToCells(childTable, cell).cache()
-      val liveChildren = assigned.groupBy(col("cid")).count()
-        .collect().map(_.getInt(0)).toSet // ≤ kChild rows
-      assigned.write.mode("append").partitionBy("cid").parquet(store)
-      assigned.unpersist()
-      // commit only children that actually received vectors: the fit
-      // can leave empty clusters, and an empty child in the centroid
-      // table would be a phantom cell burning a probe slot forever
-      val kept = childCids.zip(childCents)
-        .filter { case (cc, _) => liveChildren(cc) }
-      c -> (kept.map(_._1), kept)
-    }
-    // step 2 — the commit point: swap in the centroid table with the
-    // hot parents replaced by their children
-    val hotSet = hot.keySet
-    val kept = liveRows.toSeq.filterNot { case (c, _) => hotSet(c) }
-    val children = mapping.flatMap(_._2._2)
-      .map { case (cc, cv) => cc -> cv.toSeq }
-    val next = new Path(centroidPath + ".next")
-    fs.delete(next, true)
-    centroidFrame(spark,
-      kept ++ children.map { case (c, v) => c -> (v: Seq[Double]) })
-      .write.parquet(next.toString)
-    DedupOps.swapStore(fs, centroidPath)
-    // step 3: the replaced parents' directories are dead (their cids
-    // left the table) — delete; a crash here leaves debris the entry
-    // sweep removes next time
-    hotSet.foreach(c => fs.delete(new Path(store, s"cid=$c"), true))
-    mapping.map { case (c, (cids, _)) => c -> cids }.toMap
-  }
 
   /** The DOWNWARD counterpart of [[splitHotCells]] — cell-count
     * maintenance in both directions. Cells whose population fell
@@ -1842,162 +1599,54 @@ object SimilarityOps {
     * ([[assignToCells]] against the survivor table) and the cold
     * centroid leaves the table; a live cid with NO postings at all
     * (a phantom cell) is dropped outright. Cost is O(cold cells'
-    * rows), never O(store).
-    *
-    * CRASH SAFETY — the same centroid-table commit point as
-    * [[splitHotCells]], leaning on the store's replay contract:
-    *  1. cold postings are COPIED (appended) into their target cells
-    *     first — visible immediately, but only as duplicates of rows
-    *     the cold cells still serve, and duplicates are top-k-neutral
-    *     EVEN ACROSS CELLS: [[probeVectorStore]] collapses candidates
-    *     per (query, vec_id) before ranking, so a vector served from
-    *     both its cold cell and its target cell fills one slot
-    *     (spec-pinned — the crash window between steps 1 and 2 is a
-    *     probe a query can actually take);
-    *  2. the survivor centroid table swaps in via the rename-aside
-    *     protocol — the atomic flip after which no probe or
-    *     assignment can see the cold cids;
-    *  3. the cold directories are deleted LAST; a crash anywhere
-    *     leaves either harmless duplicates (a re-run re-merges —
-    *     idempotent) or unreferenced dirs the guarded entry sweep
-    *     removes. Same non-concurrency contract as split/compact:
-    *     run from the ingest job between batches.
+    * rows), never O(store): one partition-pruned read over every
+    * row-bearing cold cell, one assignment pass, and ONE commit of
+    * the moved rows together with the survivor table, however many
+    * cells retire — a reader sees every moved row in exactly one
+    * cell, and a kill anywhere leaves the previous version in force.
     *
     * Refuses (like all-cold stores deserve) when no survivor would
     * remain — there is nothing to merge INTO; raise the threshold or
     * refit instead.
     *
-    * CHUNKED so a crash can always re-run: at most
-    * [[MaxColdPerMergePass]] cold cells retire per table swap (rows
-    * still assign straight to their FINAL survivor — never to another
-    * cold cell — so no row moves twice), and the call loops passes
-    * until no cold cell remains. The bound exists for the guarded
-    * entry sweep's sake: a crash between a pass's table swap and its
-    * dir deletes leaves that pass's cold dirs unreferenced, and an
-    * UNCHUNKED merge of a heavily-drifted store (say 185 cold of 200
-    * cells) would leave more debris than the sweep's allowance —
-    * `max(2·TwoLevelMinK, 8·survivors)` — classifying its own re-run
-    * as a wrong-table mass delete and refusing it. 64 per pass sits
-    * under the allowance floor at ANY survivor count, so "the re-run
-    * completes over the debris" holds unconditionally.
-    *
     * @return cold cid → the surviving cids its rows moved to (empty
     *         Seq = the cell had no rows, it was simply dropped) */
   def mergeColdCells(spark: SparkSession, store: String,
-      centroidPath: String, coldCellThreshold: Long,
-      force: Boolean = false): Map[Int, Seq[Int]] = {
-    // flat accumulator loop, NOT recursion (r13 advice): a
-    // pathologically drifted store can carry thousands of cold cells
-    // = dozens of sequential passes, and a non-tail `thisPass ++
-    // recurse` both stacks frames linearly and makes the pass
-    // structure harder to reason about under crash-retry. Each pass
-    // still re-enters maintenanceEntry deliberately — the swap heal /
-    // guarded sweep / fresh counts are the crash contract, and their
-    // cost is bounded metadata work per pass, never O(store rows).
-    val leaseFs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.catalog.WriterLease.withLease(leaseFs, store, "mergeColdCells") {
-      val acc = scala.collection.mutable.Map.empty[Int, Seq[Int]]
-      var more = true
-      while (more) {
-        val (thisPass, morePasses) = mergeColdCellsPass(spark, store,
-          centroidPath, coldCellThreshold, force)
-        acc ++= thisPass
-        more = morePasses
+      coldCellThreshold: Long): Map[Int, Seq[Int]] =
+    graft.catalog.WriterLease.withLease(graft.util.Fs.forPath(spark, store),
+        store, "mergeColdCells") {
+      pinned(spark, store).fold(Map.empty[Int, Seq[Int]]) { p =>
+        val counts = cellCounts(p.live)
+        val cold = p.cents.keySet.map(c => c -> counts.getOrElse(c, 0L))
+          .filter(_._2 < coldCellThreshold).toMap
+        val survivors = p.cents -- cold.keys
+        if (cold.isEmpty) Map.empty
+        else if (survivors.isEmpty) {
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"mergeColdCells: every cell of $store is under " +
+              s"$coldCellThreshold rows — nothing to merge into; raise " +
+              "the threshold or refit the quantizer")
+          Map.empty
+        } else {
+          // the original cid rides along as src_cid so the per-cell
+          // target report needs no extra pass
+          graft.GraftFunctions.register(spark)
+          val table = centroidFrame(spark, survivors.toSeq)
+          val (cids, cvs) = centroidArrays(table)
+          val assigned = withCosArgmaxCid(
+              p.rows.filter(col("cid").isin(cold.keys.toSeq: _*))
+                .select(col("cid").as("src_cid"), col("vec_id"), col("v")),
+              cids, cvs).cache()
+          val targets = assigned.groupBy(col("src_cid"))
+            .agg(collect_set(col("cid")).as("t"))
+            .collect() // ≤ cold cells rows
+            .map(r => r.getInt(0) -> r.getSeq[Int](1).sorted.toSeq).toMap
+          commitVectors(spark, store, Some(p.pin), assigned, Some(table))
+          assigned.unpersist()
+          cold.keys.map(c => c -> targets.getOrElse(c, Seq.empty)).toMap
+        }
       }
-      acc.toMap
     }
-  }
-
-  /** One chunked [[mergeColdCells]] pass: retire up to
-    * [[MaxColdPerMergePass]] cold cells behind one table swap.
-    * Returns (cold cid → targets for THIS pass, whether cold cells
-    * remain for another pass). */
-  private def mergeColdCellsPass(spark: SparkSession, store: String,
-      centroidPath: String, coldCellThreshold: Long,
-      force: Boolean): (Map[Int, Seq[Int]], Boolean) = {
-    import org.apache.hadoop.fs.Path
-    val entry = maintenanceEntry(spark, store, centroidPath,
-      debrisAllowance = 2 * KMeans.TwoLevelMinK, perRefAllowance = 8,
-      force = force)
-    if (entry.isEmpty) return (Map.empty, false)
-    val (fs, liveRows, counts) = entry.get
-    val cold = liveRows.keySet
-      .map(c => c -> counts.getOrElse(c, 0L))
-      .filter(_._2 < coldCellThreshold).toMap
-    if (cold.isEmpty) return (Map.empty, false)
-    val survivors = liveRows.filterNot { case (c, _) => cold.contains(c) }
-    if (survivors.isEmpty) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"mergeColdCells: every cell of $store is under " +
-          s"$coldCellThreshold rows — nothing to merge into; raise " +
-          "the threshold or refit the quantizer")
-      return (Map.empty, false)
-    }
-    // this pass retires the lowest-cid cold cells up to the debris
-    // bound; the rest wait for the next pass (scaladoc: the bound
-    // keeps a crashed pass's unreferenced dirs inside the entry
-    // sweep's allowance at any survivor count)
-    val slice = cold.keys.toSeq.sorted.take(MaxColdPerMergePass)
-    val sliceSet = slice.toSet
-    val morePasses = cold.size > slice.length
-    if (morePasses)
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"mergeColdCells: ${cold.size} cold cells at $store — " +
-          s"retiring ${slice.length} this pass, looping for the rest")
-    val survTable = centroidFrame(spark, survivors.toSeq)
-    // step 1: ONE partition-pruned read over every row-bearing cold
-    // cell of the pass, ONE assignment pass, ONE append — maintenance
-    // cost scales with cold ROWS, never with the cold-CELL count (a
-    // drifted store can carry hundreds of cold cells, and a per-cell
-    // loop would run hundreds of sequential jobs). Assignment targets
-    // are the TRUE survivors even when chunked — a sliced cell's rows
-    // land in their final cell, never in a cold cell awaiting a later
-    // pass. The original cid rides along as src_cid so the per-cell
-    // target report needs no extra pass.
-    graft.GraftFunctions.register(spark)
-    val withRows = slice.filter(c => cold(c) > 0L)
-    val moved: Map[Int, Seq[Int]] =
-      if (withRows.isEmpty) Map.empty
-      else {
-        val (cids, cvs) = centroidArrays(survTable)
-        val coldRows = spark.read.parquet(store)
-          .filter(col("cid").isin(withRows: _*))
-          .select(col("cid").as("src_cid"), col("vec_id"), col("v"))
-        val assigned = withCosArgmaxCid(coldRows, cids, cvs).cache()
-        val targets = assigned.groupBy(col("src_cid"))
-          .agg(collect_set(col("cid")).as("t"))
-          .collect() // ≤ cold cells rows
-          .map(r => r.getInt(0) -> r.getSeq[Int](1).sorted.toSeq).toMap
-        assigned.select(col("cid"), col("vec_id"), col("v"))
-          .write.mode("append").partitionBy("cid").parquet(store)
-        assigned.unpersist()
-        targets
-      }
-    // step 2 — the commit point: swap in the table minus THIS pass's
-    // cold cells (later passes' cold cells stay live until their own
-    // swap retires them)
-    val next = new Path(centroidPath + ".next")
-    fs.delete(next, true)
-    centroidFrame(spark,
-        liveRows.filterNot { case (c, _) => sliceSet(c) }.toSeq)
-      .write.parquet(next.toString)
-    DedupOps.swapStore(fs, centroidPath)
-    // step 3: the pass's cold directories are dead (their cids left
-    // the table) — delete; a crash here leaves ≤ MaxColdPerMergePass
-    // dirs the entry sweep removes next time
-    slice.foreach(c => fs.delete(new Path(store, s"cid=$c"), true))
-    val thisPass =
-      slice.map(c => c -> moved.getOrElse(c, Seq.empty)).toMap
-    (thisPass, morePasses)
-  }
-
-  /** Cold cells retired per [[mergeColdCells]] table swap — must stay
-    * at or under the entry sweep's allowance FLOOR
-    * (2·[[KMeans.TwoLevelMinK]]) so one crashed pass's unreferenced
-    * debris always classifies as debris regardless of how few
-    * survivors remain. */
-  val MaxColdPerMergePass: Int = KMeans.TwoLevelMinK
 
   /** What one [[maintainVectorStore]] cycle did: the hot cells the
     * compaction audit flagged (cid → rows), the splits performed
@@ -2024,15 +1673,13 @@ object SimilarityOps {
     *     ending the cycle with every live cell inside
     *     [coldCellThreshold, hotCellThreshold].
     *
-    * Each primitive keeps its own crash contract (rename-aside swaps,
-    * guarded entry sweep, chunked merge passes), so a crash anywhere
-    * in the cycle recovers by simply CALLING THIS AGAIN — the
-    * re-entered primitives heal their predecessors' debris. Same
-    * non-concurrency contract as the primitives: no concurrent store
-    * writers ([[graft.catalog.WriterLease]] enforces it).
+    * Each leg commits one store version, so a crash anywhere in the
+    * cycle leaves the last committed version in force and recovers by
+    * simply CALLING THIS AGAIN. No concurrent store writers
+    * ([[graft.catalog.WriterLease]] enforces it); probes may run
+    * throughout.
     *
-    * `coldCellThreshold` (r13 verdict ask #6 — the old `0` default
-    * silently skipped the merge leg of a "complete cycle"):
+    * `coldCellThreshold`:
     *  - the DEFAULT (−1) DERIVES `hotCellThreshold / 100` (floor 1),
     *    so the cycle is complete out of the box — a cell under 1% of
     *    the hot bound is burning an nprobe slot on noise;
@@ -2041,43 +1688,37 @@ object SimilarityOps {
     *    cell contents opts out here);
     *  - any positive value is used as-is.
     *
-    * `leaseWaitMs` (r15 ask #5's operational shape): a cron-driven
-    * maintenance cycle racing an ingest batch's own trigger can pass
-    * a positive bound to QUEUE behind the live writer's lease for up
-    * to that long instead of crashing on ConcurrentWriterException;
-    * the default stays throw-immediately. */
+    * `leaseWaitMs`: a cron-driven maintenance cycle racing an ingest
+    * batch's own trigger can pass a positive bound to QUEUE behind the
+    * live writer's lease for up to that long instead of crashing on
+    * ConcurrentWriterException; the default stays throw-immediately. */
   def maintainVectorStore(spark: SparkSession, store: String,
-      centroidPath: String, hotCellThreshold: Long = 1000000L,
-      coldCellThreshold: Long = -1L, maxSplitK: Int = 64,
-      force: Boolean = false,
-      leaseWaitMs: Long = 0L): StoreMaintenanceReport = {
+      hotCellThreshold: Long = 1000000L, coldCellThreshold: Long = -1L,
+      maxSplitK: Int = 64, leaseWaitMs: Long = 0L): StoreMaintenanceReport = {
     val coldEff =
       if (coldCellThreshold < 0L) math.max(1L, hotCellThreshold / 100L)
       else coldCellThreshold
     // claim the writer lease ONCE for the whole cycle (the three
     // primitives re-enter the thread-held lease without touching the
     // filesystem), so no other writer can slip between the legs
-    val leaseFs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.catalog.WriterLease.withLease(leaseFs, store,
-        "maintainVectorStore", waitMs = leaseWaitMs) {
+    graft.catalog.WriterLease.withLease(graft.util.Fs.forPath(spark, store),
+        store, "maintainVectorStore", waitMs = leaseWaitMs) {
       val hot = compactVectorStore(spark, store, hotCellThreshold)
-      val split = splitHotCells(spark, store, centroidPath,
-        hotCellThreshold, maxSplitK, force)
+      val split = splitHotCells(spark, store, hotCellThreshold, maxSplitK)
       val merged =
         if (coldEff <= 0L) Map.empty[Int, Seq[Int]]
-        else mergeColdCells(spark, store, centroidPath, coldEff, force)
+        else mergeColdCells(spark, store, coldEff)
       StoreMaintenanceReport(hot, split, merged)
     }
   }
 
   /** The streaming-ingest CAPSTONE for the vector store — the v-side
-    * twin of [[DedupOps.dedupToLake]] (r13 verdict ask #3): ONE
-    * foreachBatch body that appends the micro-batch
-    * ([[extendVectorStore]]) and, when the append pushed any cell past
-    * `hotCellThreshold`, runs a full [[maintainVectorStore]] cycle —
-    * all under ONE writer-lease hold, so no foreign writer can slip
-    * between the append, the trigger check, and the cycle.
+    * twin of [[DedupOps.dedupToLake]]: ONE foreachBatch body that
+    * appends the micro-batch ([[extendVectorStore]]; `centroids` seeds
+    * a store with no commit yet) and, when the append pushed any live
+    * cell past `hotCellThreshold`, runs a full [[maintainVectorStore]]
+    * cycle — all under ONE writer-lease hold, so no foreign writer can
+    * slip between the append, the trigger check, and the cycle.
     *
     * TRIGGER COST: the check is [[cellCountsFrame]] — `cid` is the
     * partition column, so the counts come from parquet footers +
@@ -2087,41 +1728,32 @@ object SimilarityOps {
     * a replay-inflated count can only fire a cycle EARLY (whose
     * compact then drops the replays that inflated it), never miss one.
     *
-    * STATE & REPLAY: the store + centroid table are the only state,
-    * exactly the dedup capstone's story — a restart resumes from the
-    * source checkpoint, a replayed batch appends duplicate rows that
-    * (a) are rank-neutral under the probe's per-(q_id, vec_id)
-    * collapse and (b) vanish at the next compact. The centroid table
-    * is re-read every batch BECAUSE a triggered cycle swaps it: the
-    * next batch must assign against the post-split/merge table, and a
-    * crashed cycle's interrupted table swap is healed here before the
-    * read ([[DedupOps.recoverStoreSwap]] on the centroid path — the
-    * store path itself is healed inside [[extendVectorStore]]).
+    * STATE & REPLAY: the store (postings + its own centroid table) is
+    * the only state — a restart resumes from the source checkpoint, a
+    * replayed batch appends duplicate rows that (a) are rank-neutral
+    * under the probe's per-(q_id, vec_id) collapse and (b) vanish at
+    * the next compact. Each batch assigns against the store's newest
+    * centroid table, so the batch after a triggered cycle uses the
+    * post-split/merge cells.
     *
-    * Stream-resume ≡ batch parity and mid-stream-cycle probe parity
-    * are spec-pinned in FileStreamSpec; per-batch flatness vs store
-    * bulk is measured by the StreamVecIngest diagnostic (BENCH_NOTES).
+    * Stream-resume ≡ batch parity and post-cycle probe parity are
+    * spec-pinned in FileStreamSpec.
     *
     * @return the maintenance report if this batch triggered a cycle */
-  def vectorsToStore(store: String, centroidPath: String,
+  def vectorsToStore(store: String, centroids: DataFrame,
       batch: DataFrame, idCol: String = "vec_id", vecCol: String = "v",
       hotCellThreshold: Long = 1000000L, coldCellThreshold: Long = -1L,
       maxSplitK: Int = 64): Option[StoreMaintenanceReport] = {
     if (batch.isEmpty) return None
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.catalog.WriterLease.withLease(fs, store, "vectorsToStore") {
-      val cfs = new org.apache.hadoop.fs.Path(centroidPath)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      DedupOps.recoverStoreSwap(cfs, centroidPath, dropAside = true)
-      val cents = spark.read.parquet(centroidPath)
-      extendVectorStore(store, cents, batch, idCol, vecCol)
-      val maxCell = cellCountsFrame(spark, store)
+    graft.catalog.WriterLease.withLease(graft.util.Fs.forPath(spark, store),
+        store, "vectorsToStore") {
+      extendVectorStore(store, centroids, batch, idCol, vecCol)
+      val maxCell = cellCountsFrame(pinnedOrFail(spark, store).live)
         .agg(max(col("count")).as("m")).collect()(0).getLong(0)
       if (maxCell > hotCellThreshold)
-        Some(maintainVectorStore(spark, store, centroidPath,
-          hotCellThreshold, coldCellThreshold, maxSplitK))
+        Some(maintainVectorStore(spark, store, hotCellThreshold,
+          coldCellThreshold, maxSplitK))
       else None
     }
   }

@@ -193,10 +193,10 @@ class FileStreamSpec extends AnyFunSuite {
     val in = root.resolve("in"); val ckpt = root.resolve("ckpt")
     Files.createDirectories(in)
     val store = root.resolve("store").toString
-    val centPath = root.resolve("cents").toString
     val cents0 = Seq((0, Seq(1.0, 0.0, 0.0)), (1, Seq(0.0, 1.0, 0.0)))
       .toDF("cid", "cv")
-    cents0.coalesce(1).write.parquet(centPath)
+    def table(p: String) = SimilarityOps.readVectorStore(spark, p)._1
+    def rows(p: String) = SimilarityOps.readVectorStore(spark, p)._2
     def vec(id: Long): Seq[Double] = {
       val axis = (id % 2).toInt
       val b = Array.fill(3)(0.05 + 0.001 * (id % 7))
@@ -220,7 +220,7 @@ class FileStreamSpec extends AnyFunSuite {
         .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          if (SimilarityOps.vectorsToStore(store, centPath, b,
+          if (SimilarityOps.vectorsToStore(store, cents0, b,
               hotCellThreshold = hot, maxSplitK = 2).nonEmpty)
             cycles.incrementAndGet(): Unit
         }.start()
@@ -230,7 +230,7 @@ class FileStreamSpec extends AnyFunSuite {
     val b2 = Seq(31L, 33L, 35L, 50L, 52L)                  // under threshold
     write("b1", b1); runOnce()
     assert(cycles.get() == 1, "batch 1 must trigger the cycle")
-    val centsAfterCycle = spark.read.parquet(centPath)
+    val centsAfterCycle = table(store)
       .select("cid").collect().map(_.getInt(0)).toSet
     assert(!centsAfterCycle.contains(0) && centsAfterCycle.size >= 2,
       s"cell 0 was not split by the mid-stream cycle: $centsAfterCycle")
@@ -239,7 +239,7 @@ class FileStreamSpec extends AnyFunSuite {
     val all = b1 ++ b2
     // resume really skipped batch 1: no duplicate appends (no compact
     // ran after batch 2, so replayed rows would still be visible)
-    assert(spark.read.parquet(store).count() == all.size.toLong,
+    assert(rows(store).count() == all.size.toLong,
       "restart replayed an already-committed batch into the store")
 
     // probe parity vs driver-side brute force AFTER the cycle
@@ -255,10 +255,9 @@ class FileStreamSpec extends AnyFunSuite {
         .take(k).zipWithIndex.map { case ((id, _), i) => (i + 1, id) }
     val q0 = Seq(1.0, 0.05, 0.02)
     val q1 = Seq(0.05, 1.0, 0.02)
-    val n = spark.read.parquet(centPath).count().toInt
+    val n = table(store).count().toInt
     def probe(qv: Seq[Double], k: Int): Seq[(Int, Long)] =
       SimilarityOps.probeVectorStore(store,
-          spark.read.parquet(centPath),
           Seq((9000L, qv)).toDF("vec_id", "v"), k = k, nprobe = n,
           excludeSelf = false)
         .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
@@ -269,21 +268,19 @@ class FileStreamSpec extends AnyFunSuite {
     // rows AND identical centroid table (fit/split/merge are
     // deterministic given the same batch boundaries)
     val store2 = root.resolve("store2").toString
-    val centPath2 = root.resolve("cents2").toString
-    cents0.coalesce(1).write.parquet(centPath2)
-    SimilarityOps.vectorsToStore(store2, centPath2, frame(b1),
+    SimilarityOps.vectorsToStore(store2, cents0, frame(b1),
       hotCellThreshold = hot, maxSplitK = 2)
-    SimilarityOps.vectorsToStore(store2, centPath2, frame(b2),
+    SimilarityOps.vectorsToStore(store2, cents0, frame(b2),
       hotCellThreshold = hot, maxSplitK = 2)
     def storeState(p: String): Set[(Int, Long)] =
-      spark.read.parquet(p).select("cid", "vec_id").collect()
+      rows(p).select("cid", "vec_id").collect()
         .map(r => (r.getInt(0), r.getLong(1))).toSet
     def centState(p: String): Set[(Int, Seq[Double])] =
-      spark.read.parquet(p).collect()
+      table(p).collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSet
     assert(storeState(store2) == storeState(store),
       "batch-mode store state diverges from the streamed store")
-    assert(centState(centPath2) == centState(centPath),
+    assert(centState(store2) == centState(store),
       "batch-mode centroid table diverges from the streamed one")
   }
 

@@ -107,6 +107,29 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
+  /** Shuffle exchanges in a query's planned, not yet executed, tree —
+    * the count `graft.PlanDump` shows. */
+  private def shuffles(df: DataFrame): Int =
+    nodes(df.queryExecution.executedPlan)
+      .count(_.isInstanceOf[ShuffleExchangeExec])
+
+  // At sf0.001 every spread lands in ONE partition, which satisfies
+  // every downstream distribution, so the sf0.001 plan pins never see
+  // the band and pair exchanges d3 and d5 plan at any width > 1; the
+  // wide copy's 8-task scans do.
+  Seq("d3_simhash_hamming" -> 3, "d5_embedding_neardup" -> 4).foreach {
+    case (name, n) =>
+      test(s"$name plans its band and pair exchanges on the wide copy " +
+          s"($n shuffles)", SlowTest) {
+        spark.catalog.clearCache()
+        val got =
+          try shuffles(SparkEntry.queries(name)(spark, wide))
+          finally spark.catalog.clearCache()
+        assert(got == n, s"$name plans $got shuffles on the wide copy, " +
+          s"pinned $n")
+      }
+  }
+
   Seq("d2_minhash_lsh", "d3_simhash_hamming", "d4_ngram_jaccard",
     "d5_embedding_neardup", "d7_decontaminate", "d8_incremental_dedup",
     "d9_semantic_dedup", "d11_minhash_estimate", "d13_substring_spans",

@@ -112,12 +112,9 @@ class ProbeGuardSpec extends AnyFunSuite {
         val keyed = docs.withColumn("doc_id", col("doc_id") + lit(dk * i))
         if (i == 0) keyed else permuted(keyed, 300 + i)
       }.reduce(_ unionByName _)
-    def buildStore(copies: Int, dest: String): Unit = {
-      val sh = corpus(copies).repartition(col("doc_id"))
-        .withColumn("shingles", expr("md5_shingle60(text)"))
-        .select(col("doc_id"), col("shingles"))
-      DedupOps.bandHashes(sh).write.mode("overwrite").parquet(dest)
-    }
+    // seeded through the store API: one append of the whole corpus
+    def buildStore(copies: Int, dest: String): Unit =
+      DedupOps.probeAndExtend(dest, corpus(copies)).count(): Unit
     // batch b: novel docs (fresh permutation) + verbatim copies of
     // base-corpus docs, re-keyed above every store id
     def batchOf(b: Int): DataFrame =

@@ -56,17 +56,15 @@ object StreamDedupProbe {
       .select(col("doc_id"), col("text"))
       .filter(length(col("text")) >= 8)
 
-    /** The signature store a long-running ingest would have persisted:
-      * one banded minhash row set for the whole corpus. */
+    /** The signature store a long-running ingest would have persisted,
+      * seeded through the store API: one append of the whole corpus
+      * (its novel docs' bands). */
     def buildStore(corpus: String, dest: String): Long = {
       val fs = new org.apache.hadoop.fs.Path(dest).getFileSystem(
         spark.sessionState.newHadoopConf())
       fs.delete(new org.apache.hadoop.fs.Path(dest), true)
-      val sh = docs(corpus).repartition(col("doc_id"))
-        .withColumn("shingles", expr("md5_shingle60(text)"))
-        .select(col("doc_id"), col("shingles"))
-      DedupOps.bandHashes(sh).write.parquet(dest)
-      spark.read.parquet(dest).count()
+      DedupOps.probeAndExtend(dest, docs(corpus)).count(): Unit
+      DedupOps.readStore(spark, dest).count()
     }
 
     /** Batch b: ~half novel (per-batch letter permutation keeps them

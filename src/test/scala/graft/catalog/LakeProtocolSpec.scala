@@ -473,6 +473,20 @@ class LakeProtocolSpec extends AnyFunSuite {
       "the retention sweep did not run")
   }
 
+  test("vacuum drops a crash-left filesystem-clock probe older than the " +
+      "lock TTL and keeps a young one") {
+    val root = tmp()
+    SnapshotLake.commit(spark, root, frame(1L -> "v1"))
+    // a crash between fsNow's create and its delete leaves its probe
+    val old = new java.io.File(s"$root/_commits/clock.crashed-long-ago")
+    val young = new java.io.File(s"$root/_commits/clock.crashed-just-now")
+    assert(old.createNewFile() && young.createNewFile())
+    assert(old.setLastModified(System.currentTimeMillis() - 2L * 3600000L))
+    SnapshotLake.vacuum(spark, root, retain = 1) // TTL 1 h
+    assert(!old.exists(), "vacuum left an aged clock probe behind")
+    assert(young.exists(), "vacuum deleted a young clock probe")
+  }
+
   test("repairManifest picks up partition versions stranded by a crash " +
       "between partition commits and the manifest") {
     val root = tmp()

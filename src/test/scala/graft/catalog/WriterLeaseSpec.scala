@@ -101,6 +101,26 @@ class WriterLeaseSpec extends AnyFunSuite {
     } finally SnapshotLake.heartbeatIntervalMs = prevBeat
   }
 
+  test("lease ages are taken on the filesystem clock: on a filesystem " +
+      "whose mtimes lag the host by 2 h, a fresh foreign generation " +
+      "still refuses a contender") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.skewfs.impl", classOf[LaggingMtimeFs].getName)
+    val store = "skewfs://" + newStore("leaseskew")
+    val fs = new Path(store)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a holder on another host just claimed generation 1; on the host
+    // clock its mtime reads 2 h old, past the 10 min stale horizon
+    plant(fs, store, 1L, "holder pid=1 host=elsewhere ")
+    val e = intercept[WriterLease.ConcurrentWriterException] {
+      WriterLease.withLease(fs, store, "contender") {
+        throw new AssertionError("the live holder was taken over")
+      }
+    }
+    assert(e.getMessage.contains("LIVE"), e.getMessage)
+    assert(unreleased(fs, store) == Seq(1L))
+  }
+
   test("two contenders that both list a stale lease under two spellings " +
       "of one store: at most one body runs at a time, the late one " +
       "waits for the holder") {
@@ -183,13 +203,26 @@ class WriterLeaseSpec extends AnyFunSuite {
     assert(ran, "takeover aborted on a best-effort sweep delete")
     assert(flaky.exists(new Path(lease, "1")),
       "expected the faulted sweep to leave generation 1 behind")
-    // the next claim (deletes healthy) sweeps everything below its own
+    // the next claim (deletes healthy) sweeps every generation below
+    // its own; the faulted claim's filesystem-clock probe (its delete
+    // failed too) is young, so it stays
     ran = false
     WriterLease.withLease(flaky, store, "sweeper") { ran = true }
     assert(ran)
-    assert(flaky.listStatus(lease).map(_.getPath.getName).toSet ==
-      Set("3", "3.released"),
+    def names = flaky.listStatus(lease).map(_.getPath.getName).toSet
+    val (probes, gens) = names.partition(_.startsWith("clock."))
+    assert(gens == Set("3", "3.released"),
       "the next claim did not sweep the earlier generations")
+    assert(probes.size == 1, s"expected the faulted probe, got $probes")
+    // once the probe is older than the stale horizon, the next claim
+    // drops it; a young probe (a contender's, mid-read) stays
+    val old = new Path(lease, probes.head)
+    flaky.setTimes(old, System.currentTimeMillis() - 3600000L, -1)
+    val young = new Path(lease, "clock.young")
+    flaky.create(young, true).close()
+    WriterLease.withLease(flaky, store, "probe-sweeper") {}
+    assert(!flaky.exists(old), "the aged clock probe was not swept")
+    assert(flaky.exists(young), "a young clock probe was swept")
   }
 
   /** Local FS whose delete, create and open can each be made to throw.
@@ -461,10 +494,8 @@ class WriterLeaseSpec extends AnyFunSuite {
     graft.GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("leaseparity")
     val store = s"$dir/store"
-    val centPath = s"$dir/centroids"
     val cents = Seq((0, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)))
       .toDF("cid", "cv")
-    cents.coalesce(1).write.parquet(centPath)
     SimilarityOps.extendVectorStore(store, cents,
       Seq((1L, Seq(1.0, 0.1)), (2L, Seq(0.1, 1.0)), (3L, Seq(0.9, 0.2)))
         .toDF("vec_id", "v"))
@@ -488,12 +519,12 @@ class WriterLeaseSpec extends AnyFunSuite {
               refusals.incrementAndGet(): Unit
           }
         expectRefusal(SimilarityOps.compactVectorStore(spark, store))
-        expectRefusal(SimilarityOps.splitHotCells(spark, store, centPath,
+        expectRefusal(SimilarityOps.splitHotCells(spark, store,
           hotCellThreshold = 1L))
-        expectRefusal(SimilarityOps.mergeColdCells(spark, store, centPath,
+        expectRefusal(SimilarityOps.mergeColdCells(spark, store,
           coldCellThreshold = 10L))
         expectRefusal(SimilarityOps.maintainVectorStore(spark, store,
-          centPath, hotCellThreshold = 2L))
+          hotCellThreshold = 2L))
         expectRefusal(SimilarityOps.extendVectorStore(store, cents,
           Seq((9L, Seq(0.5, 0.5))).toDF("vec_id", "v")))
       })
@@ -506,7 +537,7 @@ class WriterLeaseSpec extends AnyFunSuite {
     // with the lease free, the full cycle runs — one outer claim, the
     // three primitives re-entering it on the owning thread
     val report = SimilarityOps.maintainVectorStore(spark, store,
-      centPath, hotCellThreshold = 100L, coldCellThreshold = 0L)
+      hotCellThreshold = 100L, coldCellThreshold = 0L)
     assert(report.hot.isEmpty)
     assert(unreleased(fs, store).isEmpty,
       "cycle did not release its lease")
@@ -523,9 +554,9 @@ class WriterLeaseSpec extends AnyFunSuite {
           case _: WriterLease.ConcurrentWriterException =>
             refused.incrementAndGet(): Unit
         }
-        // the APPEND path is a writer entry too: an append landing
-        // inside a concurrent compact's read→swap window would be
-        // silently dropped with the swapped-aside store
+        // the APPEND path is a writer entry too: an append committed
+        // after a concurrent compaction pinned its input would fall
+        // below the compaction's base and drop out of every read
         try {
           DedupOps.probeAndExtend(dstore,
             Seq((2L, "another shingled text long enough to band"))

@@ -278,7 +278,7 @@ class DedupScaleSpec extends AnyFunSuite {
     assert(v2 == Map(1L -> false, 2L -> false, 10L -> true,
       11L -> false))
     // only the novel doc extended the store
-    val stored = spark.read.parquet(store)
+    val stored = DedupOps.readStore(spark, store)
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(stored == Set(1L, 2L, 11L))
   }
@@ -298,16 +298,19 @@ class DedupScaleSpec extends AnyFunSuite {
       org.apache.spark.sql.functions.expr("md5_shingle60(text)"))
       .select($"doc_id", $"shingles")
     DedupOps.minhashBanded(sh).write.parquet(store)
+    // a flat (pre-version) store is refused by name, never reseeded
     val e = intercept[IllegalStateException] {
       DedupOps.probeAndExtend(store,
         Seq((3L, "the quick brown fox jumps over the lazy dog"))
           .toDF("doc_id", "text")).collect()
     }
-    assert(e.getMessage.contains("not a (doc_id, bh) store"))
+    assert(e.getMessage.contains(store) &&
+      e.getMessage.contains("flat pre-version layout"), e.getMessage)
     val c = intercept[IllegalStateException] {
       DedupOps.compactStore(spark, store)
     }
-    assert(c.getMessage.contains("not a (doc_id, bh) store"))
+    assert(c.getMessage.contains(store) &&
+      c.getMessage.contains("flat pre-version layout"), c.getMessage)
     // neither refusal touched the store
     assert(spark.read.parquet(store).columns.sorted.toSeq ==
       Seq("band", "band_key", "doc_id"))
@@ -318,53 +321,94 @@ class DedupScaleSpec extends AnyFunSuite {
     graft.GraftFunctions.register(spark)
     val store = java.nio.file.Files
       .createTempDirectory("graft_compact").resolve("bands").toString
-    def batch(i: Long) = Seq(
-      (i, s"document number $i about completely distinct topic $i " +
-        s"with enough words to shingle properly every time"))
-      .toDF("doc_id", "text")
+    // four unrelated docs: each batch admits its doc as one version
+    def text(i: Long) = new scala.util.Random(i).alphanumeric
+      .filter(_.isLetter).take(80).mkString
+    def batch(i: Long) = Seq((i, text(i))).toDF("doc_id", "text")
     (1L to 4L).foreach(i =>
       DedupOps.probeAndExtend(store, batch(i)).collect())
-    // simulate an at-least-once replay: re-append batch 1's bands
-    // (doc 1 is stored — near-identical batches 2..4 were flagged as
-    // its dups and never extended the store, which is itself the
-    // within-store dedup working)
+    val fs = graft.util.Fs.forPath(spark, store)
+    def pin = graft.catalog.StoreLake.pin(fs, store).get
+    assert(pin.versions.size == 4)
+    // an all-dup batch (a copy of stored doc 2) commits no version
+    val dup = DedupOps.probeAndExtend(store,
+      Seq((5L, text(2L))).toDF("doc_id", "text")).collect()
+    assert(dup.map(_.getBoolean(1)).toSeq == Seq(true))
+    assert(pin.versions.size == 4, "an all-dup batch committed a version")
+    // simulate an at-least-once replay: re-commit batch 1's bands as
+    // one more version
     val sh = batch(1L).withColumn("shingles",
       org.apache.spark.sql.functions.expr("md5_shingle60(text)"))
       .select($"doc_id", $"shingles")
-    DedupOps.bandHashes(sh).write.mode("append").parquet(store)
-    def files = new java.io.File(store).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
+    val base = pin.base
+    graft.catalog.StoreLake.commit(fs, store, _ => Map("base" -> base)) {
+      d => DedupOps.bandHashes(sh).write.parquet(d.toString)
+    }
+    // the parquet files of the versions the newest commit reads
+    def files = pin.versions.map(v =>
+      new java.io.File(s"$store/v=$v").listFiles()
+        .count(f => f.getName.endsWith(".parquet"))).sum
     assert(files >= 5, s"expected >=5 append files, got $files")
-    val before = spark.read.parquet(store).count()
+    val before = DedupOps.readStore(spark, store).count()
     DedupOps.compactStore(spark, store, targetFiles = 1)
     assert(files == 1, s"compaction left $files files")
-    val after = spark.read.parquet(store).count()
+    val after = DedupOps.readStore(spark, store).count()
     assert(after == before - 16, // doc 1's 16 replayed bands deduped
       s"expected dedupe of 16 replayed rows: $before -> $after")
     // verdicts unchanged: copy of stored doc 2 hits, novel doc misses
     val v = DedupOps.probeAndExtend(store,
-      Seq((20L, "document number 2 about completely distinct topic 2 " +
-        "with enough words to shingle properly every time"),
+      Seq((20L, text(2L)),
         (21L, "nothing like anything stored before in any way at all"))
         .toDF("doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
     assert(v == Map(20L -> true, 21L -> false))
 
-    // interrupted-swap recovery: simulate a crash between the
-    // rename-aside and the rename-in (store missing, .old present) —
-    // the next probe must ROLL BACK instead of silently reseeding an
-    // empty store and forgetting the corpus
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(store),
-      new org.apache.hadoop.fs.Path(store + ".old")))
+    // a killed compaction (its rewrite written, no commit marker) is
+    // invisible: plant an EMPTY uncommitted version above the newest —
+    // were it read as a base, the corpus would be forgotten — and the
+    // next probe must still see stored doc 3
+    DedupOps.readStore(spark, store).limit(0)
+      .write.parquet(s"$store/v=${pin.version + 1}")
     val v2 = DedupOps.probeAndExtend(store,
-      Seq((30L, "document number 3 about completely distinct topic 3 " +
-        "with enough words to shingle properly every time"))
-        .toDF("doc_id", "text"))
+      Seq((30L, text(3L))).toDF("doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
     assert(v2 == Map(30L -> true),
-      "recovery lost the store: a copy of stored doc 3 read as novel")
+      "an uncommitted rewrite hid the store: a copy of stored doc 3 " +
+        "read as novel")
+  }
+
+  test("a store version's fields live in its own dir: a garbled newest " +
+      "marker and a killed writer's version with no fields file leave " +
+      "readers and writers working") {
+    graft.GraftFunctions.register(spark)
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_fields").resolve("bands").toString
+    def text(i: Long) = new scala.util.Random(i).alphanumeric
+      .filter(_.isLetter).take(80).mkString
+    def docs(ids: Long*) = ids.map(i => (i, text(i))).toDF("doc_id", "text")
+    def verdicts(ids: Long*) = DedupOps.probeAndExtend(store, docs(ids: _*))
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    def storedDocs = DedupOps.readStore(spark, store)
+      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+    verdicts(1L)
+    val fs = graft.util.Fs.forPath(spark, store)
+    // markers carry no content a reader needs: garble the newest one
+    val marker = new org.apache.hadoop.fs.Path(store, "_commits/1")
+    val out = fs.create(marker, true)
+    try out.write("base=".getBytes("UTF-8")) finally out.close()
+    // a writer killed inside its commit, after its rows and before its
+    // fields file: version 2 holds doc 9's bands and nothing else
+    val sh = docs(9L).withColumn("shingles", expr("md5_shingle60(text)"))
+      .select($"doc_id", $"shingles")
+    DedupOps.bandHashes(sh).write.parquet(s"$store/v=2")
+    assert(storedDocs == Set(1L))
+    assert(verdicts(1L, 9L) == Map(1L -> true, 9L -> false))
+    // that append claimed version 2 over the orphan and committed it
+    assert(graft.catalog.StoreLake.pin(fs, store).get.version == 2L)
+    assert(storedDocs == Set(1L, 9L))
+    DedupOps.compactStore(spark, store)
+    assert(storedDocs == Set(1L, 9L))
+    assert(verdicts(9L, 10L) == Map(9L -> true, 10L -> false))
   }
 
   test("lshVerifiedPairs' large-stratum join evaluates the intersect " +

@@ -1,8 +1,5 @@
 package graft.operators
 
-import java.net.URI
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,30 +14,18 @@ import graft.catalog.FaultInjectingFs
   * armed kill point; from the kill on, all further mutations fail, so
   * on-disk state is exactly what a process death leaves).
   *
-  * The claim under test is the one both operators' scaladocs stake out:
-  * at EVERY point in a maintenance run, a restarted reader that heals
-  * interrupted swaps ([[DedupOps.recoverStoreSwap]] — what every store
-  * entry point already does) and probes with the then-current centroid
-  * table gets EXACTLY the global brute-force answer over the original
-  * corpus. The windows that make this non-obvious:
-  *
-  *  - split, children appended but table not swapped: the children's
-  *    cids are invisible (not in the table), the parent still serves
-  *    every row;
-  *  - split, table swapped but parents not deleted: the parents are
-  *    unreferenced (never probed), the children serve every row;
-  *  - merge, cold rows copied but table not swapped: a vector is served
-  *    from BOTH its cold cell and its target cell — the probe's
-  *    per-(query, neighbor) collapse must fill one top-k slot, not two;
-  *  - a kill inside the rename-aside table swap itself: the table path
-  *    is transiently absent, recoverStoreSwap rolls it forward or back.
+  * The claim under test is the store protocol's
+  * ([[graft.catalog.StoreLake]]): each maintenance call commits ONE
+  * version holding its moved rows and its centroid table, so at EVERY
+  * point in a run a restarted plain probe pins either the previous
+  * version or the new one — never a mix — and gets EXACTLY the global
+  * brute-force answer over the original corpus. A kill leaves at most
+  * an uncommitted `v=` dir and a claim lock, which no reader sees.
   *
   * After the crashed run, the fuzz also proves LIVENESS: a re-run of
-  * the same maintenance call completes over the debris (the guarded
-  * entry sweep must classify one run's leftovers as debris, not refuse
-  * them as a wrong table), reaches the maintenance goal (no hot cell /
-  * no cold cell), preserves the corpus row set, and fresh ingest +
-  * probe still work. */
+  * the same maintenance call completes over the debris, reaches the
+  * maintenance goal (no hot cell / no cold cell), preserves the corpus
+  * row set, and fresh ingest + probe still work. */
 class StoreMaintCrashFuzzSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
@@ -49,9 +34,6 @@ class StoreMaintCrashFuzzSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory("maintfuzz").toFile
     d.delete(); d.getAbsolutePath
   }
-
-  private def fs = org.apache.hadoop.fs.FileSystem.get(
-    URI.create("failfs:///"), spark.sparkContext.hadoopConfiguration)
 
   // ---- corpus (the VectorStoreSpec split shape: deterministic refit) —
   // hot cell 0 = two separable sub-clusters inside the axis-0 halfspace
@@ -79,17 +61,13 @@ class StoreMaintCrashFuzzSpec extends AnyFunSuite {
     (2, Seq(0.0, 0.0, 1.0, 0.0)), (3, Seq(0.0, 0.0, 0.0, 1.0)))
     .toDF("cid", "cv")
 
-  /** Fresh (store, centroidPath) pair on failfs with `corpus` ingested. */
-  private def freshStore(corpus: Seq[(Long, Seq[Double])])
-      : (String, String) = {
+  /** A fresh store on failfs, seeded with `table` and `corpus`. */
+  private def freshStore(corpus: Seq[(Long, Seq[Double])],
+      table: DataFrame = centroids): String = {
     FaultInjectingFs.disarm()
-    val dir = tmp()
-    val store = s"failfs://$dir/store"
-    val centPath = s"failfs://$dir/centroids"
-    centroids.coalesce(1).write.parquet(centPath)
-    SimilarityOps.extendVectorStore(store,
-      spark.read.parquet(centPath), corpus.toDF("vec_id", "v"))
-    (store, centPath)
+    val store = s"failfs://${tmp()}/store"
+    SimilarityOps.extendVectorStore(store, table, corpus.toDF("vec_id", "v"))
+    store
   }
 
   /** Global brute-force top-k for `qv` over `corpus`, the store's
@@ -108,31 +86,26 @@ class StoreMaintCrashFuzzSpec extends AnyFunSuite {
       .take(k).zipWithIndex.map { case ((id, _), i) => (i + 1, id) }
   }
 
-  /** What a RESTARTED reader does: heal interrupted swaps on both
-    * artifacts, read the current table, probe every live cell. */
-  private def restartProbe(store: String, centPath: String,
-      q: (Long, Seq[Double]), k: Int): Seq[(Int, Long)] = {
-    DedupOps.recoverStoreSwap(fs, store)
-    DedupOps.recoverStoreSwap(fs, centPath)
-    val cents = spark.read.parquet(centPath)
-    val nCells = cents.count().toInt
-    SimilarityOps.probeVectorStore(store, cents,
-        Seq(q).toDF("vec_id", "v"), k = k, nprobe = nCells,
+  /** What a RESTARTED reader does: a plain probe of every live cell —
+    * nothing to heal. */
+  private def restartProbe(store: String,
+      q: (Long, Seq[Double]), k: Int): Seq[(Int, Long)] =
+    SimilarityOps.probeVectorStore(store,
+        Seq(q).toDF("vec_id", "v"), k = k, nprobe = liveCids(store).size,
         excludeSelf = false)
       .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
-  }
 
-  private def liveCids(centPath: String): Set[Int] =
-    spark.read.parquet(centPath)
+  private def liveCids(store: String): Set[Int] =
+    SimilarityOps.readVectorStore(spark, store)._1
       .select("cid").collect().map(_.getInt(0)).toSet
 
   private def storedIds(store: String): Set[Long] =
-    spark.read.parquet(store)
+    SimilarityOps.readVectorStore(spark, store)._2
       .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
 
   /** Kill points: a fixed-seed sample of a clean run's mutation count,
     * always including the first mutation and the protocol-dense tail
-    * (table-swap renames + parent/cold-dir deletes). */
+    * (the table write, the commit marker, the claim release). */
   private def killPoints(total: Long, seed: Long): Seq[Long] = {
     val rnd = new scala.util.Random(seed)
     (Seq.fill(8)(1L + rnd.nextLong(total)) ++
@@ -151,17 +124,17 @@ class StoreMaintCrashFuzzSpec extends AnyFunSuite {
       "always equals global brute force, the re-run completes over the " +
       "debris, ingest keeps working", graft.SlowTest) {
     withFailFs {
-      def split(store: String, centPath: String) =
-        SimilarityOps.splitHotCells(spark, store, centPath,
+      def split(store: String) =
+        SimilarityOps.splitHotCells(spark, store,
           hotCellThreshold = 30L, maxSplitK = 2)
       // query in the even (+0.3) sub-cluster; its top-5 spans the split
       val q = (500L, Seq(1.0, 0.31, 0.02, 0.02))
       val expect = brute(splitCorpus, q._2, 5)
 
       // clean probe run: mutation count of a full split on this shape
-      val (pStore, pCent) = freshStore(splitCorpus)
+      val pStore = freshStore(splitCorpus)
       FaultInjectingFs.arm(Long.MaxValue)
-      assert(split(pStore, pCent) == Map(0 -> Seq(4, 5)))
+      assert(split(pStore) == Map(0 -> Seq(4, 5)))
       val total = FaultInjectingFs.ops.get()
       FaultInjectingFs.disarm()
       assert(total > 10, s"split probe saw only $total mutations")
@@ -170,62 +143,54 @@ class StoreMaintCrashFuzzSpec extends AnyFunSuite {
         points.mkString(", "))
 
       points.foreach { k =>
-        val (store, centPath) = freshStore(splitCorpus)
+        val store = freshStore(splitCorpus)
         FaultInjectingFs.arm(k)
         val crashed =
-          try { split(store, centPath); false }
+          try { split(store); false }
           catch { case scala.util.control.NonFatal(_) => true }
         FaultInjectingFs.disarm()
         val clue = s"split kill@$k (crashed=$crashed)"
 
         // invariant 1: the restarted reader sees the exact brute-force
-        // answer whatever the crash left (parent-only, both, table
-        // swapped, mid-swap)
-        assert(restartProbe(store, centPath, q, 5) == expect,
+        // answer whatever the crash left (the parent's version, or the
+        // children's)
+        assert(restartProbe(store, q, 5) == expect,
           s"$clue: restarted probe diverged from brute force")
 
-        // invariant 2 (liveness): the re-run rides over the debris —
-        // the guarded sweep must classify it as one run's leftovers —
-        // and reaches the goal state
-        split(store, centPath): Unit
-        val cids = liveCids(centPath)
+        // invariant 2 (liveness): the re-run rides over the debris and
+        // reaches the goal state
+        split(store): Unit
+        val cids = liveCids(store)
         assert(!cids.contains(0) && cids.size == 5,
           s"$clue: re-run did not reach the split state, table $cids")
-        assert(restartProbe(store, centPath, q, 5) == expect,
+        assert(restartProbe(store, q, 5) == expect,
           s"$clue: post-recovery probe diverged")
         assert(storedIds(store) == splitCorpus.map(_._1).toSet,
           s"$clue: corpus rows lost or invented")
-        // no swap debris survives recovery
-        assert(!fs.exists(new Path(centPath + ".next")) &&
-          !fs.exists(new Path(centPath + ".old")),
-          s"$clue: centroid swap debris lingers")
 
         // invariant 3: fresh ingest lands correctly post-recovery
         val extra = Seq(axisVec(201L), axisVec(202L))
-        SimilarityOps.extendVectorStore(store,
-          spark.read.parquet(centPath), extra.toDF("vec_id", "v"))
+        SimilarityOps.extendVectorStore(store, centroids,
+          extra.toDF("vec_id", "v"))
         assert(storedIds(store) ==
           splitCorpus.map(_._1).toSet ++ extra.map(_._1),
           s"$clue: post-recovery ingest rows missing")
         assert(
-          restartProbe(store, centPath, q, 5) ==
+          restartProbe(store, q, 5) ==
             brute(splitCorpus ++ extra, q._2, 5),
           s"$clue: probe after post-recovery ingest diverged")
       }
     }
   }
 
-  test("sampled crash points through a CHUNKED (two-pass) merge: " +
-      "every kill point — including between the two table swaps — " +
-      "restarts to brute-force parity and the re-run retires every " +
-      "cold cell", graft.SlowTest) {
+  test("sampled crash points through a single-commit merge of 68 " +
+      "cold cells: every kill point restarts to brute-force parity and " +
+      "the re-run retires every cold cell", graft.SlowTest) {
     withFailFs {
-      // one unique axis per cell; survivor cell 0 carries 12 rows,
-      // cells 1..nCold one row each — nCold > MaxColdPerMergePass
-      // forces two passes (two swaps), so the mutation-count probe
-      // spans BOTH commit points and the sampled kills land on either
-      // side of the inter-pass boundary
-      val nCold = SimilarityOps.MaxColdPerMergePass + 4
+      // one unique axis per cell; survivor cell 0 carries few rows,
+      // cells 1..nCold one row each — more cold cells than
+      // TwoLevelMinK, all retired by ONE commit
+      val nCold = 68
       val d = nCold + 1
       def axis(c: Int, id: Long): (Long, Seq[Double]) = {
         val a = Array.fill(d)(0.01)
@@ -240,24 +205,14 @@ class StoreMaintCrashFuzzSpec extends AnyFunSuite {
       // parity assertion vacuous for moved rows)
       val corpus = (0L until 6L).map(i => axis(0, i)) ++
         (1 to nCold).map(c => axis(c, 1000L + c))
-      def freshChunkStore(): (String, String) = {
-        FaultInjectingFs.disarm()
-        val dir = tmp()
-        val store = s"failfs://$dir/store"
-        val centPath = s"failfs://$dir/centroids"
-        import spark.implicits._
-        (0 to nCold).map(c =>
-            (c, Seq.tabulate(d)(i => if (i == c) 1.0 else 0.0)))
-          .toDF("cid", "cv").coalesce(1).write.parquet(centPath)
-        SimilarityOps.extendVectorStore(store,
-          spark.read.parquet(centPath), corpus.toDF("vec_id", "v"))
-        (store, centPath)
-      }
-      def merge(store: String, centPath: String) =
-        SimilarityOps.mergeColdCells(spark, store, centPath,
-          coldCellThreshold = 5L)
+      val table = (0 to nCold).map(c =>
+          (c, Seq.tabulate(d)(i => if (i == c) 1.0 else 0.0)))
+        .toDF("cid", "cv")
+      def freshChunkStore(): String = freshStore(corpus, table)
+      def merge(store: String) =
+        SimilarityOps.mergeColdCells(spark, store, coldCellThreshold = 5L)
       // query leaning the survivor axis with a tilt toward axis 7 (a
-      // cold cell retired in pass 1): top-10 = the 6 survivor rows +
+      // retired cold cell): top-10 = the 6 survivor rows +
       // the axis-7 moved row + 3 more moved rows — moved rows are
       // load-bearing in the parity check at every kill point
       val q = (900L, {
@@ -270,36 +225,36 @@ class StoreMaintCrashFuzzSpec extends AnyFunSuite {
       assert(expect.count { case (_, id) => id >= 1000L } >= 4,
         s"fuzz corpus no longer places moved rows in top-$topK: $expect")
 
-      val (pStore, pCent) = freshChunkStore()
+      val pStore = freshChunkStore()
       FaultInjectingFs.arm(Long.MaxValue)
-      val cleanMoved = merge(pStore, pCent)
+      val cleanMoved = merge(pStore)
       val total = FaultInjectingFs.ops.get()
       FaultInjectingFs.disarm()
       assert(cleanMoved.keySet == (1 to nCold).toSet,
-        s"clean chunked merge must retire all $nCold cold cells, " +
+        s"clean merge must retire all $nCold cold cells, " +
           s"got ${cleanMoved.keySet.size}")
-      assert(total > 20, s"chunked-merge probe saw only $total mutations")
+      assert(total > 20, s"merge probe saw only $total mutations")
       val points = killPoints(total, 0xc4a5b2L)
-      info(s"clean chunked merge = $total mutations (2 passes); " +
+      info(s"clean $nCold-cell merge = $total mutations; " +
         s"kill points: ${points.mkString(", ")}")
 
       points.foreach { k =>
-        val (store, centPath) = freshChunkStore()
+        val store = freshChunkStore()
         FaultInjectingFs.arm(k)
         val crashed =
-          try { merge(store, centPath); false }
+          try { merge(store); false }
           catch { case scala.util.control.NonFatal(_) => true }
         FaultInjectingFs.disarm()
-        val clue = s"chunked merge kill@$k (crashed=$crashed)"
+        val clue = s"$nCold-cell merge kill@$k (crashed=$crashed)"
 
-        assert(restartProbe(store, centPath, q, topK) == expect,
+        assert(restartProbe(store, q, topK) == expect,
           s"$clue: restarted probe diverged from brute force")
 
-        merge(store, centPath) // liveness across the pass boundary
-        assert(liveCids(centPath) == Set(0),
+        merge(store) // liveness: completes over the debris
+        assert(liveCids(store) == Set(0),
           s"$clue: re-run left cold cids in the table: " +
-            liveCids(centPath))
-        assert(restartProbe(store, centPath, q, topK) == expect,
+            liveCids(store))
+        assert(restartProbe(store, q, topK) == expect,
           s"$clue: post-recovery probe diverged")
         assert(storedIds(store) == corpus.map(_._1).toSet,
           s"$clue: corpus rows lost or invented")
@@ -311,18 +266,17 @@ class StoreMaintCrashFuzzSpec extends AnyFunSuite {
       "top-k-neutral at every point, the re-run folds the cold cells, " +
       "rows are conserved", graft.SlowTest) {
     withFailFs {
-      def merge(store: String, centPath: String) =
-        SimilarityOps.mergeColdCells(spark, store, centPath,
-          coldCellThreshold = 3L)
+      def merge(store: String) =
+        SimilarityOps.mergeColdCells(spark, store, coldCellThreshold = 3L)
       // query leaning axis 1 — its neighborhood crosses the cold cells
       // (101 in cell 1, the axis-1-ish tilts of the hot vectors), so a
       // dup-filled slot or a lost cold row changes the answer
       val q = (600L, Seq(0.1, 1.0, 0.1, 0.1))
       val expect = brute(mergeCorpus, q._2, 5)
 
-      val (pStore, pCent) = freshStore(mergeCorpus)
+      val pStore = freshStore(mergeCorpus)
       FaultInjectingFs.arm(Long.MaxValue)
-      val cleanMoved = merge(pStore, pCent)
+      val cleanMoved = merge(pStore)
       val total = FaultInjectingFs.ops.get()
       FaultInjectingFs.disarm()
       assert(cleanMoved.nonEmpty, "merge shape produced no cold cells")
@@ -332,28 +286,34 @@ class StoreMaintCrashFuzzSpec extends AnyFunSuite {
         s"kill points: ${points.mkString(", ")}")
 
       points.foreach { k =>
-        val (store, centPath) = freshStore(mergeCorpus)
+        val store = freshStore(mergeCorpus)
         FaultInjectingFs.arm(k)
         val crashed =
-          try { merge(store, centPath); false }
+          try { merge(store); false }
           catch { case scala.util.control.NonFatal(_) => true }
         FaultInjectingFs.disarm()
         val clue = s"merge kill@$k (crashed=$crashed)"
 
-        assert(restartProbe(store, centPath, q, 5) == expect,
+        assert(restartProbe(store, q, 5) == expect,
           s"$clue: restarted probe diverged from brute force")
 
-        merge(store, centPath) // liveness: completes over the debris
-        val cids = liveCids(centPath)
-        val counts = spark.read.parquet(store)
+        merge(store) // liveness: completes over the debris
+        val cids = liveCids(store)
+        val counts = SimilarityOps.readVectorStore(spark, store)._2
           .groupBy("cid").count().collect()
           .map(r => r.getInt(0) -> r.getLong(1)).toMap
         assert(cids.forall(c => counts.getOrElse(c, 0L) >= 3L),
           s"$clue: a live cell is still cold after the re-run: " +
             s"table $cids, counts $counts")
-        assert(counts.keySet.subsetOf(cids),
-          s"$clue: unreferenced cell dirs survive the re-run")
-        assert(restartProbe(store, centPath, q, 5) == expect,
+        // the pinned range still holds the retired cells' rows in the
+        // versions below the merge; the rows served are the live cells'
+        // only, so a retired row or a re-issued cid serves a vector twice
+        val servedTwice = SimilarityOps.pinned(spark, store).get.live
+          .groupBy("vec_id").count()
+          .filter(org.apache.spark.sql.functions.col("count") > 1).count()
+        assert(servedTwice == 0L,
+          s"$clue: $servedTwice vectors are served from two cells")
+        assert(restartProbe(store, q, 5) == expect,
           s"$clue: post-recovery probe diverged")
         assert(storedIds(store) == mergeCorpus.map(_._1).toSet,
           s"$clue: corpus rows lost or invented")

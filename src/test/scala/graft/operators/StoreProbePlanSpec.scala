@@ -83,7 +83,7 @@ class StoreProbePlanSpec extends AnyFunSuite {
         .toDF("doc_id", "text")).collect() // seed
     val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
       spark.sessionState.newHadoopConf())
-    def storeDocs: Set[Long] = spark.read.parquet(store)
+    def storeDocs: Set[Long] = DedupOps.readStore(spark, store)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(storeDocs == Set(40L))
     val verdict = DedupOps.probeAndExtendImpl(store,

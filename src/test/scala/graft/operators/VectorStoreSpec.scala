@@ -40,6 +40,17 @@ class VectorStoreSpec extends AnyFunSuite {
     (2, Seq(0.0, 0.0, 1.0, 0.0)), (3, Seq(0.0, 0.0, 0.0, 1.0)))
     .toDF("cid", "cv")
 
+  /** The store's centroid table and live rows as of its newest
+    * commit. */
+  private def tableOf(store: String): DataFrame =
+    SimilarityOps.readVectorStore(spark, store)._1
+  private def rowsOf(store: String): DataFrame =
+    SimilarityOps.readVectorStore(spark, store)._2
+  private def liveCids(store: String): Set[Int] =
+    tableOf(store).select("cid").collect().map(_.getInt(0)).toSet
+  private def pinOf(store: String): graft.catalog.StoreLake.Pin =
+    SimilarityOps.pinned(spark, store).get.pin
+
   /** id's vector leans toward axis (id % 4) with a small unique tilt,
     * so nearest-centroid assignment is unambiguous and cosines are
     * distinct. */
@@ -67,7 +78,7 @@ class VectorStoreSpec extends AnyFunSuite {
     // is probed
     val queries = vecs(Seq(100L, 104L)) // 100 % 4 == 0, 104 % 4 == 0
     OpenCountingFs.reset()
-    val got = SimilarityOps.probeVectorStore(store, centroids, queries,
+    val got = SimilarityOps.probeVectorStore(store, queries,
       k = 3, nprobe = 1)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
 
@@ -104,7 +115,7 @@ class VectorStoreSpec extends AnyFunSuite {
 
     // replay: re-append batch 2 verbatim; ranking must not change
     SimilarityOps.extendVectorStore(store, centroids, vecs(16L to 31L))
-    val replay = SimilarityOps.probeVectorStore(store, centroids,
+    val replay = SimilarityOps.probeVectorStore(store,
       queries, k = 3, nprobe = 1)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(replay.toSet == got.toSet,
@@ -112,7 +123,7 @@ class VectorStoreSpec extends AnyFunSuite {
 
     // nprobe widening reaches more cells (the recall/latency knob)
     OpenCountingFs.reset()
-    SimilarityOps.probeVectorStore(store, centroids, queries,
+    SimilarityOps.probeVectorStore(store, queries,
       k = 3, nprobe = 2).collect()
     val cells2 = OpenCountingFs.opened.toArray(Array.empty[String])
       .filter(p => p.contains("/store/") && p.contains("cid="))
@@ -144,7 +155,7 @@ class VectorStoreSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("vecplan")
     val store = s"$dir/store"
     SimilarityOps.extendVectorStore(store, centroids, vecs(0L to 15L))
-    val probe = SimilarityOps.probeVectorStore(store, centroids,
+    val probe = SimilarityOps.probeVectorStore(store,
       vecs(Seq(100L)), k = 3, nprobe = 2)
     val plan = probe.queryExecution.executedPlan.toString
     val shuffles = "Exchange hashpartitioning".r
@@ -165,7 +176,8 @@ class VectorStoreSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("veccompactplan")
     val store = s"$dir/store"
     SimilarityOps.extendVectorStore(store, centroids, vecs(0L to 15L))
-    val plan = SimilarityOps.compactedCorpusFrame(spark, store)
+    val plan = SimilarityOps.compactedCorpusFrame(
+        SimilarityOps.pinned(spark, store).get)
       .queryExecution.executedPlan.toString
     val shuffles = "Exchange hashpartitioning".r
       .findAllMatchIn(plan).size
@@ -183,7 +195,8 @@ class VectorStoreSpec extends AnyFunSuite {
     val store = s"$dir/store"
     SimilarityOps.extendVectorStore(store, centroids, vecs(0L to 15L))
     SimilarityOps.extendVectorStore(store, centroids, vecs(Seq(4L, 8L)))
-    val counts = SimilarityOps.cellCountsFrame(spark, store)
+    val counts = SimilarityOps.cellCountsFrame(
+      SimilarityOps.pinned(spark, store).get.live)
     // the scale pin: grouping on the PARTITION column must prune the
     // read schema to struct<> — footers + partition paths only, the
     // vector bytes never decoded, O(files) at any store size. If a
@@ -215,13 +228,15 @@ class VectorStoreSpec extends AnyFunSuite {
       SimilarityOps.extendVectorStore(store, centroids, vecs(chunk.toSeq))
     }
     SimilarityOps.extendVectorStore(store, centroids, vecs(Seq(1L, 2L, 3L)))
-    def cellFiles(c: Int): Int =
-      new java.io.File(s"$store/cid=$c").listFiles()
-        .count(_.getName.endsWith(".parquet"))
+    // the cell's files across the versions the newest commit reads
+    def cellFiles(c: Int): Int = pinOf(store).versions.map { v =>
+      Option(new java.io.File(s"$store/v=$v/cid=$c").listFiles())
+        .fold(0)(_.count(_.getName.endsWith(".parquet")))
+    }.sum
     assert(cellFiles(0) >= 4,
       s"setup should leave ≥4 small files in cell 0, saw ${cellFiles(0)}")
     val queries = vecs(Seq(100L, 102L)) // cells 0 and 2
-    val before = SimilarityOps.probeVectorStore(store, centroids,
+    val before = SimilarityOps.probeVectorStore(store,
       queries, k = 5, nprobe = 1)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).toSet
@@ -232,15 +247,16 @@ class VectorStoreSpec extends AnyFunSuite {
         s"rows, got $hot")
     assert(cellFiles(0) == 1,
       s"compaction left ${cellFiles(0)} files in cell 0 — not collapsed")
-    val after = SimilarityOps.probeVectorStore(store, centroids,
+    val after = SimilarityOps.probeVectorStore(store,
       queries, k = 5, nprobe = 1)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).toSet
     assert(after == before,
       "compaction changed probe results")
-    // swap debris never lingers
-    assert(!new java.io.File(s"$store.next").exists())
-    assert(!new java.io.File(s"$store.old").exists())
+    // the compaction is its own base: the newest commit reads it alone
+    val pin = pinOf(store)
+    assert(pin.versions == Seq(pin.version) && pin.base == pin.version,
+      s"compaction did not commit its own base: $pin")
   }
 
   test("splitHotCells: a planted hot cell splits into children, probe " +
@@ -251,9 +267,6 @@ class VectorStoreSpec extends AnyFunSuite {
       .set("fs.openfs.impl", classOf[OpenCountingFs].getName)
     val dir = java.nio.file.Files.createTempDirectory("vecsplit")
     val store = s"openfs://$dir/store"
-    val centPath = s"openfs://$dir/centroids"
-    centroids.coalesce(1).write.parquet(centPath)
-    def cents: DataFrame = spark.read.parquet(centPath)
 
     // hot cell 0 = TWO separable sub-clusters inside the axis-0
     // halfspace: even ids lean (1, +0.3, …), odd ids (1, -0.3, …) —
@@ -264,31 +277,37 @@ class VectorStoreSpec extends AnyFunSuite {
         else -0.3 - 0.001 * (id % 7)
       (id, Seq(1.0 + 0.01 * (id % 11), tilt, 0.02, 0.02))
     }.toDF("vec_id", "v")
-    SimilarityOps.extendVectorStore(store, cents, hotVecs)
-    SimilarityOps.extendVectorStore(store, cents,
+    SimilarityOps.extendVectorStore(store, centroids, hotVecs)
+    SimilarityOps.extendVectorStore(store, centroids,
       vecs(Seq(101L, 102L, 103L))) // cells 1–3, one vector each
     // external query in the even (+0.3) sub-cluster: its true top-5
     // all live there, so a post-split nprobe=1 probe of the matching
     // child returns the SAME answer from half the rows
     val q = Seq((500L, Seq(1.0, 0.31, 0.02, 0.02))).toDF("vec_id", "v")
-    val before = SimilarityOps.probeVectorStore(store, cents, q,
+    val before = SimilarityOps.probeVectorStore(store, q,
       k = 5, nprobe = 1, excludeSelf = false)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).toSet
 
-    val mapping = SimilarityOps.splitHotCells(spark, store, centPath,
+    val versionsBefore = pinOf(store).versions
+    val mapping = SimilarityOps.splitHotCells(spark, store,
       hotCellThreshold = 30L, maxSplitK = 2)
     assert(mapping == Map(0 -> Seq(4, 5)),
       s"expected cell 0 → children (4, 5), got $mapping")
-    assert(!new java.io.File(s"$dir/store/cid=0").exists(),
-      "the split parent's dead directory must be deleted")
-    val newCids = cents.select("cid").collect().map(_.getInt(0)).toSet
+    // ONE commit carries the children and the new table
+    val split = pinOf(store)
+    assert(split.versions == versionsBefore :+ split.version &&
+      split.fields("centroids") == split.version,
+      s"the split did not commit one version with its table: $split")
+    assert(rowsOf(store).filter(col("cid") === 0).count() == 0L,
+      "the split parent's rows are still served")
+    val newCids = liveCids(store)
     assert(newCids == Set(1, 2, 3, 4, 5),
       s"centroid table after split should be children + untouched, " +
         s"got $newCids")
 
     OpenCountingFs.reset()
-    val after = SimilarityOps.probeVectorStore(store, cents, q,
+    val after = SimilarityOps.probeVectorStore(store, q,
       k = 5, nprobe = 1, excludeSelf = false)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).toSet
@@ -301,57 +320,59 @@ class VectorStoreSpec extends AnyFunSuite {
       .filter(p => p.contains("/store/") && p.contains("cid="))
       .flatMap(p => "cid=(\\d+)".r.findFirstMatchIn(p).map(_.group(1)))
       .toSet
-    // schema inference may open one stray footer in another cell; the
-    // pruning claims are: exactly one CHILD is read (the sibling is
-    // pruned — the scan halved) and the dead parent is never touched
+    // the pruning claims: exactly one CHILD is read (the sibling is
+    // pruned — the scan halved) and the retired parent, whose rows stay
+    // in the pinned range until the next compaction, is never touched
     val probedChild = openedCells.intersect(Set("4", "5"))
     assert(probedChild.size == 1,
       s"post-split probe should read exactly one child cell, " +
         s"opened: $openedCells")
     assert(!openedCells.contains("0"),
       s"post-split probe touched the dead parent cell: $openedCells")
-    val childRows = spark.read.parquet(store)
+    val childRows = rowsOf(store)
       .filter(col("cid").isin(probedChild.map(_.toInt).toSeq: _*))
       .count()
     assert(childRows == 20L,
       s"the probed child should hold half the parent's 40 rows, " +
         s"has $childRows")
     // untouched cells still probeable; total rows conserved
-    assert(spark.read.parquet(store).count() == 43L)
-    // no swap debris on either artifact
-    assert(!new java.io.File(s"$dir/centroids.next").exists())
-    assert(!new java.io.File(s"$dir/centroids.old").exists())
+    assert(rowsOf(store).count() == 43L)
     // a second pass over the now-cool store is a no-op
-    assert(SimilarityOps.splitHotCells(spark, store, centPath,
+    assert(SimilarityOps.splitHotCells(spark, store,
       hotCellThreshold = 30L, maxSplitK = 2).isEmpty)
-    // interrupted-split debris (children appended, table never
-    // swapped) is swept on the next maintenance entry: plant a fake
-    // unreferenced cell and re-run
+    // a killed split's debris (children written, no commit marker) is
+    // invisible: plant an uncommitted version holding a cell 99, and
+    // neither the served rows nor the next split see it
+    val orphan = s"$dir/store/v=${split.version + 1}"
     vecs(Seq(777L)).withColumn("cid", lit(99))
       .select(col("cid"), col("vec_id"), col("v"))
-      .write.mode("append").partitionBy("cid").parquet(store)
-    assert(SimilarityOps.splitHotCells(spark, store, centPath,
+      .write.partitionBy("cid").parquet(orphan)
+    assert(rowsOf(store).filter(col("vec_id") === 777L).count() == 0L,
+      "an uncommitted version's rows are served")
+    assert(SimilarityOps.splitHotCells(spark, store,
       hotCellThreshold = 30L, maxSplitK = 2).isEmpty)
-    assert(!new java.io.File(s"$dir/store/cid=99").exists(),
-      "entry sweep must remove a cid= dir the centroid table does " +
-        "not reference (interrupted-split debris)")
+    assert(pinOf(store) == split, "a no-op split committed a version")
   }
 
-  test("a vector served from TWO probed cells (mergeColdCells' crash " +
-      "window: copy appended, table not yet swapped) fills ONE top-k " +
-      "slot") {
+  test("a vector served from TWO probed cells (a replay assigned " +
+      "after the table changed) fills ONE top-k slot") {
     graft.GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("vecdup")
     val store = s"$dir/store"
     SimilarityOps.extendVectorStore(store, centroids, vecs(0L to 15L))
-    // plant the crash state: vec 0 (cell 0) copied into LIVE cell 1
-    vecs(Seq(0L)).withColumn("cid", lit(1))
-      .select(col("cid"), col("vec_id"), col("v"))
-      .write.mode("append").partitionBy("cid").parquet(store)
+    // plant the state: a committed version holding vec 0 (cell 0) in
+    // LIVE cell 1 too — a replay routed by a later table lands so
+    val base = pinOf(store)
+    graft.catalog.StoreLake.commit(graft.util.Fs.forPath(spark, store),
+        store, _ => base.fields) { d =>
+      vecs(Seq(0L)).withColumn("cid", lit(1))
+        .select(col("cid"), col("vec_id"), col("v"))
+        .write.partitionBy("cid").parquet(d.toString)
+    }
     // query leans axis 0; its second-ranked cell ties to cid 1 — both
     // copies of vec 0 are probe candidates
     val q = vecs(Seq(100L))
-    val got = SimilarityOps.probeVectorStore(store, centroids, q,
+    val got = SimilarityOps.probeVectorStore(store, q,
         k = 3, nprobe = 2, excludeSelf = false)
       .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
     assert(got.map(_._2).distinct.length == got.length,
@@ -360,45 +381,57 @@ class VectorStoreSpec extends AnyFunSuite {
       s"the duplicated vector must still be served once: $got")
   }
 
-  test("entry-sweep mass-delete guard (r12 advice): a wrong/stale " +
-      "centroid table refuses to sweep — nothing deleted — on both " +
-      "maintenance entry points; force overrides") {
+  test("an append stays O(batch): it opens no posting file of an " +
+      "existing version, only the newest version's fields file and the " +
+      "centroid table") {
     graft.GraftFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("vecguard")
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.openfs.impl", classOf[OpenCountingFs].getName)
+    val dir = java.nio.file.Files.createTempDirectory("vecappend")
+    val store = s"openfs://$dir/store"
+    SimilarityOps.extendVectorStore(store, centroids, vecs(0L to 15L))
+    SimilarityOps.extendVectorStore(store, centroids, vecs(16L to 31L))
+    OpenCountingFs.reset()
+    SimilarityOps.extendVectorStore(store, centroids, vecs(32L to 47L))
+    val opened = OpenCountingFs.opened.toArray(Array.empty[String])
+      .filter(_.contains("/store/"))
+    assert(opened.nonEmpty, "the append read neither fields file nor table")
+    assert(opened.forall(p => p.endsWith("/v=2/_store") ||
+        p.contains("/_centroids/")),
+      s"an append opened existing store data: ${opened.mkString(", ")}")
+    assert(rowsOf(store).count() == 48L)
+  }
+
+  test("a cid a merge retired is never issued again while its rows " +
+      "sit in the pinned range") {
+    graft.GraftFunctions.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("vecretired")
     val store = s"$dir/store"
-    val centPath = s"$dir/centroids"
-    val wrongPath = s"$dir/wrong_centroids"
-    centroids.coalesce(1).write.parquet(centPath)
-    // an UNRELATED table (e.g. a caller-owned quantizer): references
-    // none of this store's cells
-    Seq((100, Seq(0.5, 0.5, 0.0, 0.0)), (101, Seq(0.0, 0.5, 0.5, 0.0)))
-      .toDF("cid", "cv").coalesce(1).write.parquet(wrongPath)
-    SimilarityOps.extendVectorStore(store, spark.read.parquet(centPath),
-      vecs(0L to 15L)) // cells 0..3 populated
-    def cellDirs: Set[Int] = (0 to 3)
-      .filter(c => new java.io.File(s"$store/cid=$c").exists()).toSet
-    val ex = intercept[IllegalStateException] {
-      SimilarityOps.splitHotCells(spark, store, wrongPath,
-        hotCellThreshold = 1000L)
+    // cell 0 hot (the split shape's two sub-clusters); cells 1 and 2
+    // two rows each; cell 3 — the HIGHEST cid — one row, cold at 2
+    val hotVecs = (0L until 40L).map { id =>
+      val tilt = if (id % 2 == 0) 0.3 + 0.001 * (id % 7)
+        else -0.3 - 0.001 * (id % 7)
+      (id, Seq(1.0 + 0.01 * (id % 11), tilt, 0.02, 0.02))
     }
-    assert(ex.getMessage.contains("force=true") &&
-      ex.getMessage.contains("NOTHING was deleted"))
-    assert(cellDirs == Set(0, 1, 2, 3),
-      "the refused sweep deleted live postings")
-    intercept[IllegalStateException] {
-      SimilarityOps.mergeColdCells(spark, store, wrongPath,
-        coldCellThreshold = 1L)
-    }
-    assert(cellDirs == Set(0, 1, 2, 3))
-    // the RIGHT table still maintains normally (nothing hot here)
-    assert(SimilarityOps.splitHotCells(spark, store, centPath,
-      hotCellThreshold = 1000L).isEmpty)
-    assert(cellDirs == Set(0, 1, 2, 3))
-    // force: the operator trusts the caller — the sweep runs, and an
-    // emptied store is a loud no-op rather than a crash
-    assert(SimilarityOps.splitHotCells(spark, store, wrongPath,
-      hotCellThreshold = 1000L, force = true).isEmpty)
-    assert(cellDirs.isEmpty, "force=true must perform the sweep")
+    val corpus = hotVecs ++
+      vecs(Seq(101L, 105L, 102L, 106L, 103L)).as[(Long, Seq[Double])]
+        .collect().toSeq
+    SimilarityOps.extendVectorStore(store, centroids,
+      corpus.toDF("vec_id", "v"))
+    assert(SimilarityOps.mergeColdCells(spark, store,
+      coldCellThreshold = 2L).keySet == Set(3))
+    // cell 3's row still sits in the range (no compaction ran): the
+    // split's children must skip cid 3, or it would serve that row
+    val mapping = SimilarityOps.splitHotCells(spark, store,
+      hotCellThreshold = 30L, maxSplitK = 2)
+    assert(mapping == Map(0 -> Seq(4, 5)),
+      s"a child re-issued the retired cid: $mapping")
+    assert(liveCids(store) == Set(1, 2, 4, 5))
+    val served = rowsOf(store).select("vec_id").collect()
+      .map(_.getLong(0)).toSeq
+    assert(served.sorted == corpus.map(_._1).sorted,
+      s"rows lost or served twice: ${served.sorted}")
   }
 
   // SlowTest tier since r14 (~19 s in-suite — the heaviest vector
@@ -410,7 +443,6 @@ class VectorStoreSpec extends AnyFunSuite {
     graft.GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("vecboundary")
     val store = s"$dir/store"
-    val centPath = s"$dir/centroids"
     val d = 66
     def axisVec(axis: Int, lead: Double): Seq[Double] = {
       val a = Array.fill(d)(0.01); a(axis) = lead; a.toSeq
@@ -419,8 +451,7 @@ class VectorStoreSpec extends AnyFunSuite {
     // TwoLevelMinK boundary (flat assignment)
     val cents64 = (0 until 64).map(c =>
       (c, Array.tabulate(d)(i => if (i == c) 1.0 else 0.0).toSeq))
-    cents64.toDF("cid", "cv").coalesce(1).write.parquet(centPath)
-    def cents: DataFrame = spark.read.parquet(centPath)
+    def cents: DataFrame = tableOf(store)
 
     // postings: hot cell 0 = 40 vectors in two separable sub-clusters
     // (±0.3 on dim 64); cells 1–3 one vector each (cold later); cells
@@ -434,7 +465,7 @@ class VectorStoreSpec extends AnyFunSuite {
     val warmVecs = (4 to 63).flatMap(ax => Seq(
       (200L + ax, axisVec(ax, 1.0)), (300L + ax, axisVec(ax, 1.1))))
     val all = hotVecs ++ coldVecs ++ warmVecs // 163 vectors
-    SimilarityOps.extendVectorStore(store, cents,
+    SimilarityOps.extendVectorStore(store, cents64.toDF("cid", "cv"),
       all.toDF("vec_id", "v"))
 
     def cos6(a: Seq[Double], b: Seq[Double]): Double = {
@@ -451,7 +482,7 @@ class VectorStoreSpec extends AnyFunSuite {
 
     // ---- cross UP: split the hot cell → 65 live cids, cid 0 GONE
     // (sparse, non-contiguous id space — the judged worry)
-    val mapping = SimilarityOps.splitHotCells(spark, store, centPath,
+    val mapping = SimilarityOps.splitHotCells(spark, store,
       hotCellThreshold = 30L, maxSplitK = 2)
     assert(mapping.keySet == Set(0) && mapping(0).toSet == Set(64, 65))
     val tbl65 = cents.collect()
@@ -480,7 +511,7 @@ class VectorStoreSpec extends AnyFunSuite {
       Seq(nv).toDF("vec_id", "v"))
     val exp900 = flatCid(tbl65, nv._2)
     assert(Set(64, 65).contains(exp900))
-    assert(spark.read.parquet(store).filter(col("vec_id") === 900L)
+    assert(rowsOf(store).filter(col("vec_id") === 900L)
       .select("cid").collect().map(_.getInt(0)).toSeq == Seq(exp900),
       "post-boundary ingest landed in the wrong cell")
 
@@ -494,7 +525,7 @@ class VectorStoreSpec extends AnyFunSuite {
       corpus.map { case (id, v) => (id, cos6(qv, v)) }
         .sortBy { case (id, r) => (-r, id) }.take(k).zipWithIndex
         .map { case ((id, _), i) => (i + 1, id) }
-    val got65 = SimilarityOps.probeVectorStore(store, cents,
+    val got65 = SimilarityOps.probeVectorStore(store,
         Seq(q).toDF("vec_id", "v"), k = 5, nprobe = 65,
         excludeSelf = false)
       .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq.sorted
@@ -504,7 +535,7 @@ class VectorStoreSpec extends AnyFunSuite {
     // ---- cross DOWN (r12 ask: \"compact/split back under it\"):
     // merge the 1-vector cold cells → 62 live cids ≤ TwoLevelMinK,
     // rows conserved, moved vectors still served
-    val merged = SimilarityOps.mergeColdCells(spark, store, centPath,
+    val merged = SimilarityOps.mergeColdCells(spark, store,
       coldCellThreshold = 2L)
     assert(merged.keySet == Set(1, 2, 3),
       s"expected exactly the 1-vector cells to merge, got $merged")
@@ -514,18 +545,16 @@ class VectorStoreSpec extends AnyFunSuite {
     assert(tbl62.map(_._1) == ((4 to 65): Range),
       s"expected sparse cids 4..65 after the merge, got " +
         s"${tbl62.map(_._1)}")
-    assert(!new java.io.File(s"$store/cid=1").exists() &&
-      !new java.io.File(s"$store/cid=2").exists() &&
-      !new java.io.File(s"$store/cid=3").exists(),
-      "merged cold directories must be deleted")
-    val rows = spark.read.parquet(store)
+    assert(rowsOf(store).filter(col("cid").isin(1, 2, 3)).count() == 0L,
+      "merged cold cells are still served")
+    val rows = rowsOf(store)
     assert(rows.count() == corpus65.size.toLong &&
       rows.select("vec_id").distinct().count() == corpus65.size.toLong,
       "the merge lost or duplicated rows")
     // a moved vector is still served: the axis-1 query's global best
     // IS the moved axis-1 vector, found through its NEW cell
     val q1 = (501L, axisVec(1, 1.0))
-    val got62 = SimilarityOps.probeVectorStore(store, cents,
+    val got62 = SimilarityOps.probeVectorStore(store,
         Seq(q1).toDF("vec_id", "v"), k = 1, nprobe = 62,
         excludeSelf = false)
       .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
@@ -535,11 +564,11 @@ class VectorStoreSpec extends AnyFunSuite {
     // vector lands in cid=5
     SimilarityOps.extendVectorStore(store, cents,
       Seq((901L, axisVec(5, 1.2))).toDF("vec_id", "v"))
-    assert(spark.read.parquet(store).filter(col("vec_id") === 901L)
+    assert(rowsOf(store).filter(col("vec_id") === 901L)
       .select("cid").collect().map(_.getInt(0)).toSeq == Seq(5),
       "post-merge ingest landed in the wrong cell")
     // a second merge pass is a no-op (warm cells all hold ≥2 rows)
-    assert(SimilarityOps.mergeColdCells(spark, store, centPath,
+    assert(SimilarityOps.mergeColdCells(spark, store,
       coldCellThreshold = 2L).isEmpty)
   }
 
@@ -549,9 +578,6 @@ class VectorStoreSpec extends AnyFunSuite {
     graft.GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("vecmaint")
     val store = s"$dir/store"
-    val centPath = s"$dir/centroids"
-    centroids.coalesce(1).write.parquet(centPath)
-    def cents = spark.read.parquet(centPath)
     // hot cell 0: the split test's two-sub-cluster shape (40 rows);
     // cells 1-3 one vector each (cold at threshold 3); plus a replayed
     // append the compact must drop before the thresholds judge counts
@@ -567,8 +593,9 @@ class VectorStoreSpec extends AnyFunSuite {
       (id, base.toSeq)
     }
     val corpus = hotVecs ++ singles
-    SimilarityOps.extendVectorStore(store, cents, corpus.toDF("vec_id", "v"))
-    SimilarityOps.extendVectorStore(store, cents,
+    SimilarityOps.extendVectorStore(store, centroids,
+      corpus.toDF("vec_id", "v"))
+    SimilarityOps.extendVectorStore(store, centroids,
       hotVecs.take(8).toDF("vec_id", "v")) // replay tail
 
     def cos6(a: Seq[Double], b: Seq[Double]): Double = {
@@ -582,8 +609,8 @@ class VectorStoreSpec extends AnyFunSuite {
         .sortBy { case (id, r) => (-r, id) }
         .take(k).zipWithIndex.map { case ((id, _), i) => (i + 1, id) }
     def probeAll(qv: Seq[Double], k: Int): Seq[(Int, Long)] = {
-      val n = cents.count().toInt
-      SimilarityOps.probeVectorStore(store, cents,
+      val n = liveCids(store).size
+      SimilarityOps.probeVectorStore(store,
           Seq((9000L, qv)).toDF("vec_id", "v"), k = k, nprobe = n,
           excludeSelf = false)
         .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
@@ -596,8 +623,7 @@ class VectorStoreSpec extends AnyFunSuite {
       probeAll(q1, 3) == brute(q1, 3), "pre-maintenance parity broken")
 
     val report = SimilarityOps.maintainVectorStore(spark, store,
-      centPath, hotCellThreshold = 30L, coldCellThreshold = 3L,
-      maxSplitK = 2)
+      hotCellThreshold = 30L, coldCellThreshold = 3L, maxSplitK = 2)
     // compact judged DISTINCT rows (48 raw appends, 40 distinct) and
     // flagged the hot cell at its deduped count
     assert(report.hot == Map(0 -> 40L),
@@ -610,21 +636,20 @@ class VectorStoreSpec extends AnyFunSuite {
       s"cold cells must fold into the children: ${report.merged}")
     // post-state: only the children live, every threshold satisfied,
     // rows conserved (replays gone), parity holds on both queries
-    val live = cents.select("cid").collect().map(_.getInt(0)).toSet
+    val live = liveCids(store)
     assert(live == Set(4, 5), s"post-cycle table: $live")
-    val counts = spark.read.parquet(store).groupBy("cid").count()
+    val counts = rowsOf(store).groupBy("cid").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(counts.keySet == Set(4, 5) &&
       counts.values.forall(n => n >= 3L && n <= 30L),
       s"post-cycle cells violate the thresholds: $counts")
-    assert(spark.read.parquet(store).count() == corpus.size.toLong,
+    assert(rowsOf(store).count() == corpus.size.toLong,
       "replays survived the cycle or rows were lost")
     assert(probeAll(q0, 5) == brute(q0, 5) &&
       probeAll(q1, 3) == brute(q1, 3), "post-maintenance parity broken")
     // a second cycle on the settled store is a no-op
     val again = SimilarityOps.maintainVectorStore(spark, store,
-      centPath, hotCellThreshold = 30L, coldCellThreshold = 3L,
-      maxSplitK = 2)
+      hotCellThreshold = 30L, coldCellThreshold = 3L, maxSplitK = 2)
     assert(again.hot.isEmpty && again.split.isEmpty &&
       again.merged.isEmpty, s"settled store re-maintained: $again")
   }
@@ -639,44 +664,35 @@ class VectorStoreSpec extends AnyFunSuite {
     // hold one vector each (under 3 → cold), cell 0 holds 5 (safe)
     val dir = java.nio.file.Files.createTempDirectory("vecmaintdflt")
     val store = s"$dir/store"
-    val centPath = s"$dir/centroids"
-    centroids.coalesce(1).write.parquet(centPath)
-    def cents = spark.read.parquet(centPath)
     val corpus = vecs(Seq(0L, 4L, 8L, 12L, 16L, // cell 0: 5 rows
       101L, 102L, 103L)) // cells 1, 2, 3: one row each
-    SimilarityOps.extendVectorStore(store, cents, corpus)
+    SimilarityOps.extendVectorStore(store, centroids, corpus)
     val report = SimilarityOps.maintainVectorStore(spark, store,
-      centPath, hotCellThreshold = 300L) // coldCellThreshold UNSET
+      hotCellThreshold = 300L) // coldCellThreshold UNSET
     assert(report.merged.keySet == Set(1, 2, 3),
       s"derived default should fold the 1-row cells: ${report.merged}")
-    assert(cents.select("cid").collect().map(_.getInt(0)).toSet
-      == Set(0), "only the populated cell should survive")
-    assert(spark.read.parquet(store).count() == corpus.count(),
+    assert(liveCids(store) == Set(0),
+      "only the populated cell should survive")
+    assert(rowsOf(store).count() == corpus.count(),
       "rows lost in the default-derived merge")
 
     // explicit-0 case: same shape, merge leg must NOT run
     val dir2 = java.nio.file.Files.createTempDirectory("vecmaintoff")
     val store2 = s"$dir2/store"
-    val centPath2 = s"$dir2/centroids"
-    centroids.coalesce(1).write.parquet(centPath2)
-    SimilarityOps.extendVectorStore(store2,
-      spark.read.parquet(centPath2), corpus)
+    SimilarityOps.extendVectorStore(store2, centroids, corpus)
     val off = SimilarityOps.maintainVectorStore(spark, store2,
-      centPath2, hotCellThreshold = 300L, coldCellThreshold = 0L)
+      hotCellThreshold = 300L, coldCellThreshold = 0L)
     assert(off.merged.isEmpty, s"explicit 0 still merged: ${off.merged}")
-    assert(spark.read.parquet(centPath2).select("cid").collect()
-      .map(_.getInt(0)).toSet == Set(0, 1, 2, 3),
+    assert(liveCids(store2) == Set(0, 1, 2, 3),
       "explicit 0 must leave the table untouched")
   }
 
-  test("mergeColdCells chunks past MaxColdPerMergePass: more cold " +
-      "cells than one pass's debris bound all retire, rows go straight " +
-      "to final survivors, the table ends minimal") {
+  test("mergeColdCells retires 71 cold cells in ONE commit: rows go " +
+      "straight to the survivor, the table ends minimal") {
     graft.GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("vecchunk")
     val store = s"$dir/store"
-    val centPath = s"$dir/centroids"
-    val nCells = SimilarityOps.MaxColdPerMergePass + 8 // 72 > one pass
+    val nCells = 72 // more cold cells than TwoLevelMinK
     val d = nCells
     def axisVec(axis: Int, lead: Double): Seq[Double] = {
       val a = Array.fill(d)(0.01); a(axis) = lead; a.toSeq
@@ -684,89 +700,33 @@ class VectorStoreSpec extends AnyFunSuite {
     val cents = (0 until nCells).map(c =>
       (c, Seq.tabulate(d)(i => if (i == c) 1.0 else 0.0)))
       .toDF("cid", "cv")
-    cents.coalesce(1).write.parquet(centPath)
     // cell 0: 10 rows (the only survivor at threshold 5); cells
-    // 1..71: one row each — 71 cold cells, two merge passes needed
+    // 1..71: one row each — 71 cold cells
     val rows = (0L until 10L).map(i => (i, axisVec(0, 1.0 + 0.01 * i))) ++
       (1 until nCells).map(c => (100L + c, axisVec(c, 1.0)))
-    SimilarityOps.extendVectorStore(store,
-      spark.read.parquet(centPath), rows.toDF("vec_id", "v"))
-    val merged = SimilarityOps.mergeColdCells(spark, store, centPath,
+    SimilarityOps.extendVectorStore(store, cents, rows.toDF("vec_id", "v"))
+    val before = pinOf(store)
+    val merged = SimilarityOps.mergeColdCells(spark, store,
       coldCellThreshold = 5L)
-    // every cold cell retired in ONE call (the loop), each mapped to
-    // the single true survivor — never to another cold cell awaiting
-    // a later pass
+    // every cold cell retired by one commit, each mapped to the single
+    // true survivor
+    assert(pinOf(store).versions == before.versions :+ (before.version + 1),
+      "the merge did not commit exactly one version")
     assert(merged.keySet == (1 until nCells).toSet,
-      s"chunked merge missed cold cells: ${merged.keySet.size} of " +
+      s"merge missed cold cells: ${merged.keySet.size} of " +
         s"${nCells - 1}")
     assert(merged.values.forall(_ == Seq(0)),
       s"a cold row was routed through a non-survivor: " +
         s"${merged.filterNot(_._2 == Seq(0))}")
-    val table = spark.read.parquet(centPath)
-      .select("cid").collect().map(_.getInt(0)).toSet
-    assert(table == Set(0), s"table should end at the survivor: $table")
-    val served = spark.read.parquet(store)
+    assert(liveCids(store) == Set(0),
+      s"table should end at the survivor: ${liveCids(store)}")
+    val served = rowsOf(store)
     assert(served.count() == rows.size.toLong &&
       served.select("vec_id").distinct().count() == rows.size.toLong,
-      "the chunked merge lost or duplicated rows")
+      "the merge lost or duplicated rows")
     assert(served.select("cid").distinct().collect()
       .map(_.getInt(0)).toSeq == Seq(0),
       "rows remain outside the survivor cell")
-  }
-
-  test("storeToken: a same-millisecond centroid-table mutation with " +
-      "restored mtimes still changes the token via the LENGTH " +
-      "component (r15 ask #7); a never-existing path fails fast as " +
-      "FileNotFound, not as contention (r15 advice)") {
-    val dir = java.nio.file.Files.createTempDirectory("vectoken")
-    val store = s"$dir/store"
-    val centPath = s"$dir/centroids"
-    centroids.coalesce(1).write.parquet(centPath)
-    SimilarityOps.extendVectorStore(store, centroids, vecs(0L to 7L))
-    val fs = new Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val t0 = SimilarityOps.storeToken(fs, store, centPath)
-    assert(t0.nonEmpty, "token unreadable on a healthy store")
-
-    // plant the adversarial shape the scaladoc caveat describes: a
-    // centroid-table FILE's bytes change, then its mtime AND the
-    // dir's mtime are restored to the captured values — every mtime
-    // the token reads is now identical, so only the per-FILE length
-    // fingerprint can tell the two snapshots apart
-    val centDir = new Path(centPath)
-    val dirBefore = fs.getFileStatus(centDir)
-    val part = fs.listStatus(centDir)
-      .filter(_.getPath.getName.startsWith("part-")).head
-    val f = new java.io.File(part.getPath.toUri.getPath)
-    val app = new java.io.FileOutputStream(f, true)
-    app.write(0x5A); app.close()
-    fs.setTimes(part.getPath, part.getModificationTime, -1)
-    fs.setTimes(centDir, dirBefore.getModificationTime, -1)
-    val t1 = SimilarityOps.storeToken(fs, store, centPath)
-    // the setup really is mtime-invisible (the name@mtime view of
-    // both tokens is equal) — the assertion below is carried by #len
-    def mtimeView(t: Option[Seq[String]]): Seq[String] =
-      t.get.map(_.takeWhile(_ != '#'))
-    assert(mtimeView(t1) == mtimeView(t0),
-      "test setup failed to restore the mtimes — the case no longer " +
-        "exercises the length component")
-    assert(t1.nonEmpty && t1 != t0,
-      "a same-millisecond centroid mutation with restored mtimes was " +
-        "invisible to the token — the length fingerprint must catch it")
-
-    // never-readable paths: the consistent probe must name the
-    // missing path quickly instead of burning the full attempt budget
-    // and diagnosing "maintenance is mutating continuously"
-    val e1 = intercept[java.io.FileNotFoundException] {
-      SimilarityOps.probeVectorStoreConsistent(s"$dir/no_such_store",
-        centPath, vecs(Seq(100L)), k = 1)
-    }
-    assert(e1.getMessage.contains(s"$dir/no_such_store"))
-    val e2 = intercept[java.io.FileNotFoundException] {
-      SimilarityOps.probeVectorStoreConsistent(store,
-        s"$dir/no_such_centroids", vecs(Seq(100L)), k = 1)
-    }
-    assert(e2.getMessage.contains("no_such_centroids"))
   }
 
   // SlowTest tier (~30-60 s: a store big enough that one maintenance
@@ -775,8 +735,9 @@ class VectorStoreSpec extends AnyFunSuite {
   // pins DURING (r14 verdict ask #3): a probe loop racing a live
   // maintainVectorStore, every result equal to global brute force
   // over the distinct corpus (which every mid-cycle snapshot serves:
-  // compact only drops replays, split/merge only move rows), via the
-  // optimistic token-validated consistent probe.
+  // compact only drops replays, split/merge only move rows), through
+  // the plain probe: each probe reads one pinned snapshot, with no
+  // retry.
   test("concurrent probes DURING a maintenance cycle: every result " +
       "equals global brute force; the live writer is never disturbed " +
       "by lock-free readers", graft.SlowTest) {
@@ -826,12 +787,9 @@ class VectorStoreSpec extends AnyFunSuite {
     def raceOnce(attempt: Int): Int = {
       val dir = java.nio.file.Files.createTempDirectory(s"vecconc$attempt")
       val store = s"$dir/store"
-      val centPath = s"$dir/centroids"
-      centroids.coalesce(1).write.parquet(centPath)
-      val cents = spark.read.parquet(centPath)
-      SimilarityOps.extendVectorStore(store, cents,
+      SimilarityOps.extendVectorStore(store, centroids,
         corpus.toDF("vec_id", "v"))
-      SimilarityOps.extendVectorStore(store, cents,
+      SimilarityOps.extendVectorStore(store, centroids,
         hotVecs.take(2000).toDF("vec_id", "v")) // replay tail
 
       val maintFailure = new java.util.concurrent.atomic.AtomicReference[
@@ -840,13 +798,13 @@ class VectorStoreSpec extends AnyFunSuite {
         SimilarityOps.StoreMaintenanceReport](null)
       val maint = new Thread(() =>
         try report.set(SimilarityOps.maintainVectorStore(spark, store,
-          centPath, hotCellThreshold = 8000L, maxSplitK = 2))
+          hotCellThreshold = 8000L, maxSplitK = 2))
         catch { case e: Throwable => maintFailure.set(e) })
 
       def probeOnce(): Unit =
         queries.foreach { case (q, qv) =>
-          val got = SimilarityOps.probeVectorStoreConsistent(store,
-              centPath, Seq((q, qv)).toDF("vec_id", "v"), k = 5,
+          val got = SimilarityOps.probeVectorStore(store,
+              Seq((q, qv)).toDF("vec_id", "v"), k = 5,
               nprobe = 64, excludeSelf = false)
             .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
           assert(got == brute(q),
