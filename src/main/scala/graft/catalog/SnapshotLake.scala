@@ -96,6 +96,38 @@ object SnapshotLake {
       case _: java.nio.file.FileAlreadyExistsException => false
     }
 
+  /** Publish `content` at `p` only if `p` is absent — the commit point
+    * of a partitioned-lake snapshot. The content is written whole to a
+    * temp file beside `p` (`tmp.<uuid>`) and closed first, so no reader
+    * ever sees a partial file. On file:// the temp file then appears at
+    * `p` by a hard link, which link(2) refuses onto an existing name;
+    * elsewhere by `rename`, which HDFS refuses onto an existing target.
+    * An object store's rename is copy-then-delete, which is not a
+    * put-if-absent: concurrent publishers there are unsupported. False
+    * when `p` already exists; a temp file a crash leaves behind is swept
+    * by [[PartitionedSnapshotLake.vacuum]]. */
+  private[catalog] def publish(fs: FileSystem, p: Path,
+      content: Array[Byte]): Boolean = {
+    val tmp = new Path(p.getParent, s"tmp.${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, false)
+    try out.write(content) finally out.close()
+    if (fs.getScheme == "file")
+      try {
+        java.nio.file.Files.createLink(
+          java.nio.file.Paths.get(p.toUri.getPath),
+          java.nio.file.Paths.get(tmp.toUri.getPath))
+        true
+      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally fs.delete(tmp, false)
+    else if (fs.rename(tmp, p)) true
+    else {
+      fs.delete(tmp, false)
+      if (fs.exists(p)) false
+      else throw new java.io.IOException(
+        s"could not publish $p: the rename of $tmp failed")
+    }
+  }
+
   /** Claim the next free version ≥ latest+1 via lock-file CAS; the
     * returned number is owned exclusively by this writer, which must
     * create the commit marker and then [[releaseVersion]] the lock.
@@ -157,7 +189,7 @@ object SnapshotLake {
   /** The numeric file names in `dir`, ascending; empty when `dir` does
     * not exist. Both lakes' numbered axes are such a listing: a table's
     * commit markers ([[versions]]) and a partitioned lake's snapshot
-    * markers ([[PartitionedSnapshotLake.snapshots]]). */
+    * snapshot files ([[PartitionedSnapshotLake.snapshots]]). */
   private[catalog] def numbered(fs: FileSystem, dir: Path): Seq[Long] =
     try fs.listStatus(dir).toSeq.flatMap(_.getPath.getName.toLongOption)
       .sorted
@@ -185,27 +217,23 @@ object SnapshotLake {
     * the data in its `v=n` dir, create the empty commit marker —
     * create-if-absent, so an existing marker (a protocol violation)
     * fails loudly instead of being overwritten — then release the
-    * claim. `bracket(n)` runs right before the marker
-    * and again right after it: the partitioned lake writes its
-    * commit-log entry there. The claim lock is heartbeated
+    * claim. The claim lock is heartbeated
     * ([[withLockHeartbeat]]) for the whole step, so a concurrent
     * vacuum's lock-TTL test never mistakes a long-running LIVE commit
     * for crash residue, and it is released on EVERY exit: on success
     * the marker exists first, on failure the freed number is safely
     * re-claimable (`land` must clobber an orphan dir it finds). */
-  private[catalog] def commitVersion(fs: FileSystem, root: String,
-      bracket: Long => Unit = _ => ())(land: Path => Unit): Long = {
+  private[catalog] def commitVersion(fs: FileSystem, root: String)(
+      land: Path => Unit): Long = {
     fs.mkdirs(commitsDir(root))
     val n = claimVersion(fs, root,
       () => numbered(fs, commitsDir(root)).lastOption.getOrElse(0L))
     try withLockHeartbeat(fs, lockPath(root, n)) {
       land(versionDir(root, n))
-      bracket(n)
       if (!atomicCreate(fs, markerPath(root, n)))
         throw new IllegalStateException(
           s"commit marker $n already exists at $root — concurrent " +
             "commit protocol violation, refusing to overwrite")
-      bracket(n)
     } finally releaseVersion(fs, root, n)
     n
   }

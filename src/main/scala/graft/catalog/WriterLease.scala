@@ -4,18 +4,16 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Single-writer lease over numbered generations, built on the lake's
   * create-if-absent primitive ([[SnapshotLake.atomicCreate]]) the way
-  * [[SnapshotLake.claimVersion]] claims versions. It serves:
-  *  - the MUTABLE stores (the streaming IVF vector store and the dedup
-  *    signature store). Every writer entry point
-  *    ([[graft.operators.SimilarityOps.extendVectorStore]],
-  *    `compactVectorStore`, `splitHotCells`, `mergeColdCells`,
-  *    `maintainVectorStore`, [[graft.operators.DedupOps.compactStore]],
-  *    `DedupOps.probeAndExtend`) holds `<store>.writer.lease/` (a
-  *    sibling of the store path) for the duration of the call;
-  *  - the partitioned lake's manifest commits
-  *    ([[PartitionedSnapshotLake.commitManifest]]), which serialize on
-  *    `_snapshots/_commits/manifest.writer.lease/` with a bounded wait
-  *    and fence each commit step on [[stillHeld]].
+  * [[SnapshotLake.claimVersion]] claims versions. It serves the MUTABLE
+  * stores (the streaming IVF vector store and the dedup signature
+  * store): every writer entry point
+  * ([[graft.operators.SimilarityOps.extendVectorStore]],
+  * `compactVectorStore`, `splitHotCells`, `mergeColdCells`,
+  * `maintainVectorStore`, [[graft.operators.DedupOps.compactStore]],
+  * `DedupOps.probeAndExtend`) holds `<store>.writer.lease/` (a sibling
+  * of the store path) for the duration of the call. The partitioned
+  * lake takes no lease: its commits serialize on publishing a snapshot
+  * file ([[PartitionedSnapshotLake]]).
   *
   * Why a lease: every store write commits one snapshot-lake version
   * ([[StoreLake]]), so any SINGLE writer is safe to kill anywhere, but
@@ -48,7 +46,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    [[SnapshotLake.heartbeatIntervalMs]] (30 s), so a live writer
   *    never looks stale. A process FROZEN longer than `staleMs` (STW
   *    pause, SIGSTOP) can still be superseded — the bound inherent to
-  *    lease-style locks; [[stillHeld]] is the fence it checks.
+  *    lease-style locks.
   *  - RELEASE: create `g.released` for the holder's own generation;
   *    reads nothing. A superseded holder marks a generation no claim
   *    reads.
@@ -90,13 +88,12 @@ object WriterLease {
 
   private val ReleasedName = """^(\d+)\.released$""".r
 
-  /** Generations this THREAD holds, by store key — the reentrancy set
-    * and what [[stillHeld]] checks the disk against. Keyed by the
-    * store string as passed. */
+  /** The stores whose lease this THREAD holds — the reentrancy set.
+    * Keyed by the store string as passed. */
   private val held =
-    new ThreadLocal[scala.collection.mutable.Map[String, Long]] {
-      override def initialValue(): scala.collection.mutable.Map[String, Long] =
-        scala.collection.mutable.Map.empty
+    new ThreadLocal[scala.collection.mutable.Set[String]] {
+      override def initialValue(): scala.collection.mutable.Set[String] =
+        scala.collection.mutable.Set.empty
     }
 
   /** The thread claiming or holding each store's lease in this
@@ -111,16 +108,6 @@ object WriterLease {
     * 1, so 0 reads as "none". */
   private val orphans =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
-  /** Whether the calling thread holds `store`'s lease ON DISK: the
-    * highest generation is the one it claimed, and is not released.
-    * False once a claimant superseded it (this holder was frozen past
-    * the stale horizon) — the fence a holder checks before each step a
-    * superseded holder must not take. */
-  private[catalog] def stillHeld(fs: FileSystem, store: String): Boolean =
-    held.get().get(store).exists { g =>
-      top(listing(fs, leasePath(store))).exists(t => t.gen == g && !t.released)
-    }
 
   /** Run `body` holding the store's writer lease; claim on entry,
     * heartbeat while running, release on every exit. Reentrant within
@@ -151,7 +138,7 @@ object WriterLease {
       }
     }
     try {
-      mine(store) = g
+      mine += store
       try SnapshotLake.withLockHeartbeat(fs, genPath(lease, g))(body)
       finally {
         mine -= store

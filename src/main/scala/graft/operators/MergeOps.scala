@@ -167,11 +167,11 @@ object MergeOps {
 
     // k15 — lakehouse TIME TRAVEL under the oracle gate: two merge
     // batches committed to a PartitionedSnapshotLake (per-partition
-    // versioned dirs + lock-CAS markers + global manifests), then
+    // versioned dirs + lock-CAS markers + global snapshot files), then
     // snapshot 1 and the latest read back and unioned. The Spark side
     // reads the ACTUAL versioned parquet the commits produced, while
     // DuckDB re-derives both states from the base tables — so the hash
-    // compare gates the whole commit → partition version → manifest →
+    // compare gates the whole commit → partition version → snapshot →
     // time-travel read path, not just the merge arithmetic. Partition
     // dates are synthesized from the key (stable per key, the
     // commitMerge contract: 3 date partitions); the lake root is
@@ -185,7 +185,7 @@ object MergeOps {
       }
       // phase attribution (r13 verdict ask #4): k15's wall time is
       // lake PROTOCOL cost (versioned commit writes, lock-CAS,
-      // manifests — FS round-trips), not the read plan; splitting the
+      // snapshot publish — FS round-trips), not the read plan; splitting the
       // reset and the two commits out lets the gate diff the
       // time-travel READ as the spark_residual
       graft.PhaseLog.timed("lake_reset") {

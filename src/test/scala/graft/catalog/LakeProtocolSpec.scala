@@ -4,7 +4,7 @@ import java.net.URI
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -12,22 +12,70 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 
-/** A local filesystem that counts `listStatus` calls — the probe the
-  * O(touched) commit contract is asserted against. Registered under the
+/** A local filesystem that counts its calls by kind — list, stat
+  * (`getFileStatus` and `exists`), open, create, rename, delete and
+  * mkdirs — the probe the O(touched) commit contract and the
+  * filesystem-call census are asserted against. Only the outermost call
+  * of a thread counts: `RawLocalFileSystem` stats each child of a
+  * listing and creates through a second overload, and those inner
+  * calls are not round trips of their own. Registered under the
   * `countfs` scheme via `fs.countfs.impl`. */
 class CountingLocalFs extends RawLocalFileSystem {
+  import CountingLocalFs.counted
   override def getScheme: String = "countfs"
   override def getUri: URI = URI.create("countfs:///")
-  override def listStatus(f: Path): Array[FileStatus] = {
-    CountingLocalFs.calls.incrementAndGet()
+  override def listStatus(f: Path): Array[FileStatus] = counted("list") {
     CountingLocalFs.listed.add(f.toUri.getPath)
     super.listStatus(f)
   }
+  override def getFileStatus(f: Path): FileStatus =
+    counted("stat")(super.getFileStatus(f))
+  override def exists(f: Path): Boolean = counted("stat")(super.exists(f))
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    counted("open")(super.open(f, bufferSize))
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = counted("create")(
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+  override def create(f: Path, permission: FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    counted("create")(super.create(f, permission, overwrite, bufferSize,
+      replication, blockSize, progress))
+  override def createNonRecursive(f: Path, permission: FsPermission,
+      flags: java.util.EnumSet[CreateFlag], bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = counted("create")(
+    super.createNonRecursive(f, permission, flags, bufferSize, replication,
+      blockSize, progress))
+  override def rename(src: Path, dst: Path): Boolean =
+    counted("rename")(super.rename(src, dst))
+  override def delete(f: Path, recursive: Boolean): Boolean =
+    counted("delete")(super.delete(f, recursive))
+  override def mkdirs(f: Path): Boolean = counted("mkdirs")(super.mkdirs(f))
+  override def mkdirs(f: Path, permission: FsPermission): Boolean =
+    counted("mkdirs")(super.mkdirs(f, permission))
 }
 object CountingLocalFs {
-  val calls = new AtomicLong(0)
+  val Kinds: Seq[String] =
+    Seq("list", "stat", "open", "create", "rename", "delete", "mkdirs")
+  private val counts = Kinds.map(_ -> new AtomicLong(0)).toMap
+  private val depth = new ThreadLocal[Int] {
+    override def initialValue(): Int = 0
+  }
   val listed = new ConcurrentLinkedQueue[String]()
-  def reset(): Unit = { calls.set(0); listed.clear() }
+
+  private def counted[T](kind: String)(body: => T): T = {
+    val d = depth.get
+    if (d == 0) counts(kind).incrementAndGet()
+    depth.set(d + 1)
+    try body finally depth.set(d)
+  }
+
+  def count(kind: String): Long = counts(kind).get
+  /** Every kind's count since the last [[reset]]. */
+  def census: Map[String, Long] = Kinds.map(k => k -> count(k)).toMap
+  def reset(): Unit = { counts.values.foreach(_.set(0)); listed.clear() }
 }
 
 /** An "object store": counts listStatus like [[CountingLocalFs]], but
@@ -54,23 +102,6 @@ class NoMtimeCountingFs extends CountingLocalFs {
     strip(super.getFileStatus(f))
 }
 
-/** A local filesystem under the `slowlog` scheme whose listing of a
-  * commit-log dir (`_log`) sleeps 20 ms on threads that opted in: it
-  * widens a reader's pin resolution so that concurrent manifest commits
-  * land inside it. `getScheme` reports `file`, so the lake's
-  * create-if-absent CAS keeps its atomic `File.createNewFile` path. */
-class SlowLogListingFs extends RawLocalFileSystem {
-  override def getUri: URI = URI.create("slowlog:///")
-  override def getScheme: String = "file"
-  override def listStatus(f: Path): Array[FileStatus] = {
-    if (SlowLogListingFs.slowed.get && f.getName == "_log") Thread.sleep(20)
-    super.listStatus(f)
-  }
-}
-object SlowLogListingFs {
-  val slowed: ThreadLocal[Boolean] = ThreadLocal.withInitial(() => false)
-}
-
 /** A local filesystem under the `skewfs` scheme whose reported mtimes
   * lag the host clock by [[LaggingMtimeFs.LagMs]] (2 h): the shape of a
   * vacuum host whose clock runs ahead of the filesystem's. Statuses are
@@ -93,115 +124,47 @@ object LaggingMtimeFs {
   val LagMs: Long = 2L * 60 * 60 * 1000
 }
 
-/** A local filesystem under the `latchfs` scheme that sequences two
-  * manifest committers, A and B (roles set per thread in
-  * [[LatchingFs.role]]), through a stale-lease race. The manifest
-  * lease is the `manifest*` entry directly under `_snapshots/_commits`.
-  * The schedule:
-  *  1. each committer's first listing of the lease while it holds a
-  *     stale generation is taken, then waits for the other's — both
-  *     then act on a stale listing;
-  *  2. B's stale listing is returned only once A holds a fresh
-  *     generation, so B acts on a view from before A's claim;
-  *  3. A's manifest write waits until B has listed the lease again
-  *     (B has seen A's generation while A holds it).
-  * A committer "writes" from its manifest create until its call ends
-  * ([[LatchingFs.end]]); [[LatchingFs.overlaps]] counts manifest
-  * creates made while the other committer writes. A wait that runs
-  * out is recorded in [[LatchingFs.timeouts]] and then goes on.
-  * `getScheme` reports `file`, so the lake's create-if-absent CAS keeps
-  * its atomic local path. */
-class LatchingFs extends RawLocalFileSystem {
-  import LatchingFs._
-  override def getUri: URI = URI.create("latchfs:///")
+/** A local filesystem under the `holdfs` scheme that parks a committer
+  * thread once at one filesystem call until the test lets it go. A
+  * thread arms itself by setting [[HoldingFs.hold]]: `"rename"` parks
+  * before the first rename onto a `v=` dir (a staged partition about to
+  * become a version: the merge base is read, the version claimed),
+  * `"release"` right after the first claim-lock delete (one partition
+  * version is committed). `getScheme` reports `file`, so the lake's
+  * create-if-absent and its snapshot publish keep their atomic local
+  * paths (`RawLocalFileSystem.rename` replaces an existing file). */
+class HoldingFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("holdfs:///")
   override def getScheme: String = "file"
-
-  override def listStatus(f: Path): Array[FileStatus] = {
-    val ls = super.listStatus(f)
-    val r = role.get
-    if ((r == "A" || r == "B") && isLease(f)) {
-      val now = System.currentTimeMillis()
-      if (ls.exists(now - _.getModificationTime > StaleMs) &&
-          statedStale.add(r)) {
-        await("both stale listings", bothStale.countDown())(
-          bothStale.getCount == 0)
-        if (r == "B") await("A's fresh generation", ())(freshGeneration(f))
-      } else if (r == "B" && statedStale.contains("B")) bRelisted.set(true)
-    }
-    ls
+  override def rename(src: Path, dst: Path): Boolean = {
+    if (dst.getName.startsWith("v=")) HoldingFs.at("rename")
+    super.rename(src, dst)
   }
-
-  // the lake's `create(path, overwrite)` reaches this overload, Spark's
-  // writers the one with a permission; both pass the same hook
-  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
-      replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    created(f)
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-  }
-  override def create(f: Path, permission: FsPermission,
-      overwrite: Boolean, bufferSize: Int, replication: Short,
-      blockSize: Long, progress: Progressable): FSDataOutputStream = {
-    created(f)
-    super.create(f, permission, overwrite, bufferSize, replication,
-      blockSize, progress)
-  }
-
-  private def created(f: Path): Unit = {
-    val r = role.get
-    if ((r == "A" || r == "B") && f.getName.endsWith(".manifest")) {
-      if (r == "A") await("B's listing of A's generation", ())(bRelisted.get)
-      if (writing(other(r)).get) overlaps.incrementAndGet()
-      writing(r).set(true)
-    }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    val ok = super.delete(f, recursive)
+    if (f.getName.endsWith(".lock")) HoldingFs.at("release")
+    ok
   }
 }
-object LatchingFs {
-  import java.util.concurrent.atomic.AtomicBoolean
-  val role: ThreadLocal[String] = new ThreadLocal[String]
-  /** An aged lease generation is older than this. */
-  val StaleMs: Long = 30L * 60 * 1000
-  private val WaitMs = 30000L
-  @volatile private var bothStale =
-    new java.util.concurrent.CountDownLatch(2)
-  private val statedStale =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val bRelisted = new AtomicBoolean(false)
-  private val writing = Map("A" -> new AtomicBoolean(false),
-    "B" -> new AtomicBoolean(false))
-  val overlaps = new AtomicLong(0)
+object HoldingFs {
+  /** Where a thread parks, and the latches that sequence it. */
+  final class Hold(val call: String) {
+    val parked = new java.util.concurrent.CountDownLatch(1)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    /** Wait (bounded) until the thread parked. */
+    def awaitParked(): Boolean =
+      parked.await(60, java.util.concurrent.TimeUnit.SECONDS)
+  }
+  val hold: ThreadLocal[Hold] = new ThreadLocal[Hold]
   val timeouts = new ConcurrentLinkedQueue[String]()
 
-  def reset(): Unit = {
-    bothStale = new java.util.concurrent.CountDownLatch(2)
-    statedStale.clear()
-    (bRelisted +: writing.values.toSeq).foreach(_.set(false))
-    overlaps.set(0); timeouts.clear()
-  }
-
-  /** The committer in role `r` ended its call. */
-  def end(r: String): Unit = writing.get(r).foreach(_.set(false))
-
-  private def other(r: String) = if (r == "A") "B" else "A"
-  private def isLease(f: Path): Boolean =
-    f.getParent != null && f.getParent.getName == "_commits" &&
-      f.getParent.getParent != null &&
-      f.getParent.getParent.getName == "_snapshots" &&
-      f.getName.startsWith("manifest")
-  private def freshGeneration(lease: Path): Boolean =
-    Option(new java.io.File(lease.toUri.getPath).listFiles()).toSeq
-      .flatten.exists(g => g.getName.toLongOption.isDefined &&
-        System.currentTimeMillis() - g.lastModified < StaleMs)
-
-  /** Run `arrive`, then poll until `ready` or the wait runs out. */
-  private def await(what: String, arrive: => Unit)(
-      ready: => Boolean): Unit = {
-    arrive
-    val deadline = System.currentTimeMillis() + WaitMs
-    while (!ready && System.currentTimeMillis() < deadline)
-      Thread.sleep(5)
-    if (!ready) timeouts.add(s"${role.get} waiting for $what")
-  }
+  private def at(call: String): Unit =
+    Option(hold.get).filter(h => h.call == call && h.parked.getCount > 0)
+      .foreach { h =>
+        h.parked.countDown()
+        if (!h.go.await(60, java.util.concurrent.TimeUnit.SECONDS))
+          timeouts.add(s"${Thread.currentThread.getName} parked at $call")
+      }
 }
 
 /** A local filesystem under the `probefs` scheme that interleaves two
@@ -245,9 +208,10 @@ object ProbeLatchFs {
 
 /** Lock-protocol and at-scale contracts of the snapshot lakes that the
   * black-box [[graft.SnapshotLakeSpec]] cannot reach: the claim ABA
-  * recheck, the vacuum heartbeat, the manifest mutex, and the
-  * O(touched-partitions) commit + single-scan snapshot read over a
-  * 500-partition lake. */
+  * recheck, the vacuum heartbeat, the one visibility rule of the
+  * partitioned lake (reader atomicity, publish conflicts), its
+  * filesystem-call census, and the O(touched-partitions) commit +
+  * single-scan snapshot read over a 500-partition lake. */
 class LakeProtocolSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
@@ -262,20 +226,44 @@ class LakeProtocolSpec extends AnyFunSuite {
 
   private def frame(rows: (Long, String)*) = rows.toSeq.toDF("id", "val")
 
+  private def df(rows: (Long, String, String)*) =
+    rows.toSeq.toDF("id", "ts", "val")
+
   /** The on-disk state a [[PartitionedSnapshotLake.commitMerge]] leaves
     * when its writer dies after a partition commit and before its
-    * manifest: the v-dir, its commit-log entry and its commit marker.
-    * `dir` is the lake's local path, whatever scheme the lake uses. */
+    * snapshot publish: the v-dir and its commit marker. `dir` is the
+    * lake's local path, whatever scheme the lake uses. */
   private def strandCommit(dir: String, part: String, v: Long,
       rows: (Long, String, String)*): Unit = {
-    rows.toSeq.toDF("id", "ts", "val").write
+    df(rows: _*).write
       .parquet(new java.io.File(dir, s"$part/v=$v").getAbsolutePath)
-    val log = new java.io.File(dir, "_snapshots/_log")
-    log.mkdirs()
-    assert(new java.io.File(log, s"$part@$v").createNewFile())
     val commits = new java.io.File(dir, s"$part/_commits")
     commits.mkdirs()
     assert(new java.io.File(commits, v.toString).createNewFile())
+  }
+
+  /** The pins [[PartitionedSnapshotLake.readLatest]] resolves: the
+    * newest snapshot's. */
+  private def latestPins(root: String): Map[String, Long] =
+    PartitionedSnapshotLake.manifest(spark, root,
+      PartitionedSnapshotLake.latestSnapshot(spark, root).get)
+
+  /** Copy of `src` at `dst`, file by file. */
+  private def copyTree(src: java.io.File, dst: java.io.File): Unit = {
+    if (src.isDirectory) {
+      dst.mkdirs()
+      src.listFiles().foreach(c =>
+        copyTree(c, new java.io.File(dst, c.getName)))
+    } else java.nio.file.Files.copy(src.toPath, dst.toPath)
+  }
+
+  /** Run `body` on a new thread; its failure is returned by `join`. */
+  private def thread(name: String)(body: => Unit) = {
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val t = new Thread(() =>
+      try body catch { case e: Throwable => failure.set(e) }, name)
+    t.start()
+    () => { t.join(120000); Option(failure.get) }
   }
 
   test("ABA guard: a claim computed from a STALE latest cannot re-take " +
@@ -347,91 +335,6 @@ class LakeProtocolSpec extends AnyFunSuite {
     } finally SnapshotLake.heartbeatIntervalMs = oldBeat
   }
 
-  test("a stale manifest mutex (crashed holder) is broken by the next " +
-      "committer; a fresh one blocks until released") {
-    val root = tmp()
-    def df(rows: (Long, String, String)*) =
-      rows.toSeq.toDF("id", "ts", "val")
-    PartitionedSnapshotLake.commitMerge(spark, root,
-      df((1L, "2026-03-01", "a")), "id", "ts")
-    // crashed holder: a newer generation of the manifest lease than
-    // the first commit's, unreleased, mtime far in the past
-    val gen = new java.io.File(
-      s"$root/_snapshots/_commits/manifest.writer.lease/5")
-    gen.getParentFile.mkdirs()
-    assert(gen.createNewFile())
-    assert(gen.setLastModified(
-      System.currentTimeMillis() - 3L * 60 * 60 * 1000))
-    val (s2, _) = PartitionedSnapshotLake.commitMerge(spark, root,
-      df((1L, "2026-03-01", "a2")), "id", "ts")
-    assert(s2 == 2L, "commit did not break the stale manifest mutex")
-    assert(WriterLeaseSpec.unreleased(localFs,
-      s"$root/_snapshots/_commits/manifest").isEmpty,
-      "broken+released mutex must not linger")
-  }
-
-  test("two committers that both find the manifest lock stale: at most " +
-      "one writes a manifest at a time, and every commitMerge that " +
-      "returns has its batch in readLatest") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.latchfs.impl", classOf[LatchingFs].getName)
-    val prevDefault = Option(conf.get("fs.defaultFS"))
-    val dir = tmp()
-    def batch(id: Long, date: String, v: String) =
-      Seq((id, date, v)).toDF("id", "ts", "val")
-    LatchingFs.reset()
-    // two spellings of one root, so no in-process registry keyed by
-    // the root string can serialize the committers: the on-disk
-    // takeover is what is tested
-    conf.set("fs.defaultFS", "latchfs:///")
-    val (rootA, rootB) = (dir, s"latchfs://$dir")
-    try {
-      PartitionedSnapshotLake.commitMerge(spark, rootA,
-        batch(1L, "2027-09-01", "seed"), "id", "ts")
-      // a holder that crashed leaves its generation of the manifest
-      // lease unreleased; aged past any stale horizon, it is a dead
-      // holder's lease
-      val gen = new java.io.File(dir,
-        "_snapshots/_commits/manifest.writer.lease/9")
-      gen.getParentFile.mkdirs()
-      java.nio.file.Files.write(gen.toPath,
-        "crashed-committer pid=1 host=elsewhere ".getBytes("UTF-8"))
-      assert(gen.setLastModified(
-        System.currentTimeMillis() - 2 * LatchingFs.StaleMs))
-
-      val returned = new ConcurrentLinkedQueue[String]()
-      def committer(r: String, root: String, id: Long, date: String) =
-        new Thread(() => {
-          LatchingFs.role.set(r)
-          try {
-            PartitionedSnapshotLake.commitMerge(spark, root,
-              batch(id, date, r), "id", "ts")
-            returned.add(r)
-          } catch { case scala.util.control.NonFatal(_) => () }
-          finally LatchingFs.end(r)
-        })
-      val threads = Seq(committer("A", rootA, 2L, "2027-09-02"),
-        committer("B", rootB, 3L, "2027-09-03"))
-      threads.foreach(_.start()); threads.foreach(_.join())
-      assert(LatchingFs.timeouts.isEmpty,
-        s"the race schedule did not run: ${LatchingFs.timeouts}")
-      assert(LatchingFs.overlaps.get == 0,
-        "two committers wrote a manifest at the same time — both held " +
-          "the manifest lock")
-      // B's stale listing cannot displace A: A commits, B waits for
-      // A's release and commits after it
-      assert(returned.toArray.toSet == Set("A", "B"),
-        s"not both committers returned: $returned")
-      val latest = PartitionedSnapshotLake.readLatest(spark, rootA)
-        .select("val").as[String].collect().toSet
-      assert(Set("A", "B").subsetOf(latest),
-        s"readLatest lost a committed batch: $latest")
-    } finally prevDefault match {
-      case Some(v) => conf.set("fs.defaultFS", v)
-      case None => conf.unset("fs.defaultFS")
-    }
-  }
-
   test("two concurrent filesystem-clock probes of one directory never " +
       "delete each other's probe") {
     val fs = new ProbeLatchFs
@@ -487,81 +390,187 @@ class LakeProtocolSpec extends AnyFunSuite {
     assert(young.exists(), "vacuum deleted a young clock probe")
   }
 
-  test("repairManifest picks up partition versions stranded by a crash " +
-      "between partition commits and the manifest") {
+  test("vacuum sweeps the clock probes and publish temp files a crash " +
+      "left in _snapshots once as old as the lock TTL, and keeps young " +
+      "ones") {
     val root = tmp()
-    def df(rows: (Long, String, String)*) =
-      rows.toSeq.toDF("id", "ts", "val")
     PartitionedSnapshotLake.commitMerge(spark, root,
-      df((1L, "2026-04-01", "a"), (2L, "2026-04-02", "b")), "id", "ts")
-    // a writer that committed a partition version but died before
-    // its manifest
-    val p = "part_date=2026-04-03"
-    strandCommit(root, p, 1L, (3L, "2026-04-03", "c"))
-    assert(PartitionedSnapshotLake
-      .manifest(spark, root, 1L).get(p).isEmpty,
-      "stranded partition must be absent from the pre-crash manifest")
-    assert(PartitionedSnapshotLake.readLatest(spark, root).count() == 3,
-      "readLatest must already see the orphan through its log entry")
-    val s2 = PartitionedSnapshotLake.repairManifest(spark, root)
-    assert(s2 == 2L)
-    assert(PartitionedSnapshotLake.manifest(spark, root, s2) ==
-      Map("part_date=2026-04-01" -> 1L, "part_date=2026-04-02" -> 1L,
-        p -> 1L))
-    assert(PartitionedSnapshotLake.readVersion(spark, root, s2)
-      .count() == 3)
+      df((1L, "2026-04-01", "a")), "id", "ts")
+    val snaps = new java.io.File(root, "_snapshots")
+    val (old, young) = Seq("clock.", "tmp.").map { prefix =>
+      val o = new java.io.File(snaps, s"${prefix}crashed-long-ago")
+      val y = new java.io.File(snaps, s"${prefix}crashed-just-now")
+      assert(o.createNewFile() && y.createNewFile())
+      assert(o.setLastModified(System.currentTimeMillis() - 2L * 3600000L))
+      (o, y)
+    }.unzip
+    PartitionedSnapshotLake.vacuum(spark, root, retainSnapshots = 1) // TTL 1 h
+    old.foreach(f => assert(!f.exists(), s"vacuum left aged $f behind"))
+    young.foreach(f => assert(f.exists(), s"vacuum deleted young $f"))
+    assert(snaps.list().toSet == Set("1") ++ young.map(_.getName),
+      s"unexpected _snapshots entries: ${snaps.list().toSeq}")
   }
 
-  // SlowTest tier since r14 (~11 s of pure partition fan-out;
-  // suite-budget ask #7). Runs every round in the bench window.
+  test("a reader between the two partition commits of a batch sees the " +
+      "pre-batch rows in both partitions") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.holdfs.impl", classOf[HoldingFs].getName)
+    val root = s"holdfs://${tmp()}"
+    def rows() = PartitionedSnapshotLake.readLatest(spark, root)
+      .select("id", "val").as[(Long, String)].collect().toSet
+    PartitionedSnapshotLake.commitMerge(spark, root,
+      df((1L, "2027-10-01", "a"), (2L, "2027-10-02", "b")), "id", "ts")
+    HoldingFs.timeouts.clear()
+    val h = new HoldingFs.Hold("release")
+    val join = thread("committer") {
+      HoldingFs.hold.set(h)
+      PartitionedSnapshotLake.commitMerge(spark, root,
+        df((1L, "2027-10-01", "a2"), (2L, "2027-10-02", "b2")), "id", "ts")
+    }
+    val during =
+      try {
+        assert(h.awaitParked(), "the committer never committed a partition")
+        rows()
+      } finally h.go.countDown()
+    assert(join().isEmpty, "the batch failed to commit")
+    assert(HoldingFs.timeouts.isEmpty, s"${HoldingFs.timeouts}")
+    assert(during == Set(1L -> "a", 2L -> "b"),
+      s"a reader mid-commit saw part of the batch: $during")
+    assert(rows() == Set(1L -> "a2", 2L -> "b2"))
+  }
+
+  test("two committers merged against the same pin of one partition: the " +
+      "loser's publish throws ConcurrentModificationException and the " +
+      "winner's rows are served") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.holdfs.impl", classOf[HoldingFs].getName)
+    val dir = tmp()
+    val root = s"holdfs://$dir"
+    val p = "part_date=2027-11-01"
+    PartitionedSnapshotLake.commitMerge(spark, root,
+      df((1L, "2027-11-01", "seed")), "id", "ts")
+    HoldingFs.timeouts.clear()
+    // both committers read the base and stage their merge, then park
+    // before their partition version lands; A commits and publishes
+    // first, then B goes on
+    val holds = Seq("A", "B").map(_ -> new HoldingFs.Hold("rename")).toMap
+    def committer(r: String, id: Long) = thread(r) {
+      HoldingFs.hold.set(holds(r))
+      PartitionedSnapshotLake.commitMerge(spark, root,
+        df((id, "2027-11-01", r)), "id", "ts")
+    }
+    val joinA = committer("A", 2L)
+    val joinB = committer("B", 3L)
+    val (a, b) =
+      try {
+        assert(holds.values.forall(_.awaitParked()),
+          "a committer never reached its partition commit")
+        holds("A").go.countDown()
+        val a = joinA()
+        holds("B").go.countDown()
+        (a, joinB())
+      } finally holds.values.foreach(_.go.countDown())
+    assert(HoldingFs.timeouts.isEmpty, s"${HoldingFs.timeouts}")
+    assert(a.isEmpty, s"the first committer failed: $a")
+    assert(b.exists(_.isInstanceOf[java.util.ConcurrentModificationException]),
+      s"the second committer's publish did not conflict: $b")
+    val latest = PartitionedSnapshotLake.readLatest(spark, root)
+      .select("id", "val").as[(Long, String)].collect().toSet
+    assert(latest == Set(1L -> "seed", 2L -> "A"),
+      s"readLatest does not serve exactly the winner's batch: $latest")
+    assert(PartitionedSnapshotLake.snapshots(spark, root) == Seq(1L, 2L))
+    // the loser's version is on disk, on the partition's own axis only
+    val loser = PartitionedSnapshotLake.partitionVersions(spark, root, p)
+      .filterNot(_ == latestPins(root)(p)).max
+    assert(PartitionedSnapshotLake.readPartitionVersion(spark, root, p, loser)
+      .select("id").as[Long].collect().toSet == Set(1L, 3L))
+  }
+
+  test("filesystem-call census: one commitMerge of a 1-partition batch " +
+      "into a 3-partition lake, and one readLatest") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingLocalFs].getName)
+    val root = s"countfs://${tmp()}"
+    PartitionedSnapshotLake.commitMerge(spark, root, df(
+      (1L, "2027-12-01", "a"), (2L, "2027-12-02", "b"),
+      (3L, "2027-12-03", "c")), "id", "ts")
+    CountingLocalFs.reset()
+    PartitionedSnapshotLake.commitMerge(spark, root,
+      df((1L, "2027-12-01", "a2")), "id", "ts")
+    val commit = CountingLocalFs.census
+    CountingLocalFs.reset()
+    PartitionedSnapshotLake.readLatest(spark, root)
+    val read = CountingLocalFs.census
+    info(s"commitMerge: $commit")
+    info(s"readLatest: $read")
+    // the whole call, Spark's merge-base planning and staging write
+    // included. The lake's own commit calls: one _snapshots listing
+    // and one snapshot read (the merge base), the version claim (a
+    // mkdirs, two _commits listings, the lock create), the v-dir exists
+    // check and rename, the marker create, the lock delete, the staging
+    // listing and delete, and the publish (a create and a rename here;
+    // a create, a link and a delete on file://). The read: one
+    // _snapshots listing and one snapshot read, then the footer schema
+    // and Spark's file index over the pinned v-dirs
+    assert(commit == Map("list" -> 8L, "stat" -> 14L, "open" -> 3L,
+      "create" -> 5L, "rename" -> 4L, "delete" -> 4L, "mkdirs" -> 2L))
+    assert(read == Map("list" -> 5L, "stat" -> 5L, "open" -> 2L,
+      "create" -> 0L, "rename" -> 0L, "delete" -> 0L, "mkdirs" -> 0L))
+  }
+
+  test("a lake of the old layout (empty snapshot markers beside " +
+      "N.manifest files) is refused with an error that names it") {
+    val root = tmp()
+    PartitionedSnapshotLake.commitMerge(spark, root,
+      df((1L, "2026-04-01", "a")), "id", "ts")
+    val snaps = new java.io.File(root, "_snapshots")
+    java.nio.file.Files.move(new java.io.File(snaps, "1").toPath,
+      new java.io.File(snaps, "1.manifest").toPath)
+    assert(new java.io.File(snaps, "1").createNewFile())
+    Seq[() => Any](
+      () => PartitionedSnapshotLake.readLatest(spark, root),
+      () => PartitionedSnapshotLake.commitMerge(spark, root,
+        df((2L, "2026-04-01", "b")), "id", "ts")).foreach { call =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("old layout"), e.getMessage)
+    }
+  }
+
+  // SlowTest tier: ~11 s of pure partition fan-out.
   test("AT SCALE: over a 500-partition lake, commit touches O(touched) " +
       "filesystem listings (never the root), the manifest carries " +
       "forward untouched pins, and snapshot reads plan ONE scan",
       graft.SlowTest) {
-    // 500 partitions, not 1000 (r12 suite-budget trim): every
-    // assertion below is an ABSOLUTE bound (root listings == 0,
-    // listStatus ≤ constants), so the O(touched)/O(1) claims are
-    // exactly as strong — a linear-in-partitions regression still
-    // blows the constants by 30×+ at this scale
+    // 500 partitions: every assertion below is an ABSOLUTE bound (root
+    // listings == 0, listStatus ≤ constants), so the O(touched)/O(1)
+    // claims are exactly as strong — a linear-in-partitions regression
+    // still blows the constants by 30×+ at this scale
     val NParts = 500
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.countfs.impl", classOf[CountingLocalFs].getName)
     val dir = tmp()
     val root = s"countfs://$dir"
 
-    // seed partition 0 through the real protocol, then fabricate 999
+    // seed partition 0 through the real protocol, then fabricate 499
     // more partitions by direct file copy (cheap, no Spark jobs): the
     // commit under test must not care HOW the others got there
-    def df(rows: (Long, String, String)*) =
-      rows.toSeq.toDF("id", "ts", "val")
     PartitionedSnapshotLake.commitMerge(spark, root,
       df((0L, "2023-01-01", "seed")), "id", "ts")
     val seed = new java.io.File(dir, "part_date=2023-01-01")
     val day0 = java.time.LocalDate.parse("2023-01-01")
-    def copyTree(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs()
-        src.listFiles().foreach(c =>
-          copyTree(c, new java.io.File(dst, c.getName)))
-      } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-    }
     val parts = (0 until NParts).map(i => s"part_date=${day0.plusDays(i)}")
     parts.drop(1).foreach { p =>
       copyTree(seed, new java.io.File(dir, p))
     }
-    // hand-write manifest 2 pinning all NParts at v1 (the repair shape)
-    val snaps = new java.io.File(dir, "_snapshots")
-    java.nio.file.Files.write(new java.io.File(snaps, "2.manifest").toPath,
-      parts.sorted.map(p => s"$p\t1").mkString("\n")
-        .getBytes("UTF-8"))
-    java.nio.file.Files.write(new java.io.File(snaps, "2").toPath,
-      Array.emptyByteArray)
+    // hand-publish snapshot 2 pinning all NParts at v1
+    java.nio.file.Files.write(new java.io.File(dir, "_snapshots/2").toPath,
+      parts.sorted.map(p => s"$p\t1").mkString("\n").getBytes("UTF-8"))
 
     // the measured commit: touches 2 of NParts partitions
     CountingLocalFs.reset()
     val (s3, _) = PartitionedSnapshotLake.commitMerge(spark, root,
       df((10L, "2023-01-05", "x"), (11L, "2023-01-06", "y")), "id", "ts")
-    val listCalls = CountingLocalFs.calls.get()
+    val listCalls = CountingLocalFs.count("list")
     def rootLists(): Int = {
       val canonical = new java.io.File(dir).getAbsolutePath
       CountingLocalFs.listed.toArray(Array.empty[String])
@@ -575,7 +584,7 @@ class LakeProtocolSpec extends AnyFunSuite {
       s"commit of 2 touched partitions issued $listCalls listStatus " +
         s"calls over a $NParts-partition lake — not O(touched)")
 
-    // manifest 3 = manifest 2 + the 2-partition overlay
+    // snapshot 3 = snapshot 2 + the 2-partition overlay
     val m3 = PartitionedSnapshotLake.manifest(spark, root, 3L)
     assert(m3.size == NParts)
     assert(m3("part_date=2023-01-05") == 2L &&
@@ -595,188 +604,63 @@ class LakeProtocolSpec extends AnyFunSuite {
     assert(snap.filter($"part_date" === "2023-01-06")
       .select("val").as[String].collect().toSet == Set("seed", "y"))
 
-    // readLatest's PIN RESOLUTION is O(1)-listing: newest-manifest
-    // pins + one commit-log listing — never the lake root, never a
-    // per-partition marker walk over them all. (The data scan itself
-    // then lists the pinned v-dirs, as any scan of hundreds of
-    // partitions must — that part is Spark's parallel file index, not
-    // the protocol.)
+    // readLatest's PIN RESOLUTION is one listing of _snapshots and one
+    // snapshot-file read — never the lake root, never a per-partition
+    // marker walk. (The data scan itself then lists the pinned v-dirs,
+    // as any scan of hundreds of partitions must — that part is Spark's
+    // parallel file index, not the protocol.)
     CountingLocalFs.reset()
-    val pins = PartitionedSnapshotLake.latestPins(spark, root)
-    val pinCalls = CountingLocalFs.calls.get()
-    assert(pinCalls <= 12,
-      s"latestPins issued $pinCalls listStatus calls over a " +
-        s"$NParts-partition lake — pin resolution is O(partitions), " +
-        "not O(1)-listing")
-    assert(rootLists() == 0,
-      s"latestPins listed the lake ROOT ${rootLists()} times — the " +
-        "delta must come from the commit log alone")
-    assert(pins.size == NParts)
-    assert(pins("part_date=2023-01-05") == 2L &&
-      pins("part_date=2023-01-09") == 1L)
+    val pins = latestPins(root)
+    assert(CountingLocalFs.count("list") == 1,
+      s"pin resolution issued ${CountingLocalFs.count("list")} " +
+        s"listStatus calls over a $NParts-partition lake")
+    assert(rootLists() == 0)
+    assert(pins == m3)
     assert(PartitionedSnapshotLake.readLatest(spark, root)
       .count() == NParts + 2L)
-
-    // a partition version stranded AFTER the manifest (crashed writer)
-    // must still be visible: its log entry names exactly that partition
-    strandCommit(dir, "part_date=2023-01-09", 2L,
-      (99L, "2023-01-09", "stranded"))
-    CountingLocalFs.reset()
-    val pins2 = PartitionedSnapshotLake.latestPins(spark, root)
-    val strandCalls = CountingLocalFs.calls.get()
-    assert(pins2("part_date=2023-01-09") == 2L,
-      "latestPins missed a partition version committed after the " +
-        "newest manifest")
-    assert(strandCalls <= 15,
-      s"the 1-partition delta cost $strandCalls listStatus calls — " +
-        "delta resolution is not O(delta)")
-    // v=2 is a full partition snapshot, so latest serves exactly it —
-    // while snapshot 3 still time-travels to the pre-strand v=1
-    assert(PartitionedSnapshotLake.readLatest(spark, root)
-      .filter($"part_date" === "2023-01-09")
-      .select("val").as[String].collect().toSet == Set("stranded"),
-      "readLatest must serve the stranded version through the delta")
-    assert(PartitionedSnapshotLake.readVersion(spark, root, 3L)
-      .filter($"part_date" === "2023-01-09")
-      .select("val").as[String].collect().toSet == Set("seed"))
-
-    // the carried-pin trap: a LATER writer now commits a DIFFERENT
-    // partition, minting manifest 4 that carries 2023-01-09 forward at
-    // its stale pin. The strand must STAY visible — the carried v1 pin
-    // does not cover the v2 entry, so manifest-commit pruning keeps it
-    PartitionedSnapshotLake.commitMerge(spark, root,
-      df((20L, "2023-01-07", "later")), "id", "ts")
-    val pins3 = PartitionedSnapshotLake.latestPins(spark, root)
-    assert(pins3("part_date=2023-01-09") == 2L,
-      "a later writer's manifest hid a crash-stranded partition " +
-        "version from readLatest (carried pin went untested)")
   }
 
-  test("OBJECT STORE (no usable dir mtimes): latestPins derives its " +
-      "delta from the COMMIT LOG alone — O(1) listStatus in partition " +
-      "count, crash-stranded versions served, dangling entries " +
-      "filtered, later manifests can't hide the strand") {
+  test("OBJECT STORE (no usable dir mtimes): readLatest's pins come from " +
+      "the newest snapshot file in one listing, and a partition version " +
+      "no snapshot publishes is never served") {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.s3a.impl", classOf[NoMtimeCountingFs].getName)
     val dir = tmp()
     val root = s"s3a://$dir"
-    def df(rows: (Long, String, String)*) =
-      rows.toSeq.toDF("id", "ts", "val")
 
-    // seed partition 0 through the real protocol (manifest 1 + the
-    // commit log dir), then fabricate 499 more partitions by file copy
+    // seed partition 0 through the real protocol, then fabricate 499
+    // more partitions by file copy and hand-publish snapshot 2 pinning
+    // all 500 at v1
     PartitionedSnapshotLake.commitMerge(spark, root,
       df((0L, "2024-01-01", "seed")), "id", "ts")
     val seed = new java.io.File(dir, "part_date=2024-01-01")
     val day0 = java.time.LocalDate.parse("2024-01-01")
-    def copyTree(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs()
-        src.listFiles().foreach(c =>
-          copyTree(c, new java.io.File(dst, c.getName)))
-      } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-    }
     val parts = (0 until 500).map(i => s"part_date=${day0.plusDays(i)}")
     parts.drop(1).foreach(p => copyTree(seed, new java.io.File(dir, p)))
-    val snaps = new java.io.File(dir, "_snapshots")
-    // the fabricated partitions carry no log entries (they arrived out
-    // of band): repairManifest pins all 500 at v1 (manifest 2)
-    assert(PartitionedSnapshotLake.repairManifest(spark, root) == 2L)
+    java.nio.file.Files.write(new java.io.File(dir, "_snapshots/2").toPath,
+      parts.sorted.map(p => s"$p\t1").mkString("\n").getBytes("UTF-8"))
 
-    // clean state: pin resolution is O(1)-listing with NO mtime help
+    // pin resolution is one listing with NO mtime help
     CountingLocalFs.reset()
-    val pins = PartitionedSnapshotLake.latestPins(spark, root)
-    val cleanCalls = CountingLocalFs.calls.get()
-    assert(pins.size == 500)
-    assert(pins.values.forall(_ == 1L))
-    assert(cleanCalls <= 8,
-      s"latestPins issued $cleanCalls listStatus calls over a " +
-        "500-partition object-store lake — not O(1)")
+    val pins = latestPins(root)
+    assert(CountingLocalFs.count("list") == 1,
+      s"pin resolution issued ${CountingLocalFs.count("list")} " +
+        "listStatus calls over a 500-partition object-store lake")
+    assert(pins.size == 500 && pins.values.forall(_ == 1L))
 
-    // crash-stranded version: the exact commitMerge crash state —
-    // v-dir renamed in, LOG ENTRY written, marker written, writer
-    // died before its manifest
+    // a crash-stranded version: v-dir and marker, writer died before
+    // its publish — never served, and the next commit to the partition
+    // merges against the published pin and claims past the strand
     val p = "part_date=2024-01-09"
-    strandCommit(dir, p, 2L, (0L, "2024-01-09", "seed"))
-    // and a DANGLING entry (died between entry and marker): must not
-    // surface — its version never committed
-    val q = "part_date=2024-01-10"
-    java.nio.file.Files.write(
-      new java.io.File(snaps, s"_log/$q@2").toPath,
-      Array.emptyByteArray)
-
-    CountingLocalFs.reset()
-    val pins2 = PartitionedSnapshotLake.latestPins(spark, root)
-    val strandCalls = CountingLocalFs.calls.get()
-    assert(pins2(p) == 2L,
-      "the commit log failed to surface a crash-stranded version on " +
-        "an object store (dir mtimes useless there)")
-    assert(pins2(q) == 1L,
-      "a dangling log entry (no commit marker) leaked an uncommitted " +
-        "version into readLatest")
-    assert(strandCalls <= 8,
-      s"log-delta resolution cost $strandCalls listStatus calls — " +
-        "not O(delta)")
+    strandCommit(dir, p, 2L, (99L, "2024-01-09", "stranded"))
+    assert(latestPins(root)(p) == 1L)
+    assert(PartitionedSnapshotLake.readLatest(spark, root).count() == 500L)
+    PartitionedSnapshotLake.commitMerge(spark, root,
+      df((20L, "2024-01-09", "later")), "id", "ts")
+    assert(latestPins(root)(p) == 3L)
     assert(PartitionedSnapshotLake.readLatest(spark, root)
-      .count() == 500L)
-
-    // the carried-pin trap, object-store edition: a later writer
-    // commits a DIFFERENT partition (manifest 3 carries p at v1);
-    // manifest-commit pruning must keep p@2 (not covered) and the
-    // strand must stay visible
-    PartitionedSnapshotLake.commitMerge(spark, root,
-      df((20L, "2024-01-03", "later")), "id", "ts")
-    val pins3 = PartitionedSnapshotLake.latestPins(spark, root)
-    assert(pins3(p) == 2L,
-      "a later writer's manifest pruned/hid the stranded version's " +
-        "log entry")
-    assert(pins3("part_date=2024-01-03") == 2L)
-    // repair heals: the strand gets pinned, its entry pruned, and the
-    // log path keeps serving O(1)
-    PartitionedSnapshotLake.repairManifest(spark, root)
-    assert(!new java.io.File(snaps, s"_log/$p@2").exists,
-      "repairManifest's manifest covers the strand — its log entry " +
-        "should be pruned at manifest commit")
-    CountingLocalFs.reset()
-    val pins4 = PartitionedSnapshotLake.latestPins(spark, root)
-    assert(pins4(p) == 2L && pins4.size == 500)
-    assert(CountingLocalFs.calls.get() <= 8)
-  }
-
-  test("vacuum's dangling-log-entry sweep: a live (young-locked) " +
-      "writer's pre-marker entry survives; true crash debris goes " +
-      "once past the TTL; covered entries are pruned") {
-    def df(rows: (Long, String, String)*) =
-      rows.toSeq.toDF("id", "ts", "val")
-    val root = tmp()
-    PartitionedSnapshotLake.commitMerge(spark, root,
-      df((1L, "2025-05-01", "a"), (2L, "2025-05-02", "b")), "id", "ts")
-    PartitionedSnapshotLake.commitMerge(spark, root,
-      df((1L, "2025-05-01", "a2")), "id", "ts")
-    val p = "part_date=2025-05-01"
-    val logDir = new java.io.File(s"$root/_snapshots/_log")
-    logDir.mkdirs()
-    val old = System.currentTimeMillis() - 3L * 60 * 60 * 1000
-    // (1) live writer mid-commit: aged entry for v=9, NO marker, but a
-    // YOUNG claim lock — must survive the sweep
-    val live = new java.io.File(logDir, s"$p@9")
-    assert(live.createNewFile()); assert(live.setLastModified(old))
-    val lock = new java.io.File(s"$root/$p/_commits/9.lock")
-    assert(lock.createNewFile()) // fresh mtime = heartbeating holder
-    // (2) crash debris: aged entry for v=8, no marker, no lock
-    val dead = new java.io.File(logDir, s"$p@8")
-    assert(dead.createNewFile()); assert(dead.setLastModified(old))
-    // (3) covered: entry for v=1, pinned (≥) by the newest manifest
-    val covered = new java.io.File(logDir, s"$p@1")
-    assert(covered.createNewFile())
-    PartitionedSnapshotLake.vacuum(spark, root, retainSnapshots = 2)
-    assert(live.exists,
-      "vacuum deleted a young-locked (live) writer's log entry — a " +
-        "writer between its entry and marker would lose its version " +
-        "from the object-store read path")
-    assert(!dead.exists, "aged no-marker no-lock entry not swept")
-    assert(!covered.exists, "manifest-covered entry not pruned")
-    lock.delete(): Unit
+      .filter($"part_date" === "2024-01-09")
+      .select("val").as[String].collect().toSet == Set("seed", "later"))
   }
 
   test("a lake created and grown purely through commitMerge on an " +
@@ -786,25 +670,17 @@ class LakeProtocolSpec extends AnyFunSuite {
     conf.set("fs.s3a.impl", classOf[NoMtimeCountingFs].getName)
     val dir = tmp()
     val root = s"s3a://$dir"
-    def df(rows: (Long, String, String)*) =
-      rows.toSeq.toDF("id", "ts", "val")
     PartitionedSnapshotLake.commitMerge(spark, root,
       df((1L, "2027-01-01", "a"), (2L, "2027-01-02", "b")), "id", "ts")
     PartitionedSnapshotLake.commitMerge(spark, root,
       df((1L, "2027-01-01", "a2"), (3L, "2027-01-03", "c")), "id", "ts")
     CountingLocalFs.reset()
-    val pins = PartitionedSnapshotLake.latestPins(spark, root)
+    val pins = latestPins(root)
     assert(pins == Map("part_date=2027-01-01" -> 2L,
       "part_date=2027-01-02" -> 1L, "part_date=2027-01-03" -> 1L))
-    assert(CountingLocalFs.calls.get() <= 8,
-      s"a commitMerge-grown lake cost ${CountingLocalFs.calls.get()} " +
-        "listStatus calls — the O(1) log path is not on by default")
-    // a crash-stranded commit (entry + marker, no manifest) is served
-    // through the log alone
-    val p = "part_date=2027-01-02"
-    strandCommit(dir, p, 2L, (2L, "2027-01-02", "b"))
-    assert(PartitionedSnapshotLake.latestPins(spark, root)(p) == 2L,
-      "the commit-log path missed a crash-stranded version")
+    assert(CountingLocalFs.count("list") == 1,
+      s"a commitMerge-grown lake cost ${CountingLocalFs.count("list")} " +
+        "listStatus calls to resolve its pins")
   }
 
   test("a lake root without a scheme resolves against fs.defaultFS, " +
@@ -826,42 +702,12 @@ class LakeProtocolSpec extends AnyFunSuite {
       // can only come from the lake's filesystem calls
       val listed = CountingLocalFs.listed.toArray(Array.empty[String])
         .map(_.stripSuffix("/")).toSet
-      assert(listed.exists(_.endsWith("/_snapshots/_log")),
-        s"the lake listed its commit log off the default FS: $listed")
+      assert(listed.exists(_.endsWith("/_snapshots")),
+        s"the lake listed its snapshots off the default FS: $listed")
     } finally prev match {
       case Some(v) => conf.set("fs.defaultFS", v)
       case None => conf.unset("fs.defaultFS")
     }
-  }
-
-  test("out-of-band commits into a CERTIFIED lake are detected and " +
-      "warned on the next commitMerge; in-contract commits stay silent") {
-    val root = tmp()
-    def merge(id: Long, v: String) =
-      PartitionedSnapshotLake.commitMerge(spark, root,
-        Seq((id, "2027-06-01", v)).toDF("id", "ts", "val"), "id", "ts")
-    merge(1L, "a")
-    merge(2L, "b") // in-contract: detector must stay SILENT
-    assert(PartitionedSnapshotLake.lastOutOfBandWarning.isEmpty,
-      "an in-contract commit false-flagged as out-of-band")
-    // OUT-OF-BAND: a direct SnapshotLake.commit into the partition dir
-    // writes a marker but no log entry — the class readLatest's log
-    // delta cannot see, on file:// exactly as on an object store
-    val p = "part_date=2027-06-01"
-    SnapshotLake.commit(spark, s"$root/$p",
-      Seq((9L, "2027-06-01", "c")).toDF("id", "ts", "val")) // v3
-    assert(PartitionedSnapshotLake.latestPins(spark, root)(p) == 2L,
-      "readLatest served an out-of-band version with no log entry — " +
-        "freshness must come from the commit log alone")
-    merge(3L, "d") // next commitMerge touching the partition: WARNs
-    val missing = PartitionedSnapshotLake.lastOutOfBandWarning
-    assert(missing.get(p).exists(_ == Seq(3L)),
-      s"the out-of-band v3 went undetected: $missing")
-    // this merge's manifest pinned v4 >= v3: the orphan is covered,
-    // the data is served, and the follow-up check is clean again
-    merge(4L, "e")
-    assert(PartitionedSnapshotLake.lastOutOfBandWarning.isEmpty,
-      "the detector kept warning after a manifest covered the orphan")
   }
 
   test("a stalled writer's late manifest never lowers a pin") {
@@ -870,81 +716,76 @@ class LakeProtocolSpec extends AnyFunSuite {
     def merge(id: Long) =
       PartitionedSnapshotLake.commitMerge(spark, root,
         Seq((id, "2027-07-01", "x")).toDF("id", "ts", "val"), "id", "ts")
-    merge(1L) // writer A's p@1 — A stalls before its manifest
-    merge(2L) // writer B merges on v1: p@2, its manifest, log pruned
-    assert(PartitionedSnapshotLake.readLatest(spark, root).count() == 2)
-    // A's manifest lands late, overlaying p -> 1
-    val n = PartitionedSnapshotLake.commitManifest(spark, root, Map(p -> 1L))
-    assert(PartitionedSnapshotLake.manifest(spark, root, n)(p) == 2L,
-      "a late manifest rolled the partition's pin back")
+    merge(1L) // snapshot 1 pins p@1
+    // writer A merged on snapshot 1 and committed p@2, then stalled
+    // before its publish
+    strandCommit(root, p, 2L, (1L, "2027-07-01", "x"), (2L, "2027-07-01", "A"))
+    merge(3L) // writer B merges on snapshot 1: p@3, snapshot 2
+    assert(latestPins(root)(p) == 3L)
+    // A's snapshot lands late: it loses snapshot 2 to B, whose pin moved
+    // the partition A merged against
+    intercept[java.util.ConcurrentModificationException] {
+      PartitionedSnapshotLake.publishSnapshot(localFs, root, 1L,
+        PartitionedSnapshotLake.manifest(spark, root, 1L), Map(p -> 2L))
+    }
+    assert(PartitionedSnapshotLake.snapshots(spark, root) == Seq(1L, 2L),
+      "a late manifest was published over a moved pin")
+    assert(latestPins(root)(p) == 3L, "a late manifest rolled the pin back")
     assert(PartitionedSnapshotLake.readLatest(spark, root).count() == 2,
       "readLatest lost a later writer's rows to a late manifest")
   }
 
   test("readLatest under a commit storm serves committed partition " +
       "versions only, never an out-of-band one") {
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.slowlog.impl", classOf[SlowLogListingFs].getName)
-    val root = s"slowlog://${tmp()}"
-    def frame(rows: (Long, String, String)*) =
-      rows.toSeq.toDF("id", "ts", "val")
+    val root = tmp()
     val (a, b) = ("2027-08-01", "2027-08-02")
     val oob = "part_date=2027-08-03"
-    def batch(k: Int) = frame((1L, a, s"$k"), (2L, a, s"$k"),
+    def batch(k: Int) = df((1L, a, s"$k"), (2L, a, s"$k"),
       (11L, b, s"$k"), (12L, b, s"$k"))
     PartitionedSnapshotLake.commitMerge(spark, root,
-      batch(0).union(frame((21L, "2027-08-03", "seed"))), "id", "ts")
-    // a marker-only version committed out of band: readLatest must keep
-    // serving the logged v1 until a commitMerge or repairManifest
+      batch(0).union(df((21L, "2027-08-03", "seed"))), "id", "ts")
+    // a marker-only version committed out of band: no snapshot pins it,
+    // so readLatest keeps serving v1
     SnapshotLake.commit(spark, s"$root/$oob",
-      frame((21L, "2027-08-03", "out-of-band")))
+      df((21L, "2027-08-03", "out-of-band")))
 
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    def thread(body: => Unit) = {
-      val t = new Thread(() =>
-        try body catch { case e: Throwable => failure.compareAndSet(null, e) })
-      t.start(); t
-    }
-    // manifest-only commits, back to back: with the reader's log
-    // listing slowed, the snapshot moves under every pin resolution
-    // it makes
-    val storm = thread {
+    // a storm of commits to a disjoint partition races the writer for
+    // every snapshot number: the loser of each race publishes on top of
+    // the winner
+    val storm = thread("storm") {
+      var k = 0
       while (!stop.get) {
-        PartitionedSnapshotLake.commitManifest(spark, root, Map.empty)
-        Thread.sleep(2) // lets the writer's 20 ms mutex poll in
+        k += 1
+        PartitionedSnapshotLake.commitMerge(spark, root,
+          df((31L, "2027-08-04", s"$k")), "id", "ts")
       }
     }
-    val writer = thread {
-      (1 to 4).foreach(k => PartitionedSnapshotLake.commitMerge(spark,
-        root, batch(k), "id", "ts"))
+    val writer = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val joinWriter = thread("writer") {
+      try (1 to 4).foreach(k =>
+        PartitionedSnapshotLake.commitMerge(spark, root, batch(k), "id", "ts"))
+      finally writer.set(false)
     }
     var reads = 0
-    SlowLogListingFs.slowed.set(true)
     try {
-      while (writer.isAlive && failure.get == null) {
-        val pins = PartitionedSnapshotLake.latestPins(spark, root)
-        assert(pins(oob) == 1L, s"latestPins served the out-of-band $pins")
-        if (reads % 20 == 0) {
-          val rows = PartitionedSnapshotLake.readLatest(spark, root)
-            .select($"id", $"val", $"part_date".cast("string"))
-            .as[(Long, String, String)].collect().toSeq
-          assert(rows.map(_._1).sorted == Seq(1L, 2L, 11L, 12L, 21L))
-          assert(rows.filter(_._1 == 21L).map(_._2) == Seq("seed"))
-          // each partition reads back as ONE committed version
-          rows.filter(_._1 < 21L).groupBy(_._3).foreach { case (d, rs) =>
-            assert(rs.map(_._2).distinct.size == 1,
-              s"partition $d mixes versions: $rs")
-          }
-        }
+      while (writer.get) {
+        val rows = PartitionedSnapshotLake.readLatest(spark, root)
+          .select($"id", $"val").as[(Long, String)].collect().toSeq
+        assert(rows.map(_._1).filter(_ != 31L).sorted ==
+          Seq(1L, 2L, 11L, 12L, 21L))
+        assert(rows.filter(_._1 == 21L).map(_._2) == Seq("seed"),
+          s"readLatest served the out-of-band version: $rows")
+        // both partitions read back as ONE batch
+        val vals = rows.filter(_._1 < 21L).map(_._2).distinct
+        assert(vals.size == 1, s"a read mixes batches: $rows")
         reads += 1
       }
     } finally {
-      SlowLogListingFs.slowed.set(false)
       stop.set(true)
-      writer.join(); storm.join()
+      joinWriter().foreach(throw _)
+      storm().foreach(throw _)
     }
-    Option(failure.get).foreach(throw _)
     assert(reads > 0)
     assert(PartitionedSnapshotLake.readLatest(spark, root)
       .filter($"id" < 21L).select("val").as[String].collect().toSet ==

@@ -5,11 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 
 /** Boundary spec for vacuum's named reader-hazard horizon
-  * (`readerHazardMs`, VERDICT r9 ask #7): a snapshot whose manifest is
-  * younger than the horizon must survive ANY `retainSnapshots`,
-  * because a lockless reader that resolved its pins may still be
-  * mid-scan; once the manifest ages past the horizon, count-based
-  * retention applies. */
+  * (`readerHazardMs`): a snapshot superseded within the horizon must
+  * survive ANY `retainSnapshots`, because a lockless reader that
+  * resolved its pins may still be mid-scan; once its successor ages
+  * past the horizon, count-based retention applies. */
 class VacuumHazardSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
@@ -51,13 +50,13 @@ class VacuumHazardSpec extends AnyFunSuite {
   test("snapshots aged past the horizon fall to count-based retention; " +
       "the hazard clock is the SUCCESSOR's mtime (supersession time)") {
     val root = threeSnapshots()
-    // age everything: manifests (snapshot supersession clock) and the
+    // age everything: snapshot files (snapshot supersession clock) and the
     // partition's commit markers (version supersession clock) — a
     // version/snapshot is only deletable once its successor has been
     // visible for a full horizon
     val old = System.currentTimeMillis() - 10L * 60 * 1000
     (1L to 3L).foreach { s =>
-      val m = new java.io.File(s"$root/_snapshots/$s.manifest")
+      val m = new java.io.File(s"$root/_snapshots/$s")
       assert(m.setLastModified(old))
       val mk = new java.io.File(s"$root/part_date=2026-05-01/_commits/$s")
       assert(mk.setLastModified(old))
@@ -76,11 +75,13 @@ class VacuumHazardSpec extends AnyFunSuite {
   test("a version superseded within the horizon survives even with " +
       "no manifest pinning it (delta readers may be mid-scan)") {
     val root = threeSnapshots()
-    // age manifests 1..2 so count-based retention WOULD reclaim their
+    // age snapshots 1..2 so count-based retention WOULD reclaim their
     // pins, but leave the partition markers fresh: v1/v2 were each
-    // 'the latest' until seconds ago — a delta reader could be on them
+    // superseded seconds ago — an in-flight committer may still be
+    // scanning one as its merge base, or have made it and not yet
+    // published it
     Seq(1L, 2L).foreach { s =>
-      val m = new java.io.File(s"$root/_snapshots/$s.manifest")
+      val m = new java.io.File(s"$root/_snapshots/$s")
       assert(m.setLastModified(System.currentTimeMillis() - 10L * 60 * 1000))
     }
     PartitionedSnapshotLake.vacuum(spark, root, retainSnapshots = 1,
